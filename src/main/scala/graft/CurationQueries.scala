@@ -35,15 +35,15 @@ object CurationQueries {
   // live frame's checkpoint blocks die under cross-query RDD isolation
   private val knModelDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def knModelOf(s: SparkSession, d: String): LanguageModel.KnBigramModel = {
+  private def knModelOf(s: SparkSession, d: String): LanguageModel.KnNgramModel = {
     val dir = knModelDirCache.computeIfAbsent(d, _ => {
       val p = s"/tmp/graft_knmodel_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
-      LanguageModel.KnBigramModel.write(
-        LanguageModel.knBigramFit(
-          T(s, d, "documents").where(col("doc_id") % 2 === 0), "text"), p)
+      LanguageModel.KnNgramModel.write(
+        LanguageModel.knNgramFit(
+          T(s, d, "documents").where(col("doc_id") % 2 === 0), "text", order = 2), p)
       p
     })
-    LanguageModel.KnBigramModel.read(s, dir)
+    LanguageModel.KnNgramModel.read(s, dir)
   }
 
   private val winsorBoundsCache =
@@ -674,11 +674,11 @@ object CurationQueries {
     // actually ships (Wenzek LREC'20 keep the head/middle buckets)
     "q_kn_filter" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      val scored = LanguageModel.knBigramLogLoss(
+      val scored = LanguageModel.knNgramLogLoss(
         docs.where(col("doc_id") % 2 === 0),
-        docs.where(col("doc_id") % 2 === 1), "doc_id", "text")
+        docs.where(col("doc_id") % 2 === 1), "doc_id", "text", order = 2)
       docs.where(col("doc_id") % 2 === 1).select("doc_id", "source")
-        .join(scored.where(col("kn_loss") < 3.45), "doc_id")
+        .join(scored.where(col("kn2_loss") < 3.45), "doc_id")
         .groupBy("source")
         .agg(count(lit(1)).as("n_kept"),
           sum("n_trans").as("sum_trans"),
@@ -709,12 +709,12 @@ object CurationQueries {
     // step that follows the LM score in the real pipeline
     "q_ccnet_buckets" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      val scored = LanguageModel.knBigramLogLoss(
+      val scored = LanguageModel.knNgramLogLoss(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "text")
-        .withColumn("kn_loss", round(col("kn_loss"), 6))
+          docs.where(col("doc_id") % 2 === 1), "doc_id", "text", order = 2)
+        .withColumn("kn2_loss", round(col("kn2_loss"), 6))
         .join(docs.select("doc_id", "source"), "doc_id")
-      LanguageModel.perplexityBuckets(scored, "source", "doc_id", "kn_loss")
+      LanguageModel.perplexityBuckets(scored, "source", "doc_id", "kn2_loss")
         .groupBy("source", "bucket")
         .agg(count(lit(1)).as("n_docs"),
           sum("n_trans").as("sum_trans"),
@@ -723,15 +723,16 @@ object CurationQueries {
     }),
     // the per-LANGUAGE CCNet composition (Wenzek et al. fit one KenLM
     // PER language and bucket within it): one hash-partitioned plan
-    // fits every language's KN model (knBigramLogLossBy), then the
+    // fits every language's KN model (knNgramLogLossBy), then the
     // rank-exact thirds cut WITHIN each language
     "q_ccnet_buckets_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      val scored = LanguageModel.knBigramLogLossBy(
+      val scored = LanguageModel.knNgramLogLossBy(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text")
-        .withColumn("kn_loss", round(col("kn_loss"), 6))
-      LanguageModel.perplexityBuckets(scored, "lang", "doc_id", "kn_loss")
+          docs.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text",
+          order = 2)
+        .withColumn("kn2_loss", round(col("kn2_loss"), 6))
+      LanguageModel.perplexityBuckets(scored, "lang", "doc_id", "kn2_loss")
         .groupBy("lang", "bucket")
         .agg(count(lit(1)).as("n_docs"),
           sum("n_trans").as("sum_trans"),
@@ -764,7 +765,7 @@ object CurationQueries {
     // the GROUPED SB twin (VERDICT r12 stretch #8): one independent
     // stupid-backoff model per language — every level table, context
     // sum, and the N total carry the group key, so the per-language
-    // fits are one hash-partitioned plan (the knBigramLogLossBy shape)
+    // fits are one hash-partitioned plan (the knNgramLogLossBy shape)
     "q_sb_loss_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
       LanguageModel.sbNgramLogLossBy(
@@ -796,9 +797,9 @@ object CurationQueries {
     // table), the n-gram depth direction production filters ship
     "q_kn3_loss" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      LanguageModel.knTrigramLogLoss(
+      LanguageModel.knNgramLogLoss(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "text")
+          docs.where(col("doc_id") % 2 === 1), "doc_id", "text", order = 3)
         .withColumn("kn3_loss", round(col("kn3_loss"), 6))
         .orderBy("doc_id")
     }),
@@ -808,10 +809,12 @@ object CurationQueries {
     // plan, not a driver loop
     "q_kn_loss_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      LanguageModel.knBigramLogLossBy(
+      LanguageModel.knNgramLogLossBy(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text")
-        .withColumn("kn_loss", round(col("kn_loss"), 6))
+          docs.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text",
+          order = 2)
+        .select(col("lang"), col("doc_id"), col("n_trans"),
+          round(col("kn2_loss"), 6).as("kn_loss"))
         .orderBy("lang", "doc_id")
     }),
     // STREAMING LM-perplexity monitoring: the odd-id slice arrives as
@@ -836,7 +839,8 @@ object CurationQueries {
           p => parts.synchronized { parts += p; () }),
         "graft_stream_kn")
       parts.reduce(_ unionByName _)
-        .withColumn("kn_loss", round(col("kn_loss"), 6))
+        .select(col("doc_id"), col("n_trans"),
+          round(col("kn2_loss"), 6).as("kn_loss"))
         .orderBy("doc_id")
     }),
     // the 5-GRAM form (VERDICT r11 #2) — the n-gram depth CCNet's KenLM
@@ -859,14 +863,15 @@ object CurationQueries {
     // the oracle IS q_kn_loss's SQL verbatim (merge ≡ refit, exactly)
     "q_kn_state" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      val states = Seq(0, 1, 2).map(i => LanguageModel.knBigramState(
+      val states = Seq(0, 1, 2).map(i => LanguageModel.knNgramState(
         docs.where(col("doc_id") % 2 === 0 && (col("doc_id") / 2) % 3 === i),
-        "text"))
-      val model = LanguageModel.knBigramFromState(
-        states.reduce(LanguageModel.mergeKnStates))
-      LanguageModel.knBigramScoreWith(model,
+        "text", order = 2))
+      val model = LanguageModel.knNgramModel(
+        states.reduce(LanguageModel.mergeKnNgramStates))
+      LanguageModel.knNgramScoreWith(model,
           docs.where(col("doc_id") % 2 === 1), "doc_id", "text")
-        .withColumn("kn_loss", round(col("kn_loss"), 6))
+        .select(col("doc_id"), col("n_trans"),
+          round(col("kn2_loss"), 6).as("kn_loss"))
         .orderBy("doc_id")
     }),
     // the GROUPED order-5 KN (r13, completing the per-group matrix):
@@ -967,10 +972,11 @@ object CurationQueries {
     // uniform-OOV floor, never ln(0))
     "q_kn_loss" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      LanguageModel.knBigramLogLoss(
+      LanguageModel.knNgramLogLoss(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "text")
-        .withColumn("kn_loss", round(col("kn_loss"), 6))
+          docs.where(col("doc_id") % 2 === 1), "doc_id", "text", order = 2)
+        .select(col("doc_id"), col("n_trans"),
+          round(col("kn2_loss"), 6).as("kn_loss"))
         .orderBy("doc_id")
     }),
     // Gopher/MassiveText rule flags: per-source counts of each published

@@ -814,13 +814,13 @@ object Stress {
     val ulmModel = graft.operators.UnigramLm.unigramLmLearn(baseDocs, "text")
     time("ulmSegmentCosts Xn")(graft.operators.UnigramLm
       .segmentCosts(docs, "doc_id", "text", ulmModel).count())
-    val knModel = graft.operators.LanguageModel.knBigramFit(
-      baseDocs.where(col("doc_id") % 2 === 0), "text")
+    val knModel = graft.operators.LanguageModel.knNgramFit(
+      baseDocs.where(col("doc_id") % 2 === 0), "text", order = 2)
     time("knScore base")(graft.operators.LanguageModel
-      .knBigramScoreWith(knModel, baseDocs.where(col("doc_id") % 2 === 1),
+      .knNgramScoreWith(knModel, baseDocs.where(col("doc_id") % 2 === 1),
         "doc_id", "text").count())
     time("knScore Xn")(graft.operators.LanguageModel
-      .knBigramScoreWith(knModel, docs, "doc_id", "text").count())
+      .knNgramScoreWith(knModel, docs, "doc_id", "text").count())
     spark.stop()
   }
 

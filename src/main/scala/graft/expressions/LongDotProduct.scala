@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Exact integer dot product of two `array<long>` columns as a native
   * Catalyst expression with a tight codegen loop.
@@ -235,10 +235,14 @@ object GraftFunctions {
     // (x, y, product-scale literal)
     Sum128 -> { exprs =>
       arity(Sum128, exprs, 3)
-      if (!exprs(2).foldable) throw new IllegalArgumentException(
-        s"$Sum128's third argument (product scale) must be a literal")
+      val sc = exprs(2)
+      if (!sc.foldable || !Seq(ByteType, ShortType, IntegerType, LongType)
+          .contains(sc.dataType) || sc.eval() == null)
+        throw new IllegalArgumentException(
+          s"$Sum128's third argument (product scale) must be an integer" +
+            s" literal (got ${sc.sql}: ${sc.dataType.simpleString})")
       SumProduct128(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()
+        sc.eval().asInstanceOf[Number].intValue()).toAggregateExpression()
     })
 
   def register(spark: SparkSession): Unit =

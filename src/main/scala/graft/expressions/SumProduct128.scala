@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression, If, IsNotNull, Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, ExpectsInputTypes, Expression, If, IsNotNull, Literal, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, LongType}
@@ -89,11 +89,14 @@ case class SumProduct128(
     x: Expression,
     y: Expression,
     scale: Int)
-  extends DeclarativeAggregate {
+  extends DeclarativeAggregate with ExpectsInputTypes {
 
   require(scale >= 0 && scale <= 38, s"scale must be in [0, 38] (got $scale)")
 
   override def children: Seq[Expression] = Seq(x, y)
+  // both children are unscaled-decimal longs; anything else is an
+  // analysis error, never a silently reinterpreted buffer
+  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
   override def nullable: Boolean = true
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_sum128"

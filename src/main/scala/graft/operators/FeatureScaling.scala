@@ -96,6 +96,22 @@ object FeatureScaling {
     }
   }
 
+  // internal columns of the covCorrBy/linregBy power-sum pass, and the
+  // per-pair ones of corrMatrixBy (`xn__0_1`, `sxy__0_1`, ...)
+  private val PowerSumCols =
+    Seq("__xn", "__lx", "__ly", "__sx", "__sy", "__sxy", "__sxx", "__syy")
+  private val PairCol = "(xn|lx|ly|n|sx|sy|sxy|sxx|syy)__[0-9]+_[0-9]+".r
+
+  /** A grouping column carried through an operator's projection must not
+    * take one of its internal names (it would surface as an ambiguous
+    * reference, or shadow the internal column). */
+  private def requireFreeBy(op: String, by: Seq[String],
+      internal: String => Boolean): Unit = {
+    val clashes = by.filter(internal)
+    require(clashes.isEmpty, s"$op uses ${clashes.mkString(", ")} as an" +
+      s" internal column name; rename that grouping column in the input")
+  }
+
   /** Per-group covariance and Pearson correlation of two value columns —
     * the cross-column member of the second-moment family (variance and
     * skew/kurt live in the [[Agg]] registry; this one needs two columns,
@@ -126,6 +142,7 @@ object FeatureScaling {
       ddof: Int = 1): DataFrame = {
     require(by.nonEmpty, "covCorrBy needs at least one grouping column")
     require(ddof >= 0, s"ddof must be >= 0 (got $ddof)")
+    requireFreeBy("covCorrBy", by, PowerSumCols.contains)
     graft.expressions.GraftFunctions.register(df.sparkSession)
     val xn0 = graft.functions.NanOps.nanToNull(col(xCol), df.schema(xCol).dataType)
     val yn0 = graft.functions.NanOps.nanToNull(col(yCol), df.schema(yCol).dataType)
@@ -184,6 +201,7 @@ object FeatureScaling {
     require(by.nonEmpty, "corrMatrixBy needs at least one grouping column")
     require(cols.size >= 2, "corrMatrixBy needs at least two value columns")
     require(ddof >= 0, s"ddof must be >= 0 (got $ddof)")
+    requireFreeBy("corrMatrixBy", by, c => PairCol.matches(c) || c == "__r")
     graft.expressions.GraftFunctions.register(df.sparkSession)
     val pairs = for {
       i <- cols.indices
@@ -301,6 +319,7 @@ object FeatureScaling {
       yCol: String,
       exactScale: Int = 2): DataFrame = {
     require(by.nonEmpty, "linregBy needs at least one grouping column")
+    requireFreeBy("linregBy", by, PowerSumCols.contains)
     graft.expressions.GraftFunctions.register(df.sparkSession)
     val xn0 = graft.functions.NanOps.nanToNull(col(xCol), df.schema(xCol).dataType)
     val yn0 = graft.functions.NanOps.nanToNull(col(yCol), df.schema(yCol).dataType)

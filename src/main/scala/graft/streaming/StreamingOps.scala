@@ -947,9 +947,9 @@ object StreamingOps {
 
   /** Streaming LM-perplexity monitoring: score each arriving
     * micro-batch under a FITTED Kneser-Ney model
-    * ([[graft.operators.LanguageModel.knBigramFit]] — frozen,
+    * ([[graft.operators.LanguageModel.knNgramFit]] — frozen,
     * materialized count tables) and hand `emit` the BATCH-ONLY scored
-    * rows (idCol, n_trans, kn_loss). Scoring is STATELESS — every
+    * rows (idCol, n_trans, kn{order}_loss). Scoring is STATELESS — every
     * document's transitions come from its own row, so no document
     * splits across batches and streamed ≡ batch is structural (the
     * curationFilter argument); per-batch cost is batch-sized (the
@@ -960,14 +960,14 @@ object StreamingOps {
     * keep/drop gate, bin for a drift feed). */
   def knScoreIngest(
       stream: DataFrame,
-      model: graft.operators.LanguageModel.KnBigramModel,
+      model: graft.operators.LanguageModel.KnNgramModel,
       idCol: String,
       textCol: String)(
       emit: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         emit(graft.operators.LanguageModel
-          .knBigramScoreWith(model, batch.toDF(), idCol, textCol)
+          .knNgramScoreWith(model, batch.toDF(), idCol, textCol)
           .localCheckpoint())
     }
 
@@ -994,47 +994,21 @@ object StreamingOps {
     }
 
   /** Continuous KN-model maintenance — the [[quantileStateIngest]]
-    * shape for the language model (VERDICT r11 #3): each micro-batch
-    * folds ONCE into its own bounded
-    * [[graft.operators.LanguageModel.knBigramState]] (exact bigram +
-    * unigram count tables) and merges into the running state — one
-    * union+regroup of vocabulary-bounded tables per batch, the batch
-    * text never scanned again. `emit` receives the rolled state, so any
-    * batch boundary can [[graft.operators.LanguageModel.knBigramFromState]]
-    * a scoring-ready model that EXACTLY equals the from-scratch fit on
-    * everything arrived (integer-sum associativity — StreamingSpec
-    * pins the 3-batch roll against the direct fit, and q_kn_state pins
-    * the merged state against q_kn_loss's shared oracle SQL). The
-    * state is CORPUS state (a reference-corpus LM never
-    * watermark-evicts), so it rides foreachBatch with the state in
-    * corpus storage at scale
-    * ([[graft.operators.LanguageModel.writeKnState]] — two parquet
+    * shape for the language model: each micro-batch folds ONCE into its
+    * own bounded [[graft.operators.LanguageModel.knNgramState]] (level-n
+    * gram + unigram counts — the complete sufficient statistic at any
+    * depth) and merges into the running state — one union+regroup of
+    * vocabulary-bounded tables per batch, the batch text never scanned
+    * again. `emit` receives the rolled state, so any batch boundary can
+    * [[graft.operators.LanguageModel.knNgramModel]] a scoring-ready
+    * model (or [[graft.operators.LanguageModel.knNgramLogLossFromState]]
+    * -score) that EXACTLY equals the from-scratch fit on everything
+    * arrived (integer-sum associativity — StreamingSpec pins the 3-batch
+    * roll at orders 2 and 4). The state is CORPUS state (a
+    * reference-corpus LM never watermark-evicts), so it rides
+    * foreachBatch with the state in corpus storage at scale
+    * ([[graft.operators.LanguageModel.writeKnNgramState]] — parquet
     * tables, MERGE INTO at 100 TB), not the state store. */
-  def knStateIngest(
-      stream: DataFrame,
-      initial: graft.operators.LanguageModel.KnBigramState,
-      textCol: String)(
-      emit: graft.operators.LanguageModel.KnBigramState => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.LanguageModel
-    var state = initial
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = LanguageModel.knBigramState(batch.toDF(), textCol)
-        val merged = LanguageModel.mergeKnStates(state, b)
-        state = LanguageModel.KnBigramState(
-          merged.bigrams.localCheckpoint(), merged.unigrams.localCheckpoint())
-        emit(state)
-    }
-  }
-
-  /** [[knStateIngest]] at ORDER N (VERDICT r12 #4 follow-through): each
-    * micro-batch folds once into its bounded
-    * [[graft.operators.LanguageModel.knNgramState]] (level-n gram +
-    * unigram counts — the complete sufficient statistic at any depth)
-    * and merges in; any batch boundary
-    * [[graft.operators.LanguageModel.knNgramLogLossFromState]]-scores
-    * EXACTLY like the from-scratch fit on everything arrived
-    * (StreamingSpec pins the 3-batch roll at order 4). */
   def knNgramStateIngest(
       stream: DataFrame,
       initial: graft.operators.LanguageModel.KnNgramState,

@@ -390,6 +390,21 @@ class CurationSpec extends AnyFunSuite {
     assert(r2D.exists(v => math.abs(v - 25.0 / 28.0) < 1e-9))
   }
 
+  test("covCorrBy/linregBy/corrMatrixBy: a grouping column named like an internal column fails fast, naming it") {
+    val rows = Seq(("a", 1.0, 2.0), ("a", 2.0, 3.0)).toDF("__xn", "x", "y")
+    for (call <- Seq[() => Any](
+        () => FeatureScaling.covCorrBy(rows, Seq("__xn"), "x", "y"),
+        () => FeatureScaling.linregBy(rows, Seq("__xn"), "x", "y"))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("__xn"), e.getMessage)
+    }
+    val pairKey = rows.withColumnRenamed("__xn", "lx__0_1")
+    val e = intercept[IllegalArgumentException] {
+      FeatureScaling.corrMatrixBy(pairKey, Seq("lx__0_1"), Seq("x", "y"))
+    }
+    assert(e.getMessage.contains("lx__0_1"), e.getMessage)
+  }
+
   test("logisticFit: brute-force GD replay; separable data ranks right; NULLs excluded") {
     // y correlates with x1 (value 10 vs 30 scaled /10); x2 constant
     val rows = Seq(

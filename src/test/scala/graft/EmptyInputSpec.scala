@@ -327,26 +327,26 @@ class EmptyInputSpec extends AnyFunSuite {
     // with typed rows; this pins the schema-only frames)
     val oneDoc = Seq((1L, "a b")).toDF("doc_id", "text")
     intercept[IllegalArgumentException] {
-      graft.operators.LanguageModel.knBigramLogLoss(emptyDocs, oneDoc, "doc_id", "text")
+      graft.operators.LanguageModel.knNgramLogLoss(emptyDocs, oneDoc, "doc_id", "text", 2)
     }
     assert(graft.operators.LanguageModel
-      .knBigramLogLoss(oneDoc, emptyDocs, "doc_id", "text").count() == 0)
+      .knNgramLogLoss(oneDoc, emptyDocs, "doc_id", "text", 2).count() == 0)
     // trigram KN: a train corpus with no trigram fails fast; empty
     // score side stays empty
     val twoTok = Seq((1L, "a b")).toDF("doc_id", "text")
     val threeTok = Seq((1L, "a b c")).toDF("doc_id", "text")
     intercept[IllegalArgumentException] {
-      graft.operators.LanguageModel.knTrigramLogLoss(twoTok, threeTok, "doc_id", "text")
+      graft.operators.LanguageModel.knNgramLogLoss(twoTok, threeTok, "doc_id", "text", 3)
     }
     assert(graft.operators.LanguageModel
-      .knTrigramLogLoss(threeTok, emptyDocs, "doc_id", "text").count() == 0)
+      .knNgramLogLoss(threeTok, emptyDocs, "doc_id", "text", 3).count() == 0)
     // grouped KN: empty either side yields empty (inner join on models)
     val emptyG = Seq.empty[(String, Long, String)].toDF("lang", "doc_id", "text")
     val oneG = Seq(("en", 1L, "a b")).toDF("lang", "doc_id", "text")
     assert(graft.operators.LanguageModel
-      .knBigramLogLossBy(emptyG, oneG, "lang", "doc_id", "text").count() == 0)
+      .knNgramLogLossBy(emptyG, oneG, "lang", "doc_id", "text", 2).count() == 0)
     assert(graft.operators.LanguageModel
-      .knBigramLogLossBy(oneG, emptyG, "lang", "doc_id", "text").count() == 0)
+      .knNgramLogLossBy(oneG, emptyG, "lang", "doc_id", "text", 2).count() == 0)
     // WordPiece / unigram-LM: empty corpus -> empty model; tokenizing an
     // empty frame under a real model stays empty
     val wpm = graft.operators.WordPiece.wordpieceLearn(oneDoc, "text", merges = 5)

@@ -45,7 +45,7 @@ class LanguageModelSpec extends AnyFunSuite {
     (lps.size.toLong, -(lps.sum.toDouble) / lps.size)
   }
 
-  test("knBigramLogLoss: brute-force replay incl. unseen word, unseen context") {
+  test("knNgramLogLoss order=2: brute-force replay incl. unseen word, unseen context") {
     val train = Seq((10L, "a b a b c"), (11L, "b c a b"), (12L, "c a"))
       .toDF("doc_id", "text")
     val score = Seq(
@@ -56,7 +56,7 @@ class LanguageModelSpec extends AnyFunSuite {
       (5L, null.asInstanceOf[String])
     ).toDF("doc_id", "text")
     val model = knModel(Seq("a b a b c", "b c a b", "c a").map(_.split(" ").toSeq))
-    val got = LanguageModel.knBigramLogLoss(train, score, "doc_id", "text")
+    val got = LanguageModel.knNgramLogLoss(train, score, "doc_id", "text", order = 2)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got.keySet == Set(1L, 2L, 3L))
     for ((id, w) <- Seq(1L -> "a b c a", 2L -> "a b z", 3L -> "z a b"))
@@ -65,7 +65,7 @@ class LanguageModelSpec extends AnyFunSuite {
     assert(got.values.forall { case (_, l) => !l.isNaN && !l.isInfinite })
   }
 
-  test("knBigramLogLoss: p(.|v) sums to 1 over the padded vocabulary") {
+  test("knNgramLogLoss order=2: p(.|v) sums to 1 over the padded vocabulary") {
     val train = Seq("a b a b c", "b c a b", "c a").map(_.split(" ").toSeq)
     val model = knModel(train)
     val vocab = train.flatten.distinct :+ "__oov__"
@@ -75,12 +75,12 @@ class LanguageModelSpec extends AnyFunSuite {
     }
   }
 
-  test("knBigramLogLoss: clean text scores lower than garbled under a clean model") {
+  test("knNgramLogLoss order=2: clean text scores lower than garbled under a clean model") {
     val train = (0 until 50).map(i => (i.toLong, "the cat sat on the mat"))
       .toDF("doc_id", "text")
     val score = Seq((1L, "the cat sat on the mat"),
       (2L, "mat the on sat cat the")).toDF("doc_id", "text")
-    val got = LanguageModel.knBigramLogLoss(train, score, "doc_id", "text")
+    val got = LanguageModel.knNgramLogLoss(train, score, "doc_id", "text", order = 2)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(got(1L) < got(2L))
   }
@@ -121,7 +121,7 @@ class LanguageModelSpec extends AnyFunSuite {
     }
   }
 
-  test("knTrigramLogLoss: brute-force replay incl. unseen context/middle/word; Σp=1") {
+  test("knNgramLogLoss order=3: brute-force replay incl. unseen context/middle/word; Σp=1") {
     val trainSeqs = Seq("a b a b c", "b c a b a", "c a b")
     val train = trainSeqs.zipWithIndex.map { case (t, i) => (10L + i, t) }
       .toDF("doc_id", "text")
@@ -137,7 +137,7 @@ class LanguageModelSpec extends AnyFunSuite {
       val lps = (0 to w.size - 3).map(i => lnQ(model(w(i), w(i + 1), w(i + 2))))
       (lps.size.toLong, -(lps.sum.toDouble) / lps.size)
     }
-    val got = LanguageModel.knTrigramLogLoss(train, score, "doc_id", "text")
+    val got = LanguageModel.knNgramLogLoss(train, score, "doc_id", "text", order = 3)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got.keySet == Set(1L, 2L, 3L))
     for ((id, t) <- Seq(1L -> "a b c a", 2L -> "a b z b", 3L -> "z q a b c"))
@@ -150,7 +150,7 @@ class LanguageModelSpec extends AnyFunSuite {
     }
   }
 
-  test("knBigramLogLossBy: per-group == independent ungrouped runs; modelless/NULL groups drop") {
+  test("knNgramLogLossBy order=2: per-group == independent ungrouped runs; modelless/NULL groups drop") {
     val train = Seq(
       ("en", 10L, "a b a b c"), ("en", 11L, "b c a b"),
       ("fr", 20L, "x y x"), ("fr", 21L, "y x y y"),
@@ -161,14 +161,16 @@ class LanguageModelSpec extends AnyFunSuite {
       ("de", 3L, "a b"),                        // no de model -> absent
       (null.asInstanceOf[String], 4L, "a b")    // NULL group -> absent
     ).toDF("lang", "doc_id", "text")
-    val got = LanguageModel.knBigramLogLossBy(train, score, "lang", "doc_id", "text")
+    val got = LanguageModel.knNgramLogLossBy(train, score, "lang", "doc_id", "text",
+        order = 2)
       .collect().map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(2), r.getDouble(3))))
       .toMap
     assert(got.keySet == Set(("en", 1L), ("fr", 2L)))
     // each group matches its own ungrouped fit/score exactly
     for (g <- Seq("en", "fr")) {
-      val solo = LanguageModel.knBigramLogLoss(
-        train.where($"lang" === g), score.where($"lang" === g), "doc_id", "text")
+      val solo = LanguageModel.knNgramLogLoss(
+        train.where($"lang" === g), score.where($"lang" === g), "doc_id", "text",
+        order = 2)
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
       solo.foreach { case (id, v) => assert(got((g, id)) == v, s"group $g doc $id") }
     }
@@ -209,23 +211,6 @@ class LanguageModelSpec extends AnyFunSuite {
       }
       p
     }
-  }
-
-  test("knNgramLogLoss: order 2/3 == the dedicated bigram/trigram forms, row for row") {
-    val train = Seq((10L, "a b a b c d e"), (11L, "b c a b a d"), (12L, "c a e b"))
-      .toDF("doc_id", "text")
-    val score = Seq((1L, "a b c a d"), (2L, "a b z e c"), (3L, "z q a b c"))
-      .toDF("doc_id", "text")
-    val bi = LanguageModel.knBigramLogLoss(train, score, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val g2 = LanguageModel.knNgramLogLoss(train, score, "doc_id", "text", order = 2)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    assert(g2 == bi, "order-2 generic != knBigramLogLoss")
-    val tri = LanguageModel.knTrigramLogLoss(train, score, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val g3 = LanguageModel.knNgramLogLoss(train, score, "doc_id", "text", order = 3)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    assert(g3 == tri, "order-3 generic != knTrigramLogLoss")
   }
 
   test("knNgramLogLoss order=5: brute-force replay, all backoff depths; Σp=1; clean<garbled") {
@@ -280,37 +265,74 @@ class LanguageModelSpec extends AnyFunSuite {
     val score = Seq((1L, "a b c a"), (2L, "a e z b"), (3L, "z d a b"))
       .toDF("doc_id", "text")
     val all = days.reduce(_ unionByName _)
-    val direct = LanguageModel.knBigramLogLoss(all, score, "doc_id", "text")
+    val direct = LanguageModel.knNgramLogLoss(all, score, "doc_id", "text", order = 2)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val states = days.map(d => LanguageModel.knBigramState(d, "text"))
+    val states = days.map(d => LanguageModel.knNgramState(d, "text", order = 2))
     // two different merge trees — integer-sum associativity makes the
     // grouping invisible
-    val m1 = LanguageModel.mergeKnStates(
-      LanguageModel.mergeKnStates(states(0), states(1)), states(2))
-    val m2 = LanguageModel.mergeKnStates(states(0),
-      LanguageModel.mergeKnStates(states(2), states(1)))
+    val m1 = LanguageModel.mergeKnNgramStates(
+      LanguageModel.mergeKnNgramStates(states(0), states(1)), states(2))
+    val m2 = LanguageModel.mergeKnNgramStates(states(0),
+      LanguageModel.mergeKnNgramStates(states(2), states(1)))
     for ((m, tag) <- Seq(m1 -> "left-fold", m2 -> "right-fold")) {
-      val got = LanguageModel.knBigramScoreWith(
-        LanguageModel.knBigramFromState(m), score, "doc_id", "text")
+      val got = LanguageModel.knNgramScoreWith(
+        LanguageModel.knNgramModel(m), score, "doc_id", "text")
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
       assert(got == direct, s"$tag merged state != from-scratch fit")
     }
     // at-rest round trip: write day-1+2 state, read, fold day 3 in
     val dir = java.nio.file.Files.createTempDirectory("graft-knstate").toString
-    LanguageModel.writeKnState(
-      LanguageModel.mergeKnStates(states(0), states(1)), dir)
-    val rolled = LanguageModel.mergeKnStates(
-      LanguageModel.readKnState(spark, dir), states(2))
-    val got = LanguageModel.knBigramScoreWith(
-      LanguageModel.knBigramFromState(rolled), score, "doc_id", "text")
+    LanguageModel.writeKnNgramState(
+      LanguageModel.mergeKnNgramStates(states(0), states(1)), dir)
+    val rolled = LanguageModel.mergeKnNgramStates(
+      LanguageModel.readKnNgramState(spark, dir), states(2))
+    val got = LanguageModel.knNgramScoreWith(
+      LanguageModel.knNgramModel(rolled), score, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got == direct, "at-rest rolled state != from-scratch fit")
     // empty state fails fast like the direct fit
     val e = intercept[IllegalArgumentException] {
-      LanguageModel.knBigramFromState(LanguageModel.knBigramState(
-        Seq((1L, "a")).toDF("doc_id", "text"), "text"))
+      LanguageModel.knNgramModel(LanguageModel.knNgramState(
+        Seq((1L, "a")).toDF("doc_id", "text"), "text", order = 2))
     }
-    assert(e.getMessage.contains("no bigrams"))
+    assert(e.getMessage.contains("no 2-grams"))
+  }
+
+  test("KnNgramModel: fit-once scoring == fused knNgramLogLoss at orders 2 and 5; write/read round-trips with its order") {
+    val train = Seq((10L, "a b c d e a b c d f"), (11L, "b c d e a b c d e b"),
+      (12L, "c d e a b c"), (13L, "e a b c d")).toDF("doc_id", "text")
+    val score = Seq((1L, "a b c d e a"), (2L, "a b c d z e"),
+      (3L, "z q r s e a b c d e"), (4L, "a b"),
+      (5L, null.asInstanceOf[String])).toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    for (order <- Seq(2, 5)) {
+      val fused = LanguageModel.knNgramLogLoss(train, score, "doc_id", "text", order)
+      val model = LanguageModel.knNgramFit(train, "text", order)
+      assert(model.order == order && model.counts.keySet == (1 to order).toSet &&
+        model.contexts.keySet == (2 to order).toSet)
+      val fitted = LanguageModel.knNgramScoreWith(model, score, "doc_id", "text")
+      assert(fitted.columns.toSeq == fused.columns.toSeq)
+      assert(fitted.columns.last == s"kn${order}_loss")
+      val want = rows(fused)
+      assert(want.nonEmpty)
+      assert(rows(fitted) == want, s"order $order: fit-once != fused")
+      // every tower table is materialized (a checkpointed RDD scan, not
+      // a lineage back to the train frame)
+      val tables = (model.counts.values ++ model.contexts.values).toSeq :+ model.totals
+      assert(tables.forall(_.queryExecution.logical
+        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-kn${order}model").toString
+      LanguageModel.KnNgramModel.write(model, dir)
+      val back = LanguageModel.KnNgramModel.read(spark, dir)
+      assert(back.order == order && back.d == model.d)
+      assert(rows(LanguageModel.knNgramScoreWith(back, score, "doc_id", "text")) == want,
+        s"order $order: read-back model != fused")
+    }
+    val e = intercept[IllegalArgumentException] {
+      LanguageModel.knNgramFit(Seq((1L, "a b")).toDF("doc_id", "text"), "text", 3)
+    }
+    assert(e.getMessage.contains("no 3-grams"))
   }
 
   test("order-N KN state: merged daily states == from-scratch knNgramLogLoss; merge order invisible; at-rest round trip (VERDICT r12 #4)") {
@@ -389,7 +411,7 @@ class LanguageModelSpec extends AnyFunSuite {
     assert(got == direct, "at-rest rolled SB state != from-scratch fit")
   }
 
-  test("knNgramLogLossBy: per-group == independent ungrouped runs at order 3; modelless/NULL groups drop; order 2 == grouped bigram form") {
+  test("knNgramLogLossBy: per-group == independent ungrouped runs at order 3; modelless/NULL groups drop") {
     val train = Seq(
       ("en", 10L, "a b a b c d"), ("en", 11L, "b c a b d"),
       ("fr", 20L, "x y x z y"), ("fr", 21L, "y x y z"),
@@ -413,16 +435,6 @@ class LanguageModelSpec extends AnyFunSuite {
           ((r.getLong(1), r.getDouble(2)))).toMap
       assert(got.filter(_._1._1 == g) == want, s"group $g diverged")
     }
-    // order 2 == the dedicated grouped-bigram form, row for row
-    val o2 = LanguageModel.knNgramLogLossBy(train, score, "lang", "doc_id",
-        "text", order = 2)
-      .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getDouble(3)))).toMap
-    val bi = LanguageModel.knBigramLogLossBy(train, score, "lang", "doc_id",
-        "text")
-      .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getDouble(3)))).toMap
-    assert(o2 == bi, "order-2 grouped tower != grouped bigram form")
   }
 
   test("sbNgramLogLossBy: per-group == independent ungrouped runs; tokenless/NULL groups drop; backoff-only group scores (VERDICT r12 stretch #8)") {
@@ -462,11 +474,12 @@ class LanguageModelSpec extends AnyFunSuite {
     assert(math.abs(lossDe - (-lnq.toDouble)) < 1e-12, s"de loss $lossDe")
   }
 
-  test("knBigramLogLossBy: train frame needs only (group, text) — no score-side id column") {
+  test("knNgramLogLossBy: train frame needs only (group, text) — no score-side id column") {
     val train = Seq(("en", "a b a b c"), ("en", "b c a b"))
       .toDF("lang", "text")
     val score = Seq(("en", 1L, "a b c")).toDF("lang", "doc_id", "text")
-    val got = LanguageModel.knBigramLogLossBy(train, score, "lang", "doc_id", "text")
+    val got = LanguageModel.knNgramLogLossBy(train, score, "lang", "doc_id", "text",
+        order = 2)
       .collect()
     assert(got.length == 1 && got(0).getLong(2) == 2L)
   }
@@ -559,16 +572,17 @@ class LanguageModelSpec extends AnyFunSuite {
     assert(got(("y", 100L)) == "middle" && got(("y", 101L)) == "tail")
   }
 
-  test("knBigramLogLoss: train without transitions fails fast; empty score is empty") {
+  test("knNgramLogLoss order=2: train without transitions fails fast; empty score is empty") {
     val noTrans = Seq((1L, "a"), (2L, null.asInstanceOf[String])).toDF("doc_id", "text")
     val score = Seq((1L, "a b")).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
-      LanguageModel.knBigramLogLoss(noTrans, score, "doc_id", "text")
+      LanguageModel.knNgramLogLoss(noTrans, score, "doc_id", "text", order = 2)
     }
-    assert(e.getMessage.contains("no transitions"))
+    assert(e.getMessage.contains("no 2-grams"))
     val train = Seq((1L, "a b")).toDF("doc_id", "text")
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       score.schema)
-    assert(LanguageModel.knBigramLogLoss(train, empty, "doc_id", "text").count() == 0L)
+    assert(LanguageModel.knNgramLogLoss(train, empty, "doc_id", "text", order = 2)
+      .count() == 0L)
   }
 }

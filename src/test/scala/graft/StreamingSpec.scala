@@ -562,7 +562,7 @@ class StreamingSpec extends AnyFunSuite {
     val train = Seq((10L, "a b a b c"), (11L, "b c a b")).toDF("doc_id", "text")
     val scoreDocs = Seq((1L, "a b c"), (2L, "c a b a"), (3L, "z a b"), (4L, "b c z"))
       .toDF("doc_id", "text")
-    val model = LanguageModel.knBigramFit(train, "text")
+    val model = LanguageModel.knNgramFit(train, "text", order = 2)
     // engineered 2-batch split of the score slice
     val days = Seq(Seq((1L, "a b c"), (2L, "c a b a")), Seq((3L, "z a b"), (4L, "b c z")))
       .map(_.toDF("doc_id", "text"))
@@ -587,7 +587,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(parts.size == 2) // one emit per day file, batch-only rows
     val got = parts.reduce(_ unionByName _)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val want = LanguageModel.knBigramLogLoss(train, scoreDocs, "doc_id", "text")
+    val want = LanguageModel.knNgramLogLoss(train, scoreDocs, "doc_id", "text", order = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == want)
     // each emitted frame holds ONLY its batch's docs (batch-sized cost pin)
@@ -643,7 +643,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(!got(12L).isNaN && got(12L) == got(13L))
   }
 
-  test("knStateIngest: 3-batch rolled KN state finalizes to the from-scratch fit, bit for bit") {
+  test("knNgramStateIngest order=2: 3-batch rolled KN state finalizes to the from-scratch fit, bit for bit") {
     import graft.operators.LanguageModel
     val days = Seq(
       Seq((10L, "a b a b c"), (11L, "b c a b")),
@@ -663,9 +663,9 @@ class StreamingSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(days.head.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     // empty initial state (cold start): limit(0) frames with the state schema
-    val empty = LanguageModel.knBigramState(days.head.limit(0), "text")
-    val states = scala.collection.mutable.ArrayBuffer.empty[LanguageModel.KnBigramState]
-    StreamingOps.knStateIngest(stream, empty, "text")(
+    val empty = LanguageModel.knNgramState(days.head.limit(0), "text", order = 2)
+    val states = scala.collection.mutable.ArrayBuffer.empty[LanguageModel.KnNgramState]
+    StreamingOps.knNgramStateIngest(stream, empty, "text")(
         st => states.synchronized { states += st; () })
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", tmpDir("graft-ckpt"))
@@ -673,21 +673,21 @@ class StreamingSpec extends AnyFunSuite {
     assert(states.size == 3, s"expected one state per file batch, got ${states.size}")
     val score = Seq((1L, "a b c a"), (2L, "a e z b"), (3L, "z d a b"))
       .toDF("doc_id", "text")
-    val got = LanguageModel.knBigramScoreWith(
-        LanguageModel.knBigramFromState(states.synchronized(states.last)),
+    val got = LanguageModel.knNgramScoreWith(
+        LanguageModel.knNgramModel(states.synchronized(states.last)),
         score, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val want = LanguageModel.knBigramLogLoss(
-        days.reduce(_ unionByName _), score, "doc_id", "text")
+    val want = LanguageModel.knNgramLogLoss(
+        days.reduce(_ unionByName _), score, "doc_id", "text", order = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == want, "rolled streaming state must equal the from-scratch fit")
     // a MID-STREAM boundary also serves: the day-2 state == fit on days 1-2
-    val mid = LanguageModel.knBigramScoreWith(
-        LanguageModel.knBigramFromState(states.synchronized(states(1))),
+    val mid = LanguageModel.knNgramScoreWith(
+        LanguageModel.knNgramModel(states.synchronized(states(1))),
         score, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val midWant = LanguageModel.knBigramLogLoss(
-        days.take(2).reduce(_ unionByName _), score, "doc_id", "text")
+    val midWant = LanguageModel.knNgramLogLoss(
+        days.take(2).reduce(_ unionByName _), score, "doc_id", "text", order = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(mid == midWant, "mid-stream state must equal the fit on arrived days")
   }

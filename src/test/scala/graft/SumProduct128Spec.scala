@@ -178,4 +178,24 @@ class SumProduct128Spec extends AnyFunSuite {
       decimalSums(alt, Seq("g"), "x", "y", 2),
       limbSums(alt, Seq("g"), "x", "y", 2), Seq("g"))
   }
+
+  test("graft_sum128 rejects a non-long argument at analysis") {
+    graft.expressions.GraftFunctions.register(spark)
+    val df = Seq(("a", 1L)).toDF("s", "v")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.agg(call_function(graft.expressions.GraftFunctions.Sum128,
+        col("s"), col("v"), lit(0))).collect()
+    }
+    assert(e.getMessage.contains("graft_sum128"), e.getMessage)
+  }
+
+  test("graft_sum128 rejects a non-integer scale literal") {
+    graft.expressions.GraftFunctions.register(spark)
+    val df = Seq((1L, 2L)).toDF("x", "y")
+    val e = intercept[IllegalArgumentException] {
+      df.agg(call_function(graft.expressions.GraftFunctions.Sum128,
+        col("x"), col("y"), lit(2.5))).collect()
+    }
+    assert(e.getMessage.contains("integer literal"), e.getMessage)
+  }
 }
