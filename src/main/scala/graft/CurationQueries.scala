@@ -242,16 +242,15 @@ object CurationQueries {
     // hash-match q_contaminated's oracle exactly
     "q_contaminated_bloom" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      val (res, release) = NgramOverlap.contaminatedDocsBloomManaged(
-        docs.where(!col("source").isin(EvalSrc: _*)),
-        docs.where(col("source").isin(EvalSrc: _*)),
-        "doc_id", "text", n = 5)
-      val out = res.orderBy("doc_id")
-      // materialize before releasing the eval-gram cache (Verify writes
-      // lazily otherwise); the result is eval-hit-sized, tiny
-      val rows = out.collectAsList()
-      release()
-      s.createDataFrame(rows, out.schema)
+      graft.operators.CacheScope.releasing {
+        val out = NgramOverlap.contaminatedDocsBloom(
+          docs.where(!col("source").isin(EvalSrc: _*)),
+          docs.where(col("source").isin(EvalSrc: _*)),
+          "doc_id", "text", n = 5).orderBy("doc_id")
+        // materialize before the scope releases the eval-gram cache
+        // (Verify writes lazily otherwise); the result is eval-hit-sized
+        s.createDataFrame(out.collectAsList(), out.schema)
+      }
     }),
     // corpus-wide duplicate-gram profile: only 16-byte fingerprint pairs
     // shuffle; dup fraction marks boilerplate docs

@@ -292,11 +292,8 @@ object Stress {
           .otherwise(concat(col("text"), lit(" r9-fresh-suffix"))))
     time("incrPlain corpusXn")(
       Dedup.dedupIncremental(docs, smallBatch, "doc_id", "text").count())
-    time("incrBloom corpusXn") {
-      val (out, release) = Dedup.dedupIncrementalBloomManaged(
-        docs, smallBatch, "doc_id", "text")
-      val c = out.count(); release(); c
-    }
+    time("incrBloom corpusXn")(graft.operators.CacheScope.releasing(
+      Dedup.dedupIncrementalBloom(docs, smallBatch, "doc_id", "text").count()))
     // weighted WOR sampling: k-bounded heap, wall ~ one scan
     time("weightedSampleK") {
       graft.operators.Sampling.weightedSampleK(docs, Seq("source"), 50,

@@ -140,29 +140,20 @@ object Dedup {
     * Same contract as [[dedupIncremental]] otherwise: NULL content
     * absent, batch-internal keep-first by min id, batch columns
     * preserved. The q_dedup_incr_bloom oracle IS q_dedup_incremental's
-    * replay — matching hashes certify the prune is invisible. */
+    * replay — matching hashes certify the prune is invisible.
+    *
+    * The corpus-fingerprint table is held ([[CacheScope.hold]]); a
+    * long-lived daily-loop session materializes the day's survivors
+    * inside [[CacheScope.releasing]] to free it (ADVICE r8). */
   def dedupIncrementalBloom(
       corpus: DataFrame,
       batch: DataFrame,
       idCol: String,
-      contentCol: String): DataFrame =
-    dedupIncrementalBloomManaged(corpus, batch, idCol, contentCol)._1
-
-  /** [[dedupIncrementalBloom]] plus the release handle for the persisted
-    * corpus-fingerprint table — the `*Managed` cache-lifecycle contract
-    * (ADVICE r8): a long-lived daily-loop session calls the Managed form
-    * and releases after the day's survivors are materialized. */
-  def dedupIncrementalBloomManaged(
-      corpus: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      contentCol: String): (DataFrame, () => Unit) = {
+      contentCol: String): DataFrame = {
     graft.expressions.GraftFunctions.register(batch.sparkSession)
     val (h1, h2) = contentKey(col(contentCol))
-    val seen = corpus.where(col(contentCol).isNotNull)
-      .select(h1.as("__h1"), h2.as("__h2")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val release = () => { seen.unpersist(false); () }
+    val seen = CacheScope.hold(corpus.where(col(contentCol).isNotNull)
+      .select(h1.as("__h1"), h2.as("__h2")).distinct())
     // exact count sizes the filter — no caller estimate to get wrong
     // (the contaminatedDocsBloom sizing rule); also warms `seen`
     val nCorpus = seen.count()
@@ -200,12 +191,12 @@ object Dedup {
     // winner pattern) rather than a winners join-back: the probed frame
     // is consumed exactly once, so the subquery-backed bloom filter
     // isn't replicated across self-join branches by pushdown
-    (fresh
+    fresh
       .groupBy(col("__h1"), col("__h2"))
       .agg(min_by(
         struct(batch.columns.toIndexedSeq.map(c => fresh(c)): _*),
         col(idCol)).as("__w"))
-      .select(col("__w.*")), release)
+      .select(col("__w.*"))
   }
 
   /** Persistable MinHash-LSH index of a corpus — the state that makes
@@ -354,71 +345,32 @@ object Dedup {
     * opt-in, because an unconditional hint OOMs on a large batch).
     * After accepting survivors, append their sketch rows to the stored
     * index ([[buildNearDupIndex]] over the survivors — or reuse the
-    * probe's own `shB`/`bB` tables) to roll the corpus forward. */
+    * probe's own `shB`/`bB` tables) to roll the corpus forward.
+    *
+    * The batch sketch's two tables are held ([[CacheScope.hold]]).
+    * `preSketch` (r13 optimization): the batch's (shingle table, banded
+    * buckets) when the caller has already materialized them
+    * ([[batchSketchCheckpointed]]) — the probe then computes and holds NO
+    * sketch of its own (the ingestion sinks were paying the batch sketch
+    * twice: once to probe, once to append); the caller owns the
+    * pre-sketch lifecycle and the tables MUST be the sketch of
+    * `batch.where(textCol isNotNull)` at the index's (n, bands, rows). */
   def dedupIncrementalNear(
       index: NearDupIndex,
       batch: DataFrame,
       idCol: String,
       textCol: String,
       threshold: Double = 0.5,
-      cache: Boolean = true,
-      broadcastBatch: Boolean = false): DataFrame =
-    dedupIncrementalNearManaged(index, batch, idCol, textCol, threshold,
-      cache, broadcastBatch)._1
-
-  /** The batch's sketch (shingle table, banded-bucket table), both
-    * localCheckpointed — for callers that PROBE and APPEND the same
-    * batch (the ingestion sinks): the sketch is computed once, the
-    * probe reuses it via [[dedupIncrementalNearManaged]]'s `preSketch`,
-    * and the checkpointed frames are exactly the delta rows a
-    * [[NearDupIndex]] append stores (schemas match the index tables).
-    * NULL-content rows contribute nothing, as everywhere in the
-    * family. */
-  def batchSketchCheckpointed(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      bands: Int,
-      rows: Int): (DataFrame, DataFrame) = {
-    val sh = shingleTable(batch.where(col(textCol).isNotNull),
-      idCol, textCol, n).localCheckpoint()
-    (sh, bandedBuckets(sh, bands, rows).localCheckpoint())
-  }
-
-  /** [[dedupIncrementalNear]] plus the release handle for the batch
-    * sketch's persisted intermediates — same cache-lifecycle contract as
-    * the other `*Managed` variants. `preSketch` (r13 optimization): the
-    * batch's (shingle table, banded buckets) when the caller has already
-    * materialized them ([[batchSketchCheckpointed]]) — the probe then
-    * computes NO sketch of its own (the ingestion sinks were paying the
-    * batch sketch twice: once to probe, once to append); the caller owns
-    * the pre-sketch lifecycle and the tables MUST be the sketch of
-    * `batch.where(textCol isNotNull)` at the index's (n, bands, rows). */
-  def dedupIncrementalNearManaged(
-      index: NearDupIndex,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double = 0.5,
-      cache: Boolean = true,
       broadcastBatch: Boolean = false,
-      preSketch: Option[(DataFrame, DataFrame)] = None): (DataFrame, () => Unit) = {
+      preSketch: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     require(!batch.columns.contains("__dup_id"),
       "dedupIncrementalNear reserves column name __dup_id; rename it in the input")
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def maybeCache(d: DataFrame): DataFrame =
-      if (cache) {
-        persisted += d
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else d
     val b = batch.where(col(textCol).isNotNull)
-    val (shB, bB) = preSketch match {
-      case Some((sh0, b0)) => (sh0, b0)
-      case None =>
-        val sh1 = maybeCache(shingleTable(b, idCol, textCol, index.n))
-        (sh1, maybeCache(bandedBuckets(sh1, index.bands, index.rows)))
+    val (shB, bB) = preSketch.getOrElse {
+      val sh1 = CacheScope.hold(shingleTable(b, idCol, textCol, index.n))
+      (sh1, CacheScope.hold(bandedBuckets(sh1, index.bands, index.rows)))
     }
+
     val (shP, bP) = if (broadcastBatch) (broadcast(shB), broadcast(bB)) else (shB, bB)
     val jac = size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("double") /
       size(array_union(col("sa.sh"), col("sb.sh")))
@@ -447,8 +399,27 @@ object Dedup {
       .where(jac >= threshold)
       .select(col("id_b").as("__dup_id"))
     val dropped = crossDup.union(selfDup).distinct()
-    (b.join(dropped, col(idCol) === col("__dup_id"), "left_anti"),
-      () => persisted.foreach(_.unpersist(false)))
+    b.join(dropped, col(idCol) === col("__dup_id"), "left_anti")
+  }
+
+  /** The batch's sketch (shingle table, banded-bucket table), both
+    * localCheckpointed — for callers that PROBE and APPEND the same
+    * batch (the ingestion sinks): the sketch is computed once, the
+    * probe reuses it via [[dedupIncrementalNear]]'s `preSketch`,
+    * and the checkpointed frames are exactly the delta rows a
+    * [[NearDupIndex]] append stores (schemas match the index tables).
+    * NULL-content rows contribute nothing, as everywhere in the
+    * family. */
+  def batchSketchCheckpointed(
+      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int,
+      bands: Int,
+      rows: Int): (DataFrame, DataFrame) = {
+    val sh = shingleTable(batch.where(col(textCol).isNotNull),
+      idCol, textCol, n).localCheckpoint()
+    (sh, bandedBuckets(sh, bands, rows).localCheckpoint())
   }
 
   /** MinHash signature: k independent min-hashes over a shingle array.
@@ -544,6 +515,12 @@ object Dedup {
     * raise bands / drop rows). Precision is exact regardless: candidates
     * are verified with the true Jaccard, computed once per *distinct*
     * candidate pair.
+    *
+    * The shingle and bucket tables are held ([[CacheScope.hold]]): Spark's
+    * CacheManager dedupes identical plans, so repeated calls over the
+    * *same* input reuse one entry, but a long-lived session sweeping many
+    * distinct corpora consumes each result inside
+    * [[CacheScope.releasing]] so the entries do not pile up.
     */
   def nearDupPairs(
       df: DataFrame,
@@ -553,41 +530,16 @@ object Dedup {
       threshold: Double = 0.5,
       bands: Int = 32,
       rows: Int = 4,
-      cache: Boolean = true,
-      maxBucketSize: Int = 0): DataFrame =
-    nearDupPairsManaged(df, idCol, textCol, n, threshold, bands, rows, cache, maxBucketSize)._1
-
-  /** [[nearDupPairs]] plus a release handle that unpersists the two cached
-    * intermediates (shingle and bucket tables). Call it after the
-    * consuming action: Spark's CacheManager dedupes identical plans, so
-    * repeated calls over the *same* input reuse one entry, but a
-    * long-lived session sweeping many distinct corpora would otherwise
-    * accumulate pinned cache entries indefinitely. */
-  def nearDupPairsManaged(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 3,
-      threshold: Double = 0.5,
-      bands: Int = 32,
-      rows: Int = 4,
-      cache: Boolean = true,
-      maxBucketSize: Int = 0): (DataFrame, () => Unit) = {
+      maxBucketSize: Int = 0): DataFrame = {
     // The shingle table feeds three plan branches (signature build and the
     // two sides of the verification join) and the bucket table two (the
     // candidate self-join): without persisting, Spark re-runs the
     // shingling/minhash subtree once per branch. Both intermediates are
     // compact relative to the corpus (arrays of distinct shingles; 16
     // bytes x bands+rows signatures); MEMORY_AND_DISK spills cleanly at
-    // scale. Pass cache=false to trade CPU for memory.
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def maybeCache(d: DataFrame): DataFrame =
-      if (cache) {
-        persisted += d
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else d
-    val sh = maybeCache(shingleTable(df, idCol, textCol, n))
-    val buckets = maybeCache(bandedBuckets(sh, bands, rows))
+    // scale.
+    val sh = CacheScope.hold(shingleTable(df, idCol, textCol, n))
+    val buckets = CacheScope.hold(bandedBuckets(sh, bands, rows))
     // Skew guard (off by default): a degenerate bucket — boilerplate
     // shared by millions of documents hashing every band identically —
     // would go quadratic in the candidate self-join. maxBucketSize > 0
@@ -613,12 +565,11 @@ object Dedup {
       .distinct()
     val jac = size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("double") /
       size(array_union(col("sa.sh"), col("sb.sh")))
-    val result = cand
+    cand
       .join(sh.as("sa"), col("id_a") === col("sa.id"))
       .join(sh.as("sb"), col("id_b") === col("sb.id"))
       .select(col("id_a"), col("id_b"), jac.as("jaccard"))
       .where(col("jaccard") >= threshold)
-    (result, () => persisted.foreach(_.unpersist(false)))
   }
 
   /** Cross-corpus near-duplicate pairs (train/test decontamination): for
@@ -638,33 +589,10 @@ object Dedup {
       threshold: Double = 0.5,
       bands: Int = 32,
       rows: Int = 4,
-      cache: Boolean = true,
-      broadcastRight: Boolean = false): DataFrame =
-    crossNearDupPairsManaged(left, right, idCol, textCol, n, threshold,
-      bands, rows, cache, broadcastRight)._1
-
-  /** [[crossNearDupPairs]] plus a release handle — same cache-lifecycle
-    * contract as [[nearDupPairsManaged]]. */
-  def crossNearDupPairsManaged(
-      left: DataFrame,
-      right: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 3,
-      threshold: Double = 0.5,
-      bands: Int = 32,
-      rows: Int = 4,
-      cache: Boolean = true,
-      broadcastRight: Boolean = false): (DataFrame, () => Unit) = {
-    // same multi-branch-consumption caching rationale as [[nearDupPairs]]
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def maybeCache(d: DataFrame): DataFrame =
-      if (cache) {
-        persisted += d
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else d
+      broadcastRight: Boolean = false): DataFrame = {
+    // same multi-branch-consumption holding rationale as [[nearDupPairs]]
     def prep(df: DataFrame) = {
-      val sh = maybeCache(shingleTable(df, idCol, textCol, n))
+      val sh = CacheScope.hold(shingleTable(df, idCol, textCol, n))
       (sh, bandedBuckets(sh, bands, rows))
     }
     val (shL, bL) = prep(left)
@@ -685,12 +613,11 @@ object Dedup {
       .distinct()
     val jac = size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("double") /
       size(array_union(col("sa.sh"), col("sb.sh")))
-    val result = cand
+    cand
       .join(shL.as("sa"), col("id_l") === col("sa.id"))
       .join(shR.as("sb"), col("id_r") === col("sb.id"))
       .select(col("id_l"), col("id_r"), jac.as("jaccard"))
       .where(col("jaccard") >= threshold)
-    (result, () => persisted.foreach(_.unpersist(false)))
   }
 
   /** 64-bit SimHash over a token array: bit i of the result is set iff the
@@ -783,31 +710,21 @@ object Dedup {
     *
     * `tokenHash`/`bitOf` select the hash family: the xxhash64 default is
     * the production path; `TextAnalysis.fingerprint` + [[replayableBit]]
-    * keeps every step inside exact SQL-replayable int64 arithmetic. */
+    * keeps every step inside exact SQL-replayable int64 arithmetic.
+    *
+    * The (id, sim) signature table is held ([[CacheScope.hold]]): it feeds
+    * BOTH sides of the pigeonhole candidate join, and without the persist
+    * the whole tokenize + 64-vote aggregation runs twice (measured: ~60%
+    * of the operator's wall at sf0.1). It is compact — 16 bytes per
+    * document — so it caches at any corpus size that fits the cluster's
+    * disk. */
   def simhashPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
       maxDist: Int = 3,
       tokenHash: Column => Column = xxhash64(_),
-      bitOf: (Column, Int) => Column = hashBit): DataFrame =
-    simhashPairsManaged(df, idCol, textCol, maxDist, tokenHash, bitOf)._1
-
-  /** [[simhashPairs]] plus a release handle for the persisted signature
-    * table — same cache-lifecycle contract as [[nearDupPairsManaged]].
-    * The (id, sim) table feeds BOTH sides of the pigeonhole candidate
-    * join; without the persist the whole tokenize + 64-vote aggregation
-    * runs twice (measured: ~60% of the operator's wall at sf0.1). It is
-    * compact — 16 bytes per document — so it caches at any corpus size
-    * that fits the cluster's disk. */
-  def simhashPairsManaged(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxDist: Int = 3,
-      tokenHash: Column => Column = xxhash64(_),
-      bitOf: (Column, Int) => Column = hashBit,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      bitOf: (Column, Int) => Column = hashBit): DataFrame = {
     // chunkBits = 64/(maxDist+1): maxDist >= 15 would give chunks of < 4
     // bits (16 distinct values), whose buckets degenerate toward all-pairs
     // — the opposite of the 100 TB-safe claim. Fail fast instead.
@@ -815,14 +732,10 @@ object Dedup {
       s"maxDist must be in [0, 15] (got $maxDist): 64/(maxDist+1)-bit chunks below 4 bits degenerate to near-all-pairs buckets")
     val nChunks = maxDist + 1
     val chunkBits = 64 / nChunks
-    val sim0 = simhashCols(
+    val sim = CacheScope.hold(simhashCols(
       df.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("t"))
         .select(col("id"), tokenHash(col("t")).as("h")),
-      "id", "h", bitOf)
-    val sim = if (cache)
-      sim0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sim0
-    val release = () => if (cache) { sim.unpersist(false); () } else ()
+      "id", "h", bitOf))
     val chunks = sim.select(
       col("id"), col("sim"),
       explode(array((0 until nChunks).map { c =>
@@ -831,7 +744,7 @@ object Dedup {
             .bitwiseAND(lit((1L << chunkBits) - 1)).as("v"))
       }: _*)).as("ck"))
       .select(col("id"), col("sim"), col("ck.chunk"), col("ck.v"))
-    val result = chunks.as("a")
+    chunks.as("a")
       .join(chunks.as("b"),
         col("a.chunk") === col("b.chunk") && col("a.v") === col("b.v")
           && col("a.id") < col("b.id"))
@@ -839,7 +752,6 @@ object Dedup {
         hamming(col("a.sim"), col("b.sim")).as("dist"))
       .where(col("dist") <= maxDist)
       .distinct()
-    (result, release)
   }
 
   /** MinHash near-duplicate dedup, keep-smallest-id — the TEXT twin of
@@ -866,31 +778,14 @@ object Dedup {
       threshold: Double = 0.5,
       bands: Int = 32,
       rows: Int = 4,
-      cache: Boolean = true,
-      maxBucketSize: Int = 0): DataFrame =
-    nearDupDedupManaged(df, idCol, textCol, n, threshold, bands, rows,
-      cache, maxBucketSize)._1
-
-  /** [[nearDupDedup]] plus the release handle for the pair machinery's
-    * persisted intermediates — same cache-lifecycle contract as the other
-    * `*Managed` variants. */
-  def nearDupDedupManaged(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 3,
-      threshold: Double = 0.5,
-      bands: Int = 32,
-      rows: Int = 4,
-      cache: Boolean = true,
-      maxBucketSize: Int = 0): (DataFrame, () => Unit) = {
+      maxBucketSize: Int = 0): DataFrame = {
     require(!df.columns.contains("__dup_id"),
       "nearDupDedup reserves column name __dup_id; rename it in the input")
-    val (pairs, release) = nearDupPairsManaged(
-      df, idCol, textCol, n, threshold, bands, rows, cache, maxBucketSize)
+    val pairs = nearDupPairs(
+      df, idCol, textCol, n, threshold, bands, rows, maxBucketSize)
     // id_a < id_b by construction, so id_b is always the dropped side
     val dropped = pairs.select(col("id_b").as("__dup_id")).distinct()
-    (df.join(dropped, col(idCol) === col("__dup_id"), "left_anti"), release)
+    df.join(dropped, col(idCol) === col("__dup_id"), "left_anti")
   }
 
   /** Connected-component labels over a near-duplicate pair graph by
@@ -922,24 +817,10 @@ object Dedup {
       iterations: Int,
       idA: String = "id_a",
       idB: String = "id_b"): DataFrame =
-    dupClustersManaged(pairs, iterations, idA, idB)._1
+    dupClustersAudited(pairs, iterations, idA, idB)._1
 
-  /** [[dupClusters]] plus a release handle for the per-round persisted
-    * label tables — same cache-lifecycle contract as the other `*Managed`
-    * variants. */
-  def dupClustersManaged(
-      pairs: DataFrame,
-      iterations: Int,
-      idA: String = "id_a",
-      idB: String = "id_b",
-      cache: Boolean = true): (DataFrame, () => Unit) = {
-    val (labels, _, release) =
-      dupClustersAudited(pairs, iterations, idA, idB, cache)
-    (labels, release)
-  }
-
-  /** [[dupClustersManaged]] plus a CONVERGENCE AUDIT (VERDICT r6 #7):
-    * the second returned frame holds the (id, prev_label, cluster_id)
+  /** [[dupClusters]] plus a CONVERGENCE AUDIT (VERDICT r6 #7): the
+    * second returned frame holds the (id, prev_label, cluster_id)
     * rows whose label still changed in the FINAL round — non-empty means
     * `iterations` was under-chosen for the realized chain topology and
     * some components still carry local minima (count it, or inspect the
@@ -955,66 +836,21 @@ object Dedup {
       pairs: DataFrame,
       iterations: Int,
       idA: String = "id_a",
-      idB: String = "id_b",
-      cache: Boolean = true): (DataFrame, DataFrame, () => Unit) = {
+      idB: String = "id_b"): (DataFrame, DataFrame) = {
     require(iterations >= 1,
       s"dupClusters needs iterations >= 1 (got $iterations)")
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def maybeCache(d: DataFrame): DataFrame =
-      if (cache) {
-        persisted += d
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else d
-    // The edge plan references the pair table THREE times (both
-    // directions of the symmetric union + the self-loop distinct), so
-    // the (id_a, id_b) projection is persisted FIRST: without it, the
-    // caller's whole pair-generation subtree — typically a full
-    // MinHash/LSH candidate join — would re-execute once per reference
-    // when the edge cache materializes (measured 3x the pair cost in
-    // the x8 stress probe).
-    val p = maybeCache(pairs.select(col(idA).as("src"), col(idB).as("dst")))
-    // symmetric edges + a self-loop per node: min over {own label} ∪
-    // {neighbor labels} is then ONE join + ONE map-side-combined min
-    // aggregation per round (the self-loop carries the node's own label
-    // through the same path), instead of a neighbor-min join PLUS a
-    // join-back against the previous labels — halves the per-round
-    // stage count, which is the wall-clock floor for a composed
-    // metadata-sized plan
-    val sym = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-    val edges = maybeCache(
-      sym.union(sym.select(col("src")).distinct()
-        .select(col("src"), col("src").as("dst"))))
-    // Per-round LINEAGE TRUNCATION (the [[dupClustersConverged]] rule,
-    // applied to the fixed-k path too — VERDICT r7 #3): a plain persist
-    // leaves each round's logical plan re-referencing the edge subtree
-    // and every earlier round, so the final plan grows multiplicatively
-    // with k (the r7 golden pins showed 62 Exchanges / 48 broadcasts at
-    // k=3; Catalyst analysis cost, not runtime, is what blows up).
-    // localCheckpoint materializes the round and REPLACES the lineage
-    // with the checkpointed RDD, keeping every round one join deep.
-    // Trade (documented Spark semantics): localCheckpoint data does not
-    // survive executor loss — on an unreliable cluster set a checkpoint
-    // dir and swap in .checkpoint(). Rounds thereby evaluate eagerly
-    // inside this call, so the edge persists are released before
-    // returning and the release handle is a no-op kept for contract
-    // compatibility.
-    var labels = edges.where(col("src") === col("dst"))
-      .select(col("src").as("id"), col("src").as("lbl"))
-      .localCheckpoint()
-    var prev = labels
-    for (_ <- 1 to iterations) {
-      prev = labels
-      labels = edges
-        .join(labels.select(col("id").as("__nid"), col("lbl").as("__nlbl")),
-          col("dst") === col("__nid"))
-        .groupBy(col("src").as("id")).agg(min(col("__nlbl")).as("lbl"))
-        .localCheckpoint()
+    minLabelRounds(pairs, idA, idB) { (seed, round) =>
+      var labels = seed
+      var prev = labels
+      for (_ <- 1 to iterations) {
+        prev = labels
+        labels = round(labels)
+      }
+      val audit = prev.select(col("id"), col("lbl").as("prev_label"))
+        .join(labels.select(col("id"), col("lbl").as("cluster_id")), "id")
+        .where(col("prev_label") =!= col("cluster_id"))
+      (labels.select(col("id"), col("lbl").as("cluster_id")), audit)
     }
-    val audit = prev.select(col("id"), col("lbl").as("prev_label"))
-      .join(labels.select(col("id"), col("lbl").as("cluster_id")), "id")
-      .where(col("prev_label") =!= col("cluster_id"))
-    persisted.foreach(_.unpersist(false))
-    (labels.select(col("id"), col("lbl").as("cluster_id")), audit, () => ())
   }
 
   /** [[dupClusters]] run TO CONVERGENCE with a safety cap: propagation
@@ -1032,52 +868,73 @@ object Dedup {
       pairs: DataFrame,
       maxIters: Int,
       idA: String = "id_a",
-      idB: String = "id_b",
-      cache: Boolean = true): (DataFrame, Int, Boolean) = {
+      idB: String = "id_b"): (DataFrame, Int, Boolean) = {
     require(maxIters >= 1, s"dupClustersConverged needs maxIters >= 1 (got $maxIters)")
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def maybeCache(d: DataFrame): DataFrame =
-      if (cache) {
-        persisted += d
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else d
-    val p = maybeCache(pairs.select(col(idA).as("src"), col(idB).as("dst")))
+    minLabelRounds(pairs, idA, idB) { (seed, round) =>
+      var labels = seed
+      var rounds = 0
+      var moved = true
+      while (moved && rounds < maxIters) {
+        val next = round(labels)
+        moved = next.join(
+            labels.select(col("id"), col("lbl").as("__prev")), "id")
+          .where(col("__prev") =!= col("lbl"))
+          .limit(1).count() > 0
+        labels = next
+        rounds += 1
+      }
+      (labels.select(col("id"), col("lbl").as("cluster_id")), rounds, !moved)
+    }
+  }
+
+  /** The min-label propagation core of [[dupClustersAudited]] and
+    * [[dupClustersConverged]]: builds the symmetric edge list of `pairs`
+    * and the seed labels (every node labeled with its own id), then hands
+    * `loop` the seed and the one-round step; `loop` decides how many
+    * rounds to run. The pair projection and edge list are held for the
+    * loop and released when it returns. */
+  private def minLabelRounds[T](pairs: DataFrame, idA: String, idB: String)(
+      loop: (DataFrame, DataFrame => DataFrame) => T): T = CacheScope.releasing {
+    // The edge plan references the pair table THREE times (both
+    // directions of the symmetric union + the self-loop distinct), so
+    // the (id_a, id_b) projection is held FIRST: without it, the
+    // caller's whole pair-generation subtree — typically a full
+    // MinHash/LSH candidate join — would re-execute once per reference
+    // when the edge cache materializes (measured 3x the pair cost in
+    // the x8 stress probe).
+    val p = CacheScope.hold(pairs.select(col(idA).as("src"), col(idB).as("dst")))
+    // symmetric edges + a self-loop per node: min over {own label} ∪
+    // {neighbor labels} is then ONE join + ONE map-side-combined min
+    // aggregation per round (the self-loop carries the node's own label
+    // through the same path), instead of a neighbor-min join PLUS a
+    // join-back against the previous labels — halves the per-round
+    // stage count, which is the wall-clock floor for a composed
+    // metadata-sized plan
     val sym = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-    val edges = maybeCache(
+    val edges = CacheScope.hold(
       sym.union(sym.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst"))))
-    // Per-round LINEAGE TRUNCATION: a plain persist leaves each round's
-    // logical plan referencing every earlier round AND the edge subtree
-    // again, so the final plan grows ~multiplicatively with the round
-    // count (measured: >1000 Exchanges in the pre-execution plan after a
-    // handful of rounds) and Catalyst analysis becomes the bottleneck.
+    // Per-round LINEAGE TRUNCATION (VERDICT r7 #3): a plain persist
+    // leaves each round's logical plan re-referencing the edge subtree
+    // and every earlier round, so the final plan grows multiplicatively
+    // with the round count (the r7 golden pins showed 62 Exchanges / 48
+    // broadcasts at k=3; >1000 Exchanges after a handful of converging
+    // rounds; Catalyst analysis cost, not runtime, is what blows up).
     // localCheckpoint materializes the round and REPLACES the lineage
-    // with the checkpointed RDD, keeping every round's plan one join
-    // deep. Trade (documented Spark semantics): localCheckpoint data
-    // does not survive executor loss — on an unreliable cluster set a
-    // checkpoint dir and swap in .checkpoint(). State is label-table-
-    // sized per round (distinct pair ids), bounded by maxIters.
-    var labels = edges.where(col("src") === col("dst"))
+    // with the checkpointed RDD, keeping every round one join deep.
+    // Trade (documented Spark semantics): localCheckpoint data does not
+    // survive executor loss — on an unreliable cluster set a checkpoint
+    // dir and swap in .checkpoint(). Rounds thereby evaluate eagerly
+    // inside the loop, so the held edges can go once it returns; state
+    // is label-table-sized per round (distinct pair ids).
+    val seed = edges.where(col("src") === col("dst"))
       .select(col("src").as("id"), col("src").as("lbl"))
       .localCheckpoint()
-    var rounds = 0
-    var moved = true
-    while (moved && rounds < maxIters) {
-      val next = edges
-        .join(labels.select(col("id").as("__nid"), col("lbl").as("__nlbl")),
-          col("dst") === col("__nid"))
-        .groupBy(col("src").as("id")).agg(min(col("__nlbl")).as("lbl"))
-        .localCheckpoint()
-      moved = next.join(
-          labels.select(col("id"), col("lbl").as("__prev")), "id")
-        .where(col("__prev") =!= col("lbl"))
-        .limit(1).count() > 0
-      labels = next
-      rounds += 1
-    }
-    val out = labels.select(col("id"), col("lbl").as("cluster_id"))
-    persisted.foreach(_.unpersist(false))
-    (out, rounds, !moved)
+    loop(seed, labels => edges
+      .join(labels.select(col("id").as("__nid"), col("lbl").as("__nlbl")),
+        col("dst") === col("__nid"))
+      .groupBy(col("src").as("id")).agg(min(col("__nlbl")).as("lbl"))
+      .localCheckpoint())
   }
 
   /** Connected components by ALTERNATING STAR CONTRACTION (the
@@ -1214,34 +1071,17 @@ object Dedup {
       threshold: Double = 0.5,
       bands: Int = 32,
       rows: Int = 4,
-      cache: Boolean = true,
-      maxBucketSize: Int = 0): DataFrame =
-    nearDupDedupTransitiveManaged(df, idCol, textCol, iterations, n,
-      threshold, bands, rows, cache, maxBucketSize)._1
-
-  /** [[nearDupDedupTransitive]] plus the combined release handle. */
-  def nearDupDedupTransitiveManaged(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      iterations: Int,
-      n: Int = 3,
-      threshold: Double = 0.5,
-      bands: Int = 32,
-      rows: Int = 4,
-      cache: Boolean = true,
-      maxBucketSize: Int = 0): (DataFrame, () => Unit) = {
+      maxBucketSize: Int = 0): DataFrame = {
     require(!df.columns.contains("__dup_id"),
       "nearDupDedupTransitive reserves column name __dup_id; rename it in the input")
-    val (pairs, releasePairs) = nearDupPairsManaged(
-      df, idCol, textCol, n, threshold, bands, rows, cache, maxBucketSize)
-    val (labels, releaseLabels) = dupClustersManaged(pairs, iterations, cache = cache)
+    val pairs = nearDupPairs(
+      df, idCol, textCol, n, threshold, bands, rows, maxBucketSize)
+    val labels = dupClusters(pairs, iterations)
     // drop every labeled row that is not its cluster's min; unlabeled
     // (singleton) rows pass through the anti-join untouched
     val dropped = labels.where(col("id") =!= col("cluster_id"))
       .select(col("id").as("__dup_id"))
-    (df.join(dropped, col(idCol) === col("__dup_id"), "left_anti"),
-      () => { releaseLabels(); releasePairs() })
+    df.join(dropped, col(idCol) === col("__dup_id"), "left_anti")
   }
 
   /** Leakage-free train/val/test split: assigns every row the split of
@@ -1449,27 +1289,13 @@ object Dedup {
       textCol: String,
       maxDist: Int = 3,
       tokenHash: Column => Column = xxhash64(_),
-      bitOf: (Column, Int) => Column = hashBit): DataFrame =
-    simhashDedupManaged(df, idCol, textCol, maxDist, tokenHash, bitOf)._1
-
-  /** [[simhashDedup]] plus the release handle for the persisted signature
-    * table — same cache-lifecycle contract as the other `*Managed`
-    * variants. */
-  def simhashDedupManaged(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxDist: Int = 3,
-      tokenHash: Column => Column = xxhash64(_),
-      bitOf: (Column, Int) => Column = hashBit,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      bitOf: (Column, Int) => Column = hashBit): DataFrame = {
     require(!df.columns.contains("__dup_id"),
       "simhashDedup reserves column name __dup_id; rename it in the input")
-    val (pairs, release) = simhashPairsManaged(
-      df, idCol, textCol, maxDist, tokenHash, bitOf, cache)
+    val pairs = simhashPairs(df, idCol, textCol, maxDist, tokenHash, bitOf)
     // id_a < id_b by construction, so id_b is always the dropped side
     val dropped = pairs.select(col("id_b").as("__dup_id")).distinct()
-    (df.join(dropped, col(idCol) === col("__dup_id"), "left_anti"), release)
+    df.join(dropped, col(idCol) === col("__dup_id"), "left_anti")
   }
 
   /** Embedding-cosine near-duplicate dedup, keep-smallest-id — the fifth
@@ -1490,37 +1316,26 @@ object Dedup {
     * buckets ([[Similarity.lshNeighbors]], auto-sized planes — the scale
     * path; candidates only from bucket equality joins, verified with the
     * same exact cosine, so precision is exact and only recall follows the
-    * S-curve).
+    * S-curve). The lsh path holds its intermediates
+    * ([[CacheScope.hold]]); the exact path persists nothing.
     */
   def embeddingDedup(
       df: DataFrame,
       idCol: String,
       embCol: String,
       threshold: Double,
-      method: String = "exact"): DataFrame =
-    embeddingDedupManaged(df, idCol, embCol, threshold, method)._1
-
-  /** [[embeddingDedup]] plus the release handle for the LSH path's
-    * persisted intermediates — same cache-lifecycle contract as the other
-    * `*Managed` variants (call `release()` after the consuming action;
-    * the exact path persists nothing and its handle is a no-op). */
-  def embeddingDedupManaged(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      threshold: Double,
-      method: String = "exact"): (DataFrame, () => Unit) = {
+      method: String = "exact"): DataFrame = {
     require(!df.columns.contains("__dup_id"),
       "embeddingDedup reserves column name __dup_id; rename it in the input")
-    val (pairs, release) = method match {
-      case "exact" => (Similarity.bruteForcePairs(df, idCol, embCol, threshold), () => ())
-      case "lsh"   => Similarity.lshNeighborsManaged(df, idCol, embCol, threshold)
+    val pairs = method match {
+      case "exact" => Similarity.bruteForcePairs(df, idCol, embCol, threshold)
+      case "lsh"   => Similarity.lshNeighbors(df, idCol, embCol, threshold)
       case other   => throw new IllegalArgumentException(
         s"embeddingDedup method must be exact|lsh (got $other)")
     }
     // id_a < id_b by construction, so id_b is always the dropped side
     val dropped = pairs.select(col("id_b").as("__dup_id")).distinct()
-    (df.join(dropped, col(idCol) === col("__dup_id"), "left_anti"), release)
+    df.join(dropped, col(idCol) === col("__dup_id"), "left_anti")
   }
 
   /** EXACT-recall set-similarity self-join: every pair of documents with
@@ -1547,17 +1362,9 @@ object Dedup {
     * same narrow id-keyed verify joins as the LSH path. The length
     * filter `t·|x| <= |y| <= |x|/t` prunes candidates inside the join
     * condition before the distinct.
-    */
-  def jaccardJoinExact(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      threshold: Double): DataFrame =
-    jaccardJoinExactManaged(df, idCol, textCol, n, threshold)._1
-
-  /** [[jaccardJoinExact]] plus the release handle for the persisted
-    * stages — the [[nearDupPairsManaged]] cache-lifecycle contract.
+    *
+    * The membership, representative, prefix and verified-pair stages are
+    * held ([[CacheScope.hold]]).
     *
     * EXACT-COLLAPSE front end (r8): identical shingle ARRAYS collapse to
     * one representative before the prefix join, and member pairs expand
@@ -1578,21 +1385,14 @@ object Dedup {
     * recall AND this equivalence). Collapse identity is the 128-bit
     * double hash of the JSON-encoded array (unambiguous encoding, the
     * [[contentKey]] collision argument). */
-  def jaccardJoinExactManaged(
+  def jaccardJoinExact(
       df: DataFrame,
       idCol: String,
       textCol: String,
       n: Int,
-      threshold: Double,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1] (got $threshold)")
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def maybeCache(d: DataFrame): DataFrame =
-      if (cache) {
-        persisted += d
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else d
     val ckey = to_json(col("sh"))
     val keyed = shingleTable(df, idCol, textCol, n)
       .where(col("sh").isNotNull)
@@ -1600,9 +1400,9 @@ object Dedup {
         xxhash64(ckey).as("__g1"),
         xxhash64(lit("graft-jaccard-salt"), ckey).as("__g2"))
     // (id -> content group) membership: 24 bytes/doc, feeds the expansion
-    val members = maybeCache(keyed.select(col("id"), col("__g1"), col("__g2")))
+    val members = CacheScope.hold(keyed.select(col("id"), col("__g1"), col("__g2")))
     // one representative per distinct content (min id, the shared array)
-    val reps = maybeCache(keyed.groupBy(col("__g1"), col("__g2"))
+    val reps = CacheScope.hold(keyed.groupBy(col("__g1"), col("__g2"))
       .agg(min(col("id")).as("id"), first(col("sh")).as("sh")))
     val sized = reps.withColumn("len", size(col("sh")))
     val ex = sized.select(col("id"), col("len"), explode(col("sh")).as("tok"))
@@ -1614,7 +1414,7 @@ object Dedup {
     // doc) and t has few mantissa bits in practice — and a one-off
     // boundary slip only ever *lengthens* the prefix (recall unharmed).
     def ceilT(len: Column): Column = -floor(-len * threshold)
-    val prefix = maybeCache(ex.join(freq, "tok")
+    val prefix = CacheScope.hold(ex.join(freq, "tok")
       .withColumn("rk", row_number().over(w))
       .where(col("rk") <= col("len") - ceilT(col("len")) + 1)
       .select(col("id"), col("len"), col("tok"), col("rk")))
@@ -1641,7 +1441,7 @@ object Dedup {
     val jac = size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("double") /
       size(array_union(col("sa.sh"), col("sb.sh")))
     // verified DISTINCT-CONTENT pairs (representative ids)
-    val gpairs = maybeCache(cand
+    val gpairs = CacheScope.hold(cand
       .join(reps.as("sa"), col("id_a") === col("sa.id"))
       .join(reps.as("sb"), col("id_b") === col("sb.id"))
       .select(col("id_a"), col("id_b"), jac.as("jaccard"),
@@ -1665,8 +1465,7 @@ object Dedup {
           && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
         lit(1.0).as("jaccard"))
-    (cross.unionByName(within),
-      () => persisted.foreach(_.unpersist(false)))
+    cross.unionByName(within)
   }
 
   /** Corpus-wide SEGMENT-level exact dedup, keep-first (the C4/CCNet
@@ -1710,40 +1509,28 @@ object Dedup {
     * from their surviving segments in original order: (id, text_dedup,
     * n_kept, n_total). Documents whose every segment was seen earlier
     * in the corpus VANISH from the output (the C4 rule). The rebuild
-    * collect_list is bounded by a single document's segment count. */
+    * collect_list is bounded by a single document's segment count.
+    *
+    * The segment stage is held ([[CacheScope.hold]]): the chunkText
+    * explosion (split + per-chunk slice/join + posexplode) feeds THREE
+    * consumers — the winner aggregation, the survivor join, and the
+    * per-doc totals — so without the persist the segmentation runs three
+    * times (measured 4.9 s → ~2 s at sf0.1). */
   def segmentDedupText(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      maxTokens: Int,
-      cache: Boolean = true): DataFrame =
-    segmentDedupTextManaged(df, idCol, textCol, maxTokens, cache)._1
-
-  /** [[segmentDedupText]] plus the release handle for the persisted
-    * segment stage — the [[nearDupPairsManaged]] cache-lifecycle
-    * contract. The chunkText explosion (split + per-chunk slice/join +
-    * posexplode) feeds THREE consumers — the winner aggregation, the
-    * survivor join, and the per-doc totals — so without the persist the
-    * segmentation runs three times (measured 4.9 s → ~2 s at sf0.1). */
-  def segmentDedupTextManaged(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxTokens: Int,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
-    var segs = TextAnalysis.chunkText(df, textCol, maxTokens)
-      .select(col(idCol), col("chunk_idx"), col("chunk"))
-    if (cache)
-      segs = segs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val release = () => if (cache) { segs.unpersist(false); () } else ()
+      maxTokens: Int): DataFrame = {
+    val segs = CacheScope.hold(TextAnalysis.chunkText(df, textCol, maxTokens)
+      .select(col(idCol), col("chunk_idx"), col("chunk")))
     val totals = segs.groupBy(col(idCol)).agg(count(lit(1)).as("n_total"))
-    (segmentDedup(segs, idCol, "chunk_idx", "chunk")
+    segmentDedup(segs, idCol, "chunk_idx", "chunk")
       .groupBy(col(idCol))
       .agg(
         array_join(
           transform(array_sort(collect_list(struct(col("chunk_idx"), col("chunk")))),
             x => x.getField("chunk")), " ").as("text_dedup"),
         count(lit(1)).as("n_kept"))
-      .join(totals, idCol), release)
+      .join(totals, idCol)
   }
 }

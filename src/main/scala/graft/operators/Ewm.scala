@@ -79,21 +79,21 @@ object Ewm {
     * via the chunk/superchunk carry topology described above. All specs
     * share one chunk grid sized by the fastest-decaying base; bases may
     * differ by at most ~2x in decay rate (the lag-3 truncation proof
-    * above needs >= ~125 digits per superchunk step for every base). */
-  /** [[decayedSums]] body; returns the result plus the release handle for
-    * the persisted row stage. The row table (running + total scaled sums)
-    * feeds BOTH the output rows and the chunk-summary aggregation;
-    * without the persist the scan + group sort + window stack runs twice
-    * (the [[Dedup.nearDupPairsManaged]] multi-branch rationale — one
-    * extra full sorted pass of the data at scale). */
+    * above needs >= ~125 digits per superchunk step for every base).
+    *
+    * The row table (running + total scaled sums) is held
+    * ([[CacheScope.hold]]): it feeds BOTH the output rows and the
+    * chunk-summary aggregation, and without the persist the scan + group
+    * sort + window stack runs twice (the [[Dedup.nearDupPairs]]
+    * multi-branch rationale — one extra full sorted pass of the data at
+    * scale). */
   private def decayedSums(
       df: DataFrame,
       by: Seq[String],
       orderCols: Seq[Column],
       valid: Column,
       specs: Seq[DSpec],
-      maxChunk: Int,
-      cache: Boolean): (DataFrame, () => Unit) = {
+      maxChunk: Int): DataFrame = {
     val dMax = specs.map(s => -math.log10(s.base)).max
     val dMin = specs.map(s => -math.log10(s.base)).min
     require(dMax / dMin <= 2.000001,
@@ -116,8 +116,7 @@ object Ewm {
         .withColumn(s"__sn_${s.name}", sum(xs).over(wChunkRun))
         .withColumn(s"__tn_${s.name}", sum(xs).over(wChunkAll))
     }
-    if (cache) base = base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val release = () => if (cache) { base.unpersist(false); () } else ()
+    base = CacheScope.hold(base)
 
     // one summary row per (group, chunk); __tn_* are chunk constants
     var chunks = base
@@ -171,8 +170,8 @@ object Ewm {
     for (s <- specs)
       out = out.withColumn(s.name,
         pow(lit(s.base), col("__q")) * (col(s"__sn_${s.name}") + col(s"__cr_${s.name}")))
-    (out.drop(Reserved ++ specs.flatMap(s =>
-      Seq(s"__sn_${s.name}", s"__tn_${s.name}", s"__cr_${s.name}")): _*), release)
+    out.drop(Reserved ++ specs.flatMap(s =>
+      Seq(s"__sn_${s.name}", s"__tn_${s.name}", s"__cr_${s.name}")): _*)
   }
 
   private def checkArgs(
@@ -207,35 +206,18 @@ object Ewm {
       valueCol: String,
       alpha: Double,
       as: String = "ewm",
-      maxChunk: Int = 1024,
-      cache: Boolean = true): DataFrame =
-    ewmMeanManaged(df, by, orderCols, valueCol, alpha, as, maxChunk, cache)._1
-
-  /** [[ewmMean]] plus the release handle for the persisted row stage —
-    * the [[Dedup.nearDupPairsManaged]] cache-lifecycle contract (call
-    * `release()` after the consuming action; Spark's CacheManager dedupes
-    * identical plans, so repeated unmanaged calls over the same input
-    * reuse one entry). */
-  def ewmMeanManaged(
-      df: DataFrame,
-      by: Seq[String],
-      orderCols: Seq[Column],
-      valueCol: String,
-      alpha: Double,
-      as: String = "ewm",
-      maxChunk: Int = 1024,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      maxChunk: Int = 1024): DataFrame = {
     checkArgs(df, by, alpha, maxChunk, Seq(as))
     val beta = 1.0 - alpha
     val vn = graft.functions.NanOps
       .nanToNull(col(valueCol), df.schema(valueCol).dataType).cast(DoubleType)
-    val (sums, release) = decayedSums(df.withColumn("__v", vn), by, orderCols,
+    val sums = decayedSums(df.withColumn("__v", vn), by, orderCols,
       col("__v").isNotNull,
       Seq(DSpec("__swx", beta, col("__v")), DSpec("__sw", beta, lit(1.0))),
-      maxChunk, cache)
-    (sums
+      maxChunk)
+    sums
       .withColumn(as, when(col("__sw") > 0, col("__swx") / col("__sw")))
-      .drop("__v", "__swx", "__sw"), release)
+      .drop("__v", "__swx", "__sw")
   }
 
   /** Appends `asVar`/`asStd` = pandas `ewm(alpha).var()/std()` (adjust=
@@ -252,42 +234,26 @@ object Ewm {
       alpha: Double,
       asVar: String = "ewm_var",
       asStd: String = "ewm_std",
-      maxChunk: Int = 1024,
-      cache: Boolean = true): DataFrame =
-    ewmVarStdManaged(df, by, orderCols, valueCol, alpha, asVar, asStd,
-      maxChunk, cache)._1
-
-  /** [[ewmVarStd]] plus the release handle — same contract as
-    * [[ewmMeanManaged]]. */
-  def ewmVarStdManaged(
-      df: DataFrame,
-      by: Seq[String],
-      orderCols: Seq[Column],
-      valueCol: String,
-      alpha: Double,
-      asVar: String = "ewm_var",
-      asStd: String = "ewm_std",
-      maxChunk: Int = 1024,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      maxChunk: Int = 1024): DataFrame = {
     checkArgs(df, by, alpha, maxChunk, Seq(asVar, asStd))
     val beta = 1.0 - alpha
     val vn = graft.functions.NanOps
       .nanToNull(col(valueCol), df.schema(valueCol).dataType).cast(DoubleType)
-    val (sums, release) = decayedSums(df.withColumn("__v", vn), by, orderCols,
+    val sums = decayedSums(df.withColumn("__v", vn), by, orderCols,
       col("__v").isNotNull,
       Seq(DSpec("__sw", beta, lit(1.0)),
         DSpec("__swx", beta, col("__v")),
         DSpec("__swxx", beta, col("__v") * col("__v")),
         DSpec("__sw2", beta * beta, lit(1.0))),
-      maxChunk, cache)
+      maxChunk)
     // pandas _ewm.pyx bias=false form: var = (Sw*Swxx - Swx^2) / (Sw^2 - Sw2)
     val num = greatest(col("__sw") * col("__swxx") - col("__swx") * col("__swx"), lit(0.0))
     val den = col("__sw") * col("__sw") - col("__sw2")
     val v = when(den > 0, num / den)
-    (sums
+    sums
       .withColumn(asVar, v)
       .withColumn(asStd, sqrt(v))
-      .drop("__v", "__sw", "__swx", "__swxx", "__sw2"), release)
+      .drop("__v", "__sw", "__swx", "__swxx", "__sw2")
   }
 
   /** Appends `asCov`/`asCorr` = pandas `ewm(alpha).cov(other)/corr(other)`
@@ -323,24 +289,7 @@ object Ewm {
       alpha: Double,
       asCov: String = "ewm_cov",
       asCorr: String = "ewm_corr",
-      maxChunk: Int = 1024,
-      cache: Boolean = true): DataFrame =
-    ewmCovCorrManaged(df, by, orderCols, xCol, yCol, alpha, asCov, asCorr,
-      maxChunk, cache)._1
-
-  /** [[ewmCovCorr]] plus the release handle — same contract as
-    * [[ewmMeanManaged]]. */
-  def ewmCovCorrManaged(
-      df: DataFrame,
-      by: Seq[String],
-      orderCols: Seq[Column],
-      xCol: String,
-      yCol: String,
-      alpha: Double,
-      asCov: String = "ewm_cov",
-      asCorr: String = "ewm_corr",
-      maxChunk: Int = 1024,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      maxChunk: Int = 1024): DataFrame = {
     checkArgs(df, by, alpha, maxChunk, Seq(asCov, asCorr))
     val beta = 1.0 - alpha
     val xn = graft.functions.NanOps
@@ -349,7 +298,7 @@ object Ewm {
       .nanToNull(col(yCol), df.schema(yCol).dataType).cast(DoubleType)
     val in = df.withColumn("__vx", xn).withColumn("__vy", yn)
     val both = col("__vx").isNotNull && col("__vy").isNotNull
-    val (sums, release) = decayedSums(in, by, orderCols, both,
+    val sums = decayedSums(in, by, orderCols, both,
       Seq(DSpec("__sw", beta, lit(1.0)),
         DSpec("__swx", beta, col("__vx")),
         DSpec("__swy", beta, col("__vy")),
@@ -357,19 +306,19 @@ object Ewm {
         DSpec("__swxx", beta, col("__vx") * col("__vx")),
         DSpec("__swyy", beta, col("__vy") * col("__vy")),
         DSpec("__sw2", beta * beta, lit(1.0))),
-      maxChunk, cache)
+      maxChunk)
     val covNum = col("__sw") * col("__swxy") - col("__swx") * col("__swy")
     val den = col("__sw") * col("__sw") - col("__sw2")
     val vx = col("__sw") * col("__swxx") - col("__swx") * col("__swx")
     val vy = col("__sw") * col("__swyy") - col("__swy") * col("__swy")
     val vxOk = vx > lit(RelCorrEps) * col("__sw") * col("__swxx")
     val vyOk = vy > lit(RelCorrEps) * col("__sw") * col("__swyy")
-    (sums
+    sums
       .withColumn(asCov, when(den > 0, covNum / den))
       .withColumn(asCorr, when(den > 0 && vxOk && vyOk,
         greatest(least(covNum / sqrt(vx * vy), lit(1.0)), lit(-1.0))))
       .drop("__vx", "__vy", "__sw", "__swx", "__swy", "__swxy",
-        "__swxx", "__swyy", "__sw2"), release)
+        "__swxx", "__swyy", "__sw2")
   }
 
   /** TIME-decayed exponentially-weighted mean over an irregular event
@@ -399,8 +348,8 @@ object Ewm {
     * with the in-cell offset still in [0, 512).
     *
     * The plan is the [[ewmMean]] shape: one row shuffle by group, two
-    * summary-scale aggregations joined back, row stage persisted across
-    * its two consumers (`cache`/Managed contract). */
+    * summary-scale aggregations joined back, row stage held across its
+    * two consumers ([[CacheScope.hold]]). */
   def ewmTimeMean(
       df: DataFrame,
       by: Seq[String],
@@ -408,30 +357,16 @@ object Ewm {
       valueCol: String,
       halflife: String,
       as: String = "ewm",
-      tieBreak: Seq[Column] = Nil,
-      cache: Boolean = true): DataFrame =
-    ewmTimeMeanManaged(df, by, timeCol, valueCol, halflife, as, tieBreak, cache)._1
-
-  /** [[ewmTimeMean]] plus the release handle — same contract as
-    * [[ewmMeanManaged]]. */
-  def ewmTimeMeanManaged(
-      df: DataFrame,
-      by: Seq[String],
-      timeCol: String,
-      valueCol: String,
-      halflife: String,
-      as: String = "ewm",
-      tieBreak: Seq[Column] = Nil,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      tieBreak: Seq[Column] = Nil): DataFrame = {
     checkArgs(df, by, 0.5, 1024, Seq(as))
     // mean needs only rate-1 sums -> the full 512-halflife cell budget
-    val (sums, release) = timeDecayedSums(df, by, timeCol, valueCol, halflife,
+    val sums = timeDecayedSums(df, by, timeCol, valueCol, halflife,
       tieBreak, cellHl = 512L,
-      Seq(TSpec("n", 1, col("__v")), TSpec("d", 1, lit(1.0))), cache)
+      Seq(TSpec("n", 1, col("__v")), TSpec("d", 1, lit(1.0))))
     val den = col("__s_d")
-    ((sums
+    sums
       .withColumn(as, when(den > 0, col("__s_n") / den))
-      .drop("__s_n", "__s_d")), release)
+      .drop("__s_n", "__s_d")
   }
 
   /** TIME-decayed exponentially-weighted variance/std over an irregular
@@ -470,31 +405,15 @@ object Ewm {
       halflife: String,
       asVar: String = "ewm_var",
       asStd: String = "ewm_std",
-      tieBreak: Seq[Column] = Nil,
-      cache: Boolean = true): DataFrame =
-    ewmTimeVarStdManaged(df, by, timeCol, valueCol, halflife, asVar, asStd,
-      tieBreak, cache)._1
-
-  /** [[ewmTimeVarStd]] plus the release handle — same contract as
-    * [[ewmMeanManaged]]. */
-  def ewmTimeVarStdManaged(
-      df: DataFrame,
-      by: Seq[String],
-      timeCol: String,
-      valueCol: String,
-      halflife: String,
-      asVar: String = "ewm_var",
-      asStd: String = "ewm_std",
-      tieBreak: Seq[Column] = Nil,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      tieBreak: Seq[Column] = Nil): DataFrame = {
     checkArgs(df, by, 0.5, 1024, Seq(asVar, asStd))
     // Sw2 decays at rate 2 -> halve the cell so 2^(2q) <= 2^512
-    val (sums, release) = timeDecayedSums(df, by, timeCol, valueCol, halflife,
+    val sums = timeDecayedSums(df, by, timeCol, valueCol, halflife,
       tieBreak, cellHl = 256L,
       Seq(TSpec("w", 1, lit(1.0)),
         TSpec("wx", 1, col("__v")),
         TSpec("wxx", 1, col("__v") * col("__v")),
-        TSpec("w2", 2, lit(1.0))), cache)
+        TSpec("w2", 2, lit(1.0))))
     // pandas _ewm.pyx bias=false form: var = (Sw*Swxx - Swx^2)/(Sw^2 - Sw2),
     // gated by the relative reliability cutoff (scaladoc): den must carry
     // >= 1e-6 of Sw^2 or the cancelled sums are double-precision noise
@@ -502,10 +421,10 @@ object Ewm {
       col("__s_w") * col("__s_wxx") - col("__s_wx") * col("__s_wx"), lit(0.0))
     val den = col("__s_w") * col("__s_w") - col("__s_w2")
     val v = when(den > lit(RelVarEps) * col("__s_w") * col("__s_w"), num / den)
-    ((sums
+    sums
       .withColumn(asVar, v)
       .withColumn(asStd, sqrt(v))
-      .drop("__s_w", "__s_wx", "__s_wxx", "__s_w2")), release)
+      .drop("__s_w", "__s_wx", "__s_wxx", "__s_w2")
   }
 
   /** TIME-decayed pairwise covariance/correlation — the wall-clock twin
@@ -531,31 +450,14 @@ object Ewm {
       halflife: String,
       asCov: String = "ewm_cov",
       asCorr: String = "ewm_corr",
-      tieBreak: Seq[Column] = Nil,
-      cache: Boolean = true): DataFrame =
-    ewmTimeCovCorrManaged(df, by, timeCol, xCol, yCol, halflife, asCov,
-      asCorr, tieBreak, cache)._1
-
-  /** [[ewmTimeCovCorr]] plus the release handle — same contract as
-    * [[ewmMeanManaged]]. */
-  def ewmTimeCovCorrManaged(
-      df: DataFrame,
-      by: Seq[String],
-      timeCol: String,
-      xCol: String,
-      yCol: String,
-      halflife: String,
-      asCov: String = "ewm_cov",
-      asCorr: String = "ewm_corr",
-      tieBreak: Seq[Column] = Nil,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      tieBreak: Seq[Column] = Nil): DataFrame = {
     checkArgs(df, by, 0.5, 1024, Seq(asCov, asCorr))
     val xn = graft.functions.NanOps
       .nanToNull(col(xCol), df.schema(xCol).dataType).cast(DoubleType)
     val yn = graft.functions.NanOps
       .nanToNull(col(yCol), df.schema(yCol).dataType).cast(DoubleType)
     val staged = df.withColumn("__vx", xn).withColumn("__vy", yn)
-    val (sums, release) = timeDecayedSumsStaged(staged, by, timeCol,
+    val sums = timeDecayedSumsStaged(staged, by, timeCol,
       halflife, tieBreak, cellHl = 256L,
       Seq(TSpec("w", 1, lit(1.0)),
         TSpec("wx", 1, col("__vx")),
@@ -565,7 +467,7 @@ object Ewm {
         TSpec("wyy", 1, col("__vy") * col("__vy")),
         TSpec("w2", 2, lit(1.0))),
       col("__vx").isNotNull && col("__vy").isNotNull,
-      Seq("__vx", "__vy"), cache)
+      Seq("__vx", "__vy"))
     val covNum = col("__s_w") * col("__s_wxy") - col("__s_wx") * col("__s_wy")
     val den = col("__s_w") * col("__s_w") - col("__s_w2")
     val denOk = den > lit(RelVarEps) * col("__s_w") * col("__s_w")
@@ -573,12 +475,12 @@ object Ewm {
     val vy = col("__s_w") * col("__s_wyy") - col("__s_wy") * col("__s_wy")
     val vxOk = vx > lit(RelCorrEps) * col("__s_w") * col("__s_wxx")
     val vyOk = vy > lit(RelCorrEps) * col("__s_w") * col("__s_wyy")
-    ((sums
+    sums
       .withColumn(asCov, when(denOk, covNum / den))
       .withColumn(asCorr, when(denOk && vxOk && vyOk,
         greatest(least(covNum / sqrt(vx * vy), lit(1.0)), lit(-1.0))))
       .drop("__s_w", "__s_wx", "__s_wy", "__s_wxy", "__s_wxx", "__s_wyy",
-        "__s_w2")), release)
+        "__s_w2")
   }
 
   /** [[ewmTimeVarStd]]'s reliability cutoff: den/Sw^2 below this is
@@ -617,8 +519,8 @@ object Ewm {
     * offset still in [0, cellHl).
     *
     * The plan is the [[ewmMean]] shape: one row shuffle by group, two
-    * summary-scale aggregations joined back, row stage persisted across
-    * its two consumers (`cache`/Managed contract). */
+    * summary-scale aggregations joined back, row stage held across its
+    * two consumers ([[CacheScope.hold]]). */
   private def timeDecayedSums(
       df: DataFrame,
       by: Seq[String],
@@ -627,12 +529,11 @@ object Ewm {
       halflife: String,
       tieBreak: Seq[Column],
       cellHl: Long,
-      specs: Seq[TSpec],
-      cache: Boolean): (DataFrame, () => Unit) = {
+      specs: Seq[TSpec]): DataFrame = {
     val vn = graft.functions.NanOps
       .nanToNull(col(valueCol), df.schema(valueCol).dataType).cast(DoubleType)
     timeDecayedSumsStaged(df.withColumn("__v", vn), by, timeCol, halflife,
-      tieBreak, cellHl, specs, col("__v").isNotNull, Seq("__v"), cache)
+      tieBreak, cellHl, specs, col("__v").isNotNull, Seq("__v"))
   }
 
   /** [[timeDecayedSums]] with caller-staged value columns: `valid` gates
@@ -649,8 +550,7 @@ object Ewm {
       cellHl: Long,
       specs: Seq[TSpec],
       valid: Column,
-      staging: Seq[String],
-      cache: Boolean): (DataFrame, () => Unit) = {
+      staging: Seq[String]): DataFrame = {
     // the Rolling.rollingTime interval convention: CalendarInterval
     // without months (months have no fixed micros length)
     val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
@@ -682,8 +582,7 @@ object Ewm {
         .withColumn(s"__sn_${s.name}", sum(xs).over(wCellRun))
         .withColumn(s"__tn_${s.name}", sum(xs).over(wCellAll))
     }
-    if (cache) base = base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val release = () => if (cache) { base.unpersist(false); () } else ()
+    base = CacheScope.hold(base)
 
     // one summary row per non-empty (group, cell); A = total decayed to
     // the cell's END boundary = gamma * scaled total
@@ -747,7 +646,7 @@ object Ewm {
       out = out.withColumn(s"__s_${s.name}",
         pow(lit(2.0), lit(-s.rate.toDouble) * col("__q")) *
           (col(s"__sn_${s.name}") + col(s"__cr_${s.name}")))
-    (out.drop(staging ++ Seq("__tm", "__c", "__q") ++ specs.flatMap(s =>
-      Seq(s"__sn_${s.name}", s"__tn_${s.name}", s"__cr_${s.name}")): _*), release)
+    out.drop(staging ++ Seq("__tm", "__c", "__q") ++ specs.flatMap(s =>
+      Seq(s"__sn_${s.name}", s"__tn_${s.name}", s"__cr_${s.name}")): _*)
   }
 }

@@ -452,16 +452,16 @@ object FeatureScaling {
     * Per iteration: ONE map-side-combined aggregation computes the
     * full-batch gradient, then β_j += lr·(g_j/div_j)/n on the driver —
     * d+1 numbers of driver state per step, the
-    * [[Similarity.kmeansFit]] shape. The feature projection is
-    * persisted across the `iters` passes so a 100 TB source is read
-    * once. Rows with a NULL label or NULL feature are excluded. */
+    * [[Similarity.kmeansFit]] shape. The feature projection is held
+    * across the `iters` passes so a 100 TB source is read once, and
+    * released before returning. Rows with a NULL label or NULL feature
+    * are excluded. */
   def logisticFit(
       df: DataFrame,
       features: Seq[(Column, Double)],
       label: Column,
       iters: Int,
-      lr: Double = 0.1,
-      cache: Boolean = true): Array[Double] = {
+      lr: Double = 0.1): Array[Double] = {
     require(features.nonEmpty, "logisticFit needs at least one feature")
     require(features.forall(_._2 > 0), "feature divisors must be > 0")
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
@@ -470,9 +470,8 @@ object FeatureScaling {
       features.zipWithIndex.map { case ((f, _), j) => f.cast("long").as(s"__x$j") }
     val keep = (0 until d).map(j => col(s"__x$j").isNotNull)
       .foldLeft(col("__y").isNotNull)(_ && _)
-    val p0 = df.select(cols: _*).where(keep)
-    val p = if (cache) p0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else p0
-    try {
+    CacheScope.releasing {
+      val p = CacheScope.hold(df.select(cols: _*).where(keep))
       graft.expressions.GraftFunctions.register(df.sparkSession)
       val betas = Array.fill(d + 1)(0.0)
       val divs = features.map(_._2)
@@ -507,7 +506,7 @@ object FeatureScaling {
         }
       }
       betas
-    } finally { if (cache) { p.unpersist(false); () } }
+    }
   }
 
   /** Scores rows against [[logisticFit]] coefficients: appends `as` =

@@ -143,10 +143,8 @@ object NgramOverlap {
     * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` (default 4M
     * items) / `.maxNumBits` — raise both for eval corpora beyond that.
     *
-    * The eval gram table is built twice (once folded into the Bloom,
-    * once as the verify join's small side); pass `cache = true` (default)
-    * to persist it across the two consumers — the Managed variant hands
-    * back the release handle.
+    * The eval gram table feeds two consumers (folded into the Bloom, and
+    * the verify join's small side), so it is held ([[CacheScope.hold]]).
     */
   def contaminatedDocsBloom(
       train: DataFrame,
@@ -154,25 +152,11 @@ object NgramOverlap {
       idCol: String,
       textCol: String,
       n: Int = 5,
-      cache: Boolean = true,
-      tokenizer: Column => Column = identity): DataFrame =
-    contaminatedDocsBloomManaged(train, eval_, idCol, textCol, n, cache, tokenizer)._1
-
-  /** [[contaminatedDocsBloom]] plus the eval-gram-table release handle
-    * (the [[Dedup.nearDupPairsManaged]] cache-lifecycle contract). */
-  def contaminatedDocsBloomManaged(
-      train: DataFrame,
-      eval_ : DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 5,
-      cache: Boolean = true,
-      tokenizer: Column => Column = identity): (DataFrame, () => Unit) = {
+      tokenizer: Column => Column = identity): DataFrame = {
     graft.expressions.GraftFunctions.register(train.sparkSession)
-    val e0 = gramTable(eval_, idCol, textCol, n, tokenizer)
+    val e = CacheScope.hold(gramTable(eval_, idCol, textCol, n, tokenizer)
       .select(col("g").as("__eg")).distinct()
-      .select(col("__eg"), TextAnalysis.fingerprintFast(col("__eg")).as("__f"))
-    val e = if (cache) e0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else e0
+      .select(col("__eg"), TextAnalysis.fingerprintFast(col("__eg")).as("__f")))
     // index build, both eval-sized: the exact distinct-gram count sizes
     // the filter (no caller estimate to get wrong), then one aggregation
     // folds the fingerprints into the serialized sketch
@@ -189,10 +173,9 @@ object NgramOverlap {
     val t = gramTable(train, idCol, textCol, n, tokenizer)
       .select(col("id"), col("g"), TextAnalysis.fingerprintFast(col("g")).as("__f"))
       .where(keep)
-    val result = t.join(e, t("__f") === e("__f") && t("g") === e("__eg"))
+    t.join(e, t("__f") === e("__f") && t("g") === e("__eg"))
       .groupBy(t("id").as(idCol))
       .agg(count(lit(1)).as("n_hit_grams"))
-    (result, () => { if (cache) e.unpersist(false): Unit })
   }
 
   /** Per-document corpus-wide duplication profile: of the document's
@@ -205,46 +188,34 @@ object NgramOverlap {
     * aggregation (how many docs contain each gram) -> join back by the
     * pair -> per-doc count. Three shuffles, all of 16-byte keys + counts;
     * document text never moves.
+    *
+    * The corpus-scale gram table is held ([[CacheScope.hold]]; ADVICE
+    * r13): it feeds the frequency aggregate AND the join-back with
+    * different shuffle payloads, so exchange reuse cannot dedupe them —
+    * un-persisted (pre-r13), the shingle explode + fingerprinting ran
+    * twice per query. Outside a [[CacheScope.releasing]] scope the entry
+    * lives in the session cache until `clearCache()`/unpersist.
     */
-  /** CACHE-LIFECYCLE NOTE (ADVICE r13): this convenience form persists
-    * the corpus-scale fingerprint table into the SESSION cache and
-    * discards the release handle — the entry lives until
-    * `clearCache()`/unpersist. Long-lived library sessions should call
-    * [[duplicateGramStatsManaged]] and release after the consuming
-    * action. */
   def duplicateGramStats(
       df: DataFrame, idCol: String, textCol: String, n: Int = 5,
-      tokenizer: Column => Column = identity): DataFrame =
-    duplicateGramStatsManaged(df, idCol, textCol, n, tokenizer)._1
-
-  /** [[duplicateGramStats]] plus a release handle for the persisted gram
-    * table — the `*Managed` cache-lifecycle convention. The gram table
-    * feeds the frequency aggregate AND the join-back with different
-    * shuffle payloads, so exchange reuse cannot dedupe them —
-    * un-persisted (pre-r13), the shingle explode + fingerprinting ran
-    * twice per query. */
-  def duplicateGramStatsManaged(
-      df: DataFrame, idCol: String, textCol: String, n: Int = 5,
-      tokenizer: Column => Column = identity): (DataFrame, () => Unit) = {
+      tokenizer: Column => Column = identity): DataFrame = {
     graft.expressions.GraftFunctions.register(df.sparkSession)
     // fused pair: one char pass computes both folds (bit-identical to the
     // standalone fp/fp2 expressions — TextMultiModalSpec pin)
-    val g = df
+    val g = CacheScope.hold(df
       .select(col(idCol).as("id"),
         explode(Dedup.shinglesFast(tokenizer(col(textCol)), n)).as("g"))
       .select(col("id"),
         call_function(graft.expressions.GraftFunctions.RollingFpPair, col("g")).as("__fs"))
       .select(col("id"),
         element_at(col("__fs"), 1).as("__f1"),
-        element_at(col("__fs"), 2).as("__f2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        element_at(col("__fs"), 2).as("__f2")))
     // per-doc grams are distinct, so count(*) = number of docs with the gram
     val freq = g.groupBy("__f1", "__f2").agg(count(lit(1)).as("__ndocs"))
-    val out = g.join(freq, Seq("__f1", "__f2"))
+    g.join(freq, Seq("__f1", "__f2"))
       .groupBy(col("id").as(idCol))
       .agg(count(lit(1)).as("n_grams"),
         count(when(col("__ndocs") > 1, 1)).as("n_dup_grams"))
-    (out, () => { g.unpersist(false); () })
   }
 
   /** ExactSubstr-style duplicated-SPAN detection ("Deduplicating Training
@@ -274,48 +245,33 @@ object NgramOverlap {
     * topology with position kept; the frequency aggregation is map-side
     * combined; span merging is one scan-shaped window by id. No suffix
     * array, no sort of the corpus, no driver state.
+    *
+    * The corpus-scale window table is held ([[CacheScope.hold]]; ADVICE
+    * r13): it feeds BOTH the frequency aggregate and the probe side of
+    * the dup join, and the two consumers shuffle different payloads (agg
+    * partials vs raw window rows), so exchange reuse cannot dedupe them:
+    * un-persisted (pre-r13), the tokenizer + posexplode subtree ran
+    * twice — the dominant cost when the tokenizer slot holds a learned
+    * deep tokenizer (q_dup_spans_bpe_deep 3.7 s → 1.7 s at sf0.1).
+    * Long-lived sessions consume the result inside
+    * [[CacheScope.releasing]].
     */
-  /** CACHE-LIFECYCLE NOTE (ADVICE r13): this convenience form persists
-    * the corpus-scale window table into the SESSION cache and discards
-    * the release handle — the entry lives until
-    * `clearCache()`/unpersist. Long-lived library sessions should call
-    * [[duplicateSpansManaged]] (or [[removeDuplicateSpansManaged]] for
-    * the applier) and release after the consuming action. */
   def duplicateSpans(
       df: DataFrame,
       idCol: String,
       textCol: String,
       windowTokens: Int = 8,
       minCount: Long = 2,
-      tokenizer: Column => Column = identity): DataFrame =
-    duplicateSpansManaged(df, idCol, textCol, windowTokens, minCount,
-      tokenizer)._1
-
-  /** [[duplicateSpans]] plus a release handle for the persisted window
-    * table — the `*Managed` cache-lifecycle convention. The window table
-    * feeds BOTH the frequency aggregate and the probe side of the dup
-    * join, and the two consumers shuffle different payloads (agg
-    * partials vs raw window rows), so exchange reuse cannot dedupe them:
-    * un-persisted (pre-r13), the tokenizer + posexplode subtree ran
-    * twice — the dominant cost when the tokenizer slot holds a learned
-    * deep tokenizer (q_dup_spans_bpe_deep 3.7 s → 1.7 s at sf0.1). */
-  def duplicateSpansManaged(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      windowTokens: Int = 8,
-      minCount: Long = 2,
-      tokenizer: Column => Column = identity): (DataFrame, () => Unit) = {
+      tokenizer: Column => Column = identity): DataFrame = {
     require(windowTokens >= 2, s"windowTokens must be >= 2 (got $windowTokens)")
     require(minCount >= 2, s"minCount must be >= 2 (got $minCount)")
     requireNoSpanClash("duplicateSpans", idCol, textCol)
-    val wins = windowTable(df, idCol, textCol, windowTokens, tokenizer)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val wins = CacheScope.hold(windowTable(df, idCol, textCol, windowTokens, tokenizer))
     val freq = wins.groupBy("__f1", "__f2", "__f3").agg(count(lit(1)).as("__nocc"))
     val dup = wins
       .join(freq.where(col("__nocc") >= minCount), Seq("__f1", "__f2", "__f3"))
       .select(col("id"), col("__pos"))
-    (mergeIslands(dup, idCol, windowTokens), () => { wins.unpersist(false); () })
+    mergeIslands(dup, idCol, windowTokens)
   }
 
   private val SpanReserved = Seq("__pos", "__g", "__f1", "__f2", "__f3", "__nocc",
@@ -472,11 +428,10 @@ object NgramOverlap {
     * raw text's original spacing is not reconstructible once tokenized
     * (the usual contract for tokenized dedup pipelines).
     *
-    * CACHE-LIFECYCLE NOTE (ADVICE r13): this convenience form leaves
-    * the window-table persist in the session cache (the
-    * [[duplicateSpans]] note); long-lived sessions should use
-    * [[removeDuplicateSpansManaged]] and release after the consuming
-    * action. */
+    * The window table is held as in [[duplicateSpans]]; the result's
+    * plan reads it through the spans join, so a [[CacheScope.releasing]]
+    * scope must enclose the consuming action (releasing earlier
+    * recomputes it — correct, just slower). */
   def removeDuplicateSpans(
       df: DataFrame,
       idCol: String,
@@ -485,29 +440,10 @@ object NgramOverlap {
       minCount: Long = 2,
       as: String = "clean_text",
       tokenizer: Column => Column = identity): DataFrame = {
-    removeDuplicateSpansManaged(df, idCol, textCol, windowTokens,
-      minCount, as, tokenizer)._1
-  }
-
-  /** [[removeDuplicateSpans]] plus the window-table release handle
-    * (r14, ADVICE r13: the applier previously called the leaking plain
-    * form internally, so even Managed-aware callers could not release).
-    * Call the handle after the consuming action — the result's plan
-    * reads the persisted window table through the spans join, so
-    * releasing early recomputes it (correct, just slower). */
-  def removeDuplicateSpansManaged(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      windowTokens: Int = 8,
-      minCount: Long = 2,
-      as: String = "clean_text",
-      tokenizer: Column => Column = identity): (DataFrame, () => Unit) = {
     require(!df.columns.contains(as),
       s"removeDuplicateSpans output column `$as` collides with input")
-    val (spans, release) = duplicateSpansManaged(df, idCol, textCol,
-      windowTokens, minCount, tokenizer)
-    (cutSpans(df, idCol, textCol, spans, as, tokenizer), release)
+    val spans = duplicateSpans(df, idCol, textCol, windowTokens, minCount, tokenizer)
+    cutSpans(df, idCol, textCol, spans, as, tokenizer)
   }
 
   /** Shared back half of the removal forms: cut every (idCol, span_start,

@@ -545,47 +545,25 @@ object Similarity {
       nprobe: Int = 2,
       trainSample: Int = 10000,
       seed: Long = 42L,
-      centroids: Option[Array[Seq[Long]]] = None,
-      cache: Boolean = true): DataFrame =
-    ivfNeighborsManaged(df, idCol, embCol, threshold, cells, nprobe,
-      trainSample, seed, centroids, cache)._1
-
-  /** [[ivfNeighbors]] plus a release handle for the persisted corpus
-    * projection — same cache-lifecycle contract as
-    * [[graft.operators.Dedup.nearDupPairsManaged]]. */
-  def ivfNeighborsManaged(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      threshold: Double,
-      cells: Int = 0,
-      nprobe: Int = 2,
-      trainSample: Int = 10000,
-      seed: Long = 42L,
-      centroids: Option[Array[Seq[Long]]] = None,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      centroids: Option[Array[Seq[Long]]] = None): DataFrame = {
     val spark = df.sparkSession
     GraftFunctions.register(spark)
     // (id, q, nsq) feeds three plan branches (cell assignment + both
-    // verify sides): persist the compact projection so the corpus is
+    // verify sides): hold the compact projection so the corpus is
     // scanned once, not three times (matters when `df` is a 100 TB read;
     // the projection is ~dim*8 bytes per row). Same rationale/lifecycle
-    // as Dedup's shingle table. The auto-sizing count below runs on the
-    // persisted projection (warming it), not the raw source.
-    val p0 = prepared(df, idCol, embCol)
-    val p = if (cache) p0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else p0
-    val release = () => if (cache) { p.unpersist(false); () } else ()
+    // as Dedup's shingle table.
+    val p = CacheScope.hold(prepared(df, idCol, embCol))
     // cells <= 0 sizes with the corpus (skipped when the caller supplies
-    // a prebuilt quantizer). Cached: count the persisted projection
-    // (warming it); uncached: count the raw source (metadata-cheap for
-    // parquet — counting the projection would compute quantization twice)
+    // a prebuilt quantizer): the count runs on the held projection,
+    // warming it, not on the raw source
     val centroidsQ = centroids.getOrElse {
-      val k = if (cells > 0) cells else autoCells(if (cache) p.count() else df.count())
+      val k = if (cells > 0) cells else autoCells(p.count())
       ivfTrain(df, embCol, k, trainSample, seed)
     }
     if (centroidsQ.isEmpty) // empty corpus: empty result, right schema
-      return (p.select(col("id").as("id_a"), col("id").as("id_b"),
-        lit(0.0).as("cos")).where(lit(false)), release)
+      return p.select(col("id").as("id_a"), col("id").as("id_b"),
+        lit(0.0).as("cos")).where(lit(false))
     // nearest cells by ||x-c||^2 = nsq - 2 x.c + c.c: rank by (c.c - 2 x.c)
     val cellScores = array(centroidsQ.toIndexedSeq.zipWithIndex.map { case (c, i) =>
       val cc = c.map(x => x * x).sum
@@ -600,13 +578,12 @@ object Similarity {
         col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    val result = cand
+    cand
       .join(p.as("pa"), col("id_a") === col("pa.id"))
       .join(p.as("pb"), col("id_b") === col("pb.id"))
       .select(col("id_a"), col("id_b"),
         cosineQ(dotQ(col("pa.q"), col("pb.q")), col("pa.nsq"), col("pb.nsq")).as("cos"))
       .where(col("cos") >= threshold)
-    (result, release)
   }
 
   /** The IVF/k-means hard-assignment expression: nearest centroid index
@@ -660,16 +637,14 @@ object Similarity {
       embCol: String,
       k: Int,
       iters: Int = 10,
-      init: Option[Array[Seq[Long]]] = None,
-      cache: Boolean = true): Array[Seq[Long]] = {
+      init: Option[Array[Seq[Long]]] = None): Array[Seq[Long]] = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(iters >= 0, s"iters must be >= 0 (got $iters)")
     GraftFunctions.register(df.sparkSession)
-    // (id, q) feeds iters+1 passes: persist the compact projection (the
-    // ivfNeighborsManaged rationale — the raw source may be a 100 TB read)
-    val p0 = prepared(df, idCol, embCol).select("id", "q")
-    val p = if (cache) p0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else p0
-    try {
+    CacheScope.releasing {
+      // (id, q) feeds iters+1 passes: hold the compact projection (the
+      // ivfNeighbors rationale — the raw source may be a 100 TB read)
+      val p = CacheScope.hold(prepared(df, idCol, embCol).select("id", "q"))
       var cents = init.getOrElse {
         p.orderBy("id").limit(k).select("q")
           .collect().map(r => r.getSeq[Long](0): Seq[Long])
@@ -693,7 +668,7 @@ object Similarity {
         it += 1
       }
       cents
-    } finally { if (cache) { p.unpersist(false); () } }
+    }
   }
 
   /** Deterministic FARTHEST-POINT seeding for the coarse quantizer
@@ -721,18 +696,14 @@ object Similarity {
       df: DataFrame,
       idCol: String,
       embCol: String,
-      k: Int,
-      cache: Boolean = true): Array[Seq[Long]] = {
+      k: Int): Array[Seq[Long]] = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     GraftFunctions.register(df.sparkSession)
-    val p0 = prepared(df, idCol, embCol).select("id", "q", "nsq")
-    val p = if (cache) p0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else p0
-    try {
-      val first = p.orderBy("id").limit(1).select("q")
-        .collect().map(r => r.getSeq[Long](0): Seq[Long])
-      if (first.isEmpty) return Array.empty
-      val seeds = scala.collection.mutable.ArrayBuffer[Seq[Long]](first(0))
-      while (seeds.length < k) {
+    CacheScope.releasing {
+      val p = CacheScope.hold(prepared(df, idCol, embCol).select("id", "q", "nsq"))
+      val seeds = p.orderBy("id").limit(1).select("q")
+        .collect().map(r => r.getSeq[Long](0): Seq[Long]).toBuffer
+      while (seeds.nonEmpty && seeds.length < k) {
         // min over current seeds of the exact integer ||x−c||²
         val minDist = seeds.map { c =>
           val cc = c.map(x => x * x).sum
@@ -744,7 +715,7 @@ object Similarity {
         seeds += (next(0).getSeq[Long](0): Seq[Long])
       }
       seeds.toArray
-    } finally { if (cache) { p.unpersist(false); () } }
+    }
   }
 
   /** Hard cluster assignment against [[kmeansFit]] (or any quantized)
@@ -1940,40 +1911,28 @@ object Similarity {
     * across corpora. Recall < 1 by construction: a near-dup pair
     * straddling a cell boundary is never compared — the SemDeDup
     * trade-off (cluster-then-dedup), same S-curve role as
-    * [[lshNeighbors]]' bucket recall. */
+    * [[lshNeighbors]]' bucket recall.
+    *
+    * The (id, q, nsq, cell) projection is held ([[CacheScope.hold]]): the
+    * corpus feeds both join sides, so it is scanned once, not twice (the
+    * [[ivfNeighbors]] rationale). */
   def semanticPairs(
       df: DataFrame,
       idCol: String,
       embCol: String,
       threshold: Double,
-      centroids: Array[Seq[Long]]): DataFrame =
-    semanticPairsManaged(df, idCol, embCol, threshold, centroids)._1
-
-  /** [[semanticPairs]] plus the release handle for the persisted
-    * (id, q, nsq, cell) projection — the corpus feeds both join sides,
-    * so it is scanned once, not twice (the [[ivfNeighborsManaged]]
-    * rationale and cache-lifecycle contract). */
-  def semanticPairsManaged(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      threshold: Double,
-      centroids: Array[Seq[Long]],
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      centroids: Array[Seq[Long]]): DataFrame = {
     require(centroids.nonEmpty, "semanticPairs needs at least one centroid")
     GraftFunctions.register(df.sparkSession)
-    val p0 = prepared(df, idCol, embCol)
-      .withColumn("cell", nearestCellExpr(centroids))
-    val p = if (cache) p0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else p0
-    val release = () => if (cache) { p.unpersist(false); () } else ()
-    val pairs = p.as("a")
+    val p = CacheScope.hold(prepared(df, idCol, embCol)
+      .withColumn("cell", nearestCellExpr(centroids)))
+    p.as("a")
       .join(p.as("b"),
         col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.cell").as("cell"),
         cosineQ(dotQ(col("a.q"), col("b.q")), col("a.nsq"), col("b.nsq")).as("cos"))
       .where(col("cos") >= threshold)
-    (pairs, release)
   }
 
   /** SemDeDup-style semantic dedup, composed end-to-end (VERDICT r6 #3):
@@ -1999,32 +1958,15 @@ object Similarity {
       threshold: Double,
       k: Int,
       iters: Int = 10,
-      centroids: Option[Array[Seq[Long]]] = None,
-      cache: Boolean = true): DataFrame =
-    semanticDedupManaged(df, idCol, embCol, threshold, k, iters, centroids, cache)._1
-
-  /** [[semanticDedup]] plus the release handle for the pair stage's
-    * persisted projection — call `release()` after the consuming action
-    * (the `*Managed` cache-lifecycle contract). */
-  def semanticDedupManaged(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      threshold: Double,
-      k: Int,
-      iters: Int = 10,
-      centroids: Option[Array[Seq[Long]]] = None,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      centroids: Option[Array[Seq[Long]]] = None): DataFrame = {
     require(!df.columns.contains("__sem_dup_id"),
       "semanticDedup reserves column name __sem_dup_id; rename it in the input")
-    val cents = centroids.getOrElse(
-      kmeansFit(df, idCol, embCol, k, iters, cache = cache))
-    if (cents.isEmpty) return (df, () => ()) // empty corpus: nothing to drop
-    val (pairs, release) =
-      semanticPairsManaged(df, idCol, embCol, threshold, cents, cache)
+    val cents = centroids.getOrElse(kmeansFit(df, idCol, embCol, k, iters))
+    if (cents.isEmpty) return df // empty corpus: nothing to drop
+    val pairs = semanticPairs(df, idCol, embCol, threshold, cents)
     // id_a < id_b by construction, so id_b is always the dropped side
     val dropped = pairs.select(col("id_b").as("__sem_dup_id")).distinct()
-    (df.join(dropped, col(idCol) === col("__sem_dup_id"), "left_anti"), release)
+    df.join(dropped, col(idCol) === col("__sem_dup_id"), "left_anti")
   }
 
   /** Corpus-aware plane count: the smallest p >= minPlanes such that
@@ -2057,7 +1999,13 @@ object Similarity {
     * `dim` <= 0 (default) derives the dimension from the first corpus row
     * (one extra tiny job — pass it explicitly on a cold source) —
     * hyperplanes must span the full vector or buckets silently hash a
-    * subspace. */
+    * subspace.
+    *
+    * The compact (id, q, nsq) projection feeds three branches (bucket
+    * build + both verify sides) and the bucket table two (the candidate
+    * self-join): both are held ([[CacheScope.hold]]) so a 100 TB corpus
+    * is scanned once. Same rationale/lifecycle as Dedup's shingle/bucket
+    * tables. */
   def lshNeighbors(
       df: DataFrame,
       idCol: String,
@@ -2065,13 +2013,35 @@ object Similarity {
       threshold: Double,
       planes: Int = 0,
       tables: Int = 8,
-      dim: Int = 0,
-      cache: Boolean = true): DataFrame =
-    lshNeighborsManaged(df, idCol, embCol, threshold, planes, tables, dim, cache)._1
+      dim: Int = 0): DataFrame = {
+    val p = CacheScope.hold(prepared(df, idCol, embCol))
+    // dim derivation and the auto-sizing count both read the held
+    // projection (first action warms it) — never a second raw-source scan
+    val actualDim =
+      if (dim > 0) dim
+      else p.select(size(col("q"))).head(1).headOption.map(_.getInt(0)).getOrElse(0)
+    if (actualDim == 0)
+      return p.select(col("id").as("id_a"), col("id").as("id_b"),
+        lit(0.0).as("cos")).where(lit(false))
+    val actualPlanes = if (planes > 0) planes else autoPlanes(p.count())
+    val buckets = CacheScope.hold(signBucketTable(p, tables, actualPlanes, actualDim))
+    val cand = buckets.as("a")
+      .join(buckets.as("b"),
+        col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket")
+          && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+    cand
+      .join(p.as("pa"), col("id_a") === col("pa.id"))
+      .join(p.as("pb"), col("id_b") === col("pb.id"))
+      .select(col("id_a"), col("id_b"),
+        cosineQ(dotQ(col("pa.q"), col("pb.q")), col("pa.nsq"), col("pb.nsq")).as("cos"))
+      .where(col("cos") >= threshold)
+  }
 
   /** (id, t, bucket) sign-bucket table of a prepared (id, q, nsq)
-    * projection — the LSH candidate key shared by [[lshNeighborsManaged]]
-    * (self-join) and [[crossNeighborsLshManaged]] (cross-set join). */
+    * projection — the LSH candidate key shared by [[lshNeighbors]]
+    * (self-join) and [[crossNeighborsLsh]] (cross-set join). */
   private def signBucketTable(p: DataFrame, tables: Int, planes: Int, dim: Int): DataFrame =
     p.select(
       col("id"),
@@ -2088,7 +2058,11 @@ object Similarity {
     * exact; recall follows the same S-curve as [[lshNeighbors]] (raise
     * `tables`, or lower `planes`, to push it up). This is the
     * decontamination path when the "eval" side is NOT broadcast-sized —
-    * e.g. scoring one 100 TB corpus snapshot against another. */
+    * e.g. scoring one 100 TB corpus snapshot against another.
+    *
+    * Each projection feeds two branches (bucket build + its verify side)
+    * and is held ([[CacheScope.hold]]) so each corpus is scanned once; the
+    * bucket tables feed one branch each and are not held. */
   def crossNeighborsLsh(
       left: DataFrame,
       right: DataFrame,
@@ -2097,125 +2071,35 @@ object Similarity {
       threshold: Double,
       planes: Int = 0,
       tables: Int = 8,
-      dim: Int = 0,
-      cache: Boolean = true): DataFrame =
-    crossNeighborsLshManaged(left, right, idCol, embCol, threshold,
-      planes, tables, dim, cache)._1
-
-  /** [[crossNeighborsLsh]] plus a release handle for the two persisted
-    * projections — same cache-lifecycle contract as the other `*Managed`
-    * variants.
-    *
-    * Scale note: with `cache=false`, auto-sizing is NOT free — deriving
-    * `planes` costs two full `count()` scans of the raw corpora and
-    * deriving `dim` costs one extra first-row job against the cold
-    * source. At 100 TB always pass `planes` and `dim` explicitly when
-    * disabling the cache (corpus size and embedding dimension are known
-    * to the caller); auto-sizing is a convenience for cached/interactive
-    * use. */
-  def crossNeighborsLshManaged(
-      left: DataFrame,
-      right: DataFrame,
-      idCol: String,
-      embCol: String,
-      threshold: Double,
-      planes: Int = 0,
-      tables: Int = 8,
-      dim: Int = 0,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
-    // each projection feeds two branches (bucket build + its verify side):
-    // persist so each corpus is scanned once (same rationale as
-    // lshNeighborsManaged; the bucket tables feed one branch each and are
-    // not persisted)
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def maybeCache(d: DataFrame): DataFrame =
-      if (cache) {
-        persisted += d
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else d
-    val release = () => persisted.foreach(_.unpersist(false))
-    val pL = maybeCache(prepared(left, idCol, embCol))
-    val pR = maybeCache(prepared(right, idCol, embCol))
+      dim: Int = 0): DataFrame = {
+    val pL = CacheScope.hold(prepared(left, idCol, embCol))
+    val pR = CacheScope.hold(prepared(right, idCol, embCol))
     val actualDim =
       if (dim > 0) dim
       else pL.select(size(col("q"))).head(1).headOption.map(_.getInt(0)).getOrElse(0)
     if (actualDim == 0) // empty left corpus: empty result; id_l/id_r each
       // keep their OWN side's id type+nullability (a left-only projection
       // would mistype id_r when the two frames' id dtypes differ)
-      return (pL.select(col("id").as("id_l"))
+      return pL.select(col("id").as("id_l"))
         .crossJoin(pR.select(col("id").as("id_r")))
         .select(col("id_l"), col("id_r"), lit(0.0).cast("double").as("cos"))
-        .where(lit(false)), release)
+        .where(lit(false))
     // plane count sized by the combined corpus: per-bucket occupancy is
     // (nL + nR) / 2^planes and the cross-candidate cost per bucket is
     // occL * occR, so the sum is the conservative sizing input
     val actualPlanes =
-      if (planes > 0) planes
-      else autoPlanes(
-        if (cache) pL.count() + pR.count() else left.count() + right.count())
+      if (planes > 0) planes else autoPlanes(pL.count() + pR.count())
     val cand = signBucketTable(pL, tables, actualPlanes, actualDim).as("a")
       .join(signBucketTable(pR, tables, actualPlanes, actualDim).as("b"),
         col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket"))
       .select(col("a.id").as("id_l"), col("b.id").as("id_r"))
       .distinct()
-    val result = cand
+    cand
       .join(pL.as("pa"), col("id_l") === col("pa.id"))
       .join(pR.as("pb"), col("id_r") === col("pb.id"))
       .select(col("id_l"), col("id_r"),
         cosineQ(dotQ(col("pa.q"), col("pb.q")), col("pa.nsq"), col("pb.nsq")).as("cos"))
       .where(col("cos") >= threshold)
-    (result, release)
-  }
-
-  /** [[lshNeighbors]] plus a release handle for the persisted
-    * intermediates — same cache-lifecycle contract as
-    * [[graft.operators.Dedup.nearDupPairsManaged]]. */
-  def lshNeighborsManaged(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      threshold: Double,
-      planes: Int = 0,
-      tables: Int = 8,
-      dim: Int = 0,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
-    // The compact (id, q, nsq) projection feeds three branches (bucket
-    // build + both verify sides) and the bucket table two (the candidate
-    // self-join): persist both so a 100 TB corpus is scanned once. Same
-    // rationale/lifecycle as Dedup's shingle/bucket tables.
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def maybeCache(d: DataFrame): DataFrame =
-      if (cache) {
-        persisted += d
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else d
-    val release = () => persisted.foreach(_.unpersist(false))
-    val p = maybeCache(prepared(df, idCol, embCol))
-    // dim derivation and the auto-sizing count both read the persisted
-    // projection (first action warms it) — never a second raw-source scan
-    val actualDim =
-      if (dim > 0) dim
-      else p.select(size(col("q"))).head(1).headOption.map(_.getInt(0)).getOrElse(0)
-    if (actualDim == 0)
-      return (p.select(col("id").as("id_a"), col("id").as("id_b"),
-        lit(0.0).as("cos")).where(lit(false)), release)
-    // same cached-vs-raw counting rule as ivfNeighborsManaged
-    val actualPlanes =
-      if (planes > 0) planes else autoPlanes(if (cache) p.count() else df.count())
-    val buckets = maybeCache(signBucketTable(p, tables, actualPlanes, actualDim))
-    val cand = buckets.as("a")
-      .join(buckets.as("b"),
-        col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket")
-          && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val result = cand
-      .join(p.as("pa"), col("id_a") === col("pa.id"))
-      .join(p.as("pb"), col("id_b") === col("pb.id"))
-      .select(col("id_a"), col("id_b"),
-        cosineQ(dotQ(col("pa.q"), col("pb.q")), col("pa.nsq"), col("pb.nsq")).as("cos"))
-      .where(col("cos") >= threshold)
-    (result, release)
   }
 
   /** Per-table probe buckets for MULTI-PROBE LSH (Lv et al., VLDB'07):
@@ -2257,41 +2141,18 @@ object Similarity {
       probes: Int,
       planes: Int = 0,
       tables: Int = 8,
-      dim: Int = 0,
-      cache: Boolean = true): DataFrame =
-    lshNeighborsMultiProbeManaged(df, idCol, embCol, threshold, probes,
-      planes, tables, dim, cache)._1
-
-  /** [[lshNeighborsMultiProbe]] plus the cache-release handle. */
-  def lshNeighborsMultiProbeManaged(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      threshold: Double,
-      probes: Int,
-      planes: Int = 0,
-      tables: Int = 8,
-      dim: Int = 0,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
+      dim: Int = 0): DataFrame = {
     require(probes >= 1, s"probes must be >= 1 (got $probes); use lshNeighbors for 0")
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def maybeCache(d: DataFrame): DataFrame =
-      if (cache) {
-        persisted += d
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else d
-    val release = () => persisted.foreach(_.unpersist(false))
-    val p = maybeCache(prepared(df, idCol, embCol))
+    val p = CacheScope.hold(prepared(df, idCol, embCol))
     val actualDim =
       if (dim > 0) dim
       else p.select(size(col("q"))).head(1).headOption.map(_.getInt(0)).getOrElse(0)
     if (actualDim == 0)
-      return (p.select(col("id").as("id_a"), col("id").as("id_b"),
-        lit(0.0).as("cos")).where(lit(false)), release)
-    val actualPlanes =
-      if (planes > 0) planes else autoPlanes(if (cache) p.count() else df.count())
+      return p.select(col("id").as("id_a"), col("id").as("id_b"),
+        lit(0.0).as("cos")).where(lit(false))
+    val actualPlanes = if (planes > 0) planes else autoPlanes(p.count())
     val actualProbes = math.min(probes, actualPlanes)
-    val buckets = maybeCache(signBucketTable(p, tables, actualPlanes, actualDim))
+    val buckets = CacheScope.hold(signBucketTable(p, tables, actualPlanes, actualDim))
     val probed = p.select(col("id"),
         explode(array((0 until tables).map { t =>
           struct(lit(t).as("t"),
@@ -2304,12 +2165,11 @@ object Similarity {
           && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    val result = cand
+    cand
       .join(p.as("pa"), col("id_a") === col("pa.id"))
       .join(p.as("pb"), col("id_b") === col("pb.id"))
       .select(col("id_a"), col("id_b"),
         cosineQ(dotQ(col("pa.q"), col("pb.q")), col("pa.nsq"), col("pb.nsq")).as("cos"))
       .where(col("cos") >= threshold)
-    (result, release)
   }
 }

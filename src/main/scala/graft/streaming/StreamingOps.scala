@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.operators.{Agg, Aggregations}
+import graft.operators.{Agg, Aggregations, CacheScope}
 
 /** Structured Streaming surface: the engine's grouped-reduction registry
   * over unbounded inputs, plus the streaming-native forms of dedup and
@@ -435,8 +435,8 @@ object StreamingOps {
         // row-identical to re-sketching the survivors
         val (shAll, bAll) = Dedup.batchSketchCheckpointed(batch.toDF(),
           idCol, textCol, idx.n, idx.bands, idx.rows)
-        val surv = Dedup.dedupIncrementalNearManaged(idx, batch.toDF(),
-            idCol, textCol, threshold, preSketch = Some((shAll, bAll)))._1
+        val surv = Dedup.dedupIncrementalNear(idx, batch.toDF(),
+            idCol, textCol, threshold, preSketch = Some((shAll, bAll)))
           .localCheckpoint()
         val survIds = surv.select(col(idCol).as("id"))
         val addB = bAll.join(survIds, Seq("id"), "left_semi").localCheckpoint()
@@ -448,8 +448,8 @@ object StreamingOps {
         emit(surv)
         // the full-batch sketches are dead now: their appended deltas
         // are independently checkpointed restrictions (ADVICE r13)
-        dropCheckpoint(shAll)
-        dropCheckpoint(bAll)
+        CacheScope.dropCheckpoint(shAll)
+        CacheScope.dropCheckpoint(bAll)
     }
   }
 
@@ -611,8 +611,8 @@ object StreamingOps {
         // the old body sketched the batch twice
         val (addS, addB) = Dedup.batchSketchCheckpointed(exDocs, idCol,
           textCol, idx.n, idx.bands, idx.rows)
-        val surv = Dedup.dedupIncrementalNearManaged(idx, exDocs, idCol,
-            textCol, threshold, preSketch = Some((addS, addB)))._1
+        val surv = Dedup.dedupIncrementalNear(idx, exDocs, idCol,
+            textCol, threshold, preSketch = Some((addS, addB)))
           .localCheckpoint()
         appendDelta(addB, s"$dir/buckets")
         appendDelta(addS, s"$dir/shingles")
@@ -631,9 +631,20 @@ object StreamingOps {
         emit(deconB)
         // surv is dead now (deconB is an independent checkpoint and the
         // only emitted/unioned frame downstream of it — ADVICE r13)
-        dropCheckpoint(surv)
+        CacheScope.dropCheckpoint(surv)
     }
   }
+
+  /** Re-read the at-rest directory into the snapshot handles every N
+    * batches (ADVICE r13): the per-batch `unionByName` grows the
+    * handle's logical plan (and pins every batch delta's checkpoint
+    * blocks) without bound in a long-running stream; since every delta
+    * is parquet-APPENDed before it is unioned in, the directory equals
+    * the handle at every batch boundary, so a periodic re-read is a
+    * pure compaction — same rows, O(1) plan depth, old delta blocks
+    * become GC-able. 64 keeps the amortized listing cost negligible
+    * (bench replays run 2–3 batches and never hit it). */
+  private[graft] val HandleCompactEvery = 64
 
   /** Batch-delta parquet append with sane file sizing (optimization
     * guide §6, small files): a micro-batch delta far below the advisory
@@ -650,31 +661,6 @@ object StreamingOps {
     * tasks, so a production-scale batch never funnels through one
     * writer. Frames with UNKNOWN stats (defaultSizeInBytes) also take
     * the rebalance path — the safe side at scale. */
-  /** Drop a DEAD localCheckpoint's blocks (ADVICE r13): a checkpointed
-    * batch frame pins block-manager memory until its RDD is GC'd, so a
-    * long-running stream accumulates every batch's dead intermediates.
-    * Called at end of batch on frames no live handle references (the
-    * full-batch sketches whose appended deltas are independently
-    * checkpointed restrictions; never on frames unioned into a snapshot
-    * handle or handed to `emit`). */
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
-
-  /** Re-read the at-rest directory into the snapshot handles every N
-    * batches (ADVICE r13): the per-batch `unionByName` grows the
-    * handle's logical plan (and pins every batch delta's checkpoint
-    * blocks) without bound in a long-running stream; since every delta
-    * is parquet-APPENDed before it is unioned in, the directory equals
-    * the handle at every batch boundary, so a periodic re-read is a
-    * pure compaction — same rows, O(1) plan depth, old delta blocks
-    * become GC-able. 64 keeps the amortized listing cost negligible
-    * (bench replays run 2–3 batches and never hit it). */
-  private[graft] val HandleCompactEvery = 64
-
   private[graft] def appendDelta(df: DataFrame, path: String): Unit = {
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val advisory = df.sparkSession.sessionState.conf.getConf(
@@ -728,8 +714,8 @@ object StreamingOps {
     val (addS, addB) = Dedup.batchSketchCheckpointed(exDocs, idCol, textCol,
       idx.n, idx.bands, idx.rows)
     val surv = Dedup
-      .dedupIncrementalNearManaged(idx, exDocs, idCol, textCol, threshold,
-        preSketch = Some((addS, addB)))._1
+      .dedupIncrementalNear(idx, exDocs, idCol, textCol, threshold,
+        preSketch = Some((addS, addB)))
       .localCheckpoint()
     appendDelta(addB, s"$dir/buckets")
     appendDelta(addS, s"$dir/shingles")

@@ -56,10 +56,10 @@ class CurationSpec extends AnyFunSuite {
     val exact = NgramOverlap.contaminatedDocs(train, eval_, "doc_id", "text",
         n = 5, broadcastEval = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (bloomDf, release) = NgramOverlap.contaminatedDocsBloomManaged(
-      train, eval_, "doc_id", "text", n = 5)
-    val bloom = bloomDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    release()
+    val bloom = CacheScope.releasing {
+      NgramOverlap.contaminatedDocsBloom(train, eval_, "doc_id", "text", n = 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(bloom == exact)
     // empty eval side: nothing contaminated, schema intact, no crash on
     // the zero-item Bloom build

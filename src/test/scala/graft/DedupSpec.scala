@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
+import graft.operators.{CacheScope, Dedup}
 
 class DedupSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -182,16 +182,16 @@ class DedupSpec extends AnyFunSuite {
   test("managed near-dup calls release their cache entries") {
     val cm = spark.sharedState.cacheManager
     cm.clearCache()
-    val (pairs, release) = Dedup.nearDupPairsManaged(docs, "doc_id", "text", threshold = 0.5)
-    assert(pairs.count() > 0)
-    assert(!cm.isEmpty, "expected persisted intermediates during the sweep")
-    release()
-    assert(cm.isEmpty, "release() must unpersist all intermediates")
-    val (xp, xrelease) = Dedup.crossNearDupPairsManaged(
-      docs, Seq((10L, nearDup)).toDF("doc_id", "text"), "doc_id", "text")
-    assert(xp.count() > 0)
-    xrelease()
-    assert(cm.isEmpty, "cross release() must unpersist all intermediates")
+    CacheScope.releasing {
+      assert(Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.5).count() > 0)
+      assert(!cm.isEmpty, "expected persisted intermediates during the sweep")
+    }
+    assert(cm.isEmpty, "releasing must unpersist all intermediates")
+    CacheScope.releasing {
+      assert(Dedup.crossNearDupPairs(
+        docs, Seq((10L, nearDup)).toDF("doc_id", "text"), "doc_id", "text").count() > 0)
+    }
+    assert(cm.isEmpty, "cross releasing must unpersist all intermediates")
   }
 
   test("crossNearDupPairs broadcastRight=true pins the eval-side broadcast") {
@@ -244,15 +244,14 @@ class DedupSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Dedup.embeddingDedup(d, "vec_id", "embedding", 0.9, method = "ivf")
     }
-    // lsh path: the release handle must unpersist lshNeighbors' caches
+    // lsh path: the releasing scope must unpersist lshNeighbors' caches
     val cm = TestSpark.spark.sharedState.cacheManager
     cm.clearCache()
-    val (survivors, release) =
-      Dedup.embeddingDedupManaged(d, "vec_id", "embedding", 0.9, method = "lsh")
-    survivors.count()
-    assert(!cm.isEmpty, "expected persisted intermediates during the lsh sweep")
-    release()
-    assert(cm.isEmpty, "release() must unpersist the lsh intermediates")
+    CacheScope.releasing {
+      Dedup.embeddingDedup(d, "vec_id", "embedding", 0.9, method = "lsh").count()
+      assert(!cm.isEmpty, "expected persisted intermediates during the lsh sweep")
+    }
+    assert(cm.isEmpty, "releasing must unpersist the lsh intermediates")
   }
 
   test("nearDupDedup keeps only rows with no smaller-id near-dup neighbor (one-pass rule)") {
@@ -262,14 +261,14 @@ class DedupSpec extends AnyFunSuite {
     val kept = Dedup.nearDupDedup(docs, "doc_id", "text", threshold = 0.5)
     assert(kept.columns.toSeq == docs.columns.toSeq)
     assert(kept.select("doc_id").as[Long].collect().toSet == Set(1L, 4L))
-    // managed form releases the pair machinery's cache entries
+    // a releasing scope frees the pair machinery's cache entries
     val cm = spark.sharedState.cacheManager
     cm.clearCache()
-    val (survivors, release) = Dedup.nearDupDedupManaged(docs, "doc_id", "text")
-    survivors.count()
-    assert(!cm.isEmpty, "expected persisted intermediates during the sweep")
-    release()
-    assert(cm.isEmpty, "release() must unpersist all intermediates")
+    CacheScope.releasing {
+      Dedup.nearDupDedup(docs, "doc_id", "text").count()
+      assert(!cm.isEmpty, "expected persisted intermediates during the sweep")
+    }
+    assert(cm.isEmpty, "releasing must unpersist all intermediates")
   }
 
   test("simhashDedup keeps only rows with no smaller-id hamming neighbor") {
@@ -281,11 +280,11 @@ class DedupSpec extends AnyFunSuite {
     assert(!ids.contains(2L) && !ids.contains(5L), s"exact copies must drop: $ids")
     val cm = spark.sharedState.cacheManager
     cm.clearCache()
-    val (survivors, release) = Dedup.simhashDedupManaged(docs, "doc_id", "text")
-    survivors.count()
-    assert(!cm.isEmpty, "expected the persisted signature table during the sweep")
-    release()
-    assert(cm.isEmpty, "release() must unpersist the signature table")
+    CacheScope.releasing {
+      Dedup.simhashDedup(docs, "doc_id", "text").count()
+      assert(!cm.isEmpty, "expected the persisted signature table during the sweep")
+    }
+    assert(cm.isEmpty, "releasing must unpersist the signature table")
   }
 
   test("dupClusters: bounded min-label propagation, k hops per iteration") {
@@ -306,7 +305,7 @@ class DedupSpec extends AnyFunSuite {
     // chain 1-2-3-4-5 (diameter 4): min-label propagation moves one hop
     // per round, so labels keep changing through round 5
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id_a", "id_b")
-    val (l2, audit2, rel2) = Dedup.dupClustersAudited(chain, iterations = 2)
+    val (l2, audit2) = Dedup.dupClustersAudited(chain, iterations = 2)
     // round 2 moved nodes 3 (2->1), 4 (3->2), 5 (4->3): k=2 under-chosen
     val moved = audit2.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -314,14 +313,12 @@ class DedupSpec extends AnyFunSuite {
     assert(l2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 3L),
       "k=2 labels still carry local minima — exactly what the audit flags")
-    rel2()
     // k=5: round 5 moves nothing (round 4 already reached the global
     // min everywhere) — empty audit proves the fixpoint
-    val (l5, audit5, rel5) = Dedup.dupClustersAudited(chain, iterations = 5)
+    val (l5, audit5) = Dedup.dupClustersAudited(chain, iterations = 5)
     assert(audit5.isEmpty, "fixpoint reached: audit must be empty")
     assert(l5.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
-    rel5()
   }
 
   test("dupClustersConverged: stops at the fixpoint, reports rounds, cap binds") {
@@ -597,22 +594,23 @@ class DedupSpec extends AnyFunSuite {
       == ids(Dedup.dedupIncremental(c2, b2, "doc_id", "text")))
   }
 
-  test("dedupIncrementalBloomManaged: release frees the cache; sketch ships broadcast, not as a literal") {
+  test("dedupIncrementalBloom: releasing frees the cache; sketch ships broadcast, not as a literal") {
     val cm = spark.sharedState.cacheManager
     cm.clearCache()
     val corpus = (0L until 50L).map(i => (i, s"corpus doc $i")).toDF("doc_id", "text")
     val batch = Seq((100L, "corpus doc 7"), (101L, "fresh")).toDF("doc_id", "text")
-    val (out, release) = Dedup.dedupIncrementalBloomManaged(corpus, batch, "doc_id", "text")
-    assert(out.collect().map(_.getLong(0)).toSet == Set(101L))
-    assert(!cm.isEmpty, "corpus fingerprints should be persisted during the probe")
-    // the sketch bytes must ride a scalar subquery (the InjectRuntimeFilter
-    // shape, built lazily in-plan) — never a plan literal head()-collected
-    // at plan-construction time
-    val p = out.queryExecution.executedPlan.toString
-    assert(p.contains("Subquery"),
-      s"expected the Bloom sketch behind a scalar subquery:\n$p")
-    release()
-    assert(cm.isEmpty, "release() must unpersist the fingerprint table")
+    CacheScope.releasing {
+      val out = Dedup.dedupIncrementalBloom(corpus, batch, "doc_id", "text")
+      assert(out.collect().map(_.getLong(0)).toSet == Set(101L))
+      assert(!cm.isEmpty, "corpus fingerprints should be persisted during the probe")
+      // the sketch bytes must ride a scalar subquery (the InjectRuntimeFilter
+      // shape, built lazily in-plan) — never a plan literal head()-collected
+      // at plan-construction time
+      val p = out.queryExecution.executedPlan.toString
+      assert(p.contains("Subquery"),
+        s"expected the Bloom sketch behind a scalar subquery:\n$p")
+    }
+    assert(cm.isEmpty, "releasing must unpersist the fingerprint table")
   }
 
   test("clusterSizeHistogram folds labels to (size, n_clusters, n_docs)") {

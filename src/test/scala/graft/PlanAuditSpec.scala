@@ -196,16 +196,16 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("ewmMean is scan-shaped: row stage cached once, carry joins broadcast at summary scale") {
     val ev = SparkEntry.ev(spark, "/root/testdata/sf0.001")
-    val (out, release) = graft.operators.Ewm.ewmMeanManaged(ev, Seq("user_id"),
-      Seq(col("ts"), col("event_id")), "valn", 0.5)
-    try {
+    graft.operators.CacheScope.releasing {
+      val out = graft.operators.Ewm.ewmMean(ev, Seq("user_id"),
+        Seq(col("ts"), col("event_id")), "valn", 0.5)
       out.count() // materialize so InMemoryRelation shows in the executed plan
       val p = plan(out)
       // the base row shuffle by group is the only data-sized exchange;
       // chunk/superchunk summaries are 1/C-scale and broadcast back
       assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"),
         s"row stage should be persisted across its two consumers:\n$p")
-    } finally release()
+    }
   }
 
   test("sampleKPerGroup: heap aggregation, no window sort; selection joins back broadcast") {
@@ -284,11 +284,10 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("contaminatedDocsBloom: codegen bloom probe on the train scan, no product join") {
     val docs = TestSpark.table("0.01", "documents")
-    val (res, release) = graft.operators.NgramOverlap.contaminatedDocsBloomManaged(
-      docs.where(col("source") =!= "src0"), docs.where(col("source") === "src0"),
-      "doc_id", "text", n = 5)
-    val p = plan(res)
-    release()
+    val p = graft.operators.CacheScope.releasing(plan(
+      graft.operators.NgramOverlap.contaminatedDocsBloom(
+        docs.where(col("source") =!= "src0"), docs.where(col("source") === "src0"),
+        "doc_id", "text", n = 5)))
     assert(p.contains("might_contain"), s"bloom probe must be in the plan:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"bloom path must stay an equality join:\n$p")

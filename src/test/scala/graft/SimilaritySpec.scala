@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Similarity
+import graft.operators.{CacheScope, Similarity}
 
 class SimilaritySpec extends AnyFunSuite {
   import TestSpark.spark
@@ -158,16 +158,16 @@ class SimilaritySpec extends AnyFunSuite {
     val cm = TestSpark.spark.sharedState.cacheManager
     cm.clearCache()
     val e = TestSpark.table("0.001", "embeddings")
-    val (lsh, lshRelease) = Similarity.lshNeighborsManaged(e, "vec_id", "embedding", 0.35)
-    lsh.count()
-    assert(!cm.isEmpty, "expected persisted intermediates during the LSH sweep")
-    lshRelease()
-    assert(cm.isEmpty, "LSH release() must unpersist all intermediates")
-    val (ivf, ivfRelease) = Similarity.ivfNeighborsManaged(e, "vec_id", "embedding", 0.35)
-    ivf.count()
-    assert(!cm.isEmpty)
-    ivfRelease()
-    assert(cm.isEmpty, "IVF release() must unpersist the corpus projection")
+    CacheScope.releasing {
+      Similarity.lshNeighbors(e, "vec_id", "embedding", 0.35).count()
+      assert(!cm.isEmpty, "expected persisted intermediates during the LSH sweep")
+    }
+    assert(cm.isEmpty, "LSH releasing must unpersist all intermediates")
+    CacheScope.releasing {
+      Similarity.ivfNeighbors(e, "vec_id", "embedding", 0.35).count()
+      assert(!cm.isEmpty)
+    }
+    assert(cm.isEmpty, "IVF releasing must unpersist the corpus projection")
   }
 
   /** VERDICT r4 item 3: crossPairs' cartesian is now an explicit opt-in
@@ -182,13 +182,13 @@ class SimilaritySpec extends AnyFunSuite {
     val exact = Similarity.crossPairs(left, right, "vec_id", "embedding", 0.4,
       broadcastRight = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (lshDf, release) = Similarity.crossNeighborsLshManaged(
-      left, right, "vec_id", "embedding", 0.4)
-    val plan = lshDf.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"cross-set LSH must bucket, not go quadratic; plan:\n$plan")
-    val lsh = lshDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    release()
+    val lsh = CacheScope.releasing {
+      val lshDf = Similarity.crossNeighborsLsh(left, right, "vec_id", "embedding", 0.4)
+      val plan = lshDf.queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+        s"cross-set LSH must bucket, not go quadratic; plan:\n$plan")
+      lshDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(lsh.subsetOf(exact), "cross-set LSH emitted a pair failing exact verification")
     assert(exact.nonEmpty)
     val recall = lsh.size.toDouble / exact.size

@@ -2,20 +2,25 @@
 """Local replica of the driver's DuckDB-oracle correctness check.
 
 Usage: python3 tools/check_oracle.py <sf_dir> <verify_out_dir>
+       python3 tools/check_oracle.py --against <base_verify_dir> <sf_dir> <verify_out_dir>
 
 Loads each <verify_out_dir>/<name> parquet (Spark result), runs the matching
 oracle SQL from oracle_sql.json in DuckDB against the sf_dir tables, sorts
 columns by name and rows by all columns, and compares cell-by-cell. Reports
 exact matches, near matches (max abs diff), and hard mismatches. Dev tool
 only — the real gate is driver-side.
+
+--against compares two Verify output directories instead, table by table
+with the same normalization and cell rule, without DuckDB: every table of
+either directory must be cell-for-cell identical, and oracle_sql.json must
+be byte-identical. It is the fast proof that a refactor moved no result (a
+full DuckDB pass over every row takes hours); <sf_dir> is only reported.
 """
 import json
 import math
 import os
 import sys
 from pathlib import Path
-
-import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -44,7 +49,61 @@ def cells_equal(a, b):
         return False, float("inf")
 
 
+def compare(got, want):
+    """None if the two frames hold the same rows (any order), else why not."""
+    got, want = norm(got), norm(want)
+    if list(got.columns) != list(want.columns):
+        return f"columns {list(got.columns)} != {list(want.columns)}"
+    if len(got) != len(want):
+        return f"rows {len(got)} != {len(want)}"
+    max_diff, bad = 0.0, 0
+    first_bad = None
+    for i in range(len(got)):
+        for c in got.columns:
+            ok, diff = cells_equal(got.at[i, c], want.at[i, c])
+            if not ok:
+                bad += 1
+                max_diff = max(max_diff, diff)
+                if first_bad is None:
+                    first_bad = (i, c, got.at[i, c], want.at[i, c])
+    if bad:
+        return f"{bad} bad cells, max_diff={max_diff:.3e}, first={first_bad}"
+    return None
+
+
+def against(base_dir, sf_dir, out_dir):
+    import pandas as pd
+
+    base, out = Path(base_dir), Path(out_dir)
+    print(f"comparing {out} against {base} (sf_dir {sf_dir})")
+    n_pass = n_fail = 0
+    sql_base, sql_out = base / "oracle_sql.json", out / "oracle_sql.json"
+    if sql_base.read_bytes() == sql_out.read_bytes():
+        print("PASS oracle_sql.json (byte-identical)")
+        n_pass += 1
+    else:
+        print("FAIL oracle_sql.json differs")
+        n_fail += 1
+    names = sorted({p.name for d in (base, out) for p in d.iterdir() if p.is_dir()})
+    for name in names:
+        if not (base / name).is_dir() or not (out / name).is_dir():
+            side = "base" if not (base / name).is_dir() else "new"
+            print(f"FAIL {name}: missing from the {side} directory")
+            n_fail += 1
+            continue
+        why = compare(pd.read_parquet(out / name), pd.read_parquet(base / name))
+        if why is None:
+            n_pass += 1
+        else:
+            print(f"FAIL {name}: {why}")
+            n_fail += 1
+    print(f"\n{n_pass} pass / {n_fail} fail ({len(names)} tables + oracle_sql.json)")
+    return 1 if n_fail else 0
+
+
 def main(sf_dir, out_dir):
+    import duckdb
+
     con = duckdb.connect()
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
@@ -68,34 +127,14 @@ def main(sf_dir, out_dir):
             results[name] = {"pass": False, "reason": str(e).split("\n")[0][:200]}
             n_fail += 1
             continue
-        got, want = norm(got), norm(want)
-        if list(got.columns) != list(want.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}")
-            results[name] = {"pass": False, "reason": "column mismatch"}
-            n_fail += 1
-            continue
-        if len(got) != len(want):
-            print(f"FAIL {name}: rows {len(got)} != {len(want)}")
-            results[name] = {"pass": False, "reason": f"rows {len(got)} != {len(want)}"}
-            n_fail += 1
-            continue
-        max_diff, bad = 0.0, 0
-        first_bad = None
-        for i in range(len(got)):
-            for c in got.columns:
-                ok, diff = cells_equal(got.at[i, c], want.at[i, c])
-                if not ok:
-                    bad += 1
-                    max_diff = max(max_diff, diff)
-                    if first_bad is None:
-                        first_bad = (i, c, got.at[i, c], want.at[i, c])
-        if bad == 0:
+        why = compare(got, want)
+        if why is None:
             print(f"PASS {name} ({len(got)} rows)")
             results[name] = {"pass": True, "rows": len(got)}
             n_pass += 1
         else:
-            print(f"FAIL {name}: {bad} bad cells, max_diff={max_diff:.3e}, first={first_bad}")
-            results[name] = {"pass": False, "reason": f"{bad} bad cells, max_diff={max_diff:.3e}"}
+            print(f"FAIL {name}: {why}")
+            results[name] = {"pass": False, "reason": why.split(", first=")[0]}
             n_fail += 1
     print(f"\n{n_pass} pass / {n_fail} fail")
     # the committable gate artifact (VERDICT r12 #7): the driver's
@@ -110,4 +149,6 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
+    if sys.argv[1] == "--against":
+        sys.exit(against(sys.argv[2], sys.argv[3], sys.argv[4]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
