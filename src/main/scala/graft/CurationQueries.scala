@@ -522,8 +522,8 @@ object CurationQueries {
     // both key on the group, thresholds per group, same scale-free
     // guarantee
     "q_heavy_hitters_by" -> ((s, d) =>
-      TextAnalysis.heavyHittersBy(T(s, d, "documents"), Seq("lang"), "text",
-        capacity = 64, phi = 0.02)
+      TextAnalysis.heavyHitters(T(s, d, "documents"), "text",
+        capacity = 64, phi = 0.02, by = Seq("lang"))
         .orderBy(col("lang"), col("freq").desc, col("token"))),
     // BM25 top-k keyword retrieval (quantized idf + per-term scores on
     // the decimal grid; projection-only tf, one broadcast stats row)

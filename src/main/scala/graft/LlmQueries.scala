@@ -1758,7 +1758,7 @@ object LlmQueries {
     // the per-domain classifier-evaluation gate; the distinct-score
     // window partitions by source so the sort parallelizes across groups
     "q_auc_by" -> ((s, d) =>
-      FeatureScaling.aucScoreBy(
+      FeatureScaling.aucScore(
         T(s, d, "documents").where(col("text").isNotNull),
         TextAnalysis.qualityScore(col("text")),
         col("lang") === lit("en"),
@@ -1825,27 +1825,27 @@ object LlmQueries {
     }),
     // grouped drift: PSI per LANGUAGE (drift usually hits one domain
     // first; corpus-wide PSI dilutes it k ways) and KS per SOURCE —
-    // the aucScoreBy twins with per-group totals and windows
+    // the grouped aucScore forms, with per-group totals and windows
     "q_drift_psi_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      Drift.psiBy(docs.where(col("doc_id") % 2 === 0),
+      Drift.psi(docs.where(col("doc_id") % 2 === 0),
           docs.where(col("doc_id") % 2 === 1),
           least(expr("n_chars div 60"), lit(9L)), Seq("lang"))
         .orderBy("lang", "bin")
     }),
     "q_drift_ks_by" -> ((s, d) => {
       val docs = T(s, d, "documents").where(col("text").isNotNull)
-      Drift.ksDistanceBy(docs.where(col("doc_id") % 2 === 0),
+      Drift.ksDistance(docs.where(col("doc_id") % 2 === 0),
           docs.where(col("doc_id") % 2 === 1),
           TextAnalysis.qualityScore(col("text")), Seq("source"))
         .orderBy("source")
     }),
     // grouped W1 per SOURCE: the cdf-integral drift statistic in score
-    // units, per domain — closes the grouped drift family with psiBy/
-    // ksDistanceBy (VERDICT r9 #6)
+    // units, per domain — closes the grouped drift family with the
+    // grouped psi/ksDistance (VERDICT r9 #6)
     "q_drift_w1_by" -> ((s, d) => {
       val docs = T(s, d, "documents").where(col("text").isNotNull)
-      Drift.wasserstein1By(docs.where(col("doc_id") % 2 === 0),
+      Drift.wasserstein1(docs.where(col("doc_id") % 2 === 0),
           docs.where(col("doc_id") % 2 === 1),
           TextAnalysis.qualityScore(col("text")), Seq("source"))
         .orderBy("source")
@@ -1854,7 +1854,7 @@ object LlmQueries {
     // statistic per domain
     "q_drift_jsd_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      Drift.jsdBy(docs.where(col("doc_id") % 2 === 0),
+      Drift.jsd(docs.where(col("doc_id") % 2 === 0),
           docs.where(col("doc_id") % 2 === 1),
           least(expr("n_chars div 60"), lit(9L)), Seq("lang"))
         .orderBy("lang", "bin")
@@ -1896,12 +1896,12 @@ object LlmQueries {
     // calibrated corpus-wide while badly off on one domain — the form
     // a per-source monitoring pipeline actually runs
     "q_calibration_by" -> ((s, d) =>
-      Drift.calibrationBinsBy(T(s, d, "documents").where(col("text").isNotNull),
+      Drift.calibrationBins(T(s, d, "documents").where(col("text").isNotNull),
           TextAnalysis.qualityScore(col("text")).cast("double") / 1000.0,
           col("lang") === lit("en"), Seq("source"))
         .orderBy("source", "bin")),
     "q_brier_by" -> ((s, d) =>
-      Drift.brierScoreBy(T(s, d, "documents").where(col("text").isNotNull),
+      Drift.brierScore(T(s, d, "documents").where(col("text").isNotNull),
           TextAnalysis.qualityScore(col("text")).cast("double") / 1000.0,
           col("lang") === lit("en"), Seq("source"))
         .orderBy("source")),
@@ -1915,7 +1915,7 @@ object LlmQueries {
         TextAnalysis.qualityScore(col("text")),
         col("lang") === lit("en"))),
     "q_ap_by" -> ((s, d) =>
-      FeatureScaling.apScoreBy(
+      FeatureScaling.apScore(
         T(s, d, "documents").where(col("text").isNotNull),
         TextAnalysis.qualityScore(col("text")),
         col("lang") === lit("en"),
@@ -4311,7 +4311,7 @@ object LlmQueries {
           + " ELSE 0.0 END)::DECIMAL(14,12)))::DOUBLE AS ks"
           + " FROM c JOIN t ON c.source = t.source GROUP BY 1, 2, 3 ORDER BY 1"),
       // the q_drift_w1 replay with the source dimension threaded through
-      // counts, windows, and totals (the ksDistanceBy convention), the
+      // counts, windows, and totals (the grouped ksDistance convention), the
       // empty-side CASE guards, and gap-less rows contributing 0 terms
       "q_drift_w1_by" ->
         (s"WITH q AS (SELECT doc_id, source, $scoreExpr AS s FROM"
@@ -4339,7 +4339,7 @@ object LlmQueries {
           + " ELSE 0.0 END)::DECIMAL(14,12))::DOUBLE * gap::DOUBLE, 12)"
           + " ELSE 0 END::DECIMAL(38,12))::DOUBLE AS w1"
           + " FROM c JOIN t ON c.source = t.source GROUP BY 1, 2, 3 ORDER BY 1"),
-      // the q_drift_jsd replay with per-language totals (the psiBy shape)
+      // the q_drift_jsd replay with per-language totals (the grouped psi shape)
       "q_drift_jsd_by" ->
         ("WITH a AS (SELECT lang, least(n_chars // 60, 9) AS bin, count(*) AS na"
           + " FROM documents WHERE doc_id % 2 = 0 GROUP BY 1, 2),"

@@ -176,6 +176,12 @@ object SparkEntry {
         Seq(col("ts"), col("event_id")), as, exactScale)
       .select("event_id", "user_id", as).orderBy("event_id")
 
+  /** The q_quantile* rows' output: the four quantiles of a per-flag
+    * `qs` array column, each rounded to 6 decimals. */
+  private def quartiles(r: DataFrame): DataFrame =
+    r.select(col("l_returnflag") +: Seq("q25", "q50", "q75", "q90").zipWithIndex
+      .map { case (n, i) => round(element_at(col("qs"), i + 1), 6).as(n) }: _*)
+
   /** Flagship query (driver smoke-checks rows>0 on sf0.001): TPC-H-Q1-shaped
     * multi-aggregation grouped reduction through the engine. */
   def entry(spark: SparkSession): DataFrame =
@@ -220,37 +226,19 @@ object SparkEntry {
       Agg("nanargmin", "valn", "argmin_pos"), Agg("nanargmax", "valn", "argmax_pos"))),
     "q_median" -> ((s, d) => reduceRF(s, d, Agg("nanmedian", "l_extendedprice", "med0"))
       .withColumn("med_price", round(col("med0"), 4)).drop("med0")),
-    "q_quantile" -> ((s, d) => {
-      val r = GroupByReduce.reduce(li(s, d), Seq("l_returnflag"),
-        Seq(Agg("nanquantile", "l_extendedprice", "qs", q = Seq(0.25, 0.5, 0.75, 0.9))))
-      r.select(col("l_returnflag"),
-        round(element_at(col("qs"), 1), 6).as("q25"),
-        round(element_at(col("qs"), 2), 6).as("q50"),
-        round(element_at(col("qs"), 3), 6).as("q75"),
-        round(element_at(col("qs"), 4), 6).as("q90"))
-    }),
+    "q_quantile" -> ((s, d) => quartiles(
+      GroupByReduce.reduce(li(s, d), Seq("l_returnflag"),
+        Seq(Agg("nanquantile", "l_extendedprice", "qs", q = Seq(0.25, 0.5, 0.75, 0.9)))))),
     // memory-safe exact quantiles (Quantiles.scala): same interpolation as
     // q_quantile but composed hash-agg + spilling window, no per-group map
-    "q_quantile_scalable" -> ((s, d) => {
-      val r = Quantiles.exactQuantile(li(s, d), Seq("l_returnflag"),
-        "l_extendedprice", Seq(0.25, 0.5, 0.75, 0.9), as = "qs")
-      r.select(col("l_returnflag"),
-        round(element_at(col("qs"), 1), 6).as("q25"),
-        round(element_at(col("qs"), 2), 6).as("q50"),
-        round(element_at(col("qs"), 3), 6).as("q75"),
-        round(element_at(col("qs"), 4), 6).as("q90"))
-    }),
+    "q_quantile_scalable" -> ((s, d) => quartiles(
+      Quantiles.exactQuantile(li(s, d), Seq("l_returnflag"),
+        "l_extendedprice", Seq(0.25, 0.5, 0.75, 0.9), as = "qs"))),
     // the selection form: only rank-covering value-range chunks sort
-    // (bit-identical; QuantilesSpec pins all three quantile plans)
-    "q_quantile_select" -> ((s, d) => {
-      val r = Quantiles.exactQuantileSelect(li(s, d), Seq("l_returnflag"),
-        "l_extendedprice", Seq(0.25, 0.5, 0.75, 0.9), as = "qs")
-      r.select(col("l_returnflag"),
-        round(element_at(col("qs"), 1), 6).as("q25"),
-        round(element_at(col("qs"), 2), 6).as("q50"),
-        round(element_at(col("qs"), 3), 6).as("q75"),
-        round(element_at(col("qs"), 4), 6).as("q90"))
-    }),
+    // (bit-identical; QuantilesSpec pins it against the windowed form)
+    "q_quantile_select" -> ((s, d) => quartiles(
+      Quantiles.exactQuantileSelect(li(s, d), Seq("l_returnflag"),
+        "l_extendedprice", Seq(0.25, 0.5, 0.75, 0.9), as = "qs"))),
     // exact weighted quantile (inverted-CDF over importance weights):
     // selection runs on the exact decimal(18,6) grid, so the threshold
     // can never land within FP noise of a cumulative sum — the result

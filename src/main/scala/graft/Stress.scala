@@ -232,9 +232,9 @@ object Stress {
         graft.operators.Sampling.textKey(col("text")), salt = 6).count())
     // r8 wave. grouped heavy hitters: per-group MG state is capacity-
     // bounded, candidate table = groups x <= capacity — wall tracks rows
-    time("heavyHittersBy cap=256")(
-      graft.operators.TextAnalysis.heavyHittersBy(docs, Seq("lang"), "text",
-        capacity = 256, phi = 0.01).count())
+    time("heavyHitters by lang cap=256")(
+      graft.operators.TextAnalysis.heavyHitters(docs, "text",
+        capacity = 256, phi = 0.01, by = Seq("lang")).count())
     // n-gram heavy hitters: the non-distinct gram stream is ~token-count
     // sized; same bounded-state shape
     time("heavyNgrams n=2")(

@@ -550,73 +550,37 @@ object FeatureScaling {
     * correction: AUC = [Σ_s nPos(s)·(2·cumNeg(<s) + nNeg(=s))] /
     * (2·nPos·nNeg) — ties contribute exactly ½, matching
     * sklearn.roc_auc_score. NULL score or label rows are excluded; with
-    * no positives or no negatives AUC is undefined → NULL.
+    * no positives or no negatives AUC is undefined → NULL. With `by`
+    * keys it is evaluated per group (per-source / per-domain /
+    * per-language classifier evaluation): one row (by..., n_pos, n_neg,
+    * auc) per group, ordered by the keys; groups with NULL keys
+    * aggregate as their own group (SQL GROUP BY semantics).
     *
     * Scale shape: ONE hash aggregation collapses the corpus to
-    * (distinct score, nPos, nNeg), then ONE value-ordered window runs
-    * over DISTINCT scores only (the [[Quantiles]] spilling-window
+    * (by..., distinct score, nPos, nNeg), then ONE value-ordered window
+    * runs over DISTINCT scores only (the [[Quantiles]] spilling-window
     * convention — bounded by score cardinality, never row count). That
-    * window is GLOBAL (single-task) in the ungrouped form, so distinct
-    * cardinality is a contract, not a hope: `maxDistinctScores`
-    * fail-fasts (one cheap distinct-count aggregation, the qcutByEdges
-    * maxGroups convention) before the sort can become a one-task
-    * bottleneck — on a raw continuous double score either quantize
-    * first (`round(score, 6)` — the lnQ grid keeps AUC exact for any
-    * score whose meaningful precision fits it) or raise the bound
-    * deliberately. Per-score-tie counts multiply as decimal(38,0)
-    * (each factor cast BEFORE the product, so no intermediate Long
-    * overflow) and the U statistic sums in decimal(38,0) — exact while
-    * 2·nPos·nNeg < 10^38, i.e. to ~7·10^18 rows per class — finalized
-    * to double ONCE, so the oracle replays it bit for bit. Output: one
-    * row (n_pos, n_neg, auc). */
+    * window partitions by the keys, so it is GLOBAL (single-task) with
+    * no keys, and distinct cardinality is a contract, not a hope:
+    * `maxDistinctScores` fail-fasts on the WORST group (one cheap
+    * distinct-count aggregation, the qcutByEdges maxGroups convention)
+    * before the sort can become a one-task bottleneck — on a raw
+    * continuous double score either quantize first (`round(score, 6)` —
+    * the lnQ grid keeps AUC exact for any score whose meaningful
+    * precision fits it) or raise the bound deliberately. Per-score-tie
+    * counts multiply as decimal(38,0) (each factor cast BEFORE the
+    * product, so no intermediate Long overflow) and the U statistic sums
+    * in decimal(38,0) — exact while 2·nPos·nNeg < 10^38, i.e. to
+    * ~7·10^18 rows per class — finalized to double ONCE, so the oracle
+    * replays it bit for bit. */
   def aucScore(
       df: DataFrame,
       score: Column,
       label: Column,
-      maxDistinctScores: Long = 1L << 22): DataFrame = {
-    val base = df.where(score.isNotNull && label.isNotNull)
-      .select(score.as("__s"), label.cast("boolean").as("__y"))
-    if (maxDistinctScores > 0) {
-      val nd = base.agg(count_distinct(col("__s"))).head().getLong(0)
-      require(nd <= maxDistinctScores,
-        s"aucScore's distinct-score window is global: $nd distinct scores >" +
-          s" maxDistinctScores=$maxDistinctScores — quantize the score" +
-          " (round(score, 6)) or raise the bound deliberately")
-    }
-    aucAgg(grouped(base, Nil), Nil)
-  }
-
-  /** Grouped AUC — [[aucScore]] per key (per-source / per-domain /
-    * per-language classifier evaluation, the [[graft.operators
-    * .TextAnalysis]] heavyHittersBy twin): one row (by..., n_pos,
-    * n_neg, auc) per group, same exact-decimal Mann-Whitney statistic.
-    * The distinct-score window partitions by the group keys, so the
-    * sort parallelizes across groups and `maxDistinctScores` bounds the
-    * per-GROUP distinct cardinality (checked as the max over groups in
-    * the same fail-fast pre-aggregation). Groups with NULL keys
-    * aggregate as their own group (SQL GROUP BY semantics). */
-  def aucScoreBy(
-      df: DataFrame,
-      score: Column,
-      label: Column,
-      by: Seq[String],
-      maxDistinctScores: Long = 1L << 22): DataFrame = {
-    require(by.nonEmpty, "aucScoreBy needs >= 1 group column (use aucScore)")
-    val base = df.where(score.isNotNull && label.isNotNull)
-      .select(by.map(col) :+ score.as("__s") :+ label.cast("boolean").as("__y"): _*)
-    if (maxDistinctScores > 0) {
-      val nd = base.groupBy(by.map(col): _*)
-        .agg(count_distinct(col("__s")).as("__nd"))
-        .agg(max(col("__nd"))).head()
-      val worst = if (nd.isNullAt(0)) 0L else nd.getLong(0)
-      require(worst <= maxDistinctScores,
-        s"aucScoreBy's per-group window sorts per-group distinct scores:" +
-          s" worst group has $worst distinct scores >" +
-          s" maxDistinctScores=$maxDistinctScores — quantize the score" +
-          " (round(score, 6)) or raise the bound deliberately")
-    }
-    aucAgg(grouped(base, by), by).orderBy(by.map(col): _*)
-  }
+      by: Seq[String] = Nil,
+      maxDistinctScores: Long = 1L << 22): DataFrame =
+    aucAgg(grouped(evalRows("aucScore", df, score, label, by, maxDistinctScores), by), by)
+      .orderBy(by.map(col): _*)
 
   /** Exact-grid AVERAGE PRECISION (area under the precision-recall
     * curve, step-wise — the sklearn `average_precision_score`
@@ -632,37 +596,29 @@ object FeatureScaling {
     * IEEE expression (np·TP/PP, both engines evaluate the identical
     * tree) quantized to the decimal(38,12) grid and summed as exact
     * decimals — order-independent across partitionings and engines —
-    * then divided by the positive count ONCE. Same
-    * `maxDistinctScores` fail-fast as AUC (the descending window is
-    * global here, per-group in [[apScoreBy]]). Output: (n_pos, n_neg,
-    * ap); ap NULL when no positives. */
+    * then divided by the positive count ONCE. Same `by` grouping and
+    * `maxDistinctScores` fail-fast as AUC (the descending window
+    * partitions by the keys). Output: (by..., n_pos, n_neg, ap) ordered
+    * by the keys; ap NULL when no positives. */
   def apScore(
       df: DataFrame,
       score: Column,
       label: Column,
-      maxDistinctScores: Long = 1L << 22): DataFrame = {
-    val base = df.where(score.isNotNull && label.isNotNull)
-      .select(score.as("__s"), label.cast("boolean").as("__y"))
-    if (maxDistinctScores > 0) {
-      val nd = base.agg(count_distinct(col("__s"))).head().getLong(0)
-      require(nd <= maxDistinctScores,
-        s"apScore's distinct-score window is global: $nd distinct scores >" +
-          s" maxDistinctScores=$maxDistinctScores — quantize the score" +
-          " (round(score, 6)) or raise the bound deliberately")
-    }
-    apAgg(grouped(base, Nil), Nil)
-  }
+      by: Seq[String] = Nil,
+      maxDistinctScores: Long = 1L << 22): DataFrame =
+    apAgg(grouped(evalRows("apScore", df, score, label, by, maxDistinctScores), by), by)
+      .orderBy(by.map(col): _*)
 
-  /** Grouped [[apScore]] — per-key PR-curve evaluation, the
-    * [[aucScoreBy]] twin: same per-group fail-fast, the descending
-    * window partitions by the keys. */
-  def apScoreBy(
+  /** (by..., __s, __y): the NULL-free score/label rows both evaluation
+    * gates rank, after the distinct-score fail-fast on the worst group
+    * (`maxDistinctScores` <= 0 disables it). */
+  private def evalRows(
+      op: String,
       df: DataFrame,
       score: Column,
       label: Column,
       by: Seq[String],
-      maxDistinctScores: Long = 1L << 22): DataFrame = {
-    require(by.nonEmpty, "apScoreBy needs >= 1 group column (use apScore)")
+      maxDistinctScores: Long): DataFrame = {
     val base = df.where(score.isNotNull && label.isNotNull)
       .select(by.map(col) :+ score.as("__s") :+ label.cast("boolean").as("__y"): _*)
     if (maxDistinctScores > 0) {
@@ -671,12 +627,12 @@ object FeatureScaling {
         .agg(max(col("__nd"))).head()
       val worst = if (nd.isNullAt(0)) 0L else nd.getLong(0)
       require(worst <= maxDistinctScores,
-        s"apScoreBy's per-group window sorts per-group distinct scores:" +
+        s"$op sorts each group's distinct scores in one window task:" +
           s" worst group has $worst distinct scores >" +
           s" maxDistinctScores=$maxDistinctScores — quantize the score" +
           " (round(score, 6)) or raise the bound deliberately")
     }
-    apAgg(grouped(base, by), by).orderBy(by.map(col): _*)
+    base
   }
 
   private def apAgg(cum: DataFrame, by: Seq[String]): DataFrame = {
@@ -690,22 +646,17 @@ object FeatureScaling {
         / pp.cast("double"), 12)
       .cast(DecimalType(38, 12))
     val t = cum.withColumn("__t", term)
-    val aggd =
-      if (by.isEmpty)
-        t.agg(sum(col("__np")).as("n_pos"), sum(col("__nn")).as("n_neg"),
-          sum(col("__t")).as("__ts"))
-      else
-        t.groupBy(by.map(col): _*)
-          .agg(sum(col("__np")).as("n_pos"), sum(col("__nn")).as("n_neg"),
-            sum(col("__t")).as("__ts"))
+    val aggd = t.groupBy(by.map(col): _*)
+      .agg(sum(col("__np")).as("n_pos"), sum(col("__nn")).as("n_neg"),
+        sum(col("__t")).as("__ts"))
     aggd.select(by.map(col) ++ Seq(col("n_pos"), col("n_neg"),
       when(col("n_pos") > 0,
         col("__ts").cast("double") / col("n_pos").cast("double")).as("ap")): _*)
   }
 
   /** (by..., __s) → (by..., __s, __np, __nn, __cum): the shared
-    * distinct-score collapse + cumulative-negatives window behind both
-    * AUC forms. */
+    * distinct-score collapse + cumulative-negatives window behind
+    * [[aucScore]] and [[apScore]]. */
   private def grouped(base: DataFrame, by: Seq[String]): DataFrame = {
     val keys = by.map(col) :+ col("__s")
     val g = base.groupBy(keys: _*)
@@ -723,14 +674,9 @@ object FeatureScaling {
     val u = col("__np").cast(DecimalType(38, 0)) *
       (col("__cum").cast(DecimalType(38, 0)) * lit(2) +
         col("__nn").cast(DecimalType(38, 0)))
-    val aggd =
-      if (by.isEmpty)
-        cum.agg(sum(col("__np")).as("n_pos"), sum(col("__nn")).as("n_neg"),
-          sum(u).as("__u2"))
-      else
-        cum.groupBy(by.map(col): _*)
-          .agg(sum(col("__np")).as("n_pos"), sum(col("__nn")).as("n_neg"),
-            sum(u).as("__u2"))
+    val aggd = cum.groupBy(by.map(col): _*)
+      .agg(sum(col("__np")).as("n_pos"), sum(col("__nn")).as("n_neg"),
+        sum(u).as("__u2"))
     aggd.select(by.map(col) ++ Seq(col("n_pos"), col("n_neg"),
       when(col("n_pos") > 0 && col("n_neg") > 0,
         col("__u2").cast("double") /

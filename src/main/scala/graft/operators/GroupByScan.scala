@@ -261,7 +261,7 @@ object GroupByScan {
     // chunk(NULL timestamp) in the as-of path) would silently drop rows
     // the single-window [[scan]] keeps, breaking the bitwise-equality
     // contract. Struct equality treats null fields as equal (the same
-    // __k idiom as Quantiles.exactQuantileChunked).
+    // __k idiom as Quantiles.exactQuantileSelect).
     val jk = struct(chunkKey: _*)
     val joined = local.withColumn("__jk", jk)
       .join(carries.select(jk.as("__jk"), col("__prev")), "__jk")

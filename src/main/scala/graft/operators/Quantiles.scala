@@ -21,10 +21,10 @@ import graft.functions.NanOps
   *      shuffle carries one row per DISTINCT value per group;
   *   2. per-key running count over the value-sorted distinct table:
   *      [[exactQuantile]] uses a window whose sort is a spilling external
-  *      sort (WindowExec) — one task per group; [[exactQuantileChunked]]
-  *      replaces it with the Blelloch chunk-carry topology
-  *      ([[GroupByScan.scanChunked]]) over value-range chunks, so even a
-  *      single giant group's ranking parallelizes;
+  *      sort (WindowExec) — one task per group; [[exactQuantileSelect]]
+  *      splits each group into value-range chunks and ranks only the
+  *      chunks that cover a requested rank, so even a single giant
+  *      group's ranking parallelizes;
   *   3. the two covering values per requested q are picked by rank-range
   *      predicates and one final tiny per-key aggregation applies
   *      Percentile's exact interpolation.
@@ -65,58 +65,6 @@ object Quantiles {
     finish(t, by, valueCol, qs, as, propagate)
   }
 
-  /** [[exactQuantile]] with the per-key ranking parallelized across
-    * `chunks` value-range chunks (the same Blelloch carry topology as
-    * [[GroupByScan.scanChunked]], which it delegates to): local running
-    * counts per (group, chunk) + an exclusive prefix of per-chunk totals.
-    * Identical results (QuantilesSpec pin); use it when single groups are
-    * huge — the windowed form sorts each group in one task, this form in
-    * up to `chunks` tasks. Chunk boundaries are a uniform split of the
-    * group-wide [min, max] value range (value-derived, so the chunking is
-    * order-congruent and deterministic under any partitioning); heavily
-    * skewed value distributions fill chunks unevenly, which costs balance,
-    * never correctness. Running counts transit as doubles in the carry
-    * fold — exact below 2^53 rows per group.
-    */
-  def exactQuantileChunked(
-      df: DataFrame,
-      by: Seq[String],
-      valueCol: String,
-      qs: Seq[Double],
-      as: String = "q",
-      propagate: Boolean = false,
-      chunks: Int = 32): DataFrame = {
-    validate(by, qs, valueCol)
-    require(chunks >= 1, s"chunks must be >= 1 (got $chunks)")
-    val c       = counts(df, by, valueCol, propagate)
-    val keyCols = by.map(col)
-    val v       = col(valueCol)
-
-    // The carry topology joins on the grouping keys; a bare multi-column
-    // equi-join is null-UNSAFE and would silently drop NULL-keyed groups
-    // that the windowed form keeps. Joining/grouping on one struct key
-    // restores null-safe semantics (struct equality treats null fields
-    // as equal — the standard Spark idiom).
-    val ck = c.withColumn("__k", struct(keyCols: _*))
-
-    // group-wide value range -> uniform order-congruent chunk index.
-    // NULL values (propagate's collapsed row) take chunk 0: they sort
-    // below every value, matching the window form's nulls-first order.
-    val rng = ck.groupBy(col("__k"))
-      .agg(min(v).cast("double").as("__lo"), max(v).cast("double").as("__hi"),
-        sum("__cnt").as("__n"))
-    val withR = ck.join(rng, "__k")
-    val span  = col("__hi") - col("__lo")
-    val chunkCol = when(v.isNull || col("__lo").isNull || span <= 0.0, lit(0))
-      .otherwise(least(lit(chunks - 1), greatest(lit(0),
-        floor((v.cast("double") - col("__lo")) / span * chunks).cast("int"))))
-    val cum = GroupByScan.scanChunked(withR, "__cnt", Seq("__k"), "cumsum",
-        Seq(v.asc_nulls_first), chunkCol, "__cum")
-      .withColumn("__cum", col("__cum").cast("long"))
-      .drop("__lo", "__hi", "__k")
-    finish(cum, by, valueCol, qs, as, propagate)
-  }
-
   /** [[exactQuantile]] by CHUNK SELECTION: identical results, but only
     * the value-range chunks that actually contain a target rank are ever
     * sorted — the classic distributed exact-selection refinement.
@@ -130,11 +78,13 @@ object Quantiles {
     *   4. only those chunks' rows are window-ranked (local rank + chunk
     *      prefix = exact global rank), picked, and interpolated.
     *
-    * vs [[exactQuantileChunked]], which ranks EVERY chunk: same carry
-    * arithmetic, but the sort volume drops from all distinct values to
-    * the covered chunks (≈ 2·|qs|/chunks of the data) — strictly less
-    * work at any scale, and each surviving chunk ranks in its own task.
-    * Results are bit-identical (QuantilesSpec pins all three forms).
+    * vs ranking EVERY chunk with a chunk carry: the sort volume drops
+    * from all distinct values to the covered chunks (≈ 2·|qs|/chunks of
+    * the data) — strictly less work at any scale, and each surviving
+    * chunk ranks in its own task. The chunk key is one struct of the
+    * grouping columns, so NULL-keyed groups join null-safely and survive
+    * like in the windowed form. Results are bit-identical (QuantilesSpec
+    * pins both forms).
     */
   /** @param dedup  true (default): rank over the (keys, DISTINCT value)
     *               count table — one full-data shuffle whose map-side
@@ -184,7 +134,12 @@ object Quantiles {
       .agg(min(v).cast("double").as("__lo"), max(v).cast("double").as("__hi"),
         sum("__cnt").as("__n"), sum("__nan").as("__nan"))
 
-    // same order-congruent uniform chunk rule as exactQuantileChunked
+    // group-wide value range -> uniform order-congruent chunk index
+    // (value-derived, so deterministic under any partitioning; skewed
+    // values fill chunks unevenly, which costs balance, never
+    // correctness). NULL values (propagate's collapsed row) take chunk
+    // 0: they sort below every value, matching the window form's
+    // nulls-first order.
     val span = col("__hi") - col("__lo")
     val chunkCol = when(v.isNull || col("__lo").isNull || span <= 0.0, lit(0))
       .otherwise(least(lit(chunks - 1), greatest(lit(0),

@@ -726,41 +726,46 @@ object TextAnalysis {
   }
 
   /** Exact corpus heavy hitters via a Misra-Gries candidate sketch +
-    * exact verification — every token whose corpus frequency is at
-    * least ceil(phi·n) (n = total tokens), with its EXACT count.
+    * exact verification — every token whose frequency is at least
+    * ceil(phi·n) (n = total tokens), with its EXACT count. With `by`
+    * keys the same holds per group (per language, per source, per day):
+    * sketch, verify and threshold all key on the group columns.
     *
     * Two passes over the token stream, neither shuffling the
     * vocabulary:
-    *   1. candidates: ONE global [[graft.expressions.MisraGriesSketch]]
-    *      aggregation (map partitions fold into capacity-bounded
-    *      summaries; the shuffle carries ≤ capacity pairs per
-    *      partition). MG guarantees the summary contains every token
-    *      with frequency > n/(capacity+1).
-    *   2. verify: the token stream probes the ≤ capacity candidate set
-    *      (broadcast hash semi-shape), and only matching rows reach the
-    *      exact `groupBy(token)` — a ≤ capacity-key aggregation.
+    *   1. candidates: ONE [[graft.expressions.MisraGriesSketch]]
+    *      aggregation per group (map partitions fold into
+    *      capacity-bounded summaries; the shuffle carries ≤ capacity
+    *      pairs per partition and group). MG guarantees the summary
+    *      contains every token with frequency > n/(capacity+1).
+    *   2. verify: the token stream probes the ≤ capacity candidates of
+    *      its group, and only matching rows reach the exact
+    *      `groupBy(by..., token)` — a ≤ capacity-keys-per-group
+    *      aggregation.
     *
     * `require(phi·(capacity+1) > 1)` makes the guarantee scale-free:
     * threshold ceil(phi·n) ≥ phi·n > n/(capacity+1), so the candidate
-    * superset covers every qualifying token at ANY corpus size and the
-    * composed result is deterministic — the sketch only prunes; the
-    * emitted counts are exact. (The CM/space-saving alternative
+    * superset covers every qualifying token at ANY corpus or group size
+    * and the composed result is deterministic — the sketch only prunes;
+    * the emitted counts are exact. (The CM/space-saving alternative
     * overcounts; MG undercounts — either way the verify join is what
     * makes the answer exact, the [[NgramOverlap]] bloom-prefilter
     * pattern.)
     *
-    * Output: (token, freq, threshold) ordered (freq DESC, token),
-    * threshold = the materialized cut so callers see the guarantee
-    * line. NULL-text docs contribute no tokens. */
+    * Output: (by..., token, freq, threshold) ordered (by..., freq DESC,
+    * token), threshold = the group's materialized cut so callers see the
+    * guarantee line. NULL-text docs contribute no tokens. */
   def heavyHitters(
       df: org.apache.spark.sql.DataFrame,
       textCol: String,
       capacity: Int,
-      phi: Double): org.apache.spark.sql.DataFrame = {
+      phi: Double,
+      by: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
     requireMgGuarantee("heavyHitters", capacity, phi)
     graft.expressions.GraftFunctions.register(df.sparkSession)
     heavyFromTokens(df.where(col(textCol).isNotNull)
-      .select(explode(tokens(col(textCol))).as("__t")), capacity, phi)
+      .select(by.map(col) :+ explode(tokens(col(textCol))).as("__t"): _*),
+      capacity, phi, by)
   }
 
   /** N-GRAM heavy hitters (VERDICT r7 #9): the corpus's most repeated
@@ -786,7 +791,7 @@ object TextAnalysis {
     graft.expressions.GraftFunctions.register(df.sparkSession)
     heavyFromTokens(df.where(col(textCol).isNotNull)
       .select(explode(Dedup.shinglesFast(col(textCol), n, distinct = false))
-        .as("__t")), capacity, phi)
+        .as("__t")), capacity, phi, Nil)
   }
 
   private def requireMgGuarantee(op: String, capacity: Int, phi: Double): Unit = {
@@ -798,67 +803,35 @@ object TextAnalysis {
   }
 
   /** Shared sketch-then-verify core of [[heavyHitters]]/[[heavyNgrams]]:
-    * `toks` is the exploded single-column (`__t`) token/gram stream. */
+    * `toks` is the exploded (by..., `__t`) token/gram stream. */
   private def heavyFromTokens(
       toks: org.apache.spark.sql.DataFrame,
       capacity: Int,
-      phi: Double): org.apache.spark.sql.DataFrame = {
-    val cand = toks
-      .agg(call_function(graft.expressions.GraftFunctions.MgSketch,
-        col("__t"), lit(capacity)).as("__mg"),
-        count(lit(1)).as("__n"))
-      .select(explode(col("__mg")).as("__c"), col("__n"))
-      .select(col("__c.token").as("__ct"), col("__n"))
-    toks.join(broadcast(cand), col("__t") === col("__ct"))
-      .groupBy(col("__t").as("token"))
-      .agg(count(lit(1)).as("freq"), first(col("__n")).as("__n"))
-      .withColumn("threshold", ceil(lit(phi) * col("__n")))
-      .where(col("freq") >= col("threshold"))
-      .select(col("token"), col("freq"), col("threshold"))
-      .orderBy(col("freq").desc, col("token"))
-  }
-
-  /** Grouped [[heavyHitters]]: the frequent tokens of EVERY group (per
-    * language, per source, per day) in one pass each — the sketch
-    * aggregation and the exact verify both key on the group columns, so
-    * per-group state stays capacity-bounded and the guarantee
-    * (phi > 1/(capacity+1)) holds per group at any group size. The
-    * candidate table is groups x <= capacity rows (AQE broadcasts it
-    * when small; at extreme group counts it hash-joins — still
-    * token-row-linear). Output: (by..., token, freq, threshold),
-    * thresholds per group. */
-  def heavyHittersBy(
-      df: org.apache.spark.sql.DataFrame,
-      by: Seq[String],
-      textCol: String,
-      capacity: Int,
-      phi: Double): org.apache.spark.sql.DataFrame = {
-    require(by.nonEmpty, "heavyHittersBy needs at least one grouping column; use heavyHitters")
-    require(capacity >= 1, s"heavyHittersBy needs capacity >= 1 (got $capacity)")
-    require(phi > 0 && phi < 1, s"phi must be in (0,1) (got $phi)")
-    require(phi * (capacity + 1) > 1,
-      s"phi=$phi with capacity=$capacity voids the MG superset guarantee: " +
-        s"need phi > 1/(capacity+1) = ${1.0 / (capacity + 1)}")
-    val s = df.sparkSession
-    graft.expressions.GraftFunctions.register(s)
-    val toks = df.where(col(textCol).isNotNull)
-      .select(by.map(col) :+ explode(tokens(col(textCol))).as("__t"): _*)
+      phi: Double,
+      by: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val keys = by.map(col)
     // group columns renamed on the candidate side: both frames derive
     // from one source, and Spark's self-join ambiguity check rejects
     // toks(c) === cand(c) on shared lineage
-    val cand = toks.groupBy(by.map(col): _*)
+    val cand = toks.groupBy(keys: _*)
       .agg(call_function(graft.expressions.GraftFunctions.MgSketch,
         col("__t"), lit(capacity)).as("__mg"),
         count(lit(1)).as("__n"))
       .select(by.zipWithIndex.map { case (c, i) => col(c).as(s"__g$i") } :+
         explode(col("__mg.token")).as("__ct") :+ col("__n"): _*)
-    toks.join(cand, by.zipWithIndex.map { case (c, i) => col(c) === col(s"__g$i") }
-        .reduce(_ && _) && col("__t") === col("__ct"))
-      .groupBy(by.map(col) :+ col("__t").as("token"): _*)
+    // with no keys the candidates are ONE group's ≤ capacity rows, so
+    // they always broadcast; keyed, the table is groups x ≤ capacity
+    // rows — AQE broadcasts it when small, and at extreme group counts
+    // it hash-joins (still token-row-linear)
+    val probe = if (by.isEmpty) broadcast(cand) else cand
+    toks.join(probe, (by.zipWithIndex.map { case (c, i) => col(c) === col(s"__g$i") }
+        :+ (col("__t") === col("__ct"))).reduce(_ && _))
+      .groupBy(keys :+ col("__t").as("token"): _*)
       .agg(count(lit(1)).as("freq"), first(col("__n")).as("__n"))
       .withColumn("threshold", ceil(lit(phi) * col("__n")))
       .where(col("freq") >= col("threshold"))
-      .select(by.map(col) ++ Seq(col("token"), col("freq"), col("threshold")): _*)
+      .select(keys ++ Seq(col("token"), col("freq"), col("threshold")): _*)
+      .orderBy(keys ++ Seq(col("freq").desc, col("token")): _*)
   }
 
   /** DuckDB twin of [[heavyHitters]] — the sketch is invisible in the

@@ -1034,14 +1034,14 @@ class CurationSpec extends AnyFunSuite {
       maxDistinctScores = 0).head().isNullAt(2))
   }
 
-  test("aucScoreBy equals per-group aucScore; per-group guard uses the worst group") {
+  test("aucScore(by) equals per-group aucScore(Nil); per-group guard uses the worst group") {
     import spark.implicits._
     val rows = Seq(
       ("a", 1.0, true), ("a", 1.0, false), ("a", 2.0, true), ("a", 3.0, false),
       ("a", 2.0, false), ("b", 5.0, true), ("b", 4.0, false), ("b", 5.0, false),
       ("b", 6.0, true), ("c", 1.0, true), ("c", 2.0, true)) // c: one class
     val df = rows.toDF("src", "s", "y")
-    val by = FeatureScaling.aucScoreBy(df, col("s"), col("y"), Seq("src"))
+    val by = FeatureScaling.aucScore(df, col("s"), col("y"), Seq("src"))
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), if (r.isNullAt(3)) None else Some(r.getDouble(3)))))
       .toMap
@@ -1056,10 +1056,10 @@ class CurationSpec extends AnyFunSuite {
     val skew = ((0 until 50).map(i => ("hot", i * 1.0 + 0.5, i % 2 == 0))
       :+ (("cold", 1.0, true))).toDF("src", "s", "y")
     intercept[IllegalArgumentException] {
-      FeatureScaling.aucScoreBy(skew, col("s"), col("y"), Seq("src"),
+      FeatureScaling.aucScore(skew, col("s"), col("y"), Seq("src"),
         maxDistinctScores = 10)
     }
-    assert(FeatureScaling.aucScoreBy(skew, col("s"), col("y"), Seq("src"),
+    assert(FeatureScaling.aucScore(skew, col("s"), col("y"), Seq("src"),
       maxDistinctScores = 50).count() == 2)
   }
 
@@ -1136,7 +1136,7 @@ class CurationSpec extends AnyFunSuite {
     // grouped == per-group solo; guard trips on the worst group
     val g = (tied.map { case (s, y) => ("a", s, y) }
       ++ classic.map { case (s, y) => ("b", s, y) }).toDF("src", "s", "y")
-    val by = FeatureScaling.apScoreBy(g, col("s"), col("y"), Seq("src"))
+    val by = FeatureScaling.apScore(g, col("s"), col("y"), Seq("src"))
       .collect().map(x => x.getString(0) -> x.getDouble(3)).toMap
     assert(math.abs(by("a") - bruteAp(tied)) < 1e-9)
     assert(math.abs(by("b") - bruteAp(classic)) < 1e-9)

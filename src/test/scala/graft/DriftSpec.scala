@@ -53,6 +53,16 @@ class DriftSpec extends AnyFunSuite {
       Drift.ksDistance(a, a, col("v"), maxDistinct = 10)
     }
     assert(e.getMessage.contains("maxDistinct"))
+    // keyed: the bound applies to the WORST group (hot: 20 distinct
+    // values, cold: 1), for both distinct-value statistics
+    val g = ((0 until 20).map(i => ("hot", i.toLong)) :+ (("cold", 1L))).toDF("g", "v")
+    for (op <- Seq[Long => Any](
+        m => Drift.ksDistance(g, g, col("v"), Seq("g"), maxDistinct = m),
+        m => Drift.wasserstein1(g, g, col("v"), Seq("g"), maxDistinct = m))) {
+      val eg = intercept[IllegalArgumentException](op(10L))
+      assert(eg.getMessage.contains("worst group has 20 > maxDistinct=10"), eg.getMessage)
+      op(20L)
+    }
   }
 
   test("W1: identical -> 0; shift by c -> c; mass-shift case KS underweights") {
@@ -105,10 +115,10 @@ class DriftSpec extends AnyFunSuite {
       .select("brier").as[Double].head() == 0.25)
   }
 
-  test("psiBy == per-group psi; one-sided groups still emit smoothed rows") {
+  test("psi(by) == per-group psi(Nil); one-sided groups still emit smoothed rows") {
     val a = Seq(("en", 1L), ("en", 1L), ("en", 2L), ("de", 5L)).toDF("g", "v")
     val b = Seq(("en", 1L), ("en", 2L), ("en", 2L), ("fr", 9L)).toDF("g", "v")
-    val grouped = Drift.psiBy(a, b, col("v"), Seq("g"))
+    val grouped = Drift.psi(a, b, col("v"), Seq("g"))
       .select("g", "bin", "n_base", "n_cur", "psi_term")
       .as[(String, Long, Long, Long, Double)].collect().toSet
     for (g <- Seq("en", "de", "fr")) {
@@ -120,10 +130,10 @@ class DriftSpec extends AnyFunSuite {
     }
   }
 
-  test("ksDistanceBy == per-group ksDistance; absent side scores 1") {
+  test("ksDistance(by) == per-group ksDistance(Nil); absent side scores 1") {
     val a = Seq(("x", 1L), ("x", 2L), ("y", 5L)).toDF("g", "v")
     val b = Seq(("x", 2L), ("x", 3L), ("z", 9L)).toDF("g", "v")
-    val grouped = Drift.ksDistanceBy(a, b, col("v"), Seq("g"))
+    val grouped = Drift.ksDistance(a, b, col("v"), Seq("g"))
       .select("g", "n_a", "n_b", "ks")
       .as[(String, Long, Long, Double)].collect().map(r => r._1 -> r).toMap
     val x = Drift.ksDistance(a.where(col("g") === "x"),
@@ -134,10 +144,10 @@ class DriftSpec extends AnyFunSuite {
     assert(grouped("z") == (("z", 0L, 1L, 1.0)))
   }
 
-  test("wasserstein1By == per-group wasserstein1 (incl. one-sided groups)") {
+  test("wasserstein1(by) == per-group wasserstein1(Nil) (incl. one-sided groups)") {
     val a = Seq(("x", 1L), ("x", 2L), ("y", 5L)).toDF("g", "v")
     val b = Seq(("x", 2L), ("x", 3L), ("z", 9L)).toDF("g", "v")
-    val grouped = Drift.wasserstein1By(a, b, col("v"), Seq("g"))
+    val grouped = Drift.wasserstein1(a, b, col("v"), Seq("g"))
       .select("g", "n_a", "n_b", "w1")
       .as[(String, Long, Long, Double)].collect().map(r => r._1 -> r).toMap
     assert(grouped.keySet == Set("x", "y", "z"))
@@ -151,10 +161,10 @@ class DriftSpec extends AnyFunSuite {
     assert(grouped("y") == (("y", 1L, 0L, 0.0)))
   }
 
-  test("jsdBy == per-group jsd; one-sided groups still emit smoothed rows") {
+  test("jsd(by) == per-group jsd(Nil); one-sided groups still emit smoothed rows") {
     val a = Seq(("en", 1L), ("en", 1L), ("en", 2L), ("de", 5L)).toDF("g", "v")
     val b = Seq(("en", 1L), ("en", 2L), ("en", 2L), ("fr", 9L)).toDF("g", "v")
-    val grouped = Drift.jsdBy(a, b, col("v"), Seq("g"))
+    val grouped = Drift.jsd(a, b, col("v"), Seq("g"))
       .select("g", "bin", "n_base", "n_cur", "jsd_term")
       .as[(String, Long, Long, Long, Double)].collect().toSet
     for (g <- Seq("en", "de", "fr")) {
@@ -166,10 +176,10 @@ class DriftSpec extends AnyFunSuite {
     }
   }
 
-  test("calibrationBinsBy/brierScoreBy == per-group singles") {
+  test("calibrationBins(by)/brierScore(by) == per-group calibrationBins(Nil)/brierScore(Nil)") {
     val df = Seq(("s0", 0.05, false), ("s0", 0.05, true), ("s0", 0.95, true),
       ("s1", 1.0, true), ("s1", 0.5, false)).toDF("src", "p", "y")
-    val gb = Drift.calibrationBinsBy(df, col("p"), col("y"), Seq("src"))
+    val gb = Drift.calibrationBins(df, col("p"), col("y"), Seq("src"))
       .select("src", "bin", "n", "avg_pred", "frac_pos")
       .as[(String, Long, Long, Double, Double)].collect().toSet
     val gs = Seq("s0", "s1").flatMap { s =>
@@ -178,7 +188,7 @@ class DriftSpec extends AnyFunSuite {
         .map(r => (s, r._1, r._2, r._3, r._4))
     }.toSet
     assert(gb == gs)
-    val bb = Drift.brierScoreBy(df, col("p"), col("y"), Seq("src"))
+    val bb = Drift.brierScore(df, col("p"), col("y"), Seq("src"))
       .select("src", "n", "brier")
       .as[(String, Long, Double)].collect().toSet
     val bs = Seq("s0", "s1").map { s =>
@@ -187,9 +197,9 @@ class DriftSpec extends AnyFunSuite {
       (s, r._1, r._2)
     }.toSet
     assert(bb == bs)
-    intercept[IllegalArgumentException] {
-      Drift.brierScoreBy(df, col("p"), col("y"), Seq.empty)
-    }
+    // no keys is the corpus-wide statistic, not an error
+    assert(Drift.brierScore(df, col("p"), col("y"), Seq.empty).collect().toSeq
+      == Drift.brierScore(df, col("p"), col("y")).collect().toSeq)
   }
 
   test("calibration state merges associatively; finalize == one-shot bins and Brier") {
@@ -210,8 +220,8 @@ class DriftSpec extends AnyFunSuite {
   }
 
   test("KS/W1 degenerate anchors: empty side -> ks=1 not NULL; one distinct value -> W1 emits (n_a, n_b, 0.0)") {
-    // ADVICE r9: the ungrouped forms must match ksDistanceBy's empty-
-    // side contract (cdf of an empty side is 0 everywhere) instead of
+    // ADVICE r9: with no keys the empty-side contract holds as it does
+    // per group (cdf of an empty side is 0 everywhere) instead of
     // bubbling a NULL from the 0 divide, and a single-distinct-value
     // union must still yield W1's one row, not an empty frame
     val a = dfOf(Seq(1, 2, 3))
@@ -240,7 +250,7 @@ class DriftSpec extends AnyFunSuite {
     val a = Seq(1L, 2L, 2L, 5L).toDF("v")
     val b = Seq(2L, 3L, 5L, 9L).toDF("v")
     val sc = spark.sparkContext
-    val seen = java.util.Collections.synchronizedList(new java.util.ArrayList[(String, String)]())
+    val seen = new java.util.concurrent.CopyOnWriteArrayList[(String, String)]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         seen.add((Option(js.properties)
@@ -282,5 +292,21 @@ class DriftSpec extends AnyFunSuite {
       (Some(0.5), None)).toDF("p", "y")
     assert(Drift.brierScore(preds, col("p"), col("y"))
       .select("n").as[Long].head() == 1L)
+    // NaN predictions drop out like NULL ones: round(NaN, 6) would cast
+    // to a NULL decimal that `least` clamps into the top bin
+    val nanBins = Seq((0.95, true), (0.15, false), (Double.NaN, true), (0.85, false))
+      .toDF("p", "y")
+    assert(Drift.calibrationBins(nanBins, col("p"), col("y")).orderBy("bin")
+      .select("bin", "n", "avg_pred", "frac_pos")
+      .as[(Long, Long, Double, Double)].collect().toSeq
+      == Seq((1L, 1L, 0.15, 0.0), (8L, 1L, 0.85, 0.0), (9L, 1L, 0.95, 1.0)))
+    val nanState = Drift.calibrationState(nanBins, col("p"), col("y"))
+    assert(nanState.agg(sum("n")).as[Long].head() == 3L)
+    assert(Drift.calibrationFromState(nanState).collect().map(_.toSeq).toSet
+      == Drift.calibrationBins(nanBins, col("p"), col("y")).collect().map(_.toSeq).toSet)
+    val nanBrier = Seq((1.0, true), (Double.NaN, false)).toDF("p", "y")
+    assert(Drift.brierScore(nanBrier, col("p"), col("y"))
+      .select("n", "brier").as[(Long, Double)].head() == ((1L, 0.0)))
   }
+
 }

@@ -277,13 +277,13 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(pi.postings.count() == 0)
     assert(Search.appendToPostings(pi, emptyDocs, "text").postings.count() == 0)
     assert(Search.removeFromPostings(pi, Seq(1L).toDF("id")).postings.count() == 0)
-    // grouped drift twins on empty slices
+    // grouped drift statistics on empty slices
     val ev = Seq.empty[(String, Long)].toDF("g", "v")
-    assert(Drift.wasserstein1By(ev, ev, col("v"), Seq("g")).count() == 0)
-    assert(Drift.jsdBy(ev, ev, col("v"), Seq("g")).count() == 0)
+    assert(Drift.wasserstein1(ev, ev, col("v"), Seq("g")).count() == 0)
+    assert(Drift.jsd(ev, ev, col("v"), Seq("g")).count() == 0)
     val ep = Seq.empty[(String, Double, Boolean)].toDF("g", "p", "y")
-    assert(Drift.calibrationBinsBy(ep, col("p"), col("y"), Seq("g")).count() == 0)
-    assert(Drift.brierScoreBy(ep, col("p"), col("y"), Seq("g")).count() == 0)
+    assert(Drift.calibrationBins(ep, col("p"), col("y"), Seq("g")).count() == 0)
+    assert(Drift.brierScore(ep, col("p"), col("y"), Seq("g")).count() == 0)
     // calibration state machinery on empty input
     val es = Drift.calibrationState(ep.drop("g"), col("p"), col("y"))
     assert(es.count() == 0)

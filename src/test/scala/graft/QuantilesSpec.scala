@@ -87,24 +87,6 @@ class QuantilesSpec extends AnyFunSuite {
     assert(r == Map(1 -> 3.0))
   }
 
-  test("chunked ranking equals the windowed form bit-for-bit (skip + propagate, any chunks)") {
-    val qs = Seq(0.0, 0.25, 0.5, 0.9, 1.0)
-    val df = data.toDF("k", "v").repartition(7)
-    def grab(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(r => r.getInt(0) -> r.getSeq[Double](1).map(x =>
-        if (x.isNaN) "NaN" else x)).toMap
-    val windowed = grab(Quantiles.exactQuantile(df, Seq("k"), "v", qs, as = "qs"))
-    for (chunks <- Seq(1, 7, 32)) {
-      val chunked = grab(Quantiles.exactQuantileChunked(df, Seq("k"), "v", qs,
-        as = "qs", chunks = chunks))
-      assert(chunked == windowed, s"chunks=$chunks diverged")
-    }
-    val wProp = grab(Quantiles.exactQuantile(df, Seq("k"), "v", qs, as = "qs", propagate = true))
-    val cProp = grab(Quantiles.exactQuantileChunked(df, Seq("k"), "v", qs,
-      as = "qs", propagate = true, chunks = 5))
-    assert(cProp == wProp)
-  }
-
   test("selection ranking equals the windowed form bit-for-bit (skip + propagate, any chunks)") {
     val qs = Seq(0.0, 0.25, 0.5, 0.9, 1.0)
     val base = data.map { case (k, x) => (k, Option(x)) } ++
@@ -153,27 +135,26 @@ class QuantilesSpec extends AnyFunSuite {
     assert(s == Map("a" -> 2.0, (null: String) -> 4.0))
   }
 
-  test("chunked keeps NULL-keyed groups like the windowed form (null-safe struct join)") {
+  test("selection keeps NULL-keyed groups like the windowed form (null-safe struct join)") {
     val df = Seq((Some("a"), 1.0), (None, 2.0), (None, 6.0), (Some("a"), 3.0))
       .toDF("k", "v").repartition(3)
     def grab(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val w = grab(Quantiles.exactQuantile(df, Seq("k"), "v", Seq(0.5), as = "med"))
-    val c = grab(Quantiles.exactQuantileChunked(df, Seq("k"), "v", Seq(0.5),
+    val c = grab(Quantiles.exactQuantileSelect(df, Seq("k"), "v", Seq(0.5),
       as = "med", chunks = 4))
     assert(w == Map("a" -> 2.0, (null: String) -> 4.0))
-    assert(c == w, "chunked dropped the NULL-keyed group")
+    assert(c == w, "selection dropped the NULL-keyed group")
   }
 
   test("__-prefixed by/value columns are rejected with a clear message (ADVICE r4)") {
     // the old enumerated reserved lists missed names like __n/__nan,
     // producing opaque ambiguous-reference errors; the contract is now
-    // the whole __ prefix, across all three forms
+    // the whole __ prefix, across both forms
     val df = Seq(("a", 1.0)).toDF("__n", "v")
     val dfv = Seq(("a", 1.0)).toDF("k", "__nan")
     for (f <- Seq[(org.apache.spark.sql.DataFrame, Seq[String], String) => Any](
       (d, by, vc) => Quantiles.exactQuantile(d, by, vc, Seq(0.5)),
-      (d, by, vc) => Quantiles.exactQuantileChunked(d, by, vc, Seq(0.5)),
       (d, by, vc) => Quantiles.exactQuantileSelect(d, by, vc, Seq(0.5)))) {
       val e1 = intercept[IllegalArgumentException](f(df, Seq("__n"), "v"))
       assert(e1.getMessage.contains("__ column-name prefix"), e1.getMessage)

@@ -116,7 +116,7 @@ class SearchSpec extends AnyFunSuite {
     // job fences the (FIFO) listener bus so the assertion is not racy.
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val seen = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val seen = new java.util.concurrent.CopyOnWriteArrayList[String]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         seen.add(Option(js.properties)

@@ -699,7 +699,7 @@ class SimilaritySpec extends AnyFunSuite {
     // node. QueryExecutionListener is async — a sentinel query fences
     // the bus (the SearchSpec listener-fence convention).
     import scala.jdk.CollectionConverters._
-    val plans = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val plans = new java.util.concurrent.CopyOnWriteArrayList[String]()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(fn: String,
           qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =

@@ -407,20 +407,20 @@ class TextMultiModalSpec extends AnyFunSuite {
     }
   }
 
-  test("heavyHittersBy: per-group exact results with per-group thresholds") {
+  test("heavyHitters(by): per-group exact results with per-group thresholds") {
     val docs = Seq(
       ("en", "hot hot hot cold"), ("en", "hot warm"),
       ("de", "kalt kalt"), ("de", "kalt warm x1 x2 x3 x4 x5 x6 x7 x8 x9")
     ).toDF("lang", "text")
     // en: n=6, hot=4, threshold ceil(1.8)=2 -> {hot:4}
     // de: n=13, kalt=3, threshold ceil(3.9)=4 -> {} (kalt just misses)
-    val got = TextAnalysis.heavyHittersBy(docs, Seq("lang"), "text",
-        capacity = 6, phi = 0.3)
+    val got = TextAnalysis.heavyHitters(docs, "text",
+        capacity = 6, phi = 0.3, by = Seq("lang"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == Set(("en", "hot", 4L, 2L)))
     // lower phi admits kalt with ITS group's threshold
-    val got2 = TextAnalysis.heavyHittersBy(docs, Seq("lang"), "text",
-        capacity = 6, phi = 0.2)
+    val got2 = TextAnalysis.heavyHitters(docs, "text",
+        capacity = 6, phi = 0.2, by = Seq("lang"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got2.contains(("de", "kalt")) && got2.contains(("en", "hot")))
   }
