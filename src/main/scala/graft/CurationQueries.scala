@@ -722,14 +722,14 @@ object CurationQueries {
     }),
     // the per-LANGUAGE CCNet composition (Wenzek et al. fit one KenLM
     // PER language and bucket within it): one hash-partitioned plan
-    // fits every language's KN model (knNgramLogLossBy), then the
+    // fits every language's KN model (knNgramLogLoss by lang), then the
     // rank-exact thirds cut WITHIN each language
     "q_ccnet_buckets_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      val scored = LanguageModel.knNgramLogLossBy(
+      val scored = LanguageModel.knNgramLogLoss(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text",
-          order = 2)
+          docs.where(col("doc_id") % 2 === 1), "doc_id", "text",
+          order = 2, by = Seq("lang"))
         .withColumn("kn2_loss", round(col("kn2_loss"), 6))
       LanguageModel.perplexityBuckets(scored, "lang", "doc_id", "kn2_loss")
         .groupBy("lang", "bucket")
@@ -764,13 +764,13 @@ object CurationQueries {
     // the GROUPED SB twin (VERDICT r12 stretch #8): one independent
     // stupid-backoff model per language — every level table, context
     // sum, and the N total carry the group key, so the per-language
-    // fits are one hash-partitioned plan (the knNgramLogLossBy shape)
+    // fits are one hash-partitioned plan (the grouped KN shape)
     "q_sb_loss_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      LanguageModel.sbNgramLogLossBy(
+      LanguageModel.sbNgramLogLoss(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text",
-          order = 3)
+          docs.where(col("doc_id") % 2 === 1), "doc_id", "text",
+          order = 3, by = Seq("lang"))
         .withColumn("sb3_loss", round(col("sb3_loss"), 6))
         .orderBy("lang", "doc_id")
     }),
@@ -779,10 +779,10 @@ object CurationQueries {
     // thirds (the q_ccnet_buckets_by shape with SB replacing KN)
     "q_ccnet_sb_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      val scored = LanguageModel.sbNgramLogLossBy(
+      val scored = LanguageModel.sbNgramLogLoss(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text",
-          order = 3)
+          docs.where(col("doc_id") % 2 === 1), "doc_id", "text",
+          order = 3, by = Seq("lang"))
         .withColumn("sb3_loss", round(col("sb3_loss"), 6))
       LanguageModel.perplexityBuckets(scored, "lang", "doc_id", "sb3_loss")
         .groupBy("lang", "bucket")
@@ -808,10 +808,10 @@ object CurationQueries {
     // plan, not a driver loop
     "q_kn_loss_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      LanguageModel.knNgramLogLossBy(
+      LanguageModel.knNgramLogLoss(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text",
-          order = 2)
+          docs.where(col("doc_id") % 2 === 1), "doc_id", "text",
+          order = 2, by = Seq("lang"))
         .select(col("lang"), col("doc_id"), col("n_trans"),
           round(col("kn2_loss"), 6).as("kn_loss"))
         .orderBy("lang", "doc_id")
@@ -885,10 +885,10 @@ object CurationQueries {
     // 4.151516 DuckDB), so the raw double is the MORE exact contract
     "q_kn5_loss_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      LanguageModel.knNgramLogLossBy(
+      LanguageModel.knNgramLogLoss(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text",
-          order = 5)
+          docs.where(col("doc_id") % 2 === 1), "doc_id", "text",
+          order = 5, by = Seq("lang"))
         .orderBy("lang", "doc_id")
     }),
     // the full CCNet composition at production depth: per-language
@@ -896,10 +896,10 @@ object CurationQueries {
     // (ranking on the RAW double — the q_kn5_loss_by boundary note)
     "q_ccnet_kn5_by" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      val scored = LanguageModel.knNgramLogLossBy(
+      val scored = LanguageModel.knNgramLogLoss(
           docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text",
-          order = 5)
+          docs.where(col("doc_id") % 2 === 1), "doc_id", "text",
+          order = 5, by = Seq("lang"))
       LanguageModel.perplexityBuckets(scored, "lang", "doc_id", "kn5_loss")
         .groupBy("lang", "bucket")
         .agg(count(lit(1)).as("n_docs"),

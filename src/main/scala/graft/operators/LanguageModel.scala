@@ -49,10 +49,11 @@ object LanguageModel {
 
   import TextAnalysis.{tokens, lnQ}
 
-  /** DuckDB reference for [[knNgramLogLossBy]] at order 2 (output
-    * column `kn_loss`) — the order-2 algebra below with the group key
-    * threaded through every table. Hand-written, not generated from the
-    * order-N tower, so the oracle checks the tower independently. */
+  /** DuckDB reference for [[knNgramLogLoss]] with one `by` key at
+    * order 2 (output column `kn_loss`) — the order-2 algebra below with
+    * the group key threaded through every table. Hand-written, not
+    * generated from the order-N tower, so the oracle checks the tower
+    * independently. */
   def knBigramLogLossBySql(groupExpr: String, idExpr: String, textExpr: String,
       trainFrom: String, scoreFrom: String, d: Double = 0.75): String = {
     val p1 = ("(greatest(coalesce(rt.tr, 0)::DOUBLE - " + d + ", 0.0)"
@@ -168,16 +169,63 @@ object LanguageModel {
       + " FROM sc GROUP BY 1 ORDER BY 1")
   }
 
-  /** (id, __g1..__gn) order-n gram rows of every ≥n-token document. */
-  private def transitionsN(df: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame =
-    df.select(col(idCol).as("__id"), tokens(col(textCol)).as("__w"))
-      .where(size(col("__w")) >= n)
-      .select(col("__id"), explode(transform(
+  /** The `by` keys of one LM call, and the one place where zero keys and
+    * keyed calls differ (the `Drift.withTotals` rule). Inside the plan,
+    * key i of the table whose columns start with `p` is `{p}by{i}`
+    * (`__by{i}` on score and train rows), so every join names its sides.
+    *  - Zero keys: one model. An empty top table fails fast (a
+    *    `limit(1)` probe), and the one-row totals ride cross joins:
+    *    plain between fit tables, broadcast onto the score rows after
+    *    the c1 join.
+    *  - Keyed: one independent model per group, and no fail-fast. Totals
+    *    join on the keys, and the score rows meet them BEFORE the level
+    *    joins, so the docs of a group without a model drop early. */
+  private final case class Keys(by: Seq[String]) {
+    private val zero = by.isEmpty
+    def names(p: String): Seq[String] = by.indices.map(i => s"${p}by$i")
+    def cols(p: String): Seq[Column] = names(p).map(col)
+    private def renamed(from: Seq[String], to: Seq[String]): Seq[Column] =
+      from.zip(to).map { case (a, b) => col(a).as(b) }
+    /** the input's keys named as table `p`'s, and back */
+    def aliased(p: String): Seq[Column] = renamed(by, names(p))
+    def restored: Seq[Column] = renamed(names("__"), by)
+    /** table `from`'s keys, renamed to table `to`'s */
+    def moved(from: String, to: String): Seq[Column] = renamed(names(from), names(to))
+    def on(pa: String, pb: String): Seq[Column] =
+      names(pa).zip(names(pb)).map { case (a, b) => col(a) === col(b) }
+    /** rows of `df` whose table-`p` keys are all non-NULL (a NULL key
+      * names no model) */
+    def nonNull(df: DataFrame, p: String): DataFrame =
+      names(p).foldLeft(df)((d, m) => d.where(col(m).isNotNull))
+    /** `scored`, once the probe passed: the caller plans `scored` first,
+      * so a column clash fails before the probe job */
+    def failFast(top: DataFrame, msg: => String)(scored: DataFrame): DataFrame = {
+      if (zero) require(top.limit(1).count() == 1L, msg)
+      scored
+    }
+    def joinTotals(a: DataFrame, pa: String, b: DataFrame, pb: String): DataFrame =
+      if (zero) a.crossJoin(b) else a.join(b, on(pa, pb).reduce(_ && _))
+    def withTotals(rows: DataFrame, totals: DataFrame)(
+        levels: DataFrame => DataFrame): DataFrame =
+      if (zero) levels(rows).crossJoin(broadcast(totals))
+      else levels(rows.join(totals, on("__", "__t").reduce(_ && _)))
+  }
+
+  private val NoKeys = Keys(Nil)
+
+  /** (__id, __by…, __g1..__gn) order-n gram rows of every ≥n-token
+    * document whose keys are all non-NULL. */
+  private def transitionsN(df: DataFrame, keys: Keys, idCol: String,
+      textCol: String, n: Int): DataFrame =
+    df.select((col(idCol).as("__id") +: keys.aliased("__")) :+
+        tokens(col(textCol)).as("__w"): _*)
+      .where((keys.cols("__").map(_.isNotNull) :+ (size(col("__w")) >= n))
+        .reduce(_ && _))
+      .select((col("__id") +: keys.cols("__")) :+ explode(transform(
         sequence(lit(0), size(col("__w")) - n),
         i => struct((1 to n).map(j =>
-          element_at(col("__w"), i + j).as(s"g$j")): _*))).as("__t"))
-      .select(col("__id") +: (1 to n).map(j =>
+          element_at(col("__w"), i + j).as(s"g$j")): _*))).as("__t"): _*)
+      .select((col("__id") +: keys.cols("__")) ++ (1 to n).map(j =>
         col(s"__t.g$j").as(s"__g$j")): _*)
 
   /** ORDER-N interpolated Kneser-Ney — the header's bigram model with the
@@ -199,7 +247,15 @@ object LanguageModel {
     * brute-force model; the oracle checks orders 2 and 3 against the
     * hand-written DuckDB references above). Score docs
     * need ≥order tokens (n_trans = n−order+1); shorter/NULL docs are
-    * absent. Output column `kn{order}_loss`.
+    * absent. Output (by…, idCol, n_trans, kn{order}_loss).
+    *
+    * Grouping (`by`, default none): one independent tower PER GROUP
+    * (CCNet's actual deployment is a per-language 5-gram KN), every
+    * level's count/type table and the (B, T, V) scalars carrying the
+    * keys — one hash-partitioned plan, no driver loop. Score docs whose
+    * group has no train n-grams are ABSENT (no model — the inner join
+    * on the per-group totals), as are rows with a NULL key. Without
+    * keys a train corpus with no n-grams fails fast instead.
     *
     * Plan shape unchanged by depth: 2·order−1 vocabulary-bounded count
     * tables (hash aggs, map-side combined, each derived from the one
@@ -213,13 +269,16 @@ object LanguageModel {
       idCol: String,
       textCol: String,
       order: Int,
+      by: Seq[String] = Nil,
       d: Double = 0.75): DataFrame = {
     require(order >= 2, s"knNgramLogLoss needs order >= 2 (got $order)")
     require(d > 0 && d < 1, s"discount d must be in (0,1) (got $d)")
-    val (top, vc) = knNgramTrainTables(train, textCol, order)
-    require(top.limit(1).count() == 1L,
-      s"knNgramLogLoss: train corpus has no $order-grams (every doc <$order tokens)")
-    knNgramScoreWith(knNgramTower(top, vc, order, d, identity), score, idCol, textCol)
+    val keys = Keys(by)
+    val (top, vc) = knNgramTrainTables(train, keys, textCol, order)
+    keys.failFast(top,
+      s"knNgramLogLoss: train corpus has no $order-grams (every doc <$order tokens)")(
+      knScore(knNgramTower(top, vc, keys, order, d, identity), keys, score,
+        idCol, textCol))
   }
 
   /** A fitted order-n KN model: the Chen-Goodman tower of count tables.
@@ -275,23 +334,26 @@ object LanguageModel {
       d: Double = 0.75): KnNgramModel = {
     require(order >= 2, s"knNgramFit needs order >= 2 (got $order)")
     require(d > 0 && d < 1, s"discount d must be in (0,1) (got $d)")
-    val (top, vc) = knNgramTrainTables(train, textCol, order)
+    val (top, vc) = knNgramTrainTables(train, NoKeys, textCol, order)
     val kept = top.localCheckpoint()
     require(kept.limit(1).count() == 1L,
       s"knNgramFit: train corpus has no $order-grams (every doc <$order tokens)")
-    knNgramTower(kept, vc, order, d, _.localCheckpoint())
+    knNgramTower(kept, vc, NoKeys, order, d, _.localCheckpoint())
   }
 
   /** The level-n raw count table (level k's keys are the LAST k gram
-    * positions) and the one-row V scalar — the fit's only corpus-sized
-    * derivations. */
-  private def knNgramTrainTables(train: DataFrame, textCol: String, n: Int)
-      : (DataFrame, DataFrame) = {
+    * positions) and the one-row-per-group V scalar — the fit's only
+    * corpus-sized derivations. */
+  private def knNgramTrainTables(train: DataFrame, keys: Keys, textCol: String,
+      n: Int): (DataFrame, DataFrame) = {
     // id slot unused by the fit (pruned by Catalyst after the groupBy)
-    val top = transitionsN(train, textCol, textCol, n)
-      .groupBy((1 to n).map(j => col(s"__g$j").as(s"__c${n}k$j")): _*)
+    val top = transitionsN(train, keys, textCol, textCol, n)
+      .groupBy(keys.moved("__", s"__c$n") ++
+        (1 to n).map(j => col(s"__g$j").as(s"__c${n}k$j")): _*)
       .agg(count(lit(1)).as(s"__cnt$n"))
-    val vc = train.select(explode(tokens(col(textCol))).as("__uni"))
+    val vc = keys.nonNull(train.select(keys.aliased("__v") :+
+        explode(tokens(col(textCol))).as("__uni"): _*), "__v")
+      .groupBy(keys.cols("__v"): _*)
       .agg((count_distinct(col("__uni")) + lit(1L)).as("__vv"))
     (top, vc)
   }
@@ -302,31 +364,35 @@ object LanguageModel {
     * merged daily state both feed it). `keep` is applied to every derived
     * table as it is built — `identity` for the one-plan lazy tower,
     * `localCheckpoint` for a materialized model (each level then derives
-    * from the frozen level above, never from the corpus again). */
-  private def knNgramTower(top: DataFrame, vc: DataFrame, n: Int, d: Double,
-      keep: DataFrame => DataFrame): KnNgramModel = {
+    * from the frozen level above, never from the corpus again). With
+    * keys, every table carries them: one tower per group. */
+  private def knNgramTower(top: DataFrame, vc: DataFrame, keys: Keys, n: Int,
+      d: Double, keep: DataFrame => DataFrame): KnNgramModel = {
     var cks = Map(n -> top)
     var lks = Map.empty[Int, DataFrame]
     for (k <- n to 2 by -1) {
       lks += k -> keep(cks(k)
-        .groupBy((1 until k).map(j => col(s"__c${k}k$j").as(s"__l${k}k$j")): _*)
+        .groupBy(keys.moved(s"__c$k", s"__l$k") ++
+          (1 until k).map(j => col(s"__c${k}k$j").as(s"__l${k}k$j")): _*)
         .agg(sum(col(s"__cnt$k")).as(s"__ctx$k"), count(lit(1)).as(s"__t$k")))
       if (k > 2)
         // continuation types: distinct leftmost extensions of level k
         cks += (k - 1) -> keep(cks(k)
-          .groupBy((2 to k).map(j =>
+          .groupBy(keys.moved(s"__c$k", s"__c${k - 1}") ++ (2 to k).map(j =>
             col(s"__c${k}k$j").as(s"__c${k - 1}k${j - 1}")): _*)
           .agg(count(lit(1)).as(s"__cnt${k - 1}")))
     }
-    val c1 = cks(2).groupBy(col("__c2k2").as("__c1k1"))
+    val c1 = cks(2)
+      .groupBy(keys.moved("__c2", "__c1") :+ col("__c2k2").as("__c1k1"): _*)
       .agg(count(lit(1)).as("__cnt1"))
-    val bt = cks(2).agg(count(lit(1)).as("__b"),
-      count_distinct(col("__c2k2")).as("__t"))
-    KnNgramModel(n, d, cks + (1 -> keep(c1)), lks, keep(bt.crossJoin(vc)))
+    val bt = cks(2).groupBy(keys.moved("__c2", "__t"): _*)
+      .agg(count(lit(1)).as("__b"), count_distinct(col("__c2k2")).as("__t"))
+    KnNgramModel(n, d, cks + (1 -> keep(c1)), lks,
+      keep(keys.joinTotals(bt, "__t", vc, "__v")))
   }
 
   /** p_order(w|h) over a score row joined with every tower table (the
-    * shared column names of [[knNgramScoreWith]] and [[knNgramLogLossBy]]).
+    * column names [[scoreGrams]] joins for the KN family).
     * LINEAR-TREE backoff: the naive when(null, p).otherwise(..p..) embeds
     * p TWICE per level — 2^(order-1) copies of the unigram subtree, and
     * Catalyst planning of the duplicated tree cost more than the query's
@@ -357,24 +423,47 @@ object LanguageModel {
     * probing the tower's tables). Returns (idCol, n_trans,
     * kn{order}_loss). */
   def knNgramScoreWith(model: KnNgramModel, score: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val n = model.order
-    // score gram j aligns with level-k key j at offset n-k
-    var joined = transitionsN(score, idCol, textCol, n)
-    for (k <- n to 2 by -1) {
-      joined = joined
-        .join(model.counts(k), (1 to k).map(j =>
-          col(s"__g${n - k + j}") === col(s"__c${k}k$j")).reduce(_ && _), "left")
-        .join(model.contexts(k), (1 until k).map(j =>
-          col(s"__g${n - k + j}") === col(s"__l${k}k$j")).reduce(_ && _), "left")
-    }
-    joined
-      .join(model.counts(1), col(s"__g$n") === col("__c1k1"), "left")
-      .crossJoin(broadcast(model.totals))
-      .select(col("__id"), lnQ(knProb(n, model.d)).as("__lp"))
-      .groupBy(col("__id").as(idCol))
+      idCol: String, textCol: String): DataFrame =
+    knScore(model, NoKeys, score, idCol, textCol)
+
+  private def knScore(model: KnNgramModel, keys: Keys, score: DataFrame,
+      idCol: String, textCol: String): DataFrame =
+    scoreGrams(keys, score, idCol, textCol, model.order, "c", "l",
+      model.counts, model.contexts, model.totals,
+      knProb(model.order, model.d), s"kn${model.order}_loss")
+
+  /** The one scoring path of both LM families: join the order-n score
+    * grams to a fitted model's level tables — `counts(k)` (k = n..1)
+    * keyed by `__{c}{k}k1..`, `contexts(k)` (k = n..2) by `__{l}{k}k1..`
+    * (score gram j meets level-k key j at offset n−k), each also by the
+    * group keys — attach the per-group `totals` ([[Keys.withTotals]]),
+    * and reduce the ln-quantized `prob` to one row per doc:
+    * (by…, idCol, n_trans, lossCol), the loss the mean negative ln
+    * summed as an exact decimal with one IEEE finalize. */
+  private def scoreGrams(keys: Keys, score: DataFrame, idCol: String,
+      textCol: String, n: Int, c: String, l: String,
+      counts: Map[Int, DataFrame], contexts: Map[Int, DataFrame],
+      totals: DataFrame, prob: Column, lossCol: String): DataFrame = {
+    // Spark resolves names case-insensitively: a clash would let the
+    // loss column replace the id (or a key) without a word
+    val out = keys.by ++ Seq(idCol, "n_trans", lossCol)
+    val clash = out.groupBy(_.toLowerCase(java.util.Locale.ROOT)).values.find(_.size > 1)
+    require(clash.isEmpty, s"output column '${clash.get.head}' is named twice in" +
+      s" ${out.mkString("(", ", ", ")")}: rename the id or key column")
+    def on(t: String, k: Int, width: Int): Column =
+      (keys.on("__", s"__$t$k") ++ (1 to width).map(j =>
+        col(s"__g${n - k + j}") === col(s"__$t${k}k$j"))).reduce(_ && _)
+    keys.withTotals(transitionsN(score, keys, idCol, textCol, n), totals) {
+        rows =>
+          (n to 2 by -1).foldLeft(rows)((r, k) => r
+            .join(counts(k), on(c, k, k), "left")
+            .join(contexts(k), on(l, k, k - 1), "left"))
+            .join(counts(1), on(c, 1, 1), "left")
+      }
+      .select(keys.cols("__") ++ Seq(col("__id"), lnQ(prob).as("__lp")): _*)
+      .groupBy(keys.restored :+ col("__id").as(idCol): _*)
       .agg(count(lit(1)).as("n_trans"), sum(col("__lp")).as("__s"))
-      .withColumn(s"kn${n}_loss",
+      .withColumn(lossCol,
         -(col("__s").cast("double")) / col("n_trans").cast("double"))
       .drop("__s")
   }
@@ -441,80 +530,9 @@ object LanguageModel {
       + " FROM sc GROUP BY 1 ORDER BY 1")
   }
 
-  /** Grouped twin of [[knNgramLogLoss]] (the [[sbNgramLogLossBy]] shape;
-    * CCNet's actual deployment is a per-language 5-gram KN): one
-    * independent Chen-Goodman tower PER GROUP, every level's count/type
-    * table and the (B, T, V) scalars carrying the group key — one
-    * hash-partitioned plan, no driver loop. Score docs whose group has
-    * no train n-grams are ABSENT (no model — the inner join on the
-    * per-group totals), as are <order-token/NULL docs and NULL-group
-    * rows. Output (groupCol, idCol, n_trans, kn{order}_loss). */
-  def knNgramLogLossBy(
-      train: DataFrame,
-      score: DataFrame,
-      groupCol: String,
-      idCol: String,
-      textCol: String,
-      order: Int,
-      d: Double = 0.75): DataFrame = {
-    require(order >= 2, s"knNgramLogLossBy needs order >= 2 (got $order)")
-    require(d > 0 && d < 1, s"discount d must be in (0,1) (got $d)")
-    val n = order
-    val tr = transitionsNBy(train, groupCol, textCol, textCol, n)
-    var cks = Map.empty[Int, DataFrame]
-    var lks = Map.empty[Int, DataFrame]
-    cks += n -> tr
-      .groupBy(col("__g").as(s"__cg$n") +:
-        (1 to n).map(j => col(s"__g$j").as(s"__c${n}k$j")): _*)
-      .agg(count(lit(1)).as(s"__cnt$n"))
-    for (k <- n to 2 by -1) {
-      lks += k -> cks(k)
-        .groupBy(col(s"__cg$k").as(s"__lg$k") +:
-          (1 until k).map(j => col(s"__c${k}k$j").as(s"__l${k}k$j")): _*)
-        .agg(sum(col(s"__cnt$k")).as(s"__ctx$k"), count(lit(1)).as(s"__t$k"))
-      if (k > 2)
-        cks += (k - 1) -> cks(k)
-          .groupBy(col(s"__cg$k").as(s"__cg${k - 1}") +:
-            (2 to k).map(j =>
-              col(s"__c${k}k$j").as(s"__c${k - 1}k${j - 1}")): _*)
-          .agg(count(lit(1)).as(s"__cnt${k - 1}"))
-    }
-    val c1 = cks(2).groupBy(col("__cg2").as("__cg1"),
-        col("__c2k2").as("__c1k1"))
-      .agg(count(lit(1)).as("__cnt1"))
-    val bt = cks(2).groupBy(col("__cg2").as("__tg"))
-      .agg(count(lit(1)).as("__b"), count_distinct(col("__c2k2")).as("__t"))
-    val vc = train.select(col(groupCol).as("__vg"),
-        explode(tokens(col(textCol))).as("__uni"))
-      .where(col("__vg").isNotNull)
-      .groupBy(col("__vg"))
-      .agg((count_distinct(col("__uni")) + lit(1L)).as("__vv"))
-    val totals = bt.join(vc, col("__tg") === col("__vg"))
-
-    val sc = transitionsNBy(score, groupCol, idCol, textCol, n)
-    var joined = sc
-      // groups without a train model drop here (inner join on totals)
-      .join(totals, col("__g") === col("__tg"))
-    for (k <- n to 2 by -1) {
-      joined = joined
-        .join(cks(k), (col("__g") === col(s"__cg$k")) +: (1 to k).map(j =>
-          col(s"__g${n - k + j}") === col(s"__c${k}k$j")) reduce (_ && _), "left")
-        .join(lks(k), (col("__g") === col(s"__lg$k")) +: (1 until k).map(j =>
-          col(s"__g${n - k + j}") === col(s"__l${k}k$j")) reduce (_ && _), "left")
-    }
-    joined
-      .join(c1, col("__g") === col("__cg1")
-        && col(s"__g$n") === col("__c1k1"), "left")
-      .select(col("__g"), col("__id"), lnQ(knProb(n, d)).as("__lp"))
-      .groupBy(col("__g").as(groupCol), col("__id").as(idCol))
-      .agg(count(lit(1)).as("n_trans"), sum(col("__lp")).as("__s"))
-      .withColumn(s"kn${n}_loss",
-        -(col("__s").cast("double")) / col("n_trans").cast("double"))
-      .drop("__s")
-  }
-
-  /** DuckDB twin of [[knNgramLogLossBy]] — [[knNgramLogLossSql]] with
-    * the group key threaded through every table. */
+  /** DuckDB twin of [[knNgramLogLoss]] with one `by` key —
+    * [[knNgramLogLossSql]] with the group key threaded through every
+    * table. */
   def knNgramLogLossBySql(groupExpr: String, idExpr: String, textExpr: String,
       trainFrom: String, scoreFrom: String, order: Int,
       d: Double = 0.75): String = {
@@ -595,7 +613,7 @@ object LanguageModel {
   def knNgramState(train: DataFrame, textCol: String, order: Int): KnNgramState = {
     require(order >= 2, s"knNgramState needs order >= 2 (got $order)")
     KnNgramState(order,
-      transitionsN(train, textCol, textCol, order)
+      transitionsN(train, NoKeys, textCol, textCol, order)
         .groupBy((1 to order).map(j => col(s"__g$j")): _*)
         .agg(count(lit(1)).as("__cnt")),
       train.select(explode(tokens(col(textCol))).as("__u"))
@@ -627,7 +645,7 @@ object LanguageModel {
       d: Double = 0.75): DataFrame = {
     require(d > 0 && d < 1, s"discount d must be in (0,1) (got $d)")
     val (top, vc) = knNgramStateTables(state, "knNgramLogLossFromState")
-    knNgramScoreWith(knNgramTower(top, vc, state.order, d, identity),
+    knNgramScoreWith(knNgramTower(top, vc, NoKeys, state.order, d, identity),
       score, idCol, textCol)
   }
 
@@ -638,7 +656,7 @@ object LanguageModel {
   def knNgramModel(state: KnNgramState, d: Double = 0.75): KnNgramModel = {
     require(d > 0 && d < 1, s"discount d must be in (0,1) (got $d)")
     val (top, vc) = knNgramStateTables(state, "knNgramModel")
-    knNgramTower(top, vc, state.order, d, _.localCheckpoint())
+    knNgramTower(top, vc, NoKeys, state.order, d, _.localCheckpoint())
   }
 
   /** The state's top table and V scalar, localCheckpointed before the
@@ -714,7 +732,20 @@ object LanguageModel {
     * at-rest convention) and never rescans.
     *
     * Score docs need ≥order tokens (n_trans = n−order+1); shorter/NULL
-    * docs are absent. Determinism: every score is one fixed-shape IEEE
+    * docs are absent. Output (by…, idCol, n_trans, sb{order}_loss).
+    *
+    * Grouping (`by`, default none; VERDICT r12 stretch #8 — the CCNet
+    * per-language composition): ONE independent model PER GROUP, every
+    * level's count table, the context sums and the unigram total N
+    * carrying the keys, so the whole fit+score is hash-partitioned by
+    * group — no driver loop. Score docs whose group has NO train TOKENS
+    * are ABSENT (no model — the inner join on the per-group N total),
+    * as are rows with a NULL key; a group with tokens but no level-k
+    * grams scores through backoff (α per unseen level down to the
+    * unigram/OOV floor), which is exactly SB's semantics. Without keys
+    * a train corpus with no order-grams fails fast instead.
+    *
+    * Determinism: every score is one fixed-shape IEEE
     * expression over exact integer counts, ln-quantized and summed as
     * exact decimals ([[TextAnalysis.lnQ]]); backoff builds as the
     * LINEAR tree (A + B·S)/1 with exact identity branches (B=0 kills
@@ -727,31 +758,38 @@ object LanguageModel {
       idCol: String,
       textCol: String,
       order: Int,
+      by: Seq[String] = Nil,
       alpha: Double = 0.4): DataFrame = {
     require(order >= 2, s"sbNgramLogLoss needs order >= 2 (got $order)")
     require(alpha > 0 && alpha < 1, s"backoff alpha must be in (0,1) (got $alpha)")
     val n = order
+    val keys = Keys(by)
     // level-k RAW counts, each from its own explode of the train text
     // (levels are not marginals of the top table — see Scaladoc)
     val cks = (2 to n).map { k =>
-      k -> transitionsN(train, textCol, textCol, k)
-        .groupBy((1 to k).map(j => col(s"__g$j").as(s"__s${k}k$j")): _*)
+      k -> transitionsN(train, keys, textCol, textCol, k)
+        .groupBy(keys.moved("__", s"__s$k") ++
+          (1 to k).map(j => col(s"__g$j").as(s"__s${k}k$j")): _*)
         .agg(count(lit(1)).as(s"__scnt$k"))
     }.toMap
-    require(cks(n).limit(1).count() == 1L,
-      s"sbNgramLogLoss: train corpus has no $n-grams (every doc <$n tokens)")
-    val c1 = train.select(explode(tokens(col(textCol))).as("__s1k1"))
-      .groupBy(col("__s1k1")).agg(count(lit(1)).as("__scnt1"))
-    sbNgramScoreFrom(cks, c1, score, idCol, textCol, n, alpha)
+    val c1 = keys.nonNull(train.select(keys.aliased("__s1") :+
+        explode(tokens(col(textCol))).as("__s1k1"): _*), "__s1")
+      .groupBy(keys.cols("__s1") :+ col("__s1k1"): _*)
+      .agg(count(lit(1)).as("__scnt1"))
+    keys.failFast(cks(n),
+      s"sbNgramLogLoss: train corpus has no $n-grams (every doc <$n tokens)")(
+      sbScore(cks, c1, keys, score, idCol, textCol, n, alpha))
   }
 
   /** SB scoring from the per-level raw count tables + unigram counts —
     * shared by [[sbNgramLogLoss]] (from-scratch fit) and
     * [[sbNgramLogLossFromState]] (merged daily state): context sums and
-    * the N total are regroups/aggregates of the state tables. */
-  private def sbNgramScoreFrom(
+    * the N total are regroups/aggregates of those tables, the score
+    * expression is S above, and [[scoreGrams]] does the rest. */
+  private def sbScore(
       cks: Map[Int, DataFrame],
       c1: DataFrame,
+      keys: Keys,
       score: DataFrame,
       idCol: String,
       textCol: String,
@@ -760,117 +798,12 @@ object LanguageModel {
     // level-k context sums c_k(h·) — a regroup of the level table
     val lks = (2 to n).map { k =>
       k -> cks(k)
-        .groupBy((1 until k).map(j => col(s"__s${k}k$j").as(s"__x${k}k$j")): _*)
-        .agg(sum(col(s"__scnt$k")).as(s"__sctx$k"))
-    }.toMap
-    val totals = c1.agg(sum(col("__scnt1")).as("__nn"))
-
-    val sc = transitionsN(score, idCol, textCol, n)
-    var joined = sc
-    for (k <- n to 2 by -1) {
-      joined = joined
-        .join(cks(k), (1 to k).map(j =>
-          col(s"__g${n - k + j}") === col(s"__s${k}k$j")).reduce(_ && _), "left")
-        .join(lks(k), (1 until k).map(j =>
-          col(s"__g${n - k + j}") === col(s"__x${k}k$j")).reduce(_ && _), "left")
-    }
-    joined = joined
-      .join(c1, col(s"__g$n") === col("__s1k1"), "left")
-      .crossJoin(broadcast(totals))
-    var sS = coalesce(col("__scnt1"), lit(1L)).cast("double") /
-      col("__nn").cast("double")
-    for (k <- 2 to n) {
-      val seen = col(s"__scnt$k").isNotNull
-      val a = when(seen, col(s"__scnt$k").cast("double") /
-        col(s"__sctx$k").cast("double")).otherwise(lit(0.0))
-      val b = when(seen, lit(0.0)).otherwise(lit(alpha))
-      sS = a + b * sS
-    }
-    joined
-      .select(col("__id"), lnQ(sS).as("__lp"))
-      .groupBy(col("__id").as(idCol))
-      .agg(count(lit(1)).as("n_trans"), sum(col("__lp")).as("__s"))
-      .withColumn(s"sb${n}_loss",
-        -(col("__s").cast("double")) / col("n_trans").cast("double"))
-      .drop("__s")
-  }
-
-  /** (id, group, g1..gn) order-n gram rows — [[transitionsN]] with the
-    * group key carried; NULL-group rows drop (a NULL key names no
-    * model). */
-  private def transitionsNBy(df: DataFrame, groupCol: String, idCol: String,
-      textCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("__id"), col(groupCol).as("__g"),
-        tokens(col(textCol)).as("__w"))
-      .where(col("__g").isNotNull && size(col("__w")) >= n)
-      .select(col("__id"), col("__g"), explode(transform(
-        sequence(lit(0), size(col("__w")) - n),
-        i => struct((1 to n).map(j =>
-          element_at(col("__w"), i + j).as(s"g$j")): _*))).as("__t"))
-      .select(col("__id") +: col("__g") +: (1 to n).map(j =>
-        col(s"__t.g$j").as(s"__g$j")): _*)
-
-  /** Grouped twin of [[sbNgramLogLoss]] (VERDICT r12 stretch #8 — the
-    * CCNet per-language composition for the SB scorer): fit ONE
-    * independent stupid-backoff model PER GROUP on `train`, score each
-    * `score` document under ITS group's model. Every level's count
-    * table, the context sums, and the unigram total N carry the group
-    * key, so the whole fit+score is hash-partitioned by group — groups
-    * parallelize, no driver loop (the [[knNgramLogLossBy]] shape).
-    *
-    * Group membership contract: score docs whose group has NO train
-    * TOKENS are ABSENT (no model — the inner join on the per-group N
-    * total); a group with tokens but no level-k grams scores through
-    * backoff (α per unseen level down to the unigram/OOV floor), which
-    * is exactly SB's semantics — unlike KN there is no fit table whose
-    * absence is an error. <order-token / NULL docs and NULL-group rows
-    * are absent as always. Output (groupCol, idCol, n_trans,
-    * sb{order}_loss). */
-  def sbNgramLogLossBy(
-      train: DataFrame,
-      score: DataFrame,
-      groupCol: String,
-      idCol: String,
-      textCol: String,
-      order: Int,
-      alpha: Double = 0.4): DataFrame = {
-    require(order >= 2, s"sbNgramLogLossBy needs order >= 2 (got $order)")
-    require(alpha > 0 && alpha < 1, s"backoff alpha must be in (0,1) (got $alpha)")
-    val n = order
-    val cks = (2 to n).map { k =>
-      k -> transitionsNBy(train, groupCol, textCol, textCol, k)
-        .groupBy(col("__g").as(s"__sg$k") +:
-          (1 to k).map(j => col(s"__g$j").as(s"__s${k}k$j")): _*)
-        .agg(count(lit(1)).as(s"__scnt$k"))
-    }.toMap
-    val lks = (2 to n).map { k =>
-      k -> cks(k)
-        .groupBy(col(s"__sg$k").as(s"__xg$k") +:
+        .groupBy(keys.moved(s"__s$k", s"__x$k") ++
           (1 until k).map(j => col(s"__s${k}k$j").as(s"__x${k}k$j")): _*)
         .agg(sum(col(s"__scnt$k")).as(s"__sctx$k"))
     }.toMap
-    val c1 = train.select(col(groupCol).as("__ug"),
-        explode(tokens(col(textCol))).as("__s1k1"))
-      .where(col("__ug").isNotNull)
-      .groupBy(col("__ug"), col("__s1k1"))
-      .agg(count(lit(1)).as("__scnt1"))
-    val totals = c1.groupBy(col("__ug").as("__tg"))
+    val totals = c1.groupBy(keys.moved("__s1", "__t"): _*)
       .agg(sum(col("__scnt1")).as("__nn"))
-
-    val sc = transitionsNBy(score, groupCol, idCol, textCol, n)
-    var joined = sc
-      // groups without train tokens drop here (inner join on totals)
-      .join(totals, col("__g") === col("__tg"))
-    for (k <- n to 2 by -1) {
-      joined = joined
-        .join(cks(k), (col("__g") === col(s"__sg$k")) +: (1 to k).map(j =>
-          col(s"__g${n - k + j}") === col(s"__s${k}k$j")) reduce (_ && _), "left")
-        .join(lks(k), (col("__g") === col(s"__xg$k")) +: (1 until k).map(j =>
-          col(s"__g${n - k + j}") === col(s"__x${k}k$j")) reduce (_ && _), "left")
-    }
-    joined = joined
-      .join(c1, col("__g") === col("__ug") && col(s"__g$n") === col("__s1k1"),
-        "left")
     var sS = coalesce(col("__scnt1"), lit(1L)).cast("double") /
       col("__nn").cast("double")
     for (k <- 2 to n) {
@@ -880,17 +813,13 @@ object LanguageModel {
       val b = when(seen, lit(0.0)).otherwise(lit(alpha))
       sS = a + b * sS
     }
-    joined
-      .select(col("__g"), col("__id"), lnQ(sS).as("__lp"))
-      .groupBy(col("__g").as(groupCol), col("__id").as(idCol))
-      .agg(count(lit(1)).as("n_trans"), sum(col("__lp")).as("__s"))
-      .withColumn(s"sb${n}_loss",
-        -(col("__s").cast("double")) / col("n_trans").cast("double"))
-      .drop("__s")
+    scoreGrams(keys, score, idCol, textCol, n, "s", "x", cks + (1 -> c1), lks,
+      totals, sS, s"sb${n}_loss")
   }
 
-  /** DuckDB twin of [[sbNgramLogLossBy]] — [[sbNgramLogLossSql]] with
-    * the group key threaded through every table. */
+  /** DuckDB twin of [[sbNgramLogLoss]] with one `by` key —
+    * [[sbNgramLogLossSql]] with the group key threaded through every
+    * table. */
   def sbNgramLogLossBySql(groupExpr: String, idExpr: String, textExpr: String,
       trainFrom: String, scoreFrom: String, order: Int,
       alpha: Double = 0.4): String = {
@@ -958,7 +887,7 @@ object LanguageModel {
     require(order >= 2, s"sbNgramState needs order >= 2 (got $order)")
     SbNgramState(order,
       (2 to order).map { k =>
-        k -> transitionsN(train, textCol, textCol, k)
+        k -> transitionsN(train, NoKeys, textCol, textCol, k)
           .groupBy((1 to k).map(j => col(s"__g$j")): _*)
           .agg(count(lit(1)).as("__cnt"))
       }.toMap,
@@ -1004,7 +933,7 @@ object LanguageModel {
     val c1 = state.unigrams.select(col("__u").as("__s1k1"),
       col("__ucnt").as("__scnt1"))
       .localCheckpoint()
-    sbNgramScoreFrom(cks, c1, score, idCol, textCol, n, alpha)
+    sbScore(cks, c1, NoKeys, score, idCol, textCol, n, alpha)
   }
 
   /** Persist/reload the SB state: one parquet table per level plus the

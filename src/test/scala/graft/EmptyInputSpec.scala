@@ -343,10 +343,15 @@ class EmptyInputSpec extends AnyFunSuite {
     // grouped KN: empty either side yields empty (inner join on models)
     val emptyG = Seq.empty[(String, Long, String)].toDF("lang", "doc_id", "text")
     val oneG = Seq(("en", 1L, "a b")).toDF("lang", "doc_id", "text")
-    assert(graft.operators.LanguageModel
-      .knNgramLogLossBy(emptyG, oneG, "lang", "doc_id", "text", 2).count() == 0)
-    assert(graft.operators.LanguageModel
-      .knNgramLogLossBy(oneG, emptyG, "lang", "doc_id", "text", 2).count() == 0)
+    assert(graft.operators.LanguageModel.knNgramLogLoss(emptyG, oneG, "doc_id",
+      "text", 2, by = Seq("lang")).count() == 0)
+    assert(graft.operators.LanguageModel.knNgramLogLoss(oneG, emptyG, "doc_id",
+      "text", 2, by = Seq("lang")).count() == 0)
+    // grouped SB: likewise (the inner join on the per-group N total)
+    assert(graft.operators.LanguageModel.sbNgramLogLoss(emptyG, oneG, "doc_id",
+      "text", 2, by = Seq("lang")).count() == 0)
+    assert(graft.operators.LanguageModel.sbNgramLogLoss(oneG, emptyG, "doc_id",
+      "text", 2, by = Seq("lang")).count() == 0)
     // WordPiece / unigram-LM: empty corpus -> empty model; tokenizing an
     // empty frame under a real model stays empty
     val wpm = graft.operators.WordPiece.wordpieceLearn(oneDoc, "text", merges = 5)

@@ -150,7 +150,7 @@ class LanguageModelSpec extends AnyFunSuite {
     }
   }
 
-  test("knNgramLogLossBy order=2: per-group == independent ungrouped runs; modelless/NULL groups drop") {
+  test("knNgramLogLoss(by) order=2: == per-group knNgramLogLoss(Nil); modelless/NULL groups drop") {
     val train = Seq(
       ("en", 10L, "a b a b c"), ("en", 11L, "b c a b"),
       ("fr", 20L, "x y x"), ("fr", 21L, "y x y y"),
@@ -161,8 +161,8 @@ class LanguageModelSpec extends AnyFunSuite {
       ("de", 3L, "a b"),                        // no de model -> absent
       (null.asInstanceOf[String], 4L, "a b")    // NULL group -> absent
     ).toDF("lang", "doc_id", "text")
-    val got = LanguageModel.knNgramLogLossBy(train, score, "lang", "doc_id", "text",
-        order = 2)
+    val got = LanguageModel.knNgramLogLoss(train, score, "doc_id", "text",
+        order = 2, by = Seq("lang"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(2), r.getDouble(3))))
       .toMap
     assert(got.keySet == Set(("en", 1L), ("fr", 2L)))
@@ -411,33 +411,41 @@ class LanguageModelSpec extends AnyFunSuite {
     assert(got == direct, "at-rest rolled SB state != from-scratch fit")
   }
 
-  test("knNgramLogLossBy: per-group == independent ungrouped runs at order 3; modelless/NULL groups drop") {
+  test("knNgramLogLoss(by) == per-group knNgramLogLoss(Nil) at order 3, one and two keys; modelless/NULL groups drop") {
     val train = Seq(
       ("en", 10L, "a b a b c d"), ("en", 11L, "b c a b d"),
       ("fr", 20L, "x y x z y"), ("fr", 21L, "y x y z"),
       ("de", 30L, "p q"), // no trigram -> no order-3 model for de
       (null.asInstanceOf[String], 40L, "a b c d")).toDF("lang", "doc_id", "text")
+      .withColumn("half", col("doc_id") % 2)
     val score = Seq(
       ("en", 1L, "a b c a d"), ("fr", 2L, "x y z x y"), ("de", 3L, "p q p"),
       ("zz", 4L, "a b c"),
       (null.asInstanceOf[String], 5L, "a b c")).toDF("lang", "doc_id", "text")
-    val got = LanguageModel.knNgramLogLossBy(train, score, "lang", "doc_id",
-        "text", order = 3)
-      .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getDouble(3)))).toMap
-    assert(got.keySet.map(_._1) == Set("en", "fr"),
-      s"de (no trigrams), zz (no train), NULL must be absent: ${got.keySet}")
-    for (g <- Seq("en", "fr")) {
-      val want = LanguageModel.knNgramLogLoss(
-        train.where(col("lang") === g), score.where(col("lang") === g),
-        "doc_id", "text", order = 3)
-        .collect().map(r => (g, r.getLong(0)) ->
-          ((r.getLong(1), r.getDouble(2)))).toMap
-      assert(got.filter(_._1._1 == g) == want, s"group $g diverged")
+      .withColumn("half", col("doc_id") % 2)
+    // de (no trigrams), zz (no train) and the NULL lang must be absent;
+    // with (lang, half) a cell's model is fit on that cell's rows only
+    val cells = Map(
+      Seq("lang") -> Set[Seq[Any]](Seq("en"), Seq("fr")),
+      Seq("lang", "half") -> Set[Seq[Any]](Seq("en", 1L), Seq("fr", 0L)))
+    for ((by, want) <- cells) {
+      val got = LanguageModel.knNgramLogLoss(train, score, "doc_id", "text",
+          order = 3, by = by)
+        .collect().map(r => (r.toSeq.take(by.size), r.getLong(by.size)) ->
+          ((r.getLong(by.size + 1), r.getDouble(by.size + 2)))).toMap
+      assert(got.keySet.map(_._1) == want, s"by $by: ${got.keySet}")
+      for (cell <- want) {
+        val in = by.zip(cell).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
+        val solo = LanguageModel.knNgramLogLoss(train.where(in), score.where(in),
+            "doc_id", "text", order = 3)
+          .collect().map(r => (cell, r.getLong(0)) ->
+            ((r.getLong(1), r.getDouble(2)))).toMap
+        assert(got.filter(_._1._1 == cell) == solo, s"by $by: cell $cell diverged")
+      }
     }
   }
 
-  test("sbNgramLogLossBy: per-group == independent ungrouped runs; tokenless/NULL groups drop; backoff-only group scores (VERDICT r12 stretch #8)") {
+  test("sbNgramLogLoss(by) == per-group sbNgramLogLoss(Nil); tokenless/NULL groups drop; backoff-only group scores (VERDICT r12 stretch #8)") {
     val train = Seq(
       ("en", 10L, "a b a b c"), ("en", 11L, "b c a b"),
       ("fr", 20L, "x y x z"), ("fr", 21L, "y x y"),
@@ -449,8 +457,8 @@ class LanguageModelSpec extends AnyFunSuite {
       ("en", 1L, "a b c a"), ("fr", 2L, "x y z x"), ("de", 3L, "p q p"),
       ("zz", 4L, "a b c"), // no train tokens -> absent
       (null.asInstanceOf[String], 5L, "a b c")).toDF("lang", "doc_id", "text")
-    val got = LanguageModel.sbNgramLogLossBy(train, score, "lang", "doc_id",
-        "text", order = 3)
+    val got = LanguageModel.sbNgramLogLoss(train, score, "doc_id", "text",
+        order = 3, by = Seq("lang"))
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
         ((r.getLong(2), r.getDouble(3)))).toMap
     assert(got.keySet.map(_._1) == Set("en", "fr", "de"),
@@ -474,12 +482,12 @@ class LanguageModelSpec extends AnyFunSuite {
     assert(math.abs(lossDe - (-lnq.toDouble)) < 1e-12, s"de loss $lossDe")
   }
 
-  test("knNgramLogLossBy: train frame needs only (group, text) — no score-side id column") {
+  test("knNgramLogLoss(by): train frame needs only (group, text) — no score-side id column") {
     val train = Seq(("en", "a b a b c"), ("en", "b c a b"))
       .toDF("lang", "text")
     val score = Seq(("en", 1L, "a b c")).toDF("lang", "doc_id", "text")
-    val got = LanguageModel.knNgramLogLossBy(train, score, "lang", "doc_id", "text",
-        order = 2)
+    val got = LanguageModel.knNgramLogLoss(train, score, "doc_id", "text",
+        order = 2, by = Seq("lang"))
       .collect()
     assert(got.length == 1 && got(0).getLong(2) == 2L)
   }
@@ -570,6 +578,33 @@ class LanguageModelSpec extends AnyFunSuite {
       6L -> "tail", 7L -> "tail", 8L -> "tail", 9L -> "tail")
     expX.foreach { case (id, b) => assert(got(("x", id)) == b, s"doc $id") }
     assert(got(("y", 100L)) == "middle" && got(("y", 101L)) == "tail")
+  }
+
+  test("knNgramLogLoss / sbNgramLogLoss: an id or key named like an output column is rejected, not overwritten") {
+    val train = Seq(("en", 1L, "a b a b c")).toDF("lang", "doc_id", "text")
+    val score = Seq(("en", 2L, "a b c")).toDF("lang", "doc_id", "text")
+    def clash(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    // an id named like the loss column: the loss replaced every id
+    val knId = score.withColumnRenamed("doc_id", "kn2_loss")
+    assert(clash(LanguageModel.knNgramLogLoss(train, knId, "kn2_loss", "text",
+      order = 2)).contains("'kn2_loss'"))
+    assert(clash(LanguageModel.sbNgramLogLoss(train,
+      score.withColumnRenamed("doc_id", "SB2_loss"), "SB2_loss", "text",
+      order = 2)).contains("'SB2_loss'"))
+    assert(clash(LanguageModel.knNgramScoreWith(
+      LanguageModel.knNgramFit(train, "text", order = 2), knId, "kn2_loss",
+      "text")).contains("'kn2_loss'"))
+    // keys named like n_trans, the loss, the id or each other
+    for ((by, name) <- Seq(Seq("n_trans") -> "n_trans", Seq("kn2_loss") -> "kn2_loss",
+        Seq("doc_id") -> "doc_id", Seq("lang", "lang") -> "lang")) {
+      val t = train.withColumn(by.head, col("lang"))
+      val s = score.withColumn(by.head, col("lang"))
+      assert(clash(LanguageModel.knNgramLogLoss(t, s, "doc_id", "text",
+        order = 2, by = by)).contains(s"'$name'"), s"kn by $by")
+    }
+    assert(clash(LanguageModel.sbNgramLogLoss(train.withColumn("sb2_loss", col("lang")),
+      score.withColumn("sb2_loss", col("lang")), "doc_id", "text", order = 2,
+      by = Seq("sb2_loss"))).contains("'sb2_loss'"))
   }
 
   test("knNgramLogLoss order=2: train without transitions fails fast; empty score is empty") {

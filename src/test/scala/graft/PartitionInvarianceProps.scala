@@ -203,10 +203,10 @@ object PartitionInvarianceProps extends Properties("PartitionInvariance") {
         (i.toLong, if (i % 3 == 0) "en" else "fr", t) }
         .toDF("doc_id", "lang", "text")
       def sbBy(d: org.apache.spark.sql.DataFrame) =
-        LanguageModel.sbNgramLogLossBy(
+        LanguageModel.sbNgramLogLoss(
             d.where(col("doc_id") % 2 === 0),
-            d.where(col("doc_id") % 2 === 1), "lang", "doc_id", "text",
-            order = 2)
+            d.where(col("doc_id") % 2 === 1), "doc_id", "text",
+            order = 2, by = Seq("lang"))
           .collect().map(r => (r.getString(0), r.getLong(1)) ->
             ((r.getLong(2), r.getDouble(3)))).toMap
       val hasBigram = texts.zipWithIndex.exists { case (t, i) =>

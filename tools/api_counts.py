@@ -1,0 +1,230 @@
+#!/usr/bin/env python3
+"""Count the public API surface of Scala sources.
+
+For each file (default: every .scala file under src/main) print its
+line count, its public object-member defs, their parameters, and how
+many of those parameters have a default value (the settable ones), then
+a total row.
+
+A def counts when it sits directly in an `object` body (top-level or
+nested objects alike) and is not `private` or `protected`. Defs in
+classes and traits, and local defs inside a method body, do not count.
+Parameters are counted over every parameter list of the def, implicit
+lists included; a parameter is settable when it has `= default`.
+
+Usage:
+    python3 tools/api_counts.py                      # all of src/main
+    python3 tools/api_counts.py src/main/scala/graft/operators/LanguageModel.scala
+    python3 tools/api_counts.py --defs FILE...       # also list each def
+
+Run it from the root of a checkout; for a before/after receipt run it
+once in the parent's checkout and once in the change's.
+"""
+import argparse
+import os
+import re
+import sys
+
+
+def strip_code(src):
+    """Blank out comments, string and char literals (newlines kept), so
+    braces and keywords are only seen in code."""
+    out = []
+    i, n = 0, len(src)
+    while i < n:
+        c = src[i]
+        if src.startswith("//", i):
+            j = src.find("\n", i)
+            j = n if j < 0 else j
+            out.append(" " * (j - i))
+            i = j
+        elif src.startswith("/*", i):
+            depth, j = 1, i + 2
+            while j < n and depth:
+                if src.startswith("/*", j):
+                    depth, j = depth + 1, j + 2
+                elif src.startswith("*/", j):
+                    depth, j = depth - 1, j + 2
+                else:
+                    j += 1
+            out.append(re.sub(r"[^\n]", " ", src[i:j]))
+            i = j
+        elif src.startswith('"""', i):
+            j = src.find('"""', i + 3)
+            j = n if j < 0 else j + 3
+            while j < n and src[j] == '"':
+                j += 1
+            out.append('"' + re.sub(r"[^\n]", " ", src[i + 1:j - 1]) + '"')
+            i = j
+        elif c == '"':
+            j = i + 1
+            while j < n and src[j] != '"' and src[j] != "\n":
+                j += 2 if src[j] == "\\" else 1
+            out.append('"' + " " * (j - i - 1) + '"')
+            i = j + 1
+        elif c == "'" and re.match(r"'(\\.|[^\\'\n])'", src[i:i + 4]):
+            m = re.match(r"'(\\.|[^\\'\n])'", src[i:i + 4])
+            out.append(" " * len(m.group(0)))
+            i += len(m.group(0))
+        else:
+            out.append(c)
+            i += 1
+    return "".join(out)
+
+
+SCOPE = re.compile(r"\b(object|class|trait|def)\b")
+MODIFIERS = re.compile(r"\b(private|protected)\b(\[[^\]]*\])?\s*$")
+
+
+def matching(code, i, open_c, close_c):
+    """Index just past the bracket closing the one at code[i]."""
+    depth = 0
+    for j in range(i, len(code)):
+        if code[j] == open_c:
+            depth += 1
+        elif code[j] == close_c:
+            depth -= 1
+            if depth == 0:
+                return j + 1
+    return len(code)
+
+
+def split_top(s):
+    """Split on commas outside (), [] and {}."""
+    parts, depth, cur = [], 0, []
+    for c in s:
+        if c in "([{":
+            depth += 1
+        elif c in ")]}":
+            depth -= 1
+        if c == "," and depth == 0:
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(c)
+    parts.append("".join(cur))
+    return [p for p in parts if p.strip()]
+
+
+def has_default(param):
+    depth = 0
+    for k, c in enumerate(param):
+        if c in "([{":
+            depth += 1
+        elif c in ")]}":
+            depth -= 1
+        elif c == "=" and depth == 0:
+            nxt = param[k + 1:k + 2]
+            prev = param[k - 1:k]
+            if nxt not in (">", "=") and prev not in ("<", ">", "!", "="):
+                return True
+    return False
+
+
+def def_params(code, i):
+    """(params, defaulted) over every parameter list of the def whose
+    name ends at code[i]."""
+    params = defaulted = 0
+    j = i
+    while True:
+        while j < len(code) and code[j] in " \t\n":
+            j += 1
+        if j < len(code) and code[j] == "[":
+            j = matching(code, j, "[", "]")
+            continue
+        if j < len(code) and code[j] == "(":
+            end = matching(code, j, "(", ")")
+            body = code[j + 1:end - 1].strip()
+            body = re.sub(r"^implicit\b", "", body)
+            for p in split_top(body):
+                params += 1
+                defaulted += has_default(p)
+            j = end
+            continue
+        return params, defaulted
+
+
+def scan(path):
+    src = open(path, encoding="utf-8").read()
+    code = strip_code(src)
+    lines = src.count("\n") + (0 if src.endswith("\n") else 1)
+    defs = []
+    # scope stack entries: (kind, brace depth at which its body opened)
+    stack = [("file", 0)]
+    pending = None  # a scope keyword seen, waiting for its `{` (or not)
+    depth = 0
+    i, n = 0, len(code)
+    while i < n:
+        c = code[i]
+        if c == "{":
+            depth += 1
+            if pending is not None:
+                stack.append((pending, depth))
+                pending = None
+            else:
+                stack.append(("block", depth))
+            i += 1
+            continue
+        if c == "}":
+            if stack and stack[-1][1] == depth:
+                stack.pop()
+            depth -= 1
+            i += 1
+            continue
+        m = SCOPE.match(code, i)
+        if m and (i == 0 or not (code[i - 1].isalnum() or code[i - 1] in "_$")):
+            kind = m.group(1)
+            if kind == "def":
+                name_m = re.compile(r"\s+([^\s(\[:=]+)").match(code, m.end())
+                name = name_m.group(1) if name_m else "?"
+                line_start = code.rfind("\n", 0, i) + 1
+                prefix = code[line_start:i]
+                # a pending `def` here was a brace-less one that ended
+                if stack[-1][0] == "object" and not MODIFIERS.search(prefix):
+                    p, d = def_params(code, name_m.end() if name_m else m.end())
+                    lineno = code.count("\n", 0, i) + 1
+                    defs.append((name, p, d, lineno))
+                # a def body is a scope whose nested defs are local
+                pending = "def"
+            else:
+                pending = kind
+            i = m.end()
+            continue
+        if pending is not None and c in "\n;" and pending != "def":
+            # object/class/trait without a body (`case object X`,
+            # `class A(x: Int)` on one line): look ahead for `{`
+            rest = code[i:i + 200].lstrip()
+            if not (rest.startswith("{") or rest.startswith("extends")
+                    or rest.startswith("with") or rest.startswith("(")
+                    or rest.startswith("[")):
+                pending = None
+        i += 1
+    return lines, defs
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("files", nargs="*")
+    ap.add_argument("--defs", action="store_true",
+                    help="list every counted def with its parameter counts")
+    a = ap.parse_args()
+    files = a.files or sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(os.path.join("src", "main"))
+        for f in fs if f.endswith(".scala"))
+    tot = [0, 0, 0, 0]
+    print(f"{'lines':>7} {'defs':>5} {'params':>6} {'settable':>8}  file")
+    for f in files:
+        lines, defs = scan(f)
+        row = [lines, len(defs), sum(d[1] for d in defs),
+               sum(d[2] for d in defs)]
+        tot = [x + y for x, y in zip(tot, row)]
+        print(f"{row[0]:>7} {row[1]:>5} {row[2]:>6} {row[3]:>8}  {f}")
+        if a.defs:
+            for name, p, d, ln in defs:
+                print(f"{'':>7} {'':>5} {p:>6} {d:>8}    {ln}: {name}")
+    print(f"{tot[0]:>7} {tot[1]:>5} {tot[2]:>6} {tot[3]:>8}  total")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
