@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.SparkEntry.T
 
 /** Round-4 curation-pipeline queries: exact n-gram decontamination,
   * corpus-wide duplicate-gram statistics, repetition quality metrics,
@@ -15,9 +16,6 @@ import graft.operators._
   * deterministic so DuckDB replays each operator end to end.
   */
 object CurationQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   private val EvalSrc = LlmQueries.EvalSources
 
@@ -213,7 +211,7 @@ object CurationQueries {
         graft.streaming.StreamingOps.curationIngestAppend(stream, dir,
           evalDocs, EvalSrc, "doc_id", "text")(_ => ()),
         "graft_stream_curation")
-      val last = s.read.parquet(s"$dir/decon")
+      val last = Parquet.read(s, s"$dir/decon")
       val sampled = Sampling.tokenBudgetSample(
         last.withColumn("toks", size(split(col("text"), " ")).cast("long")),
         "source", "toks", budget = 8000L,

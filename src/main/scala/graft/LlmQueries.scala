@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.SparkEntry.T
 import graft.streaming.StreamingOps
 
 /** LLM-data-pipeline queries over the `documents` and `embeddings` tables
@@ -22,9 +23,6 @@ import graft.streaming.StreamingOps
   *     all-pairs at sf0.01 while the engine stays bucketed at any scale.
   */
 object LlmQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** The "eval set" sources shared by every decontamination query
     * (q_decontaminate here, q_contaminated in [[CurationQueries]]) —
@@ -324,7 +322,7 @@ object LlmQueries {
         .write.mode("overwrite").parquet(p)
       p
     })
-    s.read.parquet(dir)
+    Parquet.read(s, dir)
   }
 
   private def ivfPqApprox(s: SparkSession, d: String): DataFrame = {

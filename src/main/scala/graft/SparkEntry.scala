@@ -21,8 +21,10 @@ import graft.operators._
   */
 object SparkEntry {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Table `name` of a data dir (`$dir/$name.parquet`), the one open
+    * every registry row uses ([[Parquet.read]]: no schema job). */
+  private[graft] def T(s: SparkSession, dir: String, name: String): DataFrame =
+    Parquet.read(s, s"$dir/$name.parquet")
 
   // q_qcut's build-once edge cache, keyed by the immutable data dir
   // (the ivfIndexCache convention in LlmQueries)

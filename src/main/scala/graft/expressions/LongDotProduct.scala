@@ -85,6 +85,7 @@ object GraftFunctions {
   val TopK       = "graft_topk"
   val MgSketch   = "graft_mg"
   val WordNgramsF = "graft_word_ngrams"
+  val MinHashBandsF = "graft_minhash_bands"
   val SearchSorted = "graft_searchsorted"
   val BloomAgg      = "graft_bloom_agg"
   val BloomContains = "graft_bloom_contains"
@@ -175,6 +176,16 @@ object GraftFunctions {
       WordNgrams(exprs(0),
         exprs(1).eval().asInstanceOf[Number].intValue(),
         exprs(2).eval().asInstanceOf[Boolean])
+    },
+    // MinHash-LSH band keys per row: (shingles, bands literal, rows
+    // literal) -> array<bigint> (Dedup.minhashBands)
+    MinHashBandsF -> { exprs =>
+      arity(MinHashBandsF, exprs, 3)
+      if (!exprs(1).foldable || !exprs(2).foldable) throw new IllegalArgumentException(
+        s"$MinHashBandsF's bands and rows arguments must be literals")
+      MinHashBands(exprs(0),
+        exprs(1).eval().asInstanceOf[Number].intValue(),
+        exprs(2).eval().asInstanceOf[Number].intValue())
     },
     SearchSorted -> { exprs =>
       arity(SearchSorted, exprs, 2); SearchSortedRight(exprs(0), exprs(1))

@@ -230,17 +230,17 @@ object Dedup {
 
   object NearDupIndex {
     def read(spark: org.apache.spark.sql.SparkSession, dir: String): NearDupIndex = {
-      val m = spark.read.parquet(s"$dir/meta").head()
+      val m = Parquet.read(spark, s"$dir/meta").head()
       NearDupIndex(
-        spark.read.parquet(s"$dir/buckets"),
-        spark.read.parquet(s"$dir/shingles"),
+        Parquet.read(spark, s"$dir/buckets"),
+        Parquet.read(spark, s"$dir/shingles"),
         m.getAs[Int]("n"), m.getAs[Int]("bands"), m.getAs[Int]("rows"))
     }
   }
 
   /** Build a [[NearDupIndex]] over a corpus: ONE sketch pass (shingle →
-    * hash-once → k mins in one codegen'd aggregation, [[minhashSigCols]])
-    * producing both index tables. NULL-content rows contribute nothing
+    * per-document band keys, [[minhashBands]]; no exchange) producing
+    * both index tables. NULL-content rows contribute nothing
     * (the [[dedupIncremental]] convention). The returned frames are lazy —
     * `write` them (or persist) before repeated probing. */
   def buildNearDupIndex(
@@ -426,12 +426,10 @@ object Dedup {
     * Seeding follows the standard one-hash-function-per-row construction:
     * h_s(x) = xxhash64(s, x), signature[s] = min over shingles.
     *
-    * Per-row expression form — fine for small arrays and for pinning
-    * semantics in tests, but the array lambdas fall out of whole-stage
-    * codegen and re-hash the shingle *string* k times. The scalable path
-    * is [[minhashSigCols]] (hash each shingle once, explode, k `min`
-    * aggregates in one codegen'd hash aggregation) — [[nearDupPairs]]
-    * uses that; the two produce identical signatures by construction. */
+    * Per-row expression form — the reference semantics that DedupSpec
+    * pins [[minhashBands]] against. The array lambdas fall out of
+    * whole-stage codegen and re-hash every shingle k times; the
+    * near-dup operators use [[minhashBands]] instead. */
   def minhashSignature(shingleCol: Column, k: Int): Column = {
     val bases = transform(shingleCol, x => xxhash64(x))
     array((0 until k).map { s =>
@@ -439,17 +437,16 @@ object Dedup {
     }: _*)
   }
 
-  /** Columnar MinHash: from exploded (id, shingle-hash) rows, one hash
-    * aggregation computing the k signature columns h0..h{k-1} as
-    * min(xxhash64(seed_i, base_hash)). Each shingle string is hashed once;
-    * the k derived hashes are cheap fixed-width re-hashes; the k `min`s
-    * ride Spark's partial/final hash aggregation (map-side combined,
-    * whole-stage codegen) — the same two-phase topology as every reduction
-    * in this engine, so it scales like any groupBy at 100 TB. */
-  def minhashSigCols(exploded: DataFrame, idCol: String, hashCol: String, k: Int): DataFrame = {
-    val aggs = (0 until k).map(s => min(xxhash64(lit(s), col(hashCol))).as(s"h$s"))
-    exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
+  /** MinHash-LSH band keys of a shingle array, per row
+    * ([[graft.expressions.MinHashBands]]): `bands` bucket keys, band b's
+    * key the `xxhash64` of signature slots b·rows … b·rows + rows − 1 of
+    * [[minhashSignature]]`(shingles, bands * rows)`. Each shingle is
+    * hashed once and the k minimums are one loop, so no exchange and no
+    * aggregate is needed. NULL for a NULL or empty array. Requires
+    * [[graft.expressions.GraftFunctions.register]] on the session. */
+  def minhashBands(shingleCol: Column, bands: Int, rows: Int): Column =
+    call_function(graft.expressions.GraftFunctions.MinHashBandsF,
+      shingleCol, lit(bands), lit(rows))
 
   /** (id, distinct-shingle-array) side table shared by the near-dup
     * operators. */
@@ -458,20 +455,13 @@ object Dedup {
     df.select(col(idCol).as("id"), shinglesFast(col(textCol), n).as("sh"))
   }
 
-  /** (id, band, bucket) LSH table from a shingle table: columnar
-    * signature — hash each shingle string once, explode, one codegen'd
-    * hash aggregation for all bands*rows mins ([[minhashSigCols]]) —
-    * then per-band signature-row hashing into bucket keys. */
+  /** (id, band, bucket) LSH table from a shingle table: a `posexplode`
+    * of the per-document [[minhashBands]] keys — no exchange, no
+    * aggregate. Documents with no shingles have no rows. */
   private def bandedBuckets(sh: DataFrame, bands: Int, rows: Int): DataFrame = {
-    val exploded = sh
-      .select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
-    val sig = minhashSigCols(exploded, "id", "h", bands * rows)
-    sig.select(col("id"), explode(array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until rows).map(r => col(s"h${b * rows + r}")): _*).as("bucket"))
-    }: _*)).as("bk"))
-      .select(col("id"), col("bk.band"), col("bk.bucket"))
+    graft.expressions.GraftFunctions.register(sh.sparkSession)
+    sh.select(col("id"),
+      posexplode(minhashBands(col("sh"), bands, rows)).as(Seq("band", "bucket")))
   }
 
   /** Audit table for [[nearDupPairs]]'s `maxBucketSize` skew cap: the
@@ -681,9 +671,10 @@ object Dedup {
 
   /** Columnar SimHash: from exploded (id, token-hash) rows, one hash
     * aggregation of 64 signed bit votes, then a pack expression — the
-    * scalable twin of the [[simhash]] expression (identical results; same
-    * rationale as [[minhashSigCols]]). `bitOf` picks how a token hash maps
-    * to signature bits (default: the hash's own bits). */
+    * scalable twin of the [[simhash]] expression (identical results; the
+    * 64 votes are map-side combined partial/final sums). `bitOf` picks
+    * how a token hash maps to signature bits (default: the hash's own
+    * bits). */
   def simhashCols(
       exploded: DataFrame,
       idCol: String,

@@ -318,12 +318,12 @@ object LanguageModel {
     /** Reload a persisted model: plain parquet-backed frames, freely
       * re-readable across cache/RDD lifecycle events. */
     def read(spark: org.apache.spark.sql.SparkSession, dir: String): KnNgramModel = {
-      val meta = spark.read.parquet(s"$dir/meta").head()
+      val meta = Parquet.read(spark, s"$dir/meta").head()
       val order = meta.getInt(0)
       KnNgramModel(order, meta.getDouble(1),
-        (1 to order).map(k => k -> spark.read.parquet(s"$dir/c$k")).toMap,
-        (2 to order).map(k => k -> spark.read.parquet(s"$dir/l$k")).toMap,
-        spark.read.parquet(s"$dir/totals"))
+        (1 to order).map(k => k -> Parquet.read(spark, s"$dir/c$k")).toMap,
+        (2 to order).map(k => k -> Parquet.read(spark, s"$dir/l$k")).toMap,
+        Parquet.read(spark, s"$dir/totals"))
     }
   }
 
@@ -692,9 +692,9 @@ object LanguageModel {
   def readKnNgramState(spark: org.apache.spark.sql.SparkSession,
       dir: String): KnNgramState =
     KnNgramState(
-      spark.read.parquet(s"$dir/meta").head().getInt(0),
-      spark.read.parquet(s"$dir/grams"),
-      spark.read.parquet(s"$dir/unigrams"))
+      Parquet.read(spark, s"$dir/meta").head().getInt(0),
+      Parquet.read(spark, s"$dir/grams"),
+      Parquet.read(spark, s"$dir/unigrams"))
 
   /** STUPID BACKOFF n-gram scoring (Brants, Popat, Xu, Och & Dean,
     * "Large Language Models in Machine Translation", EMNLP 2007 §4) —
@@ -949,10 +949,10 @@ object LanguageModel {
 
   def readSbNgramState(spark: org.apache.spark.sql.SparkSession,
       dir: String): SbNgramState = {
-    val order = spark.read.parquet(s"$dir/meta").head().getInt(0)
+    val order = Parquet.read(spark, s"$dir/meta").head().getInt(0)
     SbNgramState(order,
-      (2 to order).map(k => k -> spark.read.parquet(s"$dir/level$k")).toMap,
-      spark.read.parquet(s"$dir/unigrams"))
+      (2 to order).map(k => k -> Parquet.read(spark, s"$dir/level$k")).toMap,
+      Parquet.read(spark, s"$dir/unigrams"))
   }
 
   /** CCNet head/middle/tail perplexity bucketing (Wenzek et al., LREC

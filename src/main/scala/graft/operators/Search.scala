@@ -103,10 +103,10 @@ object Search {
 
   object PostingsIndex {
     def read(spark: org.apache.spark.sql.SparkSession, dir: String): PostingsIndex = {
-      val m = spark.read.parquet(s"$dir/meta").head()
+      val m = Parquet.read(spark, s"$dir/meta").head()
       // normalize column order: a partitioned layout surfaces the
       // partition column last — (gram, id) is the index contract
-      PostingsIndex(spark.read.parquet(s"$dir/postings").select("gram", "id"),
+      PostingsIndex(Parquet.read(spark, s"$dir/postings").select("gram", "id"),
         m.getAs[String]("id_col"), m.getAs[Int]("gram_len"))
     }
   }

@@ -1125,13 +1125,13 @@ object Similarity {
 
   object Sq8Index {
     def read(spark: org.apache.spark.sql.SparkSession, dir: String): Sq8Index = {
-      val meta = spark.read.parquet(s"$dir/meta").head()
-      val cents = spark.read.parquet(s"$dir/centroids").orderBy("cell")
+      val meta = Parquet.read(spark, s"$dir/meta").head()
+      val cents = Parquet.read(spark, s"$dir/centroids").orderBy("cell")
         .collect().map(r => r.getSeq[Long](r.fieldIndex("cw")): Seq[Long])
-      val bounds = spark.read.parquet(s"$dir/bounds").orderBy("i")
+      val bounds = Parquet.read(spark, s"$dir/bounds").orderBy("i")
         .collect().map(r => (r.getLong(r.fieldIndex("mn")),
           r.getLong(r.fieldIndex("mx")))).toSeq
-      Sq8Index(cents, bounds, spark.read.parquet(s"$dir/codes"),
+      Sq8Index(cents, bounds, Parquet.read(spark, s"$dir/codes"),
         meta.getAs[String]("id_col"), meta.getAs[Int]("dim"))
     }
   }
@@ -1814,18 +1814,18 @@ object Similarity {
 
   object AnnIndex {
     def read(spark: org.apache.spark.sql.SparkSession, dir: String): AnnIndex = {
-      val meta = spark.read.parquet(s"$dir/meta").head()
+      val meta = Parquet.read(spark, s"$dir/meta").head()
       // quantizer tables are bounded index metadata (cells × dim,
       // m·k × sub) — the kmeansFit k×dim driver-state convention
-      val cents = spark.read.parquet(s"$dir/centroids").orderBy("cell")
+      val cents = Parquet.read(spark, s"$dir/centroids").orderBy("cell")
         .collect().map(r => r.getSeq[Long](r.fieldIndex("cw")): Seq[Long])
       val m = meta.getAs[Int]("m")
-      val bookRows = spark.read.parquet(s"$dir/codebooks")
+      val bookRows = Parquet.read(spark, s"$dir/codebooks")
         .orderBy("book", "code").collect()
       val books = (0 until m).map(b =>
         bookRows.filter(_.getAs[Int]("book") == b)
           .map(r => r.getSeq[Long](r.fieldIndex("cw")): Seq[Long]))
-      AnnIndex(cents, books, spark.read.parquet(s"$dir/codes"),
+      AnnIndex(cents, books, Parquet.read(spark, s"$dir/codes"),
         meta.getAs[String]("id_col"), meta.getAs[Int]("dim"), m,
         meta.getAs[Boolean]("residual"))
     }

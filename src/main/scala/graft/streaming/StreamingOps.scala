@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.operators.{Agg, Aggregations, CacheScope}
+import graft.operators.{Agg, Aggregations, CacheScope, Parquet}
 
 /** Structured Streaming surface: the engine's grouped-reduction registry
   * over unbounded inputs, plus the streaming-native forms of dedup and
@@ -521,7 +521,7 @@ object StreamingOps {
         // == handle at every batch boundary, so the re-read is identical
         if (idx == null || batches % HandleCompactEvery == 0) {
           idx = Dedup.NearDupIndex.read(spark, dir)
-          canon = spark.read.parquet(s"$dir/canon")
+          canon = Parquet.read(spark, s"$dir/canon")
         }
         val batch = b.toDF()
         val base = batch.where(col(textCol).isNotNull)
@@ -634,7 +634,7 @@ object StreamingOps {
     // 3: exact keep-first — in-batch race, then the at-rest canon table
     val exBatch = Dedup.dropDuplicatesKeepFirst(withCanon, idCol, "__canon")
     val exNew = exBatch
-      .join(spark.read.parquet(s"$dir/canon"), Seq("__canon"), "left_anti")
+      .join(Parquet.read(spark, s"$dir/canon"), Seq("__canon"), "left_anti")
       .localCheckpoint()
     appendDelta(exNew.select("__canon"), s"$dir/canon")
     val exDocs = exNew.drop("__canon")

@@ -121,17 +121,48 @@ class DedupSpec extends AnyFunSuite {
     // within-set near-dups (10 vs 11) must NOT appear
   }
 
-  test("columnar minhash signature equals the expression form") {
-    val k = 8
+  test("minhashBands == banding of minhashSignature, bit for bit; NULL/empty arrays") {
+    graft.expressions.GraftFunctions.register(spark)
     val sh = docs.select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
-    val exprSig = sh.select(col("doc_id"), Dedup.minhashSignature(col("sh"), k).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val colSig = Dedup.minhashSigCols(
-      sh.select(col("doc_id"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), xxhash64(col("s")).as("h")),
-      "doc_id", "h", k)
-      .collect().map(r => r.getLong(0) -> (1 to k).map(i => r.getLong(i))).toMap
-    assert(exprSig == colSig)
+      .unionByName(Seq[(Long, Seq[String])](
+        (10L, Seq("w1 w2 w3", null, "u1 u2 u3")), // NULL element: hashes to the seed
+        (11L, Seq(null)),
+        (12L, Seq.empty), // empty and NULL arrays: no signature, no rows
+        (13L, null)).toDF("doc_id", "sh"))
+    for ((bands, rows) <- Seq((32, 4), (4, 2))) {
+      val sig = Dedup.minhashSignature(col("sh"), bands * rows)
+      val reference = array((0 until bands).map { b =>
+        xxhash64((0 until rows).map(r => element_at(sig, b * rows + r + 1)): _*)
+      }: _*)
+      val got = sh.select(col("doc_id"), Dedup.minhashBands(col("sh"), bands, rows).as("k"),
+          reference.as("ref"), coalesce(size(col("sh")), lit(0)).as("n"))
+        .collect().map(r => (r.getLong(0),
+          Option(r.getSeq[Long](1)).map(_.toVector), r.getSeq[Long](2).toVector, r.getInt(3)))
+      assert(got.length == 9)
+      got.foreach { case (id, k, ref, n) =>
+        if (n > 0) assert(k.contains(ref), s"doc $id at ($bands, $rows)")
+        else assert(k.isEmpty, s"doc $id: an empty or NULL array has no signature")
+      }
+      // the interpreted path (eval) agrees with the codegen'd one above
+      got.filter(_._4 > 0).foreach { case (id, k, _, _) =>
+        val arr = sh.where(col("doc_id") === id).head().getSeq[String](1)
+        val lit = org.apache.spark.sql.catalyst.expressions.Literal.create(
+          arr, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType))
+        val ev = graft.expressions.MinHashBands(lit, bands, rows).eval()
+          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toVector
+        assert(k.contains(ev), s"doc $id: eval differs from codegen")
+      }
+    }
+    // the index's (id, band, bucket) rows are the posexplode of the keys
+    val idx = Dedup.buildNearDupIndex(docs, "doc_id", "text", n = 3, bands = 4, rows = 2)
+    val sig = Dedup.minhashSignature(Dedup.shingles(col("text"), 3), 8)
+    val ref = docs.select(col("doc_id").as("id"), posexplode(array((0 until 4).map { b =>
+      xxhash64(element_at(sig, 2 * b + 1), element_at(sig, 2 * b + 2))
+    }: _*)).as(Seq("band", "bucket")))
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    assert(rowsOf(idx.buckets) == rowsOf(ref))
+    assert(idx.buckets.schema == ref.schema)
   }
 
   test("columnar simhash equals the expression form and is 0-distance for identical docs") {

@@ -293,6 +293,21 @@ class PlanAuditSpec extends AnyFunSuite {
       s"bloom path must stay an equality join:\n$p")
   }
 
+  test("buildNearDupIndex buckets: per-document MinHash kernel, no Exchange, no aggregate") {
+    val docs = TestSpark.table("0.01", "documents")
+    val buckets = graft.operators.Dedup.buildNearDupIndex(docs, "doc_id", "text").buckets
+    val p = plan(buckets)
+    assert(!p.contains("Exchange"), s"the sketch must not shuffle:\n$p")
+    assert(!p.contains("Aggregate"), s"the sketch must not aggregate:\n$p")
+    // the kernel is codegen'd with the scan-side projection and the
+    // posexplode (the 129-field aggregate it replaced ran without
+    // whole-stage codegen, past spark.sql.codegen.maxFields)
+    buckets.collect()
+    val finalP = plan(buckets)
+    assert("""\*\(\d+\) Generate posexplode\(graft_minhash_bands""".r.findFirstIn(finalP).isDefined,
+      s"the sketch fell out of whole-stage codegen:\n$finalP")
+  }
+
   test("q_star: fact-side date filter pushed to parquet; columns pruned; all dims broadcast") {
     val p = plan(SparkEntry.queries("q_star")(spark, "/root/testdata/sf0.001"))
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate"),
