@@ -276,7 +276,8 @@ object CurationQueries {
     // #4): duplicateSpans' tokenizer slot rides Bpe.deepRetokenize —
     // the BpeDeepTokenize scalar expression at the 24-rule deep prefix
     // here (oracle replays the chain fold; the same slot takes a
-    // 64k-rule vocabulary, receipted in Stress bpeDeepTok)
+    // production vocabulary — BENCH_NOTES, Round 11, "Deep tokenizer as
+    // a Column": 40k docs under 8192 learned rules in 1.0-1.2 s)
     "q_dup_spans_bpe_deep" -> ((s, d) =>
       NgramOverlap.duplicateSpans(T(s, d, "documents"), "doc_id", "text",
         windowTokens = 5, tokenizer = graft.operators.Bpe.deepRetokenize(
@@ -1413,7 +1414,7 @@ object CurationQueries {
   def oracleSql: Map[String, String] = oracleSqlBase +
     // the streamed flagship must hash-match the BATCH chain (streamed ==
     // batch: arrival order refines id order, so every stage's drop rule
-    // coincides — see StreamingOps.curationIngest)
+    // coincides — see StreamingOps.curationIngestAppend)
     ("q_stream_curation" -> oracleSqlBase("q_curation_e2e"))
 
   /** Shared replay of the hashed-feature logistic fit (q_logreg_hash /

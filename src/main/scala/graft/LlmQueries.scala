@@ -458,7 +458,7 @@ object LlmQueries {
     })
 
   /** foreachBatch twin of [[replayAvailableNow]] for sinkless streaming
-    * operators ([[StreamingOps.dedupNearIngest]]): runs the writer with
+    * operators ([[StreamingOps.dedupNearIngestAppend]]): runs the writer with
     * an AvailableNow trigger and a cleaned-up temp checkpoint, returns
     * when the replay drains. */
   private[graft] def runForeachBatchReplay(
@@ -2115,7 +2115,7 @@ object LlmQueries {
     }),
     // streaming maintenance of the EXACT quantile state: per batch the
     // corpus histogram rolls forward (foreachBatch corpus state — the
-    // dedupNearIngest boundary), finalize at the last batch == the
+    // dedupNearIngestAppend boundary), finalize at the last batch == the
     // direct quantile over EVERYTHING (initial even-id state + streamed
     // odd-id rows), certified by the shared quantile_cont oracle
     "q_stream_quantile_state" -> ((s, d) => {

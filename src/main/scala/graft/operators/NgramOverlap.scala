@@ -82,7 +82,7 @@ object NgramOverlap {
 
   /** The distinct eval-side gram table [[contaminatedDocs]] probes —
     * split out so a STREAMING consumer ([[graft.streaming.StreamingOps
-    * .curationIngest]]) can build it ONCE from the frozen eval
+    * .curationIngestAppend]]) can build it ONCE from the frozen eval
     * reference set (localCheckpoint/parquet it) and reuse it every
     * micro-batch via [[contaminatedDocsPre]], instead of re-deriving
     * the same grams per batch. */

@@ -1689,8 +1689,10 @@ object Similarity {
     * (VERDICT r11 #7): the k steps run in-loop over one primitive
     * array per row, each re-quantizing to the 1e-6 grid exactly as the
     * step-by-step chain does, so the output is bit-identical to
-    * [[householderRotateK]] at ~k× fewer passes (Stress `hhFused`
-    * receipt; SimilaritySpec pins fused == chain == materialized).
+    * [[householderRotateK]] at ~k× fewer passes (BENCH_NOTES, Round
+    * 12, "Fused Householder chain": k=8, dim=256, 2000 rows in 2.34 s
+    * against 379 s stepwise; SimilaritySpec pins fused == chain ==
+    * materialized).
     * Callers must have [[GraftFunctions.register]]ed the session. */
   def householderRotateFused(emb: Column, refl: Seq[(Seq[Long], Long)]): Column = {
     require(refl.nonEmpty, "need at least one reflection")
@@ -1989,9 +1991,9 @@ object Similarity {
     *
     * `planes` <= 0 (the default) SIZES WITH THE CORPUS via [[autoPlanes]]
     * over a cheap count: expected bucket occupancy is n / 2^planes per
-    * table, and candidate cost is quadratic in it. Measured (graft.Stress,
-    * 16k vectors): planes=4 (16 buckets) degenerates toward all-pairs at
-    * 67 s; planes=8 (256 buckets) runs in 9 s. At higher similarity
+    * table, and candidate cost is quadratic in it. Measured (BENCH_NOTES,
+    * "Scale probes", 16k vectors): planes=4 (16 buckets) degenerates
+    * toward all-pairs at 67 s; planes=8 (256 buckets) runs in 9 s. At higher similarity
     * thresholds more planes also keep recall (per-bit collision prob
     * rises with cosine), which is the regime near-dup detection runs in.
     * Explicit `planes` overrides (recall tuning at a known corpus size).

@@ -18,6 +18,23 @@ class StreamingSpec extends AnyFunSuite {
 
   private def tmpDir(prefix: String) = Files.createTempDirectory(prefix).toString
 
+  /** Stage each frame of `days` as ONE parquet file in a fresh directory,
+    * modification times increasing: a `maxFilesPerTrigger = 1` file
+    * stream drains oldest-modification-first, so day i is batch i. */
+  private def stageDays(days: Seq[DataFrame], prefix: String): String = {
+    val dir = tmpDir(prefix)
+    days.zipWithIndex.foreach { case (df, i) =>
+      val tmp = tmpDir(s"$prefix-part")
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
+      val dst = new java.io.File(dir, s"day$i.parquet")
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      assert(dst.setLastModified(1700000000000L + i * 60000L))
+    }
+    dir
+  }
+
   /** Batch df -> parquet dir -> readStream over it. */
   private def asStream(df: DataFrame): DataFrame = {
     val dir = tmpDir("graft-stream-in")
@@ -281,54 +298,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(top == Seq((9.0, 2L), (5.0, 3L)))
   }
 
-  test("dedupNearIngest: one-file-per-trigger replay equals the sequential daily loop; index rolls forward") {
-    import graft.operators.Dedup
-    val base30 = (1 to 30).map(i => s"w$i").mkString(" ")
-    val near = ((1 to 15).map(i => s"w$i") ++ Seq("CHANGED") ++ (17 to 30).map(i => s"w$i")).mkString(" ")
-    val fresh1 = (1 to 30).map(i => s"f$i").mkString(" ")
-    val fresh2 = (1 to 30).map(i => s"g$i").mkString(" ")
-    val corpus = Seq((1L, base30)).toDF("doc_id", "text")
-    // day2's 21 duplicates DAY-1's survivor and day3's 32 duplicates
-    // DAY-2's — both reject ONLY if the index actually rolls forward
-    // between micro-batches
-    val days = Seq(
-      Seq((11L, near), (12L, fresh1)),              // 11 ~ corpus; 12 survives
-      Seq((21L, fresh1), (22L, fresh2)),            // 21 ~ day1 survivor; 22 survives
-      Seq((31L, near), (32L, fresh2), (33L, (1 to 30).map(i => s"z$i").mkString(" "))))
-      .map(_.toDF("doc_id", "text"))
-    val dir = tmpDir("graft-stream-nd")
-    days.zipWithIndex.foreach { case (df, i) =>
-      val tmp = tmpDir("graft-nd-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
-      val dst = new java.io.File(dir, s"day$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      // file-source batches drain oldest-modification-first: pin the order
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
-    val stream = spark.readStream.schema(days.head.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val idxRaw = Dedup.buildNearDupIndex(corpus, "doc_id", "text", n = 3, bands = 32, rows = 4)
-    val idx = Dedup.NearDupIndex(idxRaw.buckets.cache(), idxRaw.shingles.cache(),
-      idxRaw.n, idxRaw.bands, idxRaw.rows)
-    val got = scala.collection.mutable.ArrayBuffer.empty[Set[Long]]
-    StreamingOps.dedupNearIngest(stream, idx, "doc_id", "text", threshold = 0.5)(
-        surv => got.synchronized { got += surv.collect().map(_.getLong(0)).toSet; () })
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", tmpDir("graft-ckpt"))
-      .start().awaitTermination()
-    // sequential daily-loop reference over the same files in the same order
-    var index = idxRaw
-    val want = days.map { day =>
-      val s = Dedup.dedupIncrementalNear(index, day, "doc_id", "text", threshold = 0.5)
-      index = Dedup.appendToIndex(index, s, "doc_id", "text")
-      s.collect().map(_.getLong(0)).toSet
-    }
-    assert(got.toSeq == want, s"streamed per-batch survivors $got != sequential loop $want")
-    assert(want == Seq(Set(12L), Set(22L), Set(33L)))
-  }
-
   test("dedupNearIngestAppend: directory probe == sequential daily loop; only survivor sketches appended") {
     import graft.operators.Dedup
     val base30 = (1 to 30).map(i => s"w$i").mkString(" ")
@@ -341,16 +310,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((21L, fresh1), (22L, fresh2)),
       Seq((31L, near), (32L, fresh2), (33L, (1 to 30).map(i => s"z$i").mkString(" "))))
       .map(_.toDF("doc_id", "text"))
-    val streamDir = tmpDir("graft-nda-days")
-    days.zipWithIndex.foreach { case (df, i) =>
-      val tmp = tmpDir("graft-nda-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
-      val dst = new java.io.File(streamDir, s"day$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
+    val streamDir = stageDays(days, "graft-nda-days")
     val dir = tmpDir("graft-nda-idx")
     Dedup.buildNearDupIndex(corpus, "doc_id", "text", n = 3, bands = 32, rows = 4)
       .write(dir)
@@ -392,16 +352,7 @@ class StreamingSpec extends AnyFunSuite {
     Search.buildPostingsIndex(docs.where(col("doc_id") <= 2), "doc_id", "text")
       .write(dir)
     val days = Seq(docs.where(col("doc_id") === 3), docs.where(col("doc_id") === 4))
-    val streamDir = tmpDir("graft-postidx-days")
-    days.zipWithIndex.foreach { case (df, i) =>
-      val tmp = tmpDir("graft-pa-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
-      val dst = new java.io.File(streamDir, s"day$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
+    val streamDir = stageDays(days, "graft-postidx-days")
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
     StreamingOps.postingsIngestAppend(stream, dir, "doc_id", "text")
@@ -426,16 +377,7 @@ class StreamingSpec extends AnyFunSuite {
     Similarity.buildAnnIndex(vecs.where(col("vec_id") <= 13),
       "vec_id", "embedding", dim = 8, m = 2, cents, books).write(aDir)
     val aDays = Seq(vecs.where(col("vec_id") === 14), vecs.where(col("vec_id") === 15))
-    val aStreamDir = tmpDir("graft-annidx-days")
-    aDays.zipWithIndex.foreach { case (df, i) =>
-      val tmp = tmpDir("graft-aa-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
-      val dst = new java.io.File(aStreamDir, s"day$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
+    val aStreamDir = stageDays(aDays, "graft-annidx-days")
     val aStream = spark.readStream.schema(vecs.schema)
       .option("maxFilesPerTrigger", "1").parquet(aStreamDir)
     StreamingOps.annIngestAppend(aStream, aDir, "embedding")
@@ -450,7 +392,7 @@ class StreamingSpec extends AnyFunSuite {
       "drained append-mode ANN dir must equal the from-scratch encode")
   }
 
-  test("curationIngest: streamed six-stage chain == batch chain, including the A~B~C near-dup chain case") {
+  test("curationIngestAppend: streamed six-stage chain == batch chain, including the A~B~C near-dup chain case") {
     import graft.operators.{Dedup, NgramOverlap, TextAnalysis}
     // token stream with stopword hits every 5 tokens so any 60-token
     // window passes gopher (>= 50 words, mean len 3-10, >= 2 stopwords)
@@ -478,26 +420,8 @@ class StreamingSpec extends AnyFunSuite {
       s"chain geometry drifted: $pairs")
     // days split mid-chain: A, B, fresh1 on day 1; C, fresh2 on day 2
     val days = Seq(corpus.where(col("doc_id") <= 3), corpus.where(col("doc_id") > 3))
-    val dir = tmpDir("graft-stream-cur")
-    days.zipWithIndex.foreach { case (df, i) =>
-      val tmp = tmpDir("graft-cur-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
-      val dst = new java.io.File(dir, s"day$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
+    val dir = stageDays(days, "graft-stream-cur")
     val evalDocs = corpus.limit(0) // no eval sources in this corpus
-    val stream = spark.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    var acc: DataFrame = null
-    StreamingOps.curationIngest(stream, evalDocs, Seq("srcEval"),
-        "doc_id", "text")(f => { acc = f; () })
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", tmpDir("graft-ckpt"))
-      .start().awaitTermination()
-    val streamed = acc.select("doc_id").collect().map(_.getLong(0)).toSet
     // batch chain, stage for stage (the q_curation_e2e head)
     val base = corpus.where(col("text").isNotNull)
     val passed = TextAnalysis.gopherFlags(base, "text")
@@ -515,21 +439,18 @@ class StreamingSpec extends AnyFunSuite {
     val batchIds = train.join(contam,
         col("doc_id") === col("__contam_id"), "left_anti")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(streamed == batchIds,
-      s"streamed chain $streamed != batch chain $batchIds")
     // the chain case bit: B (2) dropped on A, C (4) STILL dropped on B
     assert(batchIds == Set(1L, 3L, 5L), s"expected A+fresh survivors, got $batchIds")
-    // AT-REST sink (curationIngestAppend): the same days through a seeded
-    // state directory — drained decon dir == batch chain, per-batch emits
-    // carry the chain case, and the at-rest canon/sketch state == the
-    // batch chain's own stage outputs (directory state included)
+    // the same days through a seeded state directory — drained decon dir
+    // == batch chain, per-batch emits carry the chain case, and the
+    // at-rest canon/sketch state == the batch chain's own stage outputs
     val sDir = tmpDir("graft-cur-atrest")
     StreamingOps.curationSeed(corpus.limit(0), evalDocs, Seq("srcEval"),
       sDir, "doc_id", "text")
-    val stream2 = spark.readStream.schema(corpus.schema)
+    val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val emitted = scala.collection.mutable.ArrayBuffer.empty[Set[Long]]
-    StreamingOps.curationIngestAppend(stream2, sDir, evalDocs, Seq("srcEval"),
+    StreamingOps.curationIngestAppend(stream, sDir, evalDocs, Seq("srcEval"),
         "doc_id", "text")(f => {
         val ids = f.select("doc_id").collect().map(_.getLong(0)).toSet
         emitted.synchronized { emitted += ids; () }
@@ -557,6 +478,108 @@ class StreamingSpec extends AnyFunSuite {
       s"sketch index must hold ALL exact survivors, got $indexedIds")
   }
 
+  test("at-rest sinks compacting every 2 batches == no compaction; each compaction unpersists the deltas it replaced") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.streaming.DataStreamWriter
+    def persistent(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def rddOf(df: DataFrame): Int = df.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd.id
+      case other => fail(s"emitted frame is not a checkpoint: ${other.nodeName}")
+    }
+    // per batch: emitted doc ids, the emitted frame's RDD, and the
+    // persistent RDD ids at emit time
+    type Rec = (Set[Long], Int, Set[Int])
+    def run(every: Int, days: String, schema: org.apache.spark.sql.types.StructType,
+        nDeltas: Int)(sink: (DataFrame, DataFrame => Unit) => DataStreamWriter[Row]): Seq[Rec] = {
+      val recs = scala.collection.mutable.ArrayBuffer.empty[Rec]
+      val writer = StreamingOps.compactEvery.withValue(every) {
+        sink(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(days),
+          f => recs.synchronized {
+            recs += ((f.select("doc_id").collect().map(_.getLong(0)).toSet, rddOf(f), persistent()))
+            ()
+          })
+      }
+      val before = persistent()
+      writer.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", tmpDir("graft-ckpt"))
+        .start().awaitTermination()
+      // what each batch checkpointed: the RDDs new at its emit
+      val created = recs.indices.map(k =>
+        recs(k)._3 -- (if (k == 0) before else recs(k - 1)._3))
+      // batch j's deltas stay unioned into the snapshot until the first
+      // re-read after it (batch numbers divisible by `every`), then are
+      // unpersisted; of what a batch made, only its emitted frame may
+      // outlive that
+      for (b <- 1 to recs.size; j <- 1 until b) {
+        val kept = (recs(b - 1)._3 intersect created(j - 1)) - recs(j - 1)._2
+        if (j < b - b % every)
+          assert(kept.isEmpty, s"every=$every batch $b still holds batch $j's deltas $kept")
+        else
+          assert(kept.size == nDeltas,
+            s"every=$every batch $b: batch $j's held deltas $kept, want $nDeltas")
+      }
+      recs.toSeq
+    }
+    def rows(path: String): Set[Seq[Any]] =
+      spark.read.parquet(path).collect().map(_.toSeq).toSet
+    def text(p: String): String = (1 to 30).map(i => s"$p$i").mkString(" ")
+    val near = ((1 to 15).map(i => s"w$i") ++ Seq("CHANGED") ++ (17 to 30).map(i => s"w$i"))
+      .mkString(" ")
+
+    // near-dup sink: every day holds a duplicate of an earlier day's
+    // survivor, so each probe needs both the re-read and the unioned deltas
+    val days = Seq(
+      Seq((11L, near), (12L, text("f"))),
+      Seq((21L, text("f")), (22L, text("g"))),
+      Seq((31L, near), (32L, text("g")), (33L, text("z"))),
+      Seq((41L, text("z")), (42L, text("y"))),
+      Seq((51L, text("y")), (52L, text("f")), (53L, text("x"))))
+      .map(_.toDF("doc_id", "text"))
+    val ndDays = stageDays(days, "graft-ndc-days")
+    val ndRuns = Seq(2, StreamingOps.HandleCompactEvery).map { every =>
+      val dir = tmpDir("graft-ndc-idx")
+      Dedup.buildNearDupIndex(Seq((1L, text("w"))).toDF("doc_id", "text"),
+        "doc_id", "text", n = 3, bands = 32, rows = 4).write(dir)
+      // deltas: the survivors' bucket and shingle rows
+      val recs = run(every, ndDays, days.head.schema, 2)((stream, emit) =>
+        StreamingOps.dedupNearIngestAppend(stream, dir, "doc_id", "text")(emit))
+      (recs.map(_._1), rows(s"$dir/buckets"), rows(s"$dir/shingles"))
+    }
+    assert(ndRuns(0)._1 == Seq(Set(12L), Set(22L), Set(33L), Set(42L), Set(53L)),
+      s"compacted near-dup emits ${ndRuns(0)._1}")
+    assert(ndRuns(0) == ndRuns(1), "compacted near-dup run != uncompacted run")
+
+    // curation sink: exact and near duplicates of earlier days' docs in
+    // every later day (gopher-passing 60-token docs; the A~B~C windows of
+    // the chain-case test above: A~B and B~C verified, A≁C)
+    def gdoc(p: String, lo: Int = 1): String = (lo until lo + 60).map(i =>
+      if (i % 10 == 0) "the" else if (i % 10 == 5) "and" else f"$p$i%03d").mkString(" ")
+    val cur = Seq(
+      Seq((1L, gdoc("tok")), (2L, gdoc("fr"))),
+      Seq((3L, gdoc("tok", 19)), (4L, gdoc("fr"))), // B ~ A; exact copy of 2
+      Seq((5L, gdoc("gz")), (6L, gdoc("tok", 19))), // exact copy of B (3)
+      Seq((7L, gdoc("gz")), (8L, gdoc("hq"))),
+      Seq((9L, gdoc("fr")), (10L, gdoc("tok", 37)), (11L, gdoc("jk")))) // C ~ B
+      .map(_.map { case (id, t) => (id, "srcA", t) }.toDF("doc_id", "source", "text"))
+    val curDays = stageDays(cur, "graft-curc-days")
+    val curRuns = Seq(2, StreamingOps.HandleCompactEvery).map { every =>
+      val dir = tmpDir("graft-curc-state")
+      val evalDocs = cur.head.limit(0)
+      StreamingOps.curationSeed(evalDocs, evalDocs, Seq("srcEval"), dir, "doc_id", "text")
+      // deltas: the exact survivors (read by the canon union) and their
+      // shingle and bucket rows
+      val recs = run(every, curDays, cur.head.schema, 3)((stream, emit) =>
+        StreamingOps.curationIngestAppend(stream, dir, evalDocs, Seq("srcEval"),
+          "doc_id", "text")(emit))
+      (recs.map(_._1), Seq("canon", "buckets", "shingles", "decon").map(t => rows(s"$dir/$t")))
+    }
+    assert(curRuns(0)._1 == Seq(Set(1L, 2L), Set.empty[Long], Set(5L), Set(8L), Set(11L)),
+      s"compacted curation emits ${curRuns(0)._1}")
+    assert(curRuns(0) == curRuns(1), "compacted curation run != uncompacted run")
+  }
+
   test("knScoreIngest: per-batch stateless scoring == one-shot batch scoring, any split") {
     import graft.operators.LanguageModel
     val train = Seq((10L, "a b a b c"), (11L, "b c a b")).toDF("doc_id", "text")
@@ -566,16 +589,7 @@ class StreamingSpec extends AnyFunSuite {
     // engineered 2-batch split of the score slice
     val days = Seq(Seq((1L, "a b c"), (2L, "c a b a")), Seq((3L, "z a b"), (4L, "b c z")))
       .map(_.toDF("doc_id", "text"))
-    val dir = tmpDir("graft-stream-kn")
-    days.zipWithIndex.foreach { case (df, i) =>
-      val tmp = tmpDir("graft-kn-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
-      val dst = new java.io.File(dir, s"day$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
+    val dir = stageDays(days, "graft-stream-kn")
     val stream = spark.readStream.schema(days.head.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -613,16 +627,7 @@ class StreamingSpec extends AnyFunSuite {
     val days = Seq(Seq((10L, "the cat sat on"), (11L, "dog the")),
       Seq((12L, "one"), (13L, null.asInstanceOf[String])))
       .map(_.toDF("doc_id", "text"))
-    val dir = tmpDir("graft-stream-qual")
-    days.zipWithIndex.foreach { case (df, i) =>
-      val tmp = tmpDir("graft-qual-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
-      val dst = new java.io.File(dir, s"day$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
+    val dir = stageDays(days, "graft-stream-qual")
     val stream = spark.readStream.schema(days.head.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -650,16 +655,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((20L, "c a d b"), (21L, "a b c c a")),
       Seq((30L, "d a b e"), (31L, "e b a")))
       .map(_.toDF("doc_id", "text"))
-    val dir = tmpDir("graft-stream-kns")
-    days.zipWithIndex.foreach { case (df, i) =>
-      val tmp = tmpDir("graft-kns-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
-      val dst = new java.io.File(dir, s"day$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
+    val dir = stageDays(days, "graft-stream-kns")
     val stream = spark.readStream.schema(days.head.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     // empty initial state (cold start): limit(0) frames with the state schema
@@ -699,16 +695,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((20L, "c a d b e a"), (21L, "a b c c a d")),
       Seq((30L, "d a b e c"), (31L, "e b a c d a")))
       .map(_.toDF("doc_id", "text"))
-    val dir = tmpDir("graft-stream-knN")
-    days.zipWithIndex.foreach { case (df, i) =>
-      val tmp = tmpDir("graft-knN-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
-      val dst = new java.io.File(dir, s"day$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
+    val dir = stageDays(days, "graft-stream-knN")
     val score = Seq((1L, "a b c a d"), (2L, "a e z b c"), (3L, "z d a b e"))
       .toDF("doc_id", "text")
     val all = days.reduce(_ unionByName _)
@@ -758,16 +745,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq(("a", Some(2.0)), ("a", Some(3.0)), ("b", Some(Double.NaN))),
       Seq(("a", Some(4.0)), ("b", None), ("b", Some(20.0))))
       .map(_.toDF("k", "v"))
-    val dir = tmpDir("graft-stream-qs")
-    days.zipWithIndex.foreach { case (df, i) =>
-      val tmp = tmpDir("graft-qs-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
-      val dst = new java.io.File(dir, s"day$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
+    val dir = stageDays(days, "graft-stream-qs")
     val stream = spark.readStream.schema(days.head.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val init = AggState.stateQuantile(
