@@ -83,6 +83,7 @@ object GraftFunctions {
   val BpeDeep    = "graft_bpe_deep"
   val WordPieceF = "graft_wordpiece"
   val TopK       = "graft_topk"
+  val Percentile = "graft_percentile"
   val MgSketch   = "graft_mg"
   val WordNgramsF = "graft_word_ngrams"
   val MinHashBandsF = "graft_minhash_bands"
@@ -196,6 +197,12 @@ object GraftFunctions {
         s"$TopK's third argument (k) must be a literal")
       TopKByScore(exprs(0), exprs(1),
         exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()
+    },
+    // exact percentile(s) on primitive sorted runs: (value, q literal or
+    // array literal of q) — the registry's median/quantile kernel
+    Percentile -> { exprs =>
+      arity(Percentile, exprs, 2)
+      ExactPercentile(exprs(0), exprs(1)).toAggregateExpression()
     },
     // Misra-Gries frequent-items summary: (token, capacity literal) ->
     // array<struct<token,count>> superset of all items with frequency

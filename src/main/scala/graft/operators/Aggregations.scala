@@ -310,30 +310,34 @@ object Aggregations {
       case "any" => bool_or(if (dt == BooleanType) v else v.cast(BooleanType))
       case "all" => bool_and(if (dt == BooleanType) v else v.cast(BooleanType))
       // Exact median/quantile: the reference cannot parallelize these
-      // (blockwise-only, aggregations.py:532-547); Spark's builtin is
-      // distributed *and* exact. Linear interpolation matches
-      // aggregate_flox.py:80-83.
+      // (blockwise-only, aggregations.py:532-547); here they run
+      // distributed *and* exact on graft.expressions.ExactPercentile, a
+      // sort-based kernel that returns what Spark's `percentile` returns
+      // (the same linear interpolation as aggregate_flox.py:80-83) from a
+      // primitive buffer instead of Spark's boxed value->count map.
       //
-      // MEMORY BOUND (100 TB): Spark's exact Percentile is an
-      // ObjectHashAggregate buffering a value->count map per group in
-      // executor memory — a group whose *distinct value* count is huge
-      // (e.g. a continuous measurement with billions of rows per group)
-      // will spill hard or OOM. At that scale use func=approxquantile:
-      // a bounded-memory KLL-style sketch (error <= 1/accuracy of rank),
-      // mergeable and single-pass. Exact percentile stays the default
-      // because it is the reference's semantic (and the sketch is exact
-      // anyway whenever accuracy >= rows-per-group).
-      case "median"      => propagateNaN(median(vn), v, dt)
-      case "nanmedian"   => median(vn)
+      // MEMORY BOUND (100 TB): the kernel keeps one 16-byte (value, count)
+      // run per *distinct value* per (partition, group), plus an append
+      // area of at most twice that (or a 1024-key floor) — O(distinct), the
+      // same bound as Spark's map without the boxing. A group whose
+      // distinct value count is huge (a continuous measurement with
+      // billions of rows per group) will still spill hard or OOM. At that
+      // scale use func=approxquantile (a bounded-memory KLL-style sketch,
+      // rank error <= 1/accuracy, mergeable and single-pass) or the exact
+      // bounded-memory passes in Quantiles. Exact percentile stays the
+      // default because it is the reference's semantic (and the sketch is
+      // exact anyway whenever accuracy >= rows-per-group).
+      case "median"      => propagateNaN(quantileExpr(vn, dt, Seq(0.5)), v, dt)
+      case "nanmedian"   => quantileExpr(vn, dt, Seq(0.5))
       // vector q yields an array column, so the NaN-propagation branch
       // must be an all-NaN array (numpy fills the whole result), not the
       // scalar NaN propagateNaN produces — scalar q keeps the shared path.
       case "quantile" =>
-        if (a.q.size <= 1) propagateNaN(quantileExpr(vn, a.q), v, dt)
-        else if (!isFloaty(dt)) quantileExpr(vn, a.q)
+        if (a.q.size <= 1) propagateNaN(quantileExpr(vn, dt, a.q), v, dt)
+        else if (!isFloaty(dt)) quantileExpr(vn, dt, a.q)
         else when(coalesce(bool_or(isnan(v)), lit(false)),
-          array(a.q.map(_ => lit(Double.NaN)): _*)).otherwise(quantileExpr(vn, a.q))
-      case "nanquantile" => quantileExpr(vn, a.q)
+          array(a.q.map(_ => lit(Double.NaN)): _*)).otherwise(quantileExpr(vn, dt, a.q))
+      case "nanquantile" => quantileExpr(vn, dt, a.q)
       // Scale path beyond the reference: sketch-based quantile. Returns a
       // dataset value (no interpolation); vector q -> array column like
       // the exact variant.
@@ -383,10 +387,16 @@ object Aggregations {
     }
   }
 
-  private def quantileExpr(vn: Column, q: Seq[Double]): Column = {
+  /** Exact percentile(s) of `vn` on the ExactPercentile kernel (requires
+    * GraftFunctions.register on the session, as every caller of compile
+    * does). decimal(p > 18) has no 64-bit order code for the kernel and
+    * stays on Spark's `percentile`, which gives the same results. */
+  private def quantileExpr(vn: Column, dt: DataType, q: Seq[Double]): Column = {
     require(q.nonEmpty, "quantile requires q")
-    if (q.size == 1) percentile(vn, lit(q.head))
-    else percentile(vn, array(q.map(lit): _*)) // array column = flox's new leading dim
+    val qs = if (q.size == 1) lit(q.head) else array(q.map(lit): _*) // array = flox's new leading dim
+    if (graft.expressions.ExactPercentile.supports(dt))
+      call_function(graft.expressions.GraftFunctions.Percentile, vn, qs)
+    else percentile(vn, qs)
   }
 
   /** minCount masking: NULL unless >= minCount valid values (reference

@@ -8,14 +8,17 @@ import graft.functions.NanOps
 /** Memory-safe EXACT quantiles — the scale path for the one reduction
   * whose registry form has an executor-memory bound.
   *
-  * `Agg("quantile"...)` compiles to Spark's `Percentile`, an
-  * ObjectHashAggregate buffering a value->count map PER GROUP in executor
-  * memory: exact and fast until one group's distinct-value count blows the
-  * heap (a continuous column with billions of rows per group — the 100 TB
-  * failure mode; the reference dodges it by being blockwise-only,
+  * `Agg("quantile"...)` compiles to [[graft.expressions.ExactPercentile]],
+  * an ObjectHashAggregate whose per-group buffer holds one 16-byte
+  * (value, count) run per DISTINCT value in executor memory (primitive
+  * sorted runs, not Spark's boxed `Percentile` map, with the same
+  * results): exact and fast until one group's distinct-value count blows
+  * the heap (a continuous column with billions of rows per group — the
+  * 100 TB failure mode; the reference dodges it by being blockwise-only,
   * aggregations.py:532-533). This operator computes the identical
   * linear-interpolation quantiles as composed relational plans with no
-  * unbounded in-memory structure:
+  * unbounded in-memory structure, so it is the path for groups whose
+  * distinct count is unbounded:
   *
   *   1. (keys, value) -> count: ordinary two-phase hash aggregation — the
   *      shuffle carries one row per DISTINCT value per group;

@@ -78,6 +78,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("windowed median and vector nanquantile run through the state store and equal batch") {
+    // three one-file batches: each window's percentile buffer is saved to
+    // and merged back from the state store across batches
+    val ev = events
+    val bounds = Seq("2024-01-01 00:00:00", "2024-01-01 03:30:00", "2024-01-01 07:10:00", "2024-01-02 00:00:00")
+      .map(t => lit(java.sql.Timestamp.valueOf(t)))
+    val days = bounds.sliding(2).map { case Seq(lo, hi) =>
+      ev.filter(col("ts") >= lo && col("ts") < hi) }.toSeq
+    val stream = spark.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", "1").parquet(stageDays(days, "graft-stream-med"))
+    val aggs = Seq(Agg("median", "value", "med"),
+      Agg("nanquantile", "value", "qs", q = Seq(0.1, 0.5, 0.5, 0.9)))
+    def bits(r: org.apache.spark.sql.Row, at: Int) =
+      (java.lang.Double.doubleToLongBits(r.getDouble(at)),
+        r.getSeq[Double](at + 1).map(java.lang.Double.doubleToLongBits))
+    val streamed = runToMemory(
+      StreamingOps.windowedReduce(stream, "ts", "1 hour", Seq("user_id"), aggs),
+      "win_median", "complete")
+      .collect().map(r => (r.getTimestamp(0), r.getString(2)) -> bits(r, 3)).toMap
+    val batch = GroupByReduce.reduce(
+      ev.withColumn("hour", date_trunc("hour", col("ts"))), Seq("hour", "user_id"), aggs)
+      .collect().map(r => (r.getTimestamp(0), r.getString(1)) -> bits(r, 2)).toMap
+    assert(streamed.size == batch.size && streamed.size > 40)
+    assert(streamed.values.exists(v => java.lang.Double.isNaN(java.lang.Double.longBitsToDouble(v._1))),
+      "some window must propagate a NaN through median")
+    assert(streamed == batch)
+  }
+
   test("windowed topk streams and equals the batch datetime-binned topk") {
     val ev = events.withColumn("eid", monotonically_increasing_id())
       .cache() // pin eid: it must be the same identity on both sides
