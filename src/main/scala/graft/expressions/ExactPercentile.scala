@@ -34,12 +34,13 @@ import org.apache.spark.sql.types._
   * not fit; the bounded-memory paths are `approxquantile` and
   * [[graft.operators.Quantiles]].
   *
-  * Keys: each value enters the buffer as a 64-bit order code, so sorting
-  * codes sorts values and equal codes are equal values:
+  * Keys: each value enters the buffer as a 64-bit order code
+  * ([[OrderCode]]), so sorting codes sorts values and equal codes are
+  * equal values:
   *   - byte/short/int/long: the value itself;
-  *   - float/double: the IEEE bits of the (exactly widened) double,
-  *     with the negative half flipped so signed order = numeric order
-  *     (NaN canonicalized and above +Inf, as Spark orders it);
+  *   - float/double: the invertible [[OrderCode.ofDouble]] of the
+  *     (exactly widened) double (NaN canonicalized and above +Inf, as
+  *     Spark orders it);
   *   - decimal(p <= 18, s): the unscaled long.
   * Keys decode to double only when a result is read off them, as Spark's
   * `toDoubleValue` does. Keeping the original value as the key (and not
@@ -91,13 +92,13 @@ case class ExactPercentile(
     case IntegerType => v => v.asInstanceOf[Int].toLong
     case ShortType   => v => v.asInstanceOf[Short].toLong
     case ByteType    => v => v.asInstanceOf[Byte].toLong
-    case DoubleType  => v => ExactPercentile.doubleCode(v.asInstanceOf[Double])
-    case FloatType   => v => ExactPercentile.doubleCode(v.asInstanceOf[Float].toDouble)
+    case DoubleType  => v => OrderCode.ofDouble(v.asInstanceOf[Double])
+    case FloatType   => v => OrderCode.ofDouble(v.asInstanceOf[Float].toDouble)
     case _           => v => v.asInstanceOf[Decimal].toUnscaledLong
   }
 
   @transient private lazy val decode: Long => Double = child.dataType match {
-    case FloatType | DoubleType => ExactPercentile.codeDouble
+    case FloatType | DoubleType => OrderCode.toDouble
     case d: DecimalType => c => Decimal(c, d.precision, d.scale).toDouble
     case _ => c => c.toDouble
   }
@@ -198,17 +199,6 @@ object ExactPercentile {
     case d: DecimalType => d.precision <= Decimal.MAX_LONG_DIGITS
     case _ => false
   }
-
-  /** Order-preserving code of a double: signed-long order of the codes is
-    * numeric order, -0.0 just below 0.0, every NaN one code above +Inf. */
-  private def doubleCode(d: Double): Long = {
-    val b = java.lang.Double.doubleToLongBits(d)
-    b ^ ((b >> 63) & Long.MaxValue)
-  }
-
-  /** Inverse of [[doubleCode]] (the flip is an involution). */
-  private def codeDouble(c: Long): Double =
-    java.lang.Double.longBitsToDouble(c ^ ((c >> 63) & Long.MaxValue))
 }
 
 /** Per-group state of [[ExactPercentile]]: an unsorted append area of order

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, ShortType, StringType}
 
 /** Exact integer dot product of two `array<long>` columns as a native
   * Catalyst expression with a tight codegen loop.
@@ -94,6 +94,9 @@ object GraftFunctions {
   val Nfc           = "graft_nfc"
   val Unscaled      = "graft_unscaled"
   val Sum128        = "graft_sum128"
+  val MinBy         = "graft_min_by"
+  val MaxBy         = "graft_max_by"
+  val Running       = "graft_running"
 
   private def arity(name: String, exprs: Seq[Expression], n: Int): Unit =
     if (exprs.length != n) throw new IllegalArgumentException(
@@ -261,6 +264,24 @@ object GraftFunctions {
             s" literal (got ${sc.sql}: ${sc.dataType.simpleString})")
       SumProduct128(exprs(0), exprs(1),
         sc.eval().asInstanceOf[Number].intValue()).toAggregateExpression()
+    },
+    // min_by / max_by(payload, ordering) on the fixed-width ArgSelect
+    // aggregate when the ordering is a (masked) two-field struct of
+    // order-coded values; Spark's MinBy / MaxBy otherwise
+    MinBy -> { exprs =>
+      arity(MinBy, exprs, 2); ArgSelect.minBy(exprs(0), exprs(1))
+    },
+    MaxBy -> { exprs =>
+      arity(MaxBy, exprs, 2); ArgSelect.maxBy(exprs(0), exprs(1))
+    },
+    // running aggregate of a scan: (function-name literal, value,
+    // group keys...) — GroupByScan's fused replacement of a running
+    // window frame
+    Running -> { exprs =>
+      if (exprs.length < 2 || !exprs(0).foldable || exprs(0).dataType != StringType)
+        throw new IllegalArgumentException(
+          s"$Running takes a function-name literal, a value and the group keys")
+      RunningAggregate(exprs(0).eval().toString, exprs(1), exprs.drop(2))
     })
 
   def register(spark: SparkSession): Unit =

@@ -286,10 +286,15 @@ object Aggregations {
       // pairs — min_by on position alone picks whichever tied row a
       // partition merge saw first, a cross-run AND cross-engine flake.
       // Ties in (pos, value) carry equal values, so the pick is stable.
-      case "first"    => min_by(v, struct(p, v))
-      case "last"     => max_by(v, struct(p, v))
-      case "nanfirst" => min_by(vn, when(valid, struct(p, vn)))
-      case "nanlast"  => max_by(vn, when(valid, struct(p, vn)))
+      // minBy/maxBy run on graft.expressions.ArgSelect, a fixed-width
+      // hash aggregate over 64-bit order codes of the two struct fields,
+      // whenever value and position have codes; strings, wide decimals
+      // and struct positions stay on Spark's min_by/max_by (a
+      // SortAggregate). Same picks either way.
+      case "first"    => minBy(v, struct(p, v))
+      case "last"     => maxBy(v, struct(p, v))
+      case "nanfirst" => minBy(vn, when(valid, struct(p, vn)))
+      case "nanlast"  => maxBy(vn, when(valid, struct(p, vn)))
       // arg-extrema: first-wins tie-break (reference core.py:1057-1059).
       // argmin: row minimizing (value, pos) lexicographically;
       // argmax: row maximizing (value, -pos).
@@ -300,13 +305,13 @@ object Aggregations {
       // The extremum branch runs over the NaN-normalized ordering key so
       // Spark's NaN-sorts-above-+Inf rule can never leak in.
       case "argmin" =>
-        if (isFloaty(dt)) coalesce(min(when(isnan(v), p)), min_by(p, when(valid, struct(v, p))))
-        else min_by(p, struct(v, p))
+        if (isFloaty(dt)) coalesce(min(when(isnan(v), p)), minBy(p, when(valid, struct(v, p))))
+        else minBy(p, struct(v, p))
       case "argmax" =>
-        if (isFloaty(dt)) coalesce(min(when(isnan(v), p)), max_by(p, when(valid, struct(v, p * lit(-1)))))
-        else max_by(p, struct(v, p * lit(-1)))
-      case "nanargmin" => min_by(p, when(valid, struct(v, p)))
-      case "nanargmax" => max_by(p, when(valid, struct(v, p * lit(-1))))
+        if (isFloaty(dt)) coalesce(min(when(isnan(v), p)), maxBy(p, when(valid, struct(v, p * lit(-1)))))
+        else maxBy(p, struct(v, p * lit(-1)))
+      case "nanargmin" => minBy(p, when(valid, struct(v, p)))
+      case "nanargmax" => maxBy(p, when(valid, struct(v, p * lit(-1))))
       case "any" => bool_or(if (dt == BooleanType) v else v.cast(BooleanType))
       case "all" => bool_and(if (dt == BooleanType) v else v.cast(BooleanType))
       // Exact median/quantile: the reference cannot parallelize these
@@ -398,6 +403,14 @@ object Aggregations {
       call_function(graft.expressions.GraftFunctions.Percentile, vn, qs)
     else percentile(vn, qs)
   }
+
+  /** `min_by(payload, ordering)` / `max_by(...)` on the ArgSelect kernel
+    * where the ordering has order codes (requires
+    * GraftFunctions.register, as every caller of compile does). */
+  private[operators] def minBy(payload: Column, ordering: Column): Column =
+    call_function(graft.expressions.GraftFunctions.MinBy, payload, ordering)
+  private[operators] def maxBy(payload: Column, ordering: Column): Column =
+    call_function(graft.expressions.GraftFunctions.MaxBy, payload, ordering)
 
   /** minCount masking: NULL unless >= minCount valid values (reference
     * core.py:1145-1168 via the appended nanlen intermediate). */

@@ -126,11 +126,15 @@ object GroupByReduce {
     * tie-break (scipy.stats.mode convention). Two-stage plan:
     * per-(key,value) counts, then one more aggregate picking the value
     * minimizing (-count, value) lexicographically — max count, smallest
-    * value on ties. Both stages are ordinary hash aggregations (the first
-    * doubles as a map-side combine, so the shuffle carries distinct values
-    * only); no window, no extra sort — this scales to 100 TB as long as
-    * the per-group distinct-value count does. */
+    * value on ties. Both stages are hash aggregations (the first doubles
+    * as a map-side combine, so the shuffle carries distinct values only;
+    * the second is the fixed-width ArgSelect pick); no window, no extra
+    * sort — this scales to 100 TB as long as the per-group distinct-value
+    * count does. A value type without a 64-bit order code (string,
+    * decimal(p > 18), ...) keeps Spark's min_by in the second stage,
+    * which Spark plans as a SortAggregate. */
   def modePlan(df: DataFrame, by: Seq[String], a: Agg): DataFrame = {
+    graft.expressions.GraftFunctions.register(df.sparkSession) // the pick
     val dt      = df.schema(a.value).dataType
     val v       = col(a.value)
     val keyCols = by.map(col)
@@ -146,7 +150,7 @@ object GroupByReduce {
       .agg(count(lit(1)).as("__n"), hasNaN.as("__hasnan"))
       .groupBy(keyCols: _*)
       .agg(
-        min_by(v, when(v.isNotNull, struct(col("__n") * lit(-1L), v))).as(a.as),
+        Aggregations.minBy(v, when(v.isNotNull, struct(col("__n") * lit(-1L), v))).as(a.as),
         bool_or(col("__hasnan")).as("__hasnan"))
     if (a.func == "mode" && isFloaty(dt))
       picked

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Repetition-based quality metrics — the Gopher/MassiveText filter family
@@ -13,23 +13,12 @@ import org.apache.spark.sql.functions._
   * Everything is integer-valued (counts and character masses) — ratios are
   * left to the caller so grouped sums stay exact and order-independent.
   *
-  * Two shapes:
-  *   - [[repetitionStats]] / [[topNgramStats]]: relational — explode
-  *     tokens/grams, one (id, token) hash aggregation, one per-id
-  *     aggregation. Shuffles (id, token-or-gram, count) rows; the right
-  *     shape when the metric feeds a corpus-wide report or join.
-  *   - [[dupTokenStats]]: pure per-row expressions (zero shuffle) for the
-  *     in-pipeline gate — duplicate fraction only, since a full
-  *     most-common-token scan per row would interpret a lambda per token.
+  * Shape: [[repetitionStats]] / [[topNgramStats]] are relational —
+  * explode tokens/grams, one (id, token) hash aggregation, one per-id
+  * aggregation. They shuffle (id, token-or-gram, count) rows, the right
+  * shape when the metric feeds a corpus-wide report or join.
   */
 object Repetition {
-
-  /** Per-row duplicate-token counts as expressions: (n_tokens,
-    * n_distinct_tokens). dup fraction = 1 - n_distinct/n. */
-  def dupTokenStats(text: Column): (Column, Column) = {
-    val w = TextAnalysis.tokens(text)
-    (size(w).cast("long"), size(array_distinct(w)).cast("long"))
-  }
 
   /** Per-document token repetition profile:
     * {{{

@@ -43,7 +43,7 @@ class SumProduct128Spec extends AnyFunSuite {
   /** The r14 limb form over the same masked casts. */
   private def limbSums(df: DataFrame, by: Seq[String], xCol: String,
       yCol: String, exactScale: Int): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+    graft.expressions.GraftFunctions.register(df.sparkSession)
     def unscaled(c: Column) =
       call_function(graft.expressions.GraftFunctions.Unscaled, c)
     def s128(a: Column, b: Column, sc: Int) =
@@ -177,6 +177,67 @@ class SumProduct128Spec extends AnyFunSuite {
     assertBitIdentical(
       decimalSums(alt, Seq("g"), "x", "y", 2),
       limbSums(alt, Seq("g"), "x", "y", 2), Seq("g"))
+  }
+
+  /** A session where the decimal(38) reference sums return NULL on
+    * overflow instead of raising (ANSI off), as the decimal forms the limb
+    * kernel replaced did. */
+  private def nonAnsi() = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    s
+  }
+
+  test("limb sums past 10^38 or 2^127 give NULL, as the decimal(38) sum did") {
+    // unscaled 9.4e17 at scale 2: each square is 8.8e35 (scale 4).
+    // below: 100 rows, 8.8e37 — past 2^126, under 10^38, exact;
+    // edge: 120 rows, 1.06e38 — under 2^127, past 10^38;
+    // wrap / neg: 200 rows, ±1.77e38 — past 2^127 (the limbs wrap),
+    // spread over 4 partitions so the overflow can come in a merge
+    val x = 9.4e15
+    val rows = Seq.fill(100)(("below", x, x)) ++ Seq.fill(120)(("edge", x, x)) ++
+      Seq.fill(200)(("wrap", x, x)) ++ Seq.fill(200)(("neg", -x, x))
+    for (ansi <- Seq(false, true)) {
+      val s = nonAnsi()
+      s.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      val df = s.createDataFrame(rows).toDF("g", "x", "y").repartition(4)
+      val got = limbSums(df, Seq("g"), "x", "y", 2).collect()
+        .map(r => r.getString(0) -> r.get(4)).toMap // sxy
+      assert(got("below") != null && got("edge") == null && got("wrap") == null &&
+        got("neg") == null, s"ansi=$ansi: $got")
+    }
+    val s = nonAnsi()
+    val df = s.createDataFrame(rows).toDF("g", "x", "y").repartition(4)
+    assertBitIdentical(decimalSums(df, Seq("g"), "x", "y", 2),
+      limbSums(df, Seq("g"), "x", "y", 2), Seq("g"))
+  }
+
+  test("covCorrBy over epoch-microsecond decimals whose sum of squares passes 2^127") {
+    // |x| ~ 1.7e15 (epoch micros) at scale 2: unscaled 1.7e17, squares
+    // 2.9e34, and 14,000 of them (4.0e38) pass even 2^128. Without the
+    // overflow slot the limb sum wrapped to a plausible positive 0.6e38,
+    // the signs cancel in Σx, and corr came out finite.
+    val s = nonAnsi()
+    val rows = (0 until 14000).map(i =>
+      ("t", (if (i % 2 == 0) 1.0 else -1.0) * (1.7e15 + i * 1000.0), (i % 10).toDouble))
+    val df = s.createDataFrame(rows).toDF("g", "x", "y").repartition(3)
+    val got = FeatureScaling.covCorrBy(df, Seq("g"), "x", "y").select("g", "n_pairs", "cov", "corr")
+    val r = got.head()
+    assert(r.getLong(1) == 14000L && !r.isNullAt(2) && r.isNullAt(3), r.toString)
+    val ref = {
+      val agg = decimalSums(df, Seq("g"), "x", "y", 2)
+      val n = col("n_pairs").cast(DoubleType)
+      val denom = n - lit(1.0)
+      val cov = when(col("n_pairs") > 1, (col("sxy") - col("sx") * col("sy") / n) / denom)
+      val vx = when(col("n_pairs") > 1,
+        greatest((col("sxx") - col("sx") * col("sx") / n) / denom, lit(0.0)))
+      val vy = when(col("n_pairs") > 1,
+        greatest((col("syy") - col("sy") * col("sy") / n) / denom, lit(0.0)))
+      agg.withColumn("cov", cov)
+        .withColumn("corr", when(vx > 0 && vy > 0, cov / sqrt(vx * vy)))
+        .select("g", "n_pairs", "cov", "corr")
+    }
+    assertBitIdentical(ref, got, Seq("g"))
   }
 
   test("graft_sum128 rejects a non-long argument at analysis") {

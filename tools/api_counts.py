@@ -16,6 +16,14 @@ Usage:
     python3 tools/api_counts.py                      # all of src/main
     python3 tools/api_counts.py src/main/scala/graft/operators/LanguageModel.scala
     python3 tools/api_counts.py --defs FILE...       # also list each def
+    python3 tools/api_counts.py --unreached          # public defs no code calls
+
+--unreached lists the counted defs of src/main/scala/graft/operators and
+src/main/scala/graft/streaming whose name occurs nowhere else in the code
+of src/main: comments and string literals do not count, nor does any line
+that declares a def of that name. A name that also occurs as another
+identifier (a common word, a Spark method) reads as reached, so the list
+is a lower bound.
 
 Run it from the root of a checkout; for a before/after receipt run it
 once in the parent's checkout and once in the change's.
@@ -202,15 +210,45 @@ def scan(path):
     return lines, defs
 
 
+UNREACHED_DIRS = (os.path.join("src", "main", "scala", "graft", "operators"),
+                  os.path.join("src", "main", "scala", "graft", "streaming"))
+
+
+def unreached(files):
+    """(file, line, name) of every counted def under UNREACHED_DIRS with
+    no code reference in `files` outside the lines declaring it."""
+    code_lines = {f: strip_code(open(f, encoding="utf-8").read()).split("\n")
+                  for f in files}
+    out = []
+    for f in files:
+        if not f.startswith(UNREACHED_DIRS):
+            continue
+        for name, _, _, lineno in scan(f)[1]:
+            word = re.compile(r"(?<![\w$])" + re.escape(name) + r"(?![\w$])")
+            decl = re.compile(r"\bdef\s+" + re.escape(name) + r"(?![\w$])")
+            if not any(word.search(ln) and not decl.search(ln)
+                       for lines in code_lines.values() for ln in lines):
+                out.append((f, lineno, name))
+    return out
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("files", nargs="*")
     ap.add_argument("--defs", action="store_true",
                     help="list every counted def with its parameter counts")
+    ap.add_argument("--unreached", action="store_true",
+                    help="list public operator/streaming defs that no code in src/main calls")
     a = ap.parse_args()
     files = a.files or sorted(
         os.path.join(d, f) for d, _, fs in os.walk(os.path.join("src", "main"))
         for f in fs if f.endswith(".scala"))
+    if a.unreached:
+        found = unreached(files)
+        for f, ln, name in found:
+            print(f"{f}:{ln}: {name}")
+        print(f"{len(found)} unreached public defs")
+        return 0
     tot = [0, 0, 0, 0]
     print(f"{'lines':>7} {'defs':>5} {'params':>6} {'settable':>8}  file")
     for f in files:
