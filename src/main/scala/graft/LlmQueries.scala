@@ -595,9 +595,8 @@ object LlmQueries {
         val p = s"/tmp/graft_ndidx_del_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
         val full = Dedup.buildNearDupIndex(docs.where(col("doc_id") % 2 === 0),
           "doc_id", "text", n = 3, bands = 32, rows = 4)
-        val afterDelete = Dedup.removeFromIndex(full,
-          docs.where(col("doc_id") % 4 === 0).select("doc_id"), "doc_id")
-        Dedup.compactIndex(afterDelete, p)
+        full.remove(docs.where(col("doc_id") % 4 === 0).select("doc_id"))
+          .compact(p)
         p
       })
       val idx = Dedup.NearDupIndex.read(s, dir)
@@ -606,7 +605,7 @@ object LlmQueries {
         .select("doc_id", "source")
         .orderBy("doc_id")
     }),
-    // the DAILY LOOP end-to-end (appendToIndex): corpus index → day-1
+    // the DAILY LOOP end-to-end (NearDupIndex.append): corpus index → day-1
     // probe → roll the index forward with day-1 survivors ONLY → day-2
     // probe. Day-2 survivors must clear corpus, day-1 survivors, and
     // smaller-id day-2 rows; day-1 REJECTS never enter the index (the
@@ -622,7 +621,7 @@ object LlmQueries {
         idx0raw.n, idx0raw.bands, idx0raw.rows)
       val s1 = Dedup.dedupIncrementalNear(idx0, docs.where(col("doc_id") % 3 === 1),
         "doc_id", "text", threshold = 0.5, broadcastBatch = true).cache()
-      val idx1 = Dedup.appendToIndex(idx0, s1, "doc_id", "text")
+      val idx1 = idx0.append(s1, "doc_id", "text")
       val s2 = Dedup.dedupIncrementalNear(idx1, docs.where(col("doc_id") % 3 === 2),
         "doc_id", "text", threshold = 0.5, broadcastBatch = true)
       s1.select(col("doc_id"), lit(1).as("day"), col("source"))
@@ -657,12 +656,12 @@ object LlmQueries {
           n = 3, threshold = 0.5, bands = 32, rows = 4),
         iterations = 3)
         .orderBy("id")),
-    // run-to-convergence labels (capped driver loop; stops when no
-    // label moves): at the fixpoint this is the EXACT connected
-    // components, so the oracle pins it by over-provisioned unrolling
-    // (6 rounds >= any realized depth on this corpus)
+    // run-to-convergence labels (capped driver loop; stops at the
+    // fixpoint): there they are the EXACT connected components, so the
+    // oracle pins them by over-provisioned unrolling of label
+    // propagation (6 rounds >= any realized depth on this corpus)
     "q_dedup_clusters_conv" -> ((s, d) => {
-      val (labels, _, converged) = Dedup.dupClustersConverged(
+      val (labels, _, converged) = Dedup.ccStarContraction(
         Dedup.nearDupPairs(T(s, d, "documents"), "doc_id", "text",
           n = 3, threshold = 0.5, bands = 32, rows = 4),
         maxIters = 10)
@@ -674,7 +673,7 @@ object LlmQueries {
     // component DIAMETER; star contraction halves tree heights every
     // alternation, so pathological revision chains cannot blow up the
     // round count). At the fixpoint the labels ARE the exact connected
-    // components, identical to dupClustersConverged's — the oracle is
+    // components, identical to q_dedup_clusters_conv's — the oracle is
     // the same over-provisioned unrolled replay.
     "q_cc_star" -> ((s, d) => {
       val (labels, _, converged) = Dedup.ccStarContraction(
@@ -778,8 +777,7 @@ object LlmQueries {
         val p = s"/tmp/graft_postidx_app_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
         val base = Search.buildPostingsIndex(
           docs.where(col("doc_id") < 400), "doc_id", "text")
-        Search.appendToPostings(base, docs.where(col("doc_id") >= 400), "text")
-          .write(p)
+        base.append(docs.where(col("doc_id") >= 400), "doc_id", "text").write(p)
         p
       })
       Search.substrSearch(docs, Search.PostingsIndex.read(s, dir).postings,
@@ -804,7 +802,8 @@ object LlmQueries {
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(days)
       runForeachBatchReplay(
-        StreamingOps.postingsIngestAppend(stream, dir, "doc_id", "text"),
+        StreamingOps.indexIngestAppend(stream, dir, Search.PostingsIndex,
+          "doc_id", "text"),
         "graft_stream_postings")
       Search.substrSearch(docs, Search.PostingsIndex.read(s, dir).postings,
           "doc_id", "text", "spark hash")
@@ -819,9 +818,8 @@ object LlmQueries {
       val dir = postingsDelDirCache.computeIfAbsent(d, _ => {
         val p = s"/tmp/graft_postidx_del_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
         val full = Search.buildPostingsIndex(docs, "doc_id", "text")
-        Search.compactPostings(
-          Search.removeFromPostings(full,
-            docs.where(col("doc_id") % 10 === 0).select("doc_id")), p)
+        full.remove(docs.where(col("doc_id") % 10 === 0).select("doc_id"))
+          .compact(p)
         p
       })
       Search.substrSearch(docs, Search.PostingsIndex.read(s, dir).postings,
@@ -1087,9 +1085,8 @@ object LlmQueries {
         val (cents, bounds) = ivfSq8IndexOf(d, corpus)
         val full = Similarity.buildSq8Index(corpus, "vec_id", "embedding",
           dim = 64, cents, bounds)
-        Similarity.compactSq8Index(
-          Similarity.removeFromSq8Index(full,
-            corpus.where(col("vec_id") % 7 === 0).select("vec_id")), p)
+        full.remove(corpus.where(col("vec_id") % 7 === 0).select("vec_id"))
+          .compact(p)
         p
       })
       Similarity.Sq8Index.read(s, dir)
@@ -1123,10 +1120,9 @@ object LlmQueries {
       val e = T(s, d, "embeddings")
       val corpus = e.where(col("vec_id") >= 5)
       val (cents, books) = ivfPqIndexOf(d, corpus)
-      val idx = Similarity.appendToAnnIndex(
-        Similarity.buildAnnIndex(corpus.where(col("vec_id") % 3 =!= 0),
-          "vec_id", "embedding", dim = 64, m = 4, cents, books),
-        corpus.where(col("vec_id") % 3 === 0), "embedding")
+      val idx = Similarity.buildAnnIndex(corpus.where(col("vec_id") % 3 =!= 0),
+          "vec_id", "embedding", dim = 64, m = 4, cents, books)
+        .append(corpus.where(col("vec_id") % 3 === 0), "vec_id", "embedding")
       Similarity.annTopK(idx, e.where(col("vec_id") < 5), "embedding",
           nprobe = 2, topK = 10)
         .orderBy("qid", "rank")
@@ -1144,9 +1140,8 @@ object LlmQueries {
         val (cents, books) = ivfPqIndexOf(d, corpus)
         val full = Similarity.buildAnnIndex(corpus, "vec_id", "embedding",
           dim = 64, m = 4, cents, books)
-        Similarity.compactAnnIndex(
-          Similarity.removeFromAnnIndex(full,
-            corpus.where(col("vec_id") % 7 === 0).select("vec_id")), p)
+        full.remove(corpus.where(col("vec_id") % 7 === 0).select("vec_id"))
+          .compact(p)
         p
       })
       Similarity.annTopK(Similarity.AnnIndex.read(s, dir),
@@ -1176,7 +1171,8 @@ object LlmQueries {
       val stream = s.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", "1").parquet(days)
       runForeachBatchReplay(
-        StreamingOps.annIngestAppend(stream, dir, "embedding"),
+        StreamingOps.indexIngestAppend(stream, dir, Similarity.AnnIndex,
+          "vec_id", "embedding"),
         "graft_stream_ann")
       Similarity.annTopK(Similarity.AnnIndex.read(s, dir),
           e.where(col("vec_id") < 5), "embedding", nprobe = 2, topK = 10)
@@ -1200,7 +1196,8 @@ object LlmQueries {
       val stream = s.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", "1").parquet(days)
       runForeachBatchReplay(
-        StreamingOps.sq8IngestAppend(stream, dir, "embedding"),
+        StreamingOps.indexIngestAppend(stream, dir, Similarity.Sq8Index,
+          "vec_id", "embedding"),
         "graft_stream_sq8")
       Similarity.Sq8Index.read(s, dir)
         .topK(e.where(col("vec_id") < 5), "embedding", nprobe = 2, k = 10)
@@ -2098,7 +2095,7 @@ object LlmQueries {
       val raw = s.readStream.schema(docs.schema)
         .parquet(s"$d/{documents.parquet}")
         .where(col("doc_id") % 2 === 1)
-      // AT-REST APPEND sink (the postingsIngestAppend family): seed the
+      // AT-REST APPEND sink (the indexIngestAppend family): seed the
       // index dir with the even-id corpus sketch; each batch probes the
       // DIRECTORY and appends only its survivors' sketch rows; fresh
       // dir per call so bench reps never double-append

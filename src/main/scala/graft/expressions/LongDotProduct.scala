@@ -1,6 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -284,8 +285,14 @@ object GraftFunctions {
       RunningAggregate(exprs(0).eval().toString, exprs(1), exprs.drop(2))
     })
 
-  def register(spark: SparkSession): Unit =
+  /** Registers each builder the session does not resolve yet — a
+    * session built with [[graft.GraftExtensions]] already has them all —
+    * so repeat calls replace nothing. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
     }
+  }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Each iteration collects exactly one row (the argmax pair — the
   * kmeans/qcut bounded-collect convention) and localCheckpoints the
   * vocab frame so lineage stays one round deep (the
-  * dupClustersConverged rule). [[bpeLearn]] re-aggregates ALL
+  * ccStarContraction rule). [[bpeLearn]] re-aggregates ALL
   * adjacent-pair counts every round — exact and simple, the reference
   * form; [[bpeLearnDelta]] is the production trainer: pair-count
   * DELTAS between rounds (only words containing the merged pair

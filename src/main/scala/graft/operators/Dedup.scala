@@ -200,35 +200,41 @@ object Dedup {
   }
 
   /** Persistable MinHash-LSH index of a corpus — the state that makes
-    * NEAR-dup dedup incremental (VERDICT r7 #4). Two compact tables:
-    * `buckets` (id, band, bucket) — the banded LSH keys, `bands` rows of
-    * ~24 bytes per doc — and `shingles` (id, sh) — the distinct-shingle
-    * arrays the exact-Jaccard verify joins against. Both derive
-    * deterministically from content, so the index composes across days:
-    * append today's survivors' rows and the index IS the index of the
-    * grown corpus — history is never re-sketched. The sketch parameters
-    * ride along so a probe cannot silently mismatch the banding.
-    *
-    * Persist with [[NearDupIndex.write]] (plain parquet — at 100 TB,
-    * partition/bucket the buckets table by `bucket` so daily probes
-    * co-locate); reload with [[NearDupIndex.read]]. */
+    * NEAR-dup dedup incremental (VERDICT r7 #4), on the
+    * [[AtRestIndex]] lifecycle. Per-row tables: `buckets` (id, band,
+    * bucket) — the banded LSH keys, `bands` rows of ~24 bytes per doc —
+    * and `shingles` (id, sh) — the distinct-shingle arrays the
+    * exact-Jaccard verify joins against; both are keyed by the fixed
+    * column `id`. Fit state: `meta` (n, bands, rows), so a probe cannot
+    * silently mismatch the banding. Encoder: [[buildNearDupIndex]]'s
+    * shingle + [[minhashBands]] pass at the index's parameters. At
+    * 100 TB, partition/bucket the buckets table by `bucket` so daily
+    * probes co-locate. */
   final case class NearDupIndex(
       buckets: DataFrame,
       shingles: DataFrame,
       n: Int,
       bands: Int,
-      rows: Int) {
-    def write(dir: String): Unit = {
-      buckets.write.mode("overwrite").parquet(s"$dir/buckets")
-      shingles.write.mode("overwrite").parquet(s"$dir/shingles")
-      val s = buckets.sparkSession
-      import s.implicits._
-      Seq((n, bands, rows)).toDF("n", "bands", "rows")
-        .write.mode("overwrite").parquet(s"$dir/meta")
+      rows: Int) extends AtRestIndex[NearDupIndex] {
+    private[graft] def rowTables = Seq("buckets" -> buckets, "shingles" -> shingles)
+
+    private[graft] def encode(batch: DataFrame, idCol: String, textCol: String) =
+      buildNearDupIndex(batch, idCol, textCol, n, bands, rows).rowTables.map(_._2)
+
+    protected def fitTables(spark: org.apache.spark.sql.SparkSession) = {
+      import spark.implicits._
+      Seq("meta" -> Seq((n, bands, rows)).toDF("n", "bands", "rows"))
     }
+
+    protected def idColumn = "id"
+
+    protected def withRows(tables: Seq[DataFrame]) =
+      copy(buckets = tables(0), shingles = tables(1))
+
+    protected def reader = NearDupIndex
   }
 
-  object NearDupIndex {
+  object NearDupIndex extends AtRestIndex.Reader[NearDupIndex] {
     def read(spark: org.apache.spark.sql.SparkSession, dir: String): NearDupIndex = {
       val m = Parquet.read(spark, s"$dir/meta").head()
       NearDupIndex(
@@ -254,73 +260,6 @@ object Dedup {
     NearDupIndex(bandedBuckets(sh, bands, rows), sh, n, bands, rows)
   }
 
-  /** Roll a [[NearDupIndex]] forward with a batch's accepted survivors —
-    * the daily-loop closer the [[dedupIncrementalNear]] docstring
-    * promises: after dedup accepts today's survivors, the index of the
-    * GROWN corpus is the old index plus the survivors' sketch rows, and
-    * nothing historical is touched. Because signatures and banding are
-    * content-keyed and per-row, append ≡ from-scratch build on the
-    * union, row for row (DedupSpec pins probe-result equality) — so a
-    * 100 TB pipeline only ever sketches each document once, on the day
-    * it arrives. On disk this is a parquet APPEND of the two tables
-    * (both partition-friendly); here the composed frames are returned
-    * for the caller to probe or [[NearDupIndex.write]]. */
-  def appendToIndex(
-      index: NearDupIndex,
-      survivors: DataFrame,
-      idCol: String,
-      textCol: String): NearDupIndex = {
-    val add = buildNearDupIndex(survivors, idCol, textCol,
-      index.n, index.bands, index.rows)
-    NearDupIndex(
-      index.buckets.unionByName(add.buckets),
-      index.shingles.unionByName(add.shingles),
-      index.n, index.bands, index.rows)
-  }
-
-  /** Delete documents from a [[NearDupIndex]] — the maintenance half of
-    * the daily loop (VERDICT r8 #3: takedowns, GDPR erasure, licensing
-    * pull-backs). Drops every bucket and shingle row of the given ids
-    * with two anti-joins; because the index is strictly per-row state
-    * (signatures and banding are content-keyed, no cross-document
-    * aggregates), removal is EXACT: the result is row-identical to an
-    * index that never contained those documents, so
-    * removed-then-probed ≡ never-present (pinned in DedupSpec). Ids
-    * absent from the index are a no-op.
-    *
-    * The returned frames carry the anti-join lazily — cheap to probe a
-    * few times, but a long chain of daily deletions accumulates
-    * lineage and keeps dead rows on disk. Fold it flat with
-    * [[compactIndex]] at whatever cadence the storage budget sets.
-    * `removeIds` is typically a small takedown list — Catalyst/AQE
-    * broadcasts it; for a bulk purge the anti-joins shuffle on id,
-    * which is exactly the rewrite compaction would pay anyway. */
-  def removeFromIndex(
-      index: NearDupIndex,
-      removeIds: DataFrame,
-      idCol: String): NearDupIndex = {
-    val ids = removeIds.select(col(idCol).as("id")).distinct()
-    NearDupIndex(
-      index.buckets.join(ids, Seq("id"), "left_anti"),
-      index.shingles.join(ids, Seq("id"), "left_anti"),
-      index.n, index.bands, index.rows)
-  }
-
-  /** Rewrite-compaction for a [[NearDupIndex]]: materialize the current
-    * (post-[[removeFromIndex]] / post-[[appendToIndex]]) state as plain
-    * parquet at `dir` and return the re-read index — dead rows gone
-    * from disk, lineage truncated to a scan. `dir` must differ from the
-    * directory the index was read from (Spark cannot overwrite a
-    * parquet source it is reading); production keeps the usual
-    * versioned-directory swap. One exchange-free write per table at
-    * 100 TB — both tables rewrite as partition-local scans (partition
-    * the buckets table by `bucket` on the way out so probes co-locate,
-    * as the [[NearDupIndex]] docstring prescribes). */
-  def compactIndex(index: NearDupIndex, dir: String): NearDupIndex = {
-    index.write(dir)
-    NearDupIndex.read(index.buckets.sparkSession, dir)
-  }
-
   /** Incremental-ingestion NEAR-dup dedup — the daily MinHash shape
     * (VERDICT r7 #4), the near-dup twin of [[dedupIncremental]]: the
     * rows of `batch` that are near-duplicates (shingle-Jaccard >=
@@ -343,9 +282,9 @@ object Dedup {
     * batch sketch broadcast so the corpus-sized index side is never
     * shuffled at all (the [[crossNearDupPairs]] broadcastRight rule:
     * opt-in, because an unconditional hint OOMs on a large batch).
-    * After accepting survivors, append their sketch rows to the stored
-    * index ([[buildNearDupIndex]] over the survivors — or reuse the
-    * probe's own `shB`/`bB` tables) to roll the corpus forward.
+    * After accepting survivors, append them to the stored index
+    * ([[AtRestIndex.append]] — or union the probe's own `shB`/`bB`
+    * tables) to roll the corpus forward.
     *
     * The batch sketch's two tables are held ([[CacheScope.hold]]).
     * `preSketch` (r13 optimization): the batch's (shingle table, banded
@@ -798,7 +737,7 @@ object Dedup {
     * per round, k rounds total; no driver-side state, no collect. The
     * pair projection and edge list are persisted for the duration of
     * the round loop and each round's label table is lineage-truncated
-    * ([[dupClustersConverged]]'s localCheckpoint rule), so the k-round
+    * (localCheckpoint), so the k-round
     * lineage never re-runs the expensive pair generation and the final
     * plan stays one join deep regardless of k.
     * [[dupClustersAudited]] additionally reports which labels still
@@ -830,13 +769,49 @@ object Dedup {
       idB: String = "id_b"): (DataFrame, DataFrame) = {
     require(iterations >= 1,
       s"dupClusters needs iterations >= 1 (got $iterations)")
-    minLabelRounds(pairs, idA, idB) { (seed, round) =>
-      var labels = seed
-      var prev = labels
-      for (_ <- 1 to iterations) {
-        prev = labels
-        labels = round(labels)
-      }
+    CacheScope.releasing {
+      // The edge plan references the pair table THREE times (both
+      // directions of the symmetric union + the self-loop distinct), so
+      // the (id_a, id_b) projection is held FIRST: without it, the
+      // caller's whole pair-generation subtree — typically a full
+      // MinHash/LSH candidate join — would re-execute once per reference
+      // when the edge cache materializes (measured 3x the pair cost in
+      // the x8 stress probe).
+      val p = CacheScope.hold(pairs.select(col(idA).as("src"), col(idB).as("dst")))
+      // symmetric edges + a self-loop per node: min over {own label} ∪
+      // {neighbor labels} is then ONE join + ONE map-side-combined min
+      // aggregation per round (the self-loop carries the node's own label
+      // through the same path), instead of a neighbor-min join PLUS a
+      // join-back against the previous labels — halves the per-round
+      // stage count, which is the wall-clock floor for a composed
+      // metadata-sized plan
+      val sym = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
+      val edges = CacheScope.hold(
+        sym.union(sym.select(col("src")).distinct()
+          .select(col("src"), col("src").as("dst"))))
+      // Per-round LINEAGE TRUNCATION (VERDICT r7 #3): a plain persist
+      // leaves each round's logical plan re-referencing the edge subtree
+      // and every earlier round, so the final plan grows multiplicatively
+      // with the round count (the r7 golden pins showed 62 Exchanges / 48
+      // broadcasts at k=3; >1000 Exchanges after a handful of converging
+      // rounds; Catalyst analysis cost, not runtime, is what blows up).
+      // localCheckpoint materializes the round and REPLACES the lineage
+      // with the checkpointed RDD, keeping every round one join deep.
+      // Trade (documented Spark semantics): localCheckpoint data does not
+      // survive executor loss — on an unreliable cluster set a checkpoint
+      // dir and swap in .checkpoint(). Rounds thereby evaluate eagerly
+      // inside the loop, so the held edges can go once it returns; state
+      // is label-table-sized per round (distinct pair ids).
+      val seed = edges.where(col("src") === col("dst"))
+        .select(col("src").as("id"), col("src").as("lbl"))
+        .localCheckpoint()
+      def round(labels: DataFrame): DataFrame = edges
+        .join(labels.select(col("id").as("__nid"), col("lbl").as("__nlbl")),
+          col("dst") === col("__nid"))
+        .groupBy(col("src").as("id")).agg(min(col("__nlbl")).as("lbl"))
+        .localCheckpoint()
+      val prev = (1 until iterations).foldLeft(seed)((l, _) => round(l))
+      val labels = round(prev)
       val audit = prev.select(col("id"), col("lbl").as("prev_label"))
         .join(labels.select(col("id"), col("lbl").as("cluster_id")), "id")
         .where(col("prev_label") =!= col("cluster_id"))
@@ -844,94 +819,11 @@ object Dedup {
     }
   }
 
-  /** [[dupClusters]] run TO CONVERGENCE with a safety cap: propagation
-    * rounds continue until no label moves (the [[dupClustersAudited]]
-    * fixpoint test — one label-table-sized count per round, the
-    * kmeansFit driver-loop shape) or `maxIters` rounds elapse. Returns
-    * (labels, roundsRun, converged). At the fixpoint the labeling is
-    * the EXACT connected-component answer (min-propagation is
-    * monotone), so an oracle can pin the result by over-provisioned
-    * unrolling: any unroll >= the realized round count replays it.
-    * Real duplicate clusters are shallow — expect convergence in a
-    * handful of rounds; `converged = false` means the cap bound first
-    * (raise it, or treat labels as the bounded-k result). */
-  def dupClustersConverged(
-      pairs: DataFrame,
-      maxIters: Int,
-      idA: String = "id_a",
-      idB: String = "id_b"): (DataFrame, Int, Boolean) = {
-    require(maxIters >= 1, s"dupClustersConverged needs maxIters >= 1 (got $maxIters)")
-    minLabelRounds(pairs, idA, idB) { (seed, round) =>
-      var labels = seed
-      var rounds = 0
-      var moved = true
-      while (moved && rounds < maxIters) {
-        val next = round(labels)
-        moved = next.join(
-            labels.select(col("id"), col("lbl").as("__prev")), "id")
-          .where(col("__prev") =!= col("lbl"))
-          .limit(1).count() > 0
-        labels = next
-        rounds += 1
-      }
-      (labels.select(col("id"), col("lbl").as("cluster_id")), rounds, !moved)
-    }
-  }
-
-  /** The min-label propagation core of [[dupClustersAudited]] and
-    * [[dupClustersConverged]]: builds the symmetric edge list of `pairs`
-    * and the seed labels (every node labeled with its own id), then hands
-    * `loop` the seed and the one-round step; `loop` decides how many
-    * rounds to run. The pair projection and edge list are held for the
-    * loop and released when it returns. */
-  private def minLabelRounds[T](pairs: DataFrame, idA: String, idB: String)(
-      loop: (DataFrame, DataFrame => DataFrame) => T): T = CacheScope.releasing {
-    // The edge plan references the pair table THREE times (both
-    // directions of the symmetric union + the self-loop distinct), so
-    // the (id_a, id_b) projection is held FIRST: without it, the
-    // caller's whole pair-generation subtree — typically a full
-    // MinHash/LSH candidate join — would re-execute once per reference
-    // when the edge cache materializes (measured 3x the pair cost in
-    // the x8 stress probe).
-    val p = CacheScope.hold(pairs.select(col(idA).as("src"), col(idB).as("dst")))
-    // symmetric edges + a self-loop per node: min over {own label} ∪
-    // {neighbor labels} is then ONE join + ONE map-side-combined min
-    // aggregation per round (the self-loop carries the node's own label
-    // through the same path), instead of a neighbor-min join PLUS a
-    // join-back against the previous labels — halves the per-round
-    // stage count, which is the wall-clock floor for a composed
-    // metadata-sized plan
-    val sym = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-    val edges = CacheScope.hold(
-      sym.union(sym.select(col("src")).distinct()
-        .select(col("src"), col("src").as("dst"))))
-    // Per-round LINEAGE TRUNCATION (VERDICT r7 #3): a plain persist
-    // leaves each round's logical plan re-referencing the edge subtree
-    // and every earlier round, so the final plan grows multiplicatively
-    // with the round count (the r7 golden pins showed 62 Exchanges / 48
-    // broadcasts at k=3; >1000 Exchanges after a handful of converging
-    // rounds; Catalyst analysis cost, not runtime, is what blows up).
-    // localCheckpoint materializes the round and REPLACES the lineage
-    // with the checkpointed RDD, keeping every round one join deep.
-    // Trade (documented Spark semantics): localCheckpoint data does not
-    // survive executor loss — on an unreliable cluster set a checkpoint
-    // dir and swap in .checkpoint(). Rounds thereby evaluate eagerly
-    // inside the loop, so the held edges can go once it returns; state
-    // is label-table-sized per round (distinct pair ids).
-    val seed = edges.where(col("src") === col("dst"))
-      .select(col("src").as("id"), col("src").as("lbl"))
-      .localCheckpoint()
-    loop(seed, labels => edges
-      .join(labels.select(col("id").as("__nid"), col("lbl").as("__nlbl")),
-        col("dst") === col("__nid"))
-      .groupBy(col("src").as("id")).agg(min(col("__nlbl")).as("lbl"))
-      .localCheckpoint())
-  }
-
   /** Connected components by ALTERNATING STAR CONTRACTION (the
     * large-star/small-star algorithm of Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC'14) — the scale
-    * alternative to [[dupClustersConverged]]'s min-label propagation.
+    * alternative to [[dupClusters]]' min-label propagation, and the
+    * run-to-convergence connected-components operator.
     * Why it matters at 100 TB: label propagation needs one round per
     * hop of component DIAMETER, and a pathological crawl graph (long
     * chains of pairwise-similar revisions) can realize diameters in
@@ -957,16 +849,19 @@ object Dedup {
     * Fixpoint test per round: next ⊆ prev (one except + limit) with
     * equal counts — distinct canonical sets, so subset + cardinality
     * IS equality. Per-round localCheckpoint truncates lineage (the
-    * [[dupClustersConverged]] rule); state is edge-table-sized and
+    * [[dupClusters]] rule); state is edge-table-sized and
     * SHRINKS monotonically in practice as stars collapse.
     *
-    * Same input/output contract as [[dupClustersConverged]]: any
-    * (id_a, id_b) pair table in; (id, cluster_id = component min) for
-    * every pair-participating id out, plus (roundsRun, converged).
-    * At both operators' fixpoints the labelings are IDENTICAL — the
-    * q_cc_star oracle reuses q_dedup_clusters_conv's unrolled replay
-    * verbatim, and DedupSpec pins cross-operator equality on random
-    * graphs. */
+    * Same input/output contract as [[dupClusters]]: any (id_a, id_b)
+    * pair table in; (id, cluster_id = component min) for every
+    * pair-participating id out, plus (roundsRun, converged).
+    * `converged = false` means the `maxIters` cap bound first (raise
+    * it, or treat the labels as partial). At the fixpoint the labels
+    * are the exact connected components — what [[dupClusters]] gives
+    * at any k >= the largest component diameter — so q_cc_star and
+    * q_dedup_clusters_conv share one over-provisioned unrolled
+    * replay as oracle, and DedupSpec pins equality with a union-find
+    * on random graphs. */
   def ccStarContraction(
       pairs: DataFrame,
       maxIters: Int,
@@ -1033,7 +928,7 @@ object Dedup {
       .groupBy(col("id")).agg(min(col("__lbl")).as("cluster_id"))
     // ids present ONLY as self-pairs are singleton components: label
     // them with themselves so the output contract truly equals
-    // dupClustersConverged's (which reaches the same rows via injected
+    // dupClusters' (which reaches the same rows via injected
     // self-loops; ADVICE r8). The anti-join is bounded by the
     // self-pair id count — empty for nearDupPairs-shaped inputs.
     val selfOnly = pairs.where(col(idA) === col(idB))

@@ -53,55 +53,52 @@ object Search {
           i => col(textCol).substr(i, lit(GramLen))))).as("gram"))
       .select(col("gram"), col("id"))
 
-  /** Persisted trigram posting index — the search twin of
-    * [[graft.operators.Dedup.NearDupIndex]] / [[graft.operators
-    * .Similarity.AnnIndex]] (VERDICT r9 #3): the (gram, id) posting
-    * table at rest plus a params-meta table (id_col, gram_len) so a
-    * probe cannot silently mismatch the indexing. Postings are strictly
-    * PER-ROW state (a document's grams derive from its text alone, no
-    * cross-document aggregates), so maintenance is exact:
-    * append ≡ from-scratch build on the union, row for row, and
-    * delete ≡ never-present (both pinned in SearchSpec) — a corpus that
-    * ingests daily indexes each document once, on arrival, and honors
-    * takedowns by dropping the id's posting rows. At 100 TB,
-    * partition/bucket the postings by `gram` on the way out so probes
-    * co-locate (the class doc's at-rest prescription). */
-  final case class PostingsIndex(postings: DataFrame, idCol: String, gramLen: Int) {
-    def write(dir: String): Unit = {
-      postings.write.mode("overwrite").parquet(s"$dir/postings")
-      writeMeta(dir)
+  /** Persisted trigram posting index on the [[AtRestIndex]] lifecycle
+    * (VERDICT r9 #3). Per-row table: `postings` (gram, id), keyed by
+    * `id`. Fit state: `meta` (id_col, gram_len), so a probe cannot
+    * silently mismatch the indexing. Encoder: [[trigramPostings]]. At
+    * 100 TB, partition/bucket the postings by `gram` so probes co-locate
+    * ([[writePartitioned]]). */
+  final case class PostingsIndex(postings: DataFrame, idCol: String, gramLen: Int)
+      extends AtRestIndex[PostingsIndex] {
+    private[graft] def rowTables = Seq("postings" -> postings)
+
+    private[graft] def encode(batch: DataFrame, idCol: String, textCol: String) =
+      Seq(trigramPostings(batch, idCol, textCol))
+
+    protected def fitTables(spark: org.apache.spark.sql.SparkSession) = {
+      import spark.implicits._
+      Seq("meta" -> Seq((idCol, gramLen)).toDF("id_col", "gram_len"))
     }
 
-    /** The class doc's at-rest prescription made concrete: postings
-      * PARTITIONED BY `gram` on disk, so a probe's literal
-      * `gram IN (...)` filter prunes the scan to exactly the pattern's
-      * |pattern| − [[GramLen]] + 1 gram directories — the corpus-sized
-      * remainder is never listed, read, or filtered (SearchSpec pins
-      * PartitionFilters + the pruned partition count). Layout trade vs
-      * [[write]]: one directory per distinct gram (bounded by the
-      * alphabet's trigram space), each internally id-clustered — right
-      * for the read-mostly probe path; use [[write]] for compaction
-      * intermediates. */
-    def writePartitioned(dir: String): Unit = {
+    protected def idColumn = "id"
+
+    protected def withRows(tables: Seq[DataFrame]) = copy(postings = tables.head)
+
+    protected def reader = PostingsIndex
+
+    /** The at-rest prescription made concrete: postings PARTITIONED BY
+      * `gram` on disk, so a probe's literal `gram IN (...)` filter prunes
+      * the scan to exactly the pattern's |pattern| − [[GramLen]] + 1 gram
+      * directories — the corpus-sized remainder is never listed, read,
+      * or filtered (SearchSpec pins PartitionFilters + the pruned
+      * partition count). Layout trade vs [[write]]: one directory per
+      * distinct gram (bounded by the alphabet's trigram space), each
+      * internally id-clustered — right for the read-mostly probe path;
+      * use [[write]] for compaction intermediates. */
+    def writePartitioned(dir: String): Unit =
       // an empty partitioned write leaves no schema-bearing file on
       // disk (unreadable); an empty index has nothing to prune, so the
       // plain layout is the degenerate form
-      if (postings.isEmpty)
-        postings.write.mode("overwrite").parquet(s"$dir/postings")
-      else postings.write.partitionBy("gram").mode("overwrite")
-        .parquet(s"$dir/postings")
-      writeMeta(dir)
-    }
-
-    private def writeMeta(dir: String): Unit = {
-      val s = postings.sparkSession
-      import s.implicits._
-      Seq((idCol, gramLen)).toDF("id_col", "gram_len")
-        .write.mode("overwrite").parquet(s"$dir/meta")
-    }
+      if (postings.isEmpty) write(dir)
+      else {
+        postings.write.partitionBy("gram").mode("overwrite")
+          .parquet(s"$dir/postings")
+        writeFit(dir)
+      }
   }
 
-  object PostingsIndex {
+  object PostingsIndex extends AtRestIndex.Reader[PostingsIndex] {
     def read(spark: org.apache.spark.sql.SparkSession, dir: String): PostingsIndex = {
       val m = Parquet.read(spark, s"$dir/meta").head()
       // normalize column order: a partitioned layout surfaces the
@@ -119,42 +116,6 @@ object Search {
       idCol: String,
       textCol: String): PostingsIndex =
     PostingsIndex(trigramPostings(corpus, idCol, textCol), idCol, GramLen)
-
-  /** Roll a [[PostingsIndex]] forward with a batch of new documents:
-    * index the batch alone and append — the [[graft.operators.Dedup
-    * .appendToIndex]] daily-loop shape. Grams are per-document, so
-    * append ≡ rebuild-on-union (pinned); history is never re-exploded,
-    * and on disk this is a parquet APPEND of posting rows only. */
-  def appendToPostings(
-      index: PostingsIndex,
-      batch: DataFrame,
-      textCol: String): PostingsIndex =
-    index.copy(postings = index.postings.unionByName(
-      trigramPostings(batch, index.idCol, textCol)))
-
-  /** Delete documents from a [[PostingsIndex]] — takedowns/GDPR
-    * erasure, the [[graft.operators.Dedup.removeFromIndex]] convention:
-    * one anti-join on the posting table. Removal is EXACT
-    * (removed-then-probed ≡ never-present, pinned): a dropped id is no
-    * longer a candidate for ANY pattern, so it cannot surface even if a
-    * stale corpus frame still carries its text. Fold the lazy anti-join
-    * flat with [[compactPostings]] at storage cadence. */
-  def removeFromPostings(index: PostingsIndex, removeIds: DataFrame): PostingsIndex = {
-    val ids = removeIds.toDF("id").select(col("id")).distinct()
-    // re-select (gram, id): the anti-join moves its key column first,
-    // and the at-rest schema order is part of the index contract
-    index.copy(postings = index.postings.join(ids, Seq("id"), "left_anti")
-      .select(col("gram"), col("id")))
-  }
-
-  /** Rewrite-compaction: materialize the current postings (post-remove /
-    * post-append) at `dir` and re-read — dead rows gone from disk,
-    * lineage truncated to a scan. Same contract as
-    * [[graft.operators.Dedup.compactIndex]]. */
-  def compactPostings(index: PostingsIndex, dir: String): PostingsIndex = {
-    index.write(dir)
-    PostingsIndex.read(index.postings.sparkSession, dir)
-  }
 
   /** The distinct trigrams of a pattern (driver-side; patterns are
     * query-sized literals). */

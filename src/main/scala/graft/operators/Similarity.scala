@@ -1090,31 +1090,36 @@ object Similarity {
       .select(col("qid"), col("rank"), col(idCol), col("d2"))
   }
 
-  /** Persisted IVF+SQ8 index — the [[AnnIndex]] convention for the
-    * scalar quantizer: `codes` (the [[ivfSq8Encode]] output; partition
-    * by `cell` at scale), `centroids`, `bounds` (dim rows of (i, mn,
-    * mx)), and `meta` (id_col, dim). Encoding is a pure per-row
-    * function of the frozen quantizers, so append ≡ re-encode on the
-    * union and delete ≡ never-present, exactly as AnnIndexSpec pins
-    * for the PQ index; re-fitting bounds/cells is the one
-    * rebuild-the-world operation. */
+  /** Persisted IVF+SQ8 index on the [[AtRestIndex]] lifecycle. Per-row
+    * table: `codes` (the [[ivfSq8Encode]] output, keyed by `idCol`;
+    * partition by `cell` at scale). Fit state: `centroids`, `bounds` (dim
+    * rows of (i, mn, mx)) and `meta` (id_col, dim). Encoder:
+    * [[ivfSq8Encode]] against the frozen cells + bounds. */
   final case class Sq8Index(
       centroids: Array[Seq[Long]],
       bounds: Seq[(Long, Long)],
       codes: DataFrame,
       idCol: String,
-      dim: Int) {
-    def write(dir: String): Unit = {
-      val s = codes.sparkSession
-      import s.implicits._
-      codes.write.mode("overwrite").parquet(s"$dir/codes")
-      centroids.toSeq.zipWithIndex.map { case (cw, i) => (i, cw) }
-        .toDF("cell", "cw").write.mode("overwrite").parquet(s"$dir/centroids")
-      bounds.zipWithIndex.map { case ((mn, mx), i) => (i, mn, mx) }
-        .toDF("i", "mn", "mx").write.mode("overwrite").parquet(s"$dir/bounds")
-      Seq((idCol, dim)).toDF("id_col", "dim")
-        .write.mode("overwrite").parquet(s"$dir/meta")
+      dim: Int) extends AtRestIndex[Sq8Index] {
+    private[graft] def rowTables = Seq("codes" -> codes)
+
+    private[graft] def encode(batch: DataFrame, idCol: String, embCol: String) =
+      Seq(ivfSq8Encode(batch, idCol, embCol, dim, centroids, bounds))
+
+    protected def fitTables(spark: org.apache.spark.sql.SparkSession) = {
+      import spark.implicits._
+      Seq(
+        "centroids" -> centroidTable(spark, centroids),
+        "bounds" -> bounds.zipWithIndex.map { case ((mn, mx), i) => (i, mn, mx) }
+          .toDF("i", "mn", "mx"),
+        "meta" -> Seq((idCol, dim)).toDF("id_col", "dim"))
     }
+
+    protected def idColumn = idCol
+
+    protected def withRows(tables: Seq[DataFrame]) = copy(codes = tables.head)
+
+    protected def reader = Sq8Index
 
     /** Probe the index — [[ivfSq8TopK]] against the at-rest tables. */
     def topK(queries: DataFrame, embCol: String, nprobe: Int = 2,
@@ -1123,18 +1128,32 @@ object Similarity {
         nprobe = nprobe, topK = k)
   }
 
-  object Sq8Index {
+  object Sq8Index extends AtRestIndex.Reader[Sq8Index] {
     def read(spark: org.apache.spark.sql.SparkSession, dir: String): Sq8Index = {
       val meta = Parquet.read(spark, s"$dir/meta").head()
-      val cents = Parquet.read(spark, s"$dir/centroids").orderBy("cell")
-        .collect().map(r => r.getSeq[Long](r.fieldIndex("cw")): Seq[Long])
       val bounds = Parquet.read(spark, s"$dir/bounds").orderBy("i")
         .collect().map(r => (r.getLong(r.fieldIndex("mn")),
           r.getLong(r.fieldIndex("mx")))).toSeq
-      Sq8Index(cents, bounds, Parquet.read(spark, s"$dir/codes"),
+      Sq8Index(readCentroids(spark, dir), bounds, Parquet.read(spark, s"$dir/codes"),
         meta.getAs[String]("id_col"), meta.getAs[Int]("dim"))
     }
   }
+
+  /** The (cell, cw) at-rest table of IVF centroids. */
+  private def centroidTable(
+      spark: org.apache.spark.sql.SparkSession,
+      centroids: Array[Seq[Long]]): DataFrame = {
+    import spark.implicits._
+    centroids.toSeq.zipWithIndex.map { case (cw, i) => (i, cw) }.toDF("cell", "cw")
+  }
+
+  /** IVF centroids from `dir/centroids` — bounded index metadata (cells ×
+    * dim), the kmeansFit k×dim driver-state convention. */
+  private def readCentroids(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String): Array[Seq[Long]] =
+    Parquet.read(spark, s"$dir/centroids").orderBy("cell")
+      .collect().map(r => r.getSeq[Long](r.fieldIndex("cw")): Seq[Long])
 
   /** Build an [[Sq8Index]] with FITTED quantizers (first fit cells +
     * [[sq8FitResidual]] bounds) — one codegen encode scan; `write` the
@@ -1149,38 +1168,6 @@ object Similarity {
     Sq8Index(centroids, bounds,
       ivfSq8Encode(corpus, idCol, embCol, dim, centroids, bounds),
       idCol, dim)
-
-  /** Roll an [[Sq8Index]] forward with a batch of new vectors — the
-    * [[appendToAnnIndex]] daily-loop shape for the scalar quantizer:
-    * encode the batch against the index's FROZEN cells + bounds and
-    * append. Per-row quantizer-keyed encoding ⇒ append ≡ from-scratch
-    * encode of the union (AnnIndexSpec pins it). */
-  def appendToSq8Index(
-      index: Sq8Index,
-      batch: DataFrame,
-      embCol: String): Sq8Index =
-    index.copy(codes = index.codes.unionByName(
-      ivfSq8Encode(batch, index.idCol, embCol, index.dim,
-        index.centroids, index.bounds)))
-
-  /** Delete vectors from an [[Sq8Index]] — the [[removeFromAnnIndex]]
-    * takedown convention (VERDICT r12 #1 missing-list): one anti-join
-    * on the codes table; codes are strictly per-row state so removal is
-    * EXACT (removed-then-probed ≡ never-present, q_ann_sq8_index_delete
-    * pins it against the filtered from-scratch replay). Cells and
-    * bounds deliberately stay frozen — quantizers are fit-time state. */
-  def removeFromSq8Index(index: Sq8Index, removeIds: DataFrame): Sq8Index = {
-    val ids = removeIds.toDF(index.idCol).select(col(index.idCol)).distinct()
-    index.copy(codes = index.codes.join(ids, Seq(index.idCol), "left_anti"))
-  }
-
-  /** Rewrite-compaction for the SQ8 index — [[compactAnnIndex]]'s
-    * contract: materialize current codes at `dir`, re-read; dead rows
-    * gone from disk, lineage truncated to a scan. */
-  def compactSq8Index(index: Sq8Index, dir: String): Sq8Index = {
-    index.write(dir)
-    Sq8Index.read(index.codes.sparkSession, dir)
-  }
 
   /** The IVFADC index table (Jégou et al., TPAMI'11 §IV — the FAISS
     * IVF+PQ composition): every corpus vector hard-assigned its coarse
@@ -1777,20 +1764,14 @@ object Similarity {
         col("col.id").as(idCol), (-col("col.score")).cast("long").as("d2"))
   }
 
-  /** Persisted IVFADC index — the ANN twin of [[graft.operators.Dedup
-    * .NearDupIndex]]: everything a query batch needs, at rest. Four
-    * parquet tables: `codes` (id, cell, codes — the [[ivfPqEncode]]
-    * output; at 100 TB partition/bucket by `cell` so probes co-locate),
-    * `centroids` (cell, cw) and `codebooks` (book, code, cw) — the two
-    * quantizers, cells × dim and m·k × (dim/m) longs of bounded index
-    * metadata — and `meta` (id_col, dim, m, residual) so a probe cannot
-    * silently mismatch the encoding. Because encoding is a pure per-row
-    * function of the FROZEN quantizers, maintenance is exact and
-    * per-row: append ≡ re-encode-from-scratch on the union, delete ≡
-    * never-present (both pinned in AnnIndexSpec) — a 100 TB corpus
-    * encodes each vector once, on arrival, and takedowns drop rows
-    * without a refit. Re-FITTING the quantizers (after drift) is the
-    * one rebuild-the-world operation, by design. */
+  /** Persisted IVFADC index on the [[AtRestIndex]] lifecycle. Per-row
+    * table: `codes` (id, cell, codes — the [[ivfPqEncode]] output, keyed
+    * by `idCol`; at 100 TB partition/bucket by `cell` so probes
+    * co-locate). Fit state: `centroids` (cell, cw) and `codebooks`
+    * (book, code, cw) — the two quantizers, cells × dim and m·k × (dim/m)
+    * longs of bounded index metadata — and `meta` (id_col, dim, m,
+    * residual), so a probe cannot silently mismatch the encoding.
+    * Encoder: [[ivfPqEncode]] against the frozen quantizers. */
   final case class AnnIndex(
       centroids: Array[Seq[Long]],
       codebooks: Seq[Array[Seq[Long]]],
@@ -1798,36 +1779,39 @@ object Similarity {
       idCol: String,
       dim: Int,
       m: Int,
-      residual: Boolean) {
-    def write(dir: String): Unit = {
-      val s = codes.sparkSession
-      import s.implicits._
-      codes.write.mode("overwrite").parquet(s"$dir/codes")
-      centroids.toSeq.zipWithIndex.map { case (cw, i) => (i, cw) }
-        .toDF("cell", "cw").write.mode("overwrite").parquet(s"$dir/centroids")
-      codebooks.zipWithIndex.flatMap { case (book, b) =>
-        book.toSeq.zipWithIndex.map { case (cw, c) => (b, c, cw) } }
-        .toDF("book", "code", "cw")
-        .write.mode("overwrite").parquet(s"$dir/codebooks")
-      Seq((idCol, dim, m, residual)).toDF("id_col", "dim", "m", "residual")
-        .write.mode("overwrite").parquet(s"$dir/meta")
+      residual: Boolean) extends AtRestIndex[AnnIndex] {
+    private[graft] def rowTables = Seq("codes" -> codes)
+
+    private[graft] def encode(batch: DataFrame, idCol: String, embCol: String) =
+      Seq(ivfPqEncode(batch, idCol, embCol, dim, m, centroids, codebooks, residual))
+
+    protected def fitTables(spark: org.apache.spark.sql.SparkSession) = {
+      import spark.implicits._
+      Seq(
+        "centroids" -> centroidTable(spark, centroids),
+        "codebooks" -> codebooks.zipWithIndex.flatMap { case (book, b) =>
+          book.toSeq.zipWithIndex.map { case (cw, c) => (b, c, cw) } }
+          .toDF("book", "code", "cw"),
+        "meta" -> Seq((idCol, dim, m, residual)).toDF("id_col", "dim", "m", "residual"))
     }
+
+    protected def idColumn = idCol
+
+    protected def withRows(tables: Seq[DataFrame]) = copy(codes = tables.head)
+
+    protected def reader = AnnIndex
   }
 
-  object AnnIndex {
+  object AnnIndex extends AtRestIndex.Reader[AnnIndex] {
     def read(spark: org.apache.spark.sql.SparkSession, dir: String): AnnIndex = {
       val meta = Parquet.read(spark, s"$dir/meta").head()
-      // quantizer tables are bounded index metadata (cells × dim,
-      // m·k × sub) — the kmeansFit k×dim driver-state convention
-      val cents = Parquet.read(spark, s"$dir/centroids").orderBy("cell")
-        .collect().map(r => r.getSeq[Long](r.fieldIndex("cw")): Seq[Long])
       val m = meta.getAs[Int]("m")
       val bookRows = Parquet.read(spark, s"$dir/codebooks")
         .orderBy("book", "code").collect()
       val books = (0 until m).map(b =>
         bookRows.filter(_.getAs[Int]("book") == b)
           .map(r => r.getSeq[Long](r.fieldIndex("cw")): Seq[Long]))
-      AnnIndex(cents, books, Parquet.read(spark, s"$dir/codes"),
+      AnnIndex(readCentroids(spark, dir), books, Parquet.read(spark, s"$dir/codes"),
         meta.getAs[String]("id_col"), meta.getAs[Int]("dim"), m,
         meta.getAs[Boolean]("residual"))
     }
@@ -1850,42 +1834,6 @@ object Similarity {
     AnnIndex(centroids, codebooks,
       ivfPqEncode(corpus, idCol, embCol, dim, m, centroids, codebooks, residual),
       idCol, dim, m, residual)
-
-  /** Roll an [[AnnIndex]] forward with a batch of new vectors: encode
-    * the batch against the index's FROZEN quantizers and append — the
-    * [[graft.operators.Dedup.appendToIndex]] daily-loop shape. Because
-    * encoding is per-row and quantizer-keyed, append ≡ from-scratch
-    * encode of the union, row for row (AnnIndexSpec pins it); history
-    * is never re-encoded, and on disk this is a parquet APPEND of the
-    * codes table only. */
-  def appendToAnnIndex(
-      index: AnnIndex,
-      batch: DataFrame,
-      embCol: String): AnnIndex =
-    index.copy(codes = index.codes.unionByName(
-      ivfPqEncode(batch, index.idCol, embCol, index.dim, index.m,
-        index.centroids, index.codebooks, index.residual)))
-
-  /** Delete vectors from an [[AnnIndex]] — takedowns/GDPR erasure, the
-    * [[graft.operators.Dedup.removeFromIndex]] convention: one anti-join
-    * on the codes table. Codes are strictly per-row state, so removal
-    * is EXACT: removed-then-probed ≡ never-present (pinned). The
-    * quantizers deliberately do NOT change — they are fit-time state,
-    * and re-fitting would re-encode the world. Fold the lazy anti-join
-    * flat with [[compactAnnIndex]] at storage cadence. */
-  def removeFromAnnIndex(index: AnnIndex, removeIds: DataFrame): AnnIndex = {
-    val ids = removeIds.toDF(index.idCol).select(col(index.idCol)).distinct()
-    index.copy(codes = index.codes.join(ids, Seq(index.idCol), "left_anti"))
-  }
-
-  /** Rewrite-compaction: materialize the current codes (post-remove /
-    * post-append) at `dir` and re-read — dead rows gone from disk,
-    * lineage truncated to a scan. Same contract as
-    * [[graft.operators.Dedup.compactIndex]]. */
-  def compactAnnIndex(index: AnnIndex, dir: String): AnnIndex = {
-    index.write(dir)
-    AnnIndex.read(index.codes.sparkSession, dir)
-  }
 
   /** Batch-query top-k against a persisted [[AnnIndex]]: exactly
     * [[ivfPqTopK]] riding the index's codes table — the corpus is

@@ -189,86 +189,50 @@ object StreamingOps {
     }
   }
 
-  /** Continuous search-index maintenance, at rest — the production
-    * path the PostingsIndex class doc prescribes (VERDICT r10 #3): each
-    * micro-batch explodes ONLY its own posting rows (grams are strictly
-    * per-document, the [[graft.operators.Search.appendToPostings]]
-    * rule) and parquet-APPENDs them under `dir/postings`; accumulated
-    * history is NEVER read, re-planned, or re-materialized, so
-    * per-batch cost tracks the BATCH
-    * size while the drained corpus grows without bound (BENCH_NOTES,
-    * Round 11, "Append-mode ingest sinks": the same 1000-doc batch
-    * appended in 0.73 s over 0.7M and 0.85 s over 45.6M at-rest rows).
-    * Seed `dir` with the history index first
-    * ([[graft.operators.Search.PostingsIndex.write]] — that also lays
-    * down the meta table); probe any time by
-    * [[graft.operators.Search.PostingsIndex.read]], which sees every
-    * batch committed so far. Append ≡ rebuild stays exact (per-row
-    * state), so the drained directory hash-matches the whole-corpus
-    * scan (q_substr_index_stream) regardless of batch boundaries. */
-  def postingsIngestAppend(
+  /** Continuous maintenance of an at-rest index
+    * ([[graft.operators.AtRestIndex]]; VERDICT r10 #3): the index under
+    * `dir` is read ONCE at sink construction — its frozen fit state is
+    * bounded metadata — then each micro-batch encodes ONLY its own rows
+    * with the family's encoder and parquet-APPENDs them to each per-row
+    * table ([[appendDelta]]). History is never read, re-encoded or
+    * re-materialized, so per-batch cost tracks the BATCH size while the
+    * drained index grows without bound (BENCH_NOTES, Round 11,
+    * "Append-mode ingest sinks": the same 1000-doc batch appended in
+    * 0.73 s over 0.7M and 0.85 s over 45.6M at-rest posting rows). Seed
+    * `dir` with the history index first (its `write`, which also lays
+    * down the fit tables); probe any time through `reader`, which sees
+    * every batch committed so far. Append ≡ rebuild is exact (per-row
+    * state), so the drained directory hash-matches the from-scratch
+    * build regardless of batch boundaries (q_substr_index_stream,
+    * q_stream_ann, q_stream_sq8). */
+  def indexIngestAppend[I <: graft.operators.AtRestIndex[I]](
       stream: DataFrame,
       dir: String,
+      reader: graft.operators.AtRestIndex.Reader[I],
       idCol: String,
-      textCol: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      valueCol: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val idx = reader.read(stream.sparkSession, dir)
     stream.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Search.trigramPostings(batch.toDF(), idCol, textCol)
-          .write.mode("append").parquet(s"$dir/postings")
-    }
-
-  /** Continuous ANN-index maintenance, at rest (VERDICT r10 #3; the
-    * streaming form of [[graft.operators.Similarity.appendToAnnIndex]]):
-    * the frozen quantizers are read from `dir` ONCE at sink construction
-    * ([[graft.operators.Similarity.AnnIndex.read]] — bounded index
-    * metadata), then each micro-batch encodes ONLY its own vectors
-    * (one codegen projection against the frozen quantizers) and
-    * parquet-APPENDs the batch's code rows under `dir/codes` — history
-    * never re-encoded or re-materialized, per-batch cost tracks batch
-    * size. Seed `dir` with the history index first (AnnIndex.write);
-    * probe any time by AnnIndex.read — encoding is per-row and
-    * quantizer-keyed, so the drained directory hash-matches the
-    * from-scratch encode (q_stream_ann) at any batch boundary. */
-  def annIngestAppend(
-      stream: DataFrame,
-      dir: String,
-      embCol: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val idx = graft.operators.Similarity.AnnIndex.read(stream.sparkSession, dir)
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Similarity.ivfPqEncode(batch.toDF(), idx.idCol, embCol,
-            idx.dim, idx.m, idx.centroids, idx.codebooks, idx.residual)
-          .write.mode("append").parquet(s"$dir/codes")
+        appendRows(idx, dir, idx.encode(batch.toDF(), idCol, valueCol))
     }
   }
 
-  /** [[annIngestAppend]] for the SQ8 index (r13, completing the Sq8Index
-    * lifecycle next to delete + compaction): each micro-batch encodes
-    * against the directory's FROZEN cells + bounds and parquet-APPENDs
-    * only its own code rows. Seed `dir` with Sq8Index.write; probe any
-    * time via Sq8Index.read — encoding is per-row and quantizer-keyed,
-    * so the drained directory hash-matches the from-scratch encode at
-    * any batch boundary (q_stream_sq8 shares the q_ann_ivfsq8 oracle). */
-  def sq8IngestAppend(
-      stream: DataFrame,
+  /** Parquet-APPENDs per-row deltas (in the index's table order) under
+    * `dir` — the at-rest half of [[graft.operators.AtRestIndex.append]]. */
+  private def appendRows(
+      idx: graft.operators.AtRestIndex[_],
       dir: String,
-      embCol: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val idx = graft.operators.Similarity.Sq8Index.read(stream.sparkSession, dir)
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Similarity.ivfSq8Encode(batch.toDF(), idx.idCol, embCol,
-            idx.dim, idx.centroids, idx.bounds)
-          .write.mode("append").parquet(s"$dir/codes")
-    }
-  }
+      deltas: Seq[DataFrame]): Unit =
+    idx.rowTables.zip(deltas).foreach { case ((name, _), d) => appendDelta(d, s"$dir/$name") }
 
   /** Continuous-ingestion NEAR-dup dedup — the streaming form of the
-    * daily loop ([[graft.operators.Dedup.appendToIndex]]) over an
+    * daily loop ([[graft.operators.AtRestIndex.append]]) over an
     * at-rest [[graft.operators.Dedup.NearDupIndex]] directory, in the
-    * append-sink convention of [[postingsIngestAppend]] and
-    * [[annIngestAppend]]. Each micro-batch (1) probes its own rows
-    * against the index (cross-set + within-batch, exact-Jaccard-verified,
-    * the [[graft.operators.Dedup.dedupIncrementalNear]] contract), then
+    * append-sink convention of [[indexIngestAppend]]. Each micro-batch
+    * (1) probes its own rows against the index (cross-set +
+    * within-batch, exact-Jaccard-verified, the
+    * [[graft.operators.Dedup.dedupIncrementalNear]] contract), then
     * (2) localCheckpoints the BATCH-sized survivors and (3) parquet-
     * APPENDs only their sketch rows — rejects never enter (append ≡
     * rebuild is the pinned NearDupIndex contract; the checkpoint keeps
@@ -332,10 +296,8 @@ object StreamingOps {
         val survIds = surv.select(col(idCol).as("id"))
         val addB = bAll.join(survIds, Seq("id"), "left_semi").localCheckpoint()
         val addS = shAll.join(survIds, Seq("id"), "left_semi").localCheckpoint()
-        appendDelta(addB, s"$dir/buckets")
-        appendDelta(addS, s"$dir/shingles")
-        snapshot.extend(idx.copy(buckets = idx.buckets.unionByName(addB),
-          shingles = idx.shingles.unionByName(addS)), addB, addS)
+        appendRows(idx, dir, Seq(addB, addS))
+        snapshot.extend(idx.union(Seq(addB, addS)), addB, addS)
         emit(surv)
         // the full-batch sketches are dead now: their appended deltas
         // are independently checkpointed restrictions (ADVICE r13)
@@ -407,7 +369,7 @@ object StreamingOps {
     * VERDICT r11 #1) — the six-stage q_curation_e2e chain over an
     * unbounded document stream at micro-batch cadence, in the
     * append-sink convention
-    * ([[postingsIngestAppend]]/[[annIngestAppend]]/[[dedupNearIngestAppend]]).
+    * ([[indexIngestAppend]]/[[dedupNearIngestAppend]]).
     * All corpus state lives in the [[curationSeed]] directory; per batch:
     *
     *   1-2. gopher gate + normalization — stateless;
@@ -501,12 +463,10 @@ object StreamingOps {
         val surv = Dedup.dedupIncrementalNear(idx, exDocs, idCol,
             textCol, threshold, preSketch = Some((addS, addB)))
           .localCheckpoint()
-        appendDelta(addB, s"$dir/buckets")
-        appendDelta(addS, s"$dir/shingles")
+        appendRows(idx, dir, Seq(addB, addS))
         // the canon delta is a projection: the snapshot holds (and later
         // drops) the checkpointed exNew it reads
-        snapshot.extend((idx.copy(buckets = idx.buckets.unionByName(addB),
-          shingles = idx.shingles.unionByName(addS)),
+        snapshot.extend((idx.union(Seq(addB, addS)),
           canon.unionByName(canonDelta)), exNew, addS, addB)
         // 5: decontaminate against the frozen eval side
         val trainB = surv.where(!col("source").isin(evalSources: _*))
@@ -586,9 +546,10 @@ object StreamingOps {
     * file count O(batches), so every later directory read (probes,
     * rollups, template copies) pays listing + footer cost for real data
     * only. The deltas here are localCheckpointed batch frames (or
-    * projections of one), so the coalesce is a narrow, shuffle-free
-    * single-task write AND the optimizer's size statistic is the real
-    * materialized size, not a guess. A delta LARGER than the advisory
+    * projections of one) or a micro-batch's exchange-free encoding, so
+    * the coalesce is a narrow, shuffle-free single-task write, and the
+    * optimizer's size statistic is the materialized size (or, for an
+    * encoding, the size estimate of the batch's source files). A delta LARGER than the advisory
     * partition size takes the REBALANCE path instead (r14, closing
     * VERDICT r13 #1): AQE splits the write into sized files across
     * tasks, so a production-scale batch never funnels through one

@@ -50,17 +50,15 @@ class AnnIndexSpec extends AnyFunSuite {
   test("append ≡ from-scratch encode of the union, row for row") {
     val day1 = corpus.where(col("id") < 30)
     val day2 = corpus.where(col("id") >= 30)
-    val rolled = Similarity.appendToAnnIndex(
-      Similarity.buildAnnIndex(day1, "id", "emb", dim, m, cents, books),
-      day2, "emb")
+    val rolled = Similarity.buildAnnIndex(day1, "id", "emb", dim, m, cents, books)
+      .append(day2, "id", "emb")
     assert(rolled.codes.collect().map(_.toString).sorted.toSeq ==
       idx.codes.collect().map(_.toString).sorted.toSeq)
     assert(probe(rolled) == probe(idx))
   }
 
   test("removed-then-probed ≡ never-present (frozen quantizers)") {
-    val removed = Similarity.removeFromAnnIndex(idx,
-      corpus.where(col("id") % 5 === 0).select("id"))
+    val removed = idx.remove(corpus.where(col("id") % 5 === 0).select("id"))
     val never = Similarity.buildAnnIndex(corpus.where(col("id") % 5 =!= 0),
       "id", "emb", dim, m, cents, books)
     assert(removed.codes.collect().map(_.toString).sorted.toSeq ==
@@ -72,16 +70,14 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("removing absent ids is a no-op") {
-    val noop = Similarity.removeFromAnnIndex(idx,
-      Seq(999L, 1000L).toDF("id"))
+    val noop = idx.remove(Seq(999L, 1000L).toDF("id"))
     assert(probe(noop) == probe(idx))
   }
 
   test("compaction: same answer, lineage truncated to a scan") {
     val dir = java.nio.file.Files.createTempDirectory("annidx_c").toString
-    val removed = Similarity.removeFromAnnIndex(idx,
-      corpus.where(col("id") % 5 === 0).select("id"))
-    val compacted = Similarity.compactAnnIndex(removed, dir)
+    val removed = idx.remove(corpus.where(col("id") % 5 === 0).select("id"))
+    val compacted = removed.compact(dir)
     assert(probe(compacted) == probe(removed))
     // the anti-join is gone: the compacted codes plan is join-free
     assert(!compacted.codes.queryExecution.optimizedPlan.toString.contains("Join"))
@@ -135,12 +131,12 @@ class AnnIndexSpec extends AnyFunSuite {
     val sidx = Similarity.buildSq8Index(corpus, "id", "emb", dim, cents, sqBounds)
     import spark.implicits._
     val dropIds = corpus.where(col("id") % 5 === 0).select("id")
-    val removed = Similarity.removeFromSq8Index(sidx, dropIds)
-    // appendToSq8Index rolls forward through the frozen quantizers
+    val removed = sidx.remove(dropIds)
+    // append rolls forward through the frozen quantizers
     val extra = (70L to 74L).map(i0 => (i0, vec(i0))).toDF("id", "emb")
-    val rolled = Similarity.appendToSq8Index(removed, extra, "emb")
+    val rolled = removed.append(extra, "id", "emb")
     val dir = java.nio.file.Files.createTempDirectory("sq8idx-del").toString
-    val compacted = Similarity.compactSq8Index(rolled, dir)
+    val compacted = rolled.compact(dir)
     // == from-scratch index over survivors ∪ appended batch
     val scratch = Similarity.buildSq8Index(
       corpus.where(col("id") % 5 =!= 0).unionByName(extra),
@@ -152,8 +148,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(compacted.codes.collect().map(_.toString).sorted.toSeq ==
       scratch.codes.collect().map(_.toString).sorted.toSeq)
     // deleting ids the index never held changes nothing
-    val noop = Similarity.removeFromSq8Index(sidx,
-      Seq(999L, 1000L).toDF("id"))
+    val noop = sidx.remove(Seq(999L, 1000L).toDF("id"))
     assert(noop.codes.collect().map(_.toString).sorted.toSeq ==
       sidx.codes.collect().map(_.toString).sorted.toSeq)
   }

@@ -352,17 +352,17 @@ class DedupSpec extends AnyFunSuite {
       == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
   }
 
-  test("dupClustersConverged: stops at the fixpoint, reports rounds, cap binds") {
-    // chain 1-2-3-4-5 (diameter 4): full convergence needs 4 rounds;
-    // the loop runs one more to observe no movement
+  test("ccStarContraction: stops at the fixpoint, reports rounds, cap binds") {
+    // chain 1-2-3-4-5 (diameter 4): two rounds contract it to the star
+    // on 1; the third observes no change
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id_a", "id_b")
-    val (labels, rounds, converged) = Dedup.dupClustersConverged(chain, maxIters = 10)
-    assert(converged && rounds <= 6)
+    val (labels, rounds, converged) = Dedup.ccStarContraction(chain, maxIters = 10)
+    assert(converged && rounds == 3)
     assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
-    // cap binds before convergence: bounded-k labels, converged=false
-    val (capped, r2, c2) = Dedup.dupClustersConverged(chain, maxIters = 2)
-    assert(!c2 && r2 == 2)
+    // cap binds before convergence: partial labels, converged=false
+    val (capped, r1, c1) = Dedup.ccStarContraction(chain, maxIters = 1)
+    assert(!c1 && r1 == 1)
     assert(capped.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 3L))
   }
@@ -489,26 +489,42 @@ class DedupSpec extends AnyFunSuite {
     assert(got == (0L to 63L).map(_ -> 0L).toMap)
   }
 
-  test("ccStarContraction equals dupClustersConverged at both fixpoints; empty and multi-component inputs") {
+  test("ccStarContraction equals a union-find and bounded dupClusters at the diameter; empty and multi-component inputs") {
+    def labelMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // deterministic pseudo-random graphs over varied density (sparse
     // forest fragments through near-connected): ids hashed into pairs
     for ((nEdges, seed) <- Seq((12, 1L), (30, 2L), (60, 3L), (90, 4L))) {
-      val pairs = (1 to nEdges).map { i =>
+      val edges = (1 to nEdges).map { i =>
         val a = (i * 2654435761L + seed * 977L) % 40
         val b = (i * 40503L + 7 + seed * 131L) % 40
         (a.min(b), a.max(b))
-      }.filter(p => p._1 != p._2).toDF("id_a", "id_b")
-      val (star, _, cs) = Dedup.ccStarContraction(pairs, maxIters = 20)
-      val (prop, _, cp) = Dedup.dupClustersConverged(pairs, maxIters = 50)
-      assert(cs && cp)
-      val sm = star.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val pm = prop.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(sm == pm,
-        s"star vs propagation disagree on graph(seed=$seed, edges=$nEdges)")
+      }.filter(p => p._1 != p._2)
+      val (star, _, cs) = Dedup.ccStarContraction(edges.toDF("id_a", "id_b"), maxIters = 20)
+      assert(cs)
+      // union-find, each root the minimum of its component
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(ra.max(rb)) = ra.min(rb)
+      }
+      val want = parent.keys.toSeq.map(x => x -> find(x)).toMap
+      assert(labelMap(star) == want,
+        s"star contraction vs union-find disagree on graph(seed=$seed, edges=$nEdges)")
     }
+    // the 5-chain: bounded propagation at k = its diameter (4) reaches
+    // the same fixpoint labels
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id_a", "id_b")
+    val (cl, _, cc) = Dedup.ccStarContraction(chain, maxIters = 10)
+    assert(cc)
+    assert(labelMap(cl) == labelMap(Dedup.dupClusters(chain, iterations = 4)))
     // self-loop-only input: no cross-id edge -> every node a singleton
-    // labeled with itself (the dupClustersConverged contract — its
-    // injected self-loops produce the same rows), zero rounds,
+    // labeled with itself (the dupClusters contract — its injected
+    // self-loops produce the same rows), zero rounds,
     // immediately converged
     val (selfOnly, r0, c0) = Dedup.ccStarContraction(
       Seq((1L, 1L), (2L, 2L)).toDF("id_a", "id_b"), maxIters = 3)
@@ -534,7 +550,7 @@ class DedupSpec extends AnyFunSuite {
     val idx0 = Dedup.buildNearDupIndex(corpus, "doc_id", "text", n = 3, bands = 32, rows = 4)
     val s1 = Dedup.dedupIncrementalNear(idx0, day1, "doc_id", "text", threshold = 0.5)
     assert(s1.collect().map(_.getLong(0)).toSet == Set(22L))
-    val rolled = Dedup.appendToIndex(idx0, s1, "doc_id", "text")
+    val rolled = idx0.append(s1, "doc_id", "text")
     val scratch = Dedup.buildNearDupIndex(
       corpus.union(Seq((22L, "brand new thing")).toDF("doc_id", "text")),
       "doc_id", "text", n = 3, bands = 32, rows = 4)
@@ -559,7 +575,7 @@ class DedupSpec extends AnyFunSuite {
     val extra = Seq((50L, "takedown me now"), (51L, "and me too please")).toDF("doc_id", "text")
     val withExtra = Dedup.buildNearDupIndex(corpus.union(extra), "doc_id", "text")
     val neverHad = Dedup.buildNearDupIndex(corpus, "doc_id", "text")
-    val removed = Dedup.removeFromIndex(withExtra, extra.select("doc_id"), "doc_id")
+    val removed = withExtra.remove(extra.select("doc_id"))
     // table-level identity: exact same bucket and shingle rows
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.map {
@@ -580,18 +596,16 @@ class DedupSpec extends AnyFunSuite {
     assert(probe(removed) == Set(91L, 92L))
     assert(probe(removed) == probe(neverHad))
     // unknown ids are a no-op
-    val noop = Dedup.removeFromIndex(withExtra,
-      Seq(999L).toDF("doc_id"), "doc_id")
+    val noop = withExtra.remove(Seq(999L).toDF("doc_id"))
     assert(rows(noop.buckets) == rows(withExtra.buckets))
     // compaction: parquet rewrite probes identically and drops lineage
     val dir = java.nio.file.Files.createTempDirectory("graft-ndidx-compact").toString
-    val compacted = Dedup.compactIndex(removed, dir)
+    val compacted = removed.compact(dir)
     assert(probe(compacted) == Set(91L, 92L))
     assert(compacted.n == removed.n && compacted.bands == removed.bands
       && compacted.rows == removed.rows)
     // remove everything: probe accepts all but batch-internal near-dups
-    val empty = Dedup.removeFromIndex(neverHad,
-      corpus.select("doc_id"), "doc_id")
+    val empty = neverHad.remove(corpus.select("doc_id"))
     val all = Seq((90L, nearDup), (93L, nearDup), (92L, "wholly novel stuff"))
       .toDF("doc_id", "text")
     assert(Dedup.dedupIncrementalNear(empty, all, "doc_id", "text", threshold = 0.5)

@@ -165,7 +165,7 @@ class EmptyInputSpec extends AnyFunSuite {
     val idx = Dedup.buildNearDupIndex(
       Seq((1L, "a b c d")).toDF("doc_id", "text"), "doc_id", "text")
     assert(Dedup.dedupIncrementalNear(idx, emptyDocs, "doc_id", "text").count() == 0)
-    val rolled = Dedup.appendToIndex(idx, emptyDocs, "doc_id", "text")
+    val rolled = idx.append(emptyDocs, "doc_id", "text")
     assert(rolled.buckets.count() == idx.buckets.count())
     assert(Sampling.weightedSampleK(emptyDocs, Seq("text"), 3,
       Sampling.idKey(col("doc_id")), col("doc_id"), col("doc_id")).count() == 0)
@@ -259,11 +259,10 @@ class EmptyInputSpec extends AnyFunSuite {
     val emptyIdx = Similarity.buildAnnIndex(emptyVecs, "id", "emb", dim, m, cents, books)
     assert(emptyIdx.codes.count() == 0)
     assert(Similarity.annTopK(emptyIdx, oneVec, "emb", nprobe = 1, topK = 3).count() == 0)
-    val grown = Similarity.appendToAnnIndex(emptyIdx, oneVec, "emb")
+    val grown = emptyIdx.append(oneVec, "id", "emb")
     assert(Similarity.annTopK(grown, oneVec, "emb", nprobe = 1, topK = 3).count() == 1)
     // removing from an empty index is a no-op
-    assert(Similarity.removeFromAnnIndex(emptyIdx,
-      Seq(1L).toDF("id")).codes.count() == 0)
+    assert(emptyIdx.remove(Seq(1L).toDF("id")).codes.count() == 0)
   }
 
   test("r10 operators on empty input return empty (or fail fast with a contract) without error") {
@@ -275,8 +274,8 @@ class EmptyInputSpec extends AnyFunSuite {
     // postings maintenance: append/remove/compact degenerate gracefully
     val pi = Search.buildPostingsIndex(emptyDocs, "doc_id", "text")
     assert(pi.postings.count() == 0)
-    assert(Search.appendToPostings(pi, emptyDocs, "text").postings.count() == 0)
-    assert(Search.removeFromPostings(pi, Seq(1L).toDF("id")).postings.count() == 0)
+    assert(pi.append(emptyDocs, "doc_id", "text").postings.count() == 0)
+    assert(pi.remove(Seq(1L).toDF("id")).postings.count() == 0)
     // grouped drift statistics on empty slices
     val ev = Seq.empty[(String, Long)].toDF("g", "v")
     assert(Drift.wasserstein1(ev, ev, col("v"), Seq("g")).count() == 0)

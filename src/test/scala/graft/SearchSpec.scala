@@ -173,16 +173,15 @@ class SearchSpec extends AnyFunSuite {
   test("PostingsIndex maintenance: append == rebuild; removed == never-present; parquet round-trip") {
     val dir = java.nio.file.Files.createTempDirectory("graft-postidx").toString
     // append ≡ from-scratch build on the union, row for row
-    val rolled = Search.appendToPostings(
-      Search.buildPostingsIndex(docs.where(col("id") <= 4), "id", "text"),
-      docs.where(col("id") > 4), "text")
+    val rolled = Search.buildPostingsIndex(docs.where(col("id") <= 4), "id", "text")
+      .append(docs.where(col("id") > 4), "id", "text")
     val full = Search.buildPostingsIndex(docs, "id", "text")
     assert(rolled.postings.collect().map(_.toSeq).toSet
       == full.postings.collect().map(_.toSeq).toSet)
     // removed ≡ never-present: drop doc 1; a probe that WOULD match it
     // ('quick') must no longer surface it, even though the corpus frame
     // still carries its text
-    val removed = Search.removeFromPostings(full, Seq(1L).toDF("id"))
+    val removed = full.remove(Seq(1L).toDF("id"))
     val neverPresent = Search.buildPostingsIndex(
       docs.where(col("id") =!= 1L), "id", "text")
     assert(removed.postings.collect().map(_.toSeq).toSet
@@ -190,7 +189,7 @@ class SearchSpec extends AnyFunSuite {
     assert(Search.substrSearch(docs, removed.postings, "id", "text", "quick")
       .select("id").as[Long].collect().sorted.toSeq == Seq(3L, 4L))
     // compaction round-trips the postings and the params meta
-    val compacted = Search.compactPostings(removed, dir)
+    val compacted = removed.compact(dir)
     assert(compacted.idCol == "id" && compacted.gramLen == Search.GramLen)
     assert(compacted.postings.collect().map(_.toSeq).toSet
       == removed.postings.collect().map(_.toSeq).toSet)

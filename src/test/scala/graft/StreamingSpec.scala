@@ -313,17 +313,43 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions injects graft_dotq for SQL use") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions()(ext) // constructs without error; SQL path via register:
-    graft.expressions.GraftFunctions.register(spark)
-    val r = spark.sql("SELECT graft_dotq(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
-      .head().getLong(0)
-    assert(r == 4 + 10 + 18)
-    // the aggregate family works from SQL too (topk here)
-    val top = spark.sql(
-      "SELECT graft_topk(s, i, 2) AS t FROM VALUES (1.0D, 1L), (9.0D, 2L), (5.0D, 3L) AS v(s, i)")
-      .head().getSeq[org.apache.spark.sql.Row](0).map(x => (x.getDouble(0), x.getLong(1)))
-    assert(top == Seq((9.0, 2L), (5.0, 3L)))
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import graft.expressions.GraftFunctions
+    def infos(s: org.apache.spark.sql.SparkSession) = GraftFunctions.builders.map { case (name, _) =>
+      s.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(name))
+    }
+    // register adds each function once per session: a second call
+    // replaces nothing, every registered entry stays the same instance
+    val fresh = spark.newSession()
+    assert(infos(fresh).forall(_.isEmpty))
+    GraftFunctions.register(fresh)
+    val first = infos(fresh)
+    assert(first.forall(_.isDefined))
+    GraftFunctions.register(fresh)
+    infos(fresh).zip(first).foreach { case (again, once) => assert(again.get eq once.get) }
+    // a session built with the extension (the builder reuses the running
+    // SparkContext) resolves the functions before any register, and
+    // register leaves the injected entries in place
+    val ext = org.apache.spark.sql.classic.SparkSession.builder()
+      .withExtensions(new GraftExtensions())
+      .create()
+    try {
+      val injected = infos(ext)
+      assert(injected.forall(_.isDefined))
+      GraftFunctions.register(ext)
+      infos(ext).zip(injected).foreach { case (again, once) => assert(again.get eq once.get) }
+      val r = ext.sql("SELECT graft_dotq(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
+        .head().getLong(0)
+      assert(r == 4 + 10 + 18)
+      // the aggregate family works from SQL too (topk here)
+      val top = ext.sql(
+        "SELECT graft_topk(s, i, 2) AS t FROM VALUES (1.0D, 1L), (9.0D, 2L), (5.0D, 3L) AS v(s, i)")
+        .head().getSeq[org.apache.spark.sql.Row](0).map(x => (x.getDouble(0), x.getLong(1)))
+      assert(top == Seq((9.0, 2L), (5.0, 3L)))
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
   }
 
   test("dedupNearIngestAppend: directory probe == sequential daily loop; only survivor sketches appended") {
@@ -356,7 +382,7 @@ class StreamingSpec extends AnyFunSuite {
       n = 3, bands = 32, rows = 4)
     val want = days.map { day =>
       val sv = Dedup.dedupIncrementalNear(index, day, "doc_id", "text", threshold = 0.5)
-      index = Dedup.appendToIndex(index, sv, "doc_id", "text")
+      index = index.append(sv, "doc_id", "text")
       sv.collect().map(_.getLong(0)).toSet
     }
     assert(got.toSeq == want, s"streamed per-batch survivors $got != daily loop $want")
@@ -370,7 +396,7 @@ class StreamingSpec extends AnyFunSuite {
       == index.buckets.collect().map(_.toSeq).toSet)
   }
 
-  test("append-mode ingest sinks: drained directory == from-scratch build on the union (postings + ANN)") {
+  test("append-mode ingest sink: drained directory == from-scratch build on the union (postings, ANN, SQ8)") {
     import graft.operators.{Search, Similarity}
     // postings: seed dir with docs 1-2, stream docs 3-4 as two
     // one-file-per-trigger batches appending BATCH-ONLY posting rows
@@ -383,7 +409,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamDir = stageDays(days, "graft-postidx-days")
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    StreamingOps.postingsIngestAppend(stream, dir, "doc_id", "text")
+    StreamingOps.indexIngestAppend(stream, dir, Search.PostingsIndex, "doc_id", "text")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", tmpDir("graft-ckpt"))
       .start().awaitTermination()
@@ -408,7 +434,7 @@ class StreamingSpec extends AnyFunSuite {
     val aStreamDir = stageDays(aDays, "graft-annidx-days")
     val aStream = spark.readStream.schema(vecs.schema)
       .option("maxFilesPerTrigger", "1").parquet(aStreamDir)
-    StreamingOps.annIngestAppend(aStream, aDir, "embedding")
+    StreamingOps.indexIngestAppend(aStream, aDir, Similarity.AnnIndex, "vec_id", "embedding")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", tmpDir("graft-ckpt"))
       .start().awaitTermination()
@@ -418,6 +444,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(aDrained.codes.collect().map(_.toSeq).toSet
       == aFull.collect().map(_.toSeq).toSet,
       "drained append-mode ANN dir must equal the from-scratch encode")
+    // SQ8: the same vectors, seeded with 10-13 + frozen cells and bounds
+    val bounds = Similarity.sq8FitResidual(vecs.where(col("vec_id") <= 13),
+      "vec_id", "embedding", dim = 8, cents)
+    val sDir = tmpDir("graft-sq8idx-append")
+    Similarity.buildSq8Index(vecs.where(col("vec_id") <= 13),
+      "vec_id", "embedding", dim = 8, cents, bounds).write(sDir)
+    val sStream = spark.readStream.schema(vecs.schema)
+      .option("maxFilesPerTrigger", "1").parquet(stageDays(aDays, "graft-sq8idx-days"))
+    StreamingOps.indexIngestAppend(sStream, sDir, Similarity.Sq8Index, "vec_id", "embedding")
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", tmpDir("graft-ckpt"))
+      .start().awaitTermination()
+    val sDrained = Similarity.Sq8Index.read(spark, sDir)
+    assert(sDrained.bounds == bounds && sDrained.centroids.toSeq == cents.toSeq)
+    val sFull = Similarity.ivfSq8Encode(vecs, "vec_id", "embedding",
+      dim = 8, centroids = cents, bounds = bounds)
+    assert(sDrained.codes.collect().map(_.toSeq).toSet
+      == sFull.collect().map(_.toSeq).toSet,
+      "drained append-mode SQ8 dir must equal the from-scratch encode")
+    assert(sDrained.codes.count() == vecs.count())
   }
 
   test("curationIngestAppend: streamed six-stage chain == batch chain, including the A~B~C near-dup chain case") {

@@ -16,6 +16,10 @@ either directory must be cell-for-cell identical, and oracle_sql.json must
 be byte-identical. It is the fast proof that a refactor moved no result (a
 full DuckDB pass over every row takes hours); <sf_dir> is only reported.
 
+Any other argument list exits 2 with the usage above. There is no query
+filter here: to check a few rows, run graft.Verify with their names into a
+directory of its own and point this script at that directory.
+
 The DuckDB mode writes its per-query record to CORRECTNESS_local.json (or
 $CORRECTNESS_LOCAL) when the run covers every query that file already
 records; a filtered run writes <verify_out_dir>/CORRECTNESS_local.json
@@ -176,6 +180,10 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
-    if sys.argv[1] == "--against":
-        sys.exit(against(sys.argv[2], sys.argv[3], sys.argv[4]))
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    args = sys.argv[1:]
+    if args[:1] == ["--against"] and len(args) == 4:
+        sys.exit(against(*args[1:]))
+    if len(args) == 2 and not args[0].startswith("--"):
+        sys.exit(main(*args))
+    sys.stderr.write(__doc__.split("\n\n")[1] + "\n")
+    sys.exit(2)
