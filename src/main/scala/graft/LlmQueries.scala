@@ -3192,6 +3192,26 @@ object LlmQueries {
       ("WITH s AS (SELECT doc_id, CASE WHEN len(w) >= 3 THEN"
         + " list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w)-1)])"
         + " ELSE [text] END AS sh FROM (SELECT doc_id, text, string_split(text, ' ') w FROM documents))")
+    // dupClusters' bounded min-label propagation over the trigram-Jaccard
+    // >= 0.5 pairs, unrolled to `rounds` CTEs l1..l{rounds}:
+    // l{k}(v) = min(l{k-1}(v), min over neighbors u of l{k-1}(u)); every
+    // node appears as an edge src (the edge list is symmetric), so the
+    // per-src group always exists. Each row appends its own tail.
+    def labelReplay(rounds: Int): String = {
+      val jacExpr = ("len(list_intersect(a.sh, b.sh))::DOUBLE"
+        + " / len(list_distinct(list_concat(a.sh, b.sh)))")
+      val ls = (1 to rounds).map { k =>
+        (s"l$k AS (SELECT e.src AS id, least(min(lv.lbl), min(lu.lbl)) AS lbl"
+          + s" FROM e JOIN l${k - 1} lv ON lv.id = e.src"
+          + s" JOIN l${k - 1} lu ON lu.id = e.dst GROUP BY e.src)")
+      }.mkString(", ")
+      (shingleCte
+        + " , p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM s a JOIN s b"
+        + s" ON a.doc_id < b.doc_id AND $jacExpr >= 0.5),"
+        + " e AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),"
+        + " l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),"
+        + s" $ls")
+    }
     val qn = ("(SELECT vec_id, q, CAST(list_dot_product(q, q) AS BIGINT) nsq FROM"
       + s" (SELECT vec_id, $QuantSqlDouble q FROM embeddings))")
     val markerScores = TextAnalysis.LangMarkers
@@ -3376,42 +3396,15 @@ object LlmQueries {
           + " ORDER BY doc_id"),
       "q_dedup_clusters" -> {
         // replays dupClusters' bounded min-label propagation with the
-        // SAME iteration count (3), unrolled: l{k}(v) = min(l{k-1}(v),
-        // min over neighbors u of l{k-1}(u)); every node appears as an
-        // edge src (the edge list is symmetric), so the per-src group
-        // always exists
-        val jacExpr = ("len(list_intersect(a.sh, b.sh))::DOUBLE"
-          + " / len(list_distinct(list_concat(a.sh, b.sh)))")
-        val rounds = (1 to 3).map { k =>
-          (s"l$k AS (SELECT e.src AS id, least(min(lv.lbl), min(lu.lbl)) AS lbl"
-            + s" FROM e JOIN l${k - 1} lv ON lv.id = e.src"
-            + s" JOIN l${k - 1} lu ON lu.id = e.dst GROUP BY e.src)")
-        }.mkString(", ")
-        (shingleCte
-          + " , p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM s a JOIN s b"
-          + s" ON a.doc_id < b.doc_id AND $jacExpr >= 0.5),"
-          + " e AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),"
-          + " l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),"
-          + s" $rounds"
+        // SAME iteration count (3)
+        (labelReplay(3)
           + " SELECT id, lbl AS cluster_id FROM l3 ORDER BY id")
       },
       "q_dedup_clusters_conv" -> {
         // the q_dedup_clusters replay unrolled to SIX rounds — at the
         // fixpoint extra rounds are no-ops, so any unroll >= the
         // realized convergence depth replays the converged labels
-        val jacExpr = ("len(list_intersect(a.sh, b.sh))::DOUBLE"
-          + " / len(list_distinct(list_concat(a.sh, b.sh)))")
-        val rounds = (1 to 6).map { k =>
-          (s"l$k AS (SELECT e.src AS id, least(min(lv.lbl), min(lu.lbl)) AS lbl"
-            + s" FROM e JOIN l${k - 1} lv ON lv.id = e.src"
-            + s" JOIN l${k - 1} lu ON lu.id = e.dst GROUP BY e.src)")
-        }.mkString(", ")
-        (shingleCte
-          + " , p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM s a JOIN s b"
-          + s" ON a.doc_id < b.doc_id AND $jacExpr >= 0.5),"
-          + " e AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),"
-          + " l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),"
-          + s" $rounds"
+        (labelReplay(6)
           + " SELECT id, lbl AS cluster_id FROM l6 ORDER BY id")
       },
       "q_cc_star" -> {
@@ -3420,62 +3413,26 @@ object LlmQueries {
         // oracle is the identical over-provisioned propagation unroll
         // (6 rounds >= any realized depth on this corpus); matching
         // hashes certify the two algorithms agree on real data
-        val jacExpr = ("len(list_intersect(a.sh, b.sh))::DOUBLE"
-          + " / len(list_distinct(list_concat(a.sh, b.sh)))")
-        val rounds = (1 to 6).map { k =>
-          (s"l$k AS (SELECT e.src AS id, least(min(lv.lbl), min(lu.lbl)) AS lbl"
-            + s" FROM e JOIN l${k - 1} lv ON lv.id = e.src"
-            + s" JOIN l${k - 1} lu ON lu.id = e.dst GROUP BY e.src)")
-        }.mkString(", ")
-        (shingleCte
-          + " , p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM s a JOIN s b"
-          + s" ON a.doc_id < b.doc_id AND $jacExpr >= 0.5),"
-          + " e AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),"
-          + " l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),"
-          + s" $rounds"
+        (labelReplay(6)
           + " SELECT id, lbl AS cluster_id FROM l6 ORDER BY id")
       },
       "q_cluster_sizes" -> {
         // q_dedup_clusters' 3-round label replay folded to the
         // (size, n_clusters, n_docs) histogram
-        val jacExpr = ("len(list_intersect(a.sh, b.sh))::DOUBLE"
-          + " / len(list_distinct(list_concat(a.sh, b.sh)))")
-        val rounds = (1 to 3).map { k =>
-          (s"l$k AS (SELECT e.src AS id, least(min(lv.lbl), min(lu.lbl)) AS lbl"
-            + s" FROM e JOIN l${k - 1} lv ON lv.id = e.src"
-            + s" JOIN l${k - 1} lu ON lu.id = e.dst GROUP BY e.src)")
-        }.mkString(", ")
-        (shingleCte
-          + " , p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM s a JOIN s b"
-          + s" ON a.doc_id < b.doc_id AND $jacExpr >= 0.5),"
-          + " e AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),"
-          + " l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),"
-          + s" $rounds,"
-          + " h AS (SELECT lbl, count(*) AS sz FROM l3 GROUP BY lbl)"
+        (labelReplay(3)
+          + ", h AS (SELECT lbl, count(*) AS sz FROM l3 GROUP BY lbl)"
           + " SELECT sz AS cluster_size, count(*) AS n_clusters,"
           + " sum(sz)::BIGINT AS n_docs FROM h GROUP BY 1 ORDER BY 1")
       },
       "q_cluster_split" -> {
         // q_dedup_clusters' label replay + the assignSplit interval rule
         // over coalesce(cluster label, own id)
-        val jacExpr = ("len(list_intersect(a.sh, b.sh))::DOUBLE"
-          + " / len(list_distinct(list_concat(a.sh, b.sh)))")
-        val rounds = (1 to 3).map { k =>
-          (s"l$k AS (SELECT e.src AS id, least(min(lv.lbl), min(lu.lbl)) AS lbl"
-            + s" FROM e JOIN l${k - 1} lv ON lv.id = e.src"
-            + s" JOIN l${k - 1} lu ON lu.id = e.dst GROUP BY e.src)")
-        }.mkString(", ")
         val edges = Sampling.splitEdges(
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
         val cases = edges.map { case (name, hi) => s"WHEN u < $hi THEN '$name'" }
           .mkString("CASE ", " ", " END")
-        (shingleCte
-          + " , p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM s a JOIN s b"
-          + s" ON a.doc_id < b.doc_id AND $jacExpr >= 0.5),"
-          + " e AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),"
-          + " l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),"
-          + s" $rounds,"
-          + " r AS (SELECT d.doc_id, coalesce(l.lbl, d.doc_id) AS rep_id"
+        (labelReplay(3)
+          + ", r AS (SELECT d.doc_id, coalesce(l.lbl, d.doc_id) AS rep_id"
           + " FROM documents d LEFT JOIN l3 l ON l.id = d.doc_id),"
           + s" b AS (SELECT doc_id, rep_id, ${Sampling.bucketSql("rep_id", 5)} AS u FROM r)"
           + s" SELECT doc_id, rep_id, $cases AS split FROM b ORDER BY doc_id")
@@ -3483,20 +3440,8 @@ object LlmQueries {
       "q_cv_folds" -> {
         // the q_cluster_split label replay, folded mod 5 instead of the
         // interval rule
-        val jacExpr = ("len(list_intersect(a.sh, b.sh))::DOUBLE"
-          + " / len(list_distinct(list_concat(a.sh, b.sh)))")
-        val rounds = (1 to 3).map { k =>
-          (s"l$k AS (SELECT e.src AS id, least(min(lv.lbl), min(lu.lbl)) AS lbl"
-            + s" FROM e JOIN l${k - 1} lv ON lv.id = e.src"
-            + s" JOIN l${k - 1} lu ON lu.id = e.dst GROUP BY e.src)")
-        }.mkString(", ")
-        (shingleCte
-          + " , p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM s a JOIN s b"
-          + s" ON a.doc_id < b.doc_id AND $jacExpr >= 0.5),"
-          + " e AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),"
-          + " l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),"
-          + s" $rounds,"
-          + " r AS (SELECT d.doc_id, coalesce(l.lbl, d.doc_id) AS rep_id"
+        (labelReplay(3)
+          + ", r AS (SELECT d.doc_id, coalesce(l.lbl, d.doc_id) AS rep_id"
           + " FROM documents d LEFT JOIN l3 l ON l.id = d.doc_id)"
           + s" SELECT doc_id, rep_id, ${Sampling.bucketSql("rep_id", 7)} % 5 AS fold"
           + " FROM r ORDER BY doc_id")

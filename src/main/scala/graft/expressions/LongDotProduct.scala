@@ -71,8 +71,6 @@ object GraftFunctions {
   val DotQ       = "graft_dotq"
   val VecSum     = "graft_vecsum"
   val RollingFp  = "graft_rolling_fp"
-  val RollingFp2 = "graft_rolling_fp2"
-  val RollingFp3 = "graft_rolling_fp3"
   val RollingFpPair   = "graft_rolling_fp_pair"
   val RollingFpTriple = "graft_rolling_fp_triple"
 
@@ -151,18 +149,6 @@ object GraftFunctions {
     },
     RollingFp -> { exprs =>
       arity(RollingFp, exprs, 1); RollingFingerprint(exprs.head)
-    },
-    // second independent fold (base 131, prime 998244353) — pairs with
-    // RollingFp for a ~2^60 replayable joint key (NgramOverlap)
-    RollingFp2 -> { exprs =>
-      arity(RollingFp2, exprs, 1)
-      RollingFingerprint(exprs.head, base = 131L, mod = 998244353L)
-    },
-    // third fold (base 257, prime 1e9+9): the ~2^90 triple for
-    // match-then-DELETE operators (duplicateSpans)
-    RollingFp3 -> { exprs =>
-      arity(RollingFp3, exprs, 1)
-      RollingFingerprint(exprs.head, base = 257L, mod = 1000000009L)
     },
     // fused fold families: one char pass, N accumulators (NgramOverlap)
     RollingFpPair -> { exprs =>

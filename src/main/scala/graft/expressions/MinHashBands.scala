@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * computed where the document sits, with no exchange and no aggregate.
   *
   * Bit-identical to the relational form it replaces (pinned in
-  * DedupSpec against [[graft.operators.Dedup.minhashSignature]]):
+  * DedupSpec against a MinHash signature built from Spark builtins):
   *   - each shingle is hashed once, `xxhash64(shingle)` (seed 42; a NULL
   *     element hashes to the seed, as Spark's `xxhash64` does);
   *   - signature slot s = min over shingles of `xxhash64(lit(s), h)`,

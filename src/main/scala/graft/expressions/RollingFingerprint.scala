@@ -6,38 +6,30 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
 /** Rolling polynomial fingerprint h = fold(h * 31 + codepoint) mod 1e9+7
-  * over a string's characters, as a native Catalyst expression with a
-  * tight codegen loop.
-  *
-  * Numerically identical to the expression form
-  * [[graft.operators.TextAnalysis.fingerprint]] (pinned by
-  * TextMultiModalSpec) — every intermediate stays below 2^35, so the fold
-  * is exact and SQL-replayable — but ~an order of magnitude cheaper: the
-  * HOF form splits the string into one single-char UTF8String per
-  * character and folds through interpreted lambdas (CodegenFallback,
-  * boxing), which is the dominant cost when hashing every *token* of a
-  * corpus (SimHash). The loop below reads code points directly.
-  *
-  * (On supplementary-plane characters the HOF form folds UTF-16 surrogate
-  * halves separately while this folds the code point — identical on all
-  * BMP text, which the corpora are.)
+  * over a string's code points — the first of
+  * [[GraftFunctions.FpFamilies]] — as a native Catalyst expression with
+  * a tight codegen loop: the expression behind
+  * [[graft.operators.TextAnalysis.fingerprintFast]]. Every intermediate
+  * stays below 2^35, so the fold is exact and SQL-replayable
+  * ([[graft.operators.TextAnalysis.fingerprintSql]]); TextMultiModalSpec
+  * pins it against a Scala fold over code points, supplementary-plane
+  * characters included. A higher-order-function fold would split the
+  * string into one single-char UTF8String per character and fold
+  * through interpreted lambdas (CodegenFallback, boxing) — the dominant
+  * cost when hashing every *token* of a corpus (SimHash). The loop
+  * below reads code points directly.
   */
-case class RollingFingerprint(
-    child: Expression,
-    base: Long = 31L,
-    mod: Long = 1000000007L)
+case class RollingFingerprint(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
+  private val (base, mod) = GraftFunctions.FpFamilies.head
   // exactness bound: acc < mod, so acc*base + cp must stay below 2^63
   require(mod > 0 && base > 0 && mod - 1 <= (Long.MaxValue - 0x110000) / base,
     s"base=$base mod=$mod would overflow the fold")
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = LongType
-  override def prettyName: String =
-    if (base == 31L && mod == 1000000007L) "graft_rolling_fp"
-    else if (base == 131L && mod == 998244353L) "graft_rolling_fp2"
-    else s"graft_rolling_fp_${base}_$mod"
+  override def prettyName: String = GraftFunctions.RollingFp
 
   override protected def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString

@@ -8,11 +8,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** N independent rolling fingerprints of one string in a SINGLE character
   * pass, as `array<long>` — the fused form of evaluating
-  * [[RollingFingerprint]] once per (base, mod) family.
+  * one [[RollingFingerprint]]-style fold per (base, mod) family.
   *
-  * Each family's fold is bit-identical to its standalone expression
-  * (pinned by TextMultiModalSpec), but the string is decoded once instead
-  * of once per family: the gram/window operators that key on a
+  * Each family's fold is bit-identical to a standalone fold over the
+  * string's code points (TextMultiModalSpec pins every family of
+  * [[GraftFunctions.FpFamilies]] against a Scala fold, and the first
+  * against [[RollingFingerprint]]), but the string is decoded once
+  * instead of once per family: the gram/window operators that key on a
   * fingerprint pair or triple ([[graft.operators.NgramOverlap]]) hash
   * every window of the corpus, where the repeated decode was measured at
   * ~40% of the operator wall (BENCH_NOTES r5).

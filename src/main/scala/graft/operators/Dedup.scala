@@ -361,25 +361,13 @@ object Dedup {
     (sh, bandedBuckets(sh, bands, rows).localCheckpoint())
   }
 
-  /** MinHash signature: k independent min-hashes over a shingle array.
-    * Seeding follows the standard one-hash-function-per-row construction:
-    * h_s(x) = xxhash64(s, x), signature[s] = min over shingles.
-    *
-    * Per-row expression form — the reference semantics that DedupSpec
-    * pins [[minhashBands]] against. The array lambdas fall out of
-    * whole-stage codegen and re-hash every shingle k times; the
-    * near-dup operators use [[minhashBands]] instead. */
-  def minhashSignature(shingleCol: Column, k: Int): Column = {
-    val bases = transform(shingleCol, x => xxhash64(x))
-    array((0 until k).map { s =>
-      array_min(transform(bases, h => xxhash64(lit(s), h)))
-    }: _*)
-  }
-
   /** MinHash-LSH band keys of a shingle array, per row
     * ([[graft.expressions.MinHashBands]]): `bands` bucket keys, band b's
     * key the `xxhash64` of signature slots b·rows … b·rows + rows − 1 of
-    * [[minhashSignature]]`(shingles, bands * rows)`. Each shingle is
+    * the `bands * rows`-slot MinHash signature (slot s = min over
+    * shingles x of xxhash64(s, xxhash64(x)), the standard
+    * one-hash-function-per-row construction; DedupSpec pins the keys
+    * against that signature built from Spark builtins). Each shingle is
     * hashed once and the k minimums are one loop, so no exchange and no
     * aggregate is needed. NULL for a NULL or empty array. Requires
     * [[graft.expressions.GraftFunctions.register]] on the session. */
@@ -549,27 +537,6 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
-  /** 64-bit SimHash over a token array: bit i of the result is set iff the
-    * population of tokens whose xxhash64 has bit i set outnumbers those
-    * without. Duplicate tokens count with multiplicity (standard SimHash
-    * term weighting by frequency). */
-  def simhash(tokensCol: Column): Column = {
-    val hashes = transform(tokensCol, t => xxhash64(t))
-    // per-bit signed vote via single-bit mask literals (Spark's shift
-    // builtins take constant offsets only); adding the distinct powers of
-    // two reassembles the word (the two's-complement add of the 2^63
-    // literal sets the sign bit).
-    val powers = array((0 until 64).map(i => lit(1L << i)): _*)
-    val votes = transform(
-      powers,
-      m =>
-        aggregate(hashes, lit(0L),
-          (acc, h) => acc + when(h.bitwiseAND(m) =!= 0L, 1L).otherwise(-1L)))
-    aggregate(
-      zip_with(votes, powers, (s, p) => when(s > 0, p).otherwise(0L)),
-      lit(0L), (acc, x) => acc + x)
-  }
-
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
@@ -601,19 +568,22 @@ object Dedup {
     * affine universal-hash family whose every intermediate stays below
     * 2^63, so any SQL engine replays it in exact int64 arithmetic (unlike
     * xxhash64's avalanche mixing). Pair with
-    * [[graft.operators.TextAnalysis.fingerprint]] as the token hash for a
-    * fully oracle-replayable SimHash. */
+    * [[graft.operators.TextAnalysis.fingerprintFast]] as the token hash
+    * for a fully oracle-replayable SimHash. */
   val replayableBit: (Column, Int) => Column = { (h, i) =>
     val (a, c) = replayableSalt(i)
     ((h * lit(a) + lit(c)) % lit(1000000007L)) % lit(2L) === lit(1L)
   }
 
-  /** Columnar SimHash: from exploded (id, token-hash) rows, one hash
-    * aggregation of 64 signed bit votes, then a pack expression — the
-    * scalable twin of the [[simhash]] expression (identical results; the
-    * 64 votes are map-side combined partial/final sums). `bitOf` picks
-    * how a token hash maps to signature bits (default: the hash's own
-    * bits). */
+  /** 64-bit SimHash, columnar: from exploded (id, token-hash) rows, one
+    * hash aggregation of 64 signed bit votes, then a pack expression —
+    * bit i of `sim` is set iff the tokens whose hash has bit i set
+    * outnumber those without. Duplicate tokens count with multiplicity
+    * (standard SimHash term weighting by frequency); the 64 votes are
+    * map-side combined partial/final sums. `bitOf` picks how a token
+    * hash maps to signature bits (default: the hash's own bits).
+    * DedupSpec pins it against a per-row expression over the token
+    * array. */
   def simhashCols(
       exploded: DataFrame,
       idCol: String,
@@ -639,7 +609,7 @@ object Dedup {
     * which is what lets an oracle replay it without replaying the banding.
     *
     * `tokenHash`/`bitOf` select the hash family: the xxhash64 default is
-    * the production path; `TextAnalysis.fingerprint` + [[replayableBit]]
+    * the production path; `TextAnalysis.fingerprintFast` + [[replayableBit]]
     * keeps every step inside exact SQL-replayable int64 arithmetic.
     *
     * The (id, sim) signature table is held ([[CacheScope.hold]]): it feeds

@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Sampling {
 
-  /** Shared modulus with [[TextAnalysis.fingerprint]]: a prime ~2^30, so
+  /** Shared modulus with [[TextAnalysis.fingerprintFast]]: a prime ~2^30, so
     * every affine/quadratic intermediate below stays < 2^63. */
   val M = 1000000007L
 

@@ -193,7 +193,9 @@ object Similarity {
     * Plan shape: rankings are k-bounded tables, so the N-way full-outer
     * join and the final sort touch at most N·k rows — driver-safe
     * whatever the corpus size behind the rankings; the corpus itself
-    * was already reduced by the component retrievers. */
+    * was already reduced by the component retrievers. Not folded into
+    * a one-query [[rrfFuseBy]] call (as [[mmrSelect]] is): that moves
+    * q_hybrid_rrf's plan golden from 4 to 6 shuffles. */
   def rrfFuse(
       rankings: Seq[DataFrame],
       idCol: String,
@@ -282,37 +284,15 @@ object Similarity {
       embCol: String,
       relCol: String,
       k: Int,
-      maxCandidates: Int = 1024): DataFrame = {
-    require(k >= 1, s"k must be >= 1 (got $k)")
-    val spark = candidates.sparkSession
-    // limit BEFORE collect: the guard must fire from maxCandidates+1
-    // fetched rows, not after an unbounded candidate set already landed
-    // on the driver (ADVICE r8)
-    val cand = candidates
-      .select(col(idCol).cast("long").as("id"), col(relCol).cast("double").as("rel"))
-      .limit(maxCandidates + 1)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1))
-    require(cand.length <= maxCandidates,
-      s"mmrSelect candidates must be k-bounded (got > $maxCandidates)" +
-        " — retrieve a top-k first")
-    val ids = cand.map(_._1).toSet
-    val p = prepared(
-      embeddings.where(col(idCol).isInCollection(ids)), idCol, embCol)
-    val sims = p.as("a").join(p.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id"), col("b.id"),
-        round(cosineQ(dotQ(col("a.q"), col("b.q")), col("a.nsq"), col("b.nsq")), 6))
-      .collect()
-      .flatMap { r =>
-        val (x, y, c) = (r.getLong(0), r.getLong(1), r.getDouble(2))
-        Seq((x, y) -> c, (y, x) -> c)
-      }.toMap
-    import spark.implicits._
-    mmrGreedy(cand, sims, k).toDF("__id", "rank", "mmr")
-      .select(col("__id").as(idCol), col("rank"), col("mmr"))
-  }
+      maxCandidates: Int = 1024): DataFrame =
+    // one query group: the grouped form's bounded collect, sim join and
+    // greedy loop, with the group column dropped
+    mmrSelectBy(candidates.withColumn("__mmr_q", lit(0L)), embeddings,
+        "__mmr_q", idCol, embCol, relCol, k, maxCandidates, maxGroups = 1)
+      .select(col(idCol), col("rank"), col("mmr"))
 
-  /** The shared greedy-selection core of [[mmrSelect]] /
-    * [[mmrSelectBy]]: picks argmax rel, then argmax 0.5·rel −
+  /** The greedy-selection core of [[mmrSelectBy]] (and so of
+    * [[mmrSelect]]): picks argmax rel, then argmax 0.5·rel −
     * 0.5·maxSim(picked), ties by id — returns (id, rank, score) in
     * selection order. */
   private def mmrGreedy(
@@ -367,11 +347,16 @@ object Similarity {
       col(queryCol).cast("long").as("qid"),
       col(idCol).cast("long").as("id"),
       col(relCol).cast("double").as("rel"))
+    // Long product: the Int one wraps (4,194,305 × 1024 → 1024)
+    val maxRows = maxGroups.toLong * maxCandidates
+    require(maxRows <= Int.MaxValue - 1,
+      s"maxGroups × maxCandidates must be <= ${Int.MaxValue - 1}" +
+        s" (got maxGroups=$maxGroups, maxCandidates=$maxCandidates)")
     val candRows = candDf
-      .limit(maxGroups * maxCandidates + 1)
+      .limit(maxRows.toInt + 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    require(candRows.length <= maxGroups * maxCandidates,
-      s"mmrSelectBy candidates must be bounded (got > ${maxGroups * maxCandidates}" +
+    require(candRows.length <= maxRows,
+      s"MMR candidates must be bounded (got > $maxRows" +
         " total rows) — retrieve per-query top-k first")
     val byQ = candRows.groupBy(_._1)
     require(byQ.size <= maxGroups,
@@ -382,9 +367,13 @@ object Similarity {
           " — retrieve a top-k first")
     }
     // each DISTINCT within-group pair scored once with the exact
-    // round-6 quantized cosine (the mmrSelect convention)
-    val pairIds = candDf.as("x")
-      .join(candDf.as("y"),
+    // round-6 quantized cosine (the mmrSelect convention); pairs come
+    // from the collected rows, since re-reading `candidates` would
+    // re-run the retriever behind them
+    import spark.implicits._
+    val candIds = candRows.toSeq.map(t => (t._1, t._2)).toDF("qid", "id")
+    val pairIds = candIds.as("x")
+      .join(candIds.as("y"),
         col("x.qid") === col("y.qid") && col("x.id") < col("y.id"))
       .select(col("x.id").as("ia"), col("y.id").as("ib")).distinct()
     val p = prepared(
@@ -404,7 +393,6 @@ object Similarity {
       mmrGreedy(rows.map(t => (t._2, t._3)), sims, k)
         .map { case (id, rank, sc) => (q, rank, id, sc) }
     }
-    import spark.implicits._
     out.toDF("__q", "rank", "__id", "mmr")
       .select(col("__q").as(queryCol), col("rank"),
         col("__id").as(idCol), col("mmr"))
@@ -1513,8 +1501,8 @@ object Similarity {
     * (degenerate sample: all-identical embeddings, or one row) has no
     * principal axis — the matvec is all-zero and the max-norm ratio
     * would be NaN (ADVICE r10) — so it returns the documented uu == 0
-    * IDENTITY reflection instead: [[householderRotate]] passes vectors
-    * through unchanged. */
+    * IDENTITY reflection instead: the rotation passes vectors through
+    * unchanged. */
   private def topAxisReflection(
       c: Array[Array[java.math.BigDecimal]],
       dim: Int,
@@ -1540,27 +1528,6 @@ object Similarity {
     (uq, uq.map(x => x * x).sum)
   }
 
-  /** Apply a [[pcaHouseholder]] reflection to an embedding column:
-    * Rx = x − (2·u·x / uᵀu)·u computed on the quantized grid — the dot
-    * and uᵀu are exact integers (≤ ~2e14, double-exact), the ratio and
-    * the per-component update are ONE fixed-IEEE shape each, and the
-    * output re-rounds to the 1e-6 grid — so [[quantize]] of the result
-    * is bit-identical across engines and the rotated column composes
-    * with every existing ANN operator (pqFit, ivfPqEncode, ivfPqTopK).
-    * uᵀu == 0 is the identity (the vector passes through as double). */
-  def householderRotate(emb: Column, uq: Seq[Long], uu: Long): Column = {
-    require(uu >= 0L, s"uu must be >= 0 (got $uu)")
-    require(uu == uq.map(x => x * x).sum, "uu must equal Σ uq² (pass pcaHouseholder's pair)")
-    if (uu == 0L) transform(emb, x => x.cast("double"))
-    else {
-      val uLit = typedlit(uq)
-      val q0 = quantize(emb)
-      val r2 = (lit(2L) * dotQ(q0, uLit)).cast("double") / lit(uu).cast("double")
-      zip_with(q0, uLit, (x, u) =>
-        round(x.cast("double") - r2 * u.cast("double"), 0) / lit(Quant))
-    }
-  }
-
   /** FULL non-parametric OPQ rotation (Ge, He, Ke & Sun CVPR'13 §III):
     * k Householder DEFLATION steps — [[pcaHouseholder]] iterated on the
     * deflated covariance — so principal axes 1..k land on dims 1..k and
@@ -1582,7 +1549,7 @@ object Similarity {
     *
     * Returns k reflections as FULL-dim pairs — step t's u is padded
     * with t leading zeros, so each acts as identity on the already-
-    * placed axes — ready for [[householderRotateK]]. Fit state is
+    * placed axes — ready for [[householderRotateAll]]. Fit state is
     * bounded (k·dim longs), like the codebooks; the covariance pass is
     * the same one-pass [[graft.expressions.OuterProductSumLong]]
     * aggregate (paid ONCE — deflation is driver algebra, zero further
@@ -1643,23 +1610,6 @@ object Similarity {
     }
   }
 
-  /** Apply a [[pcaHouseholderK]] reflection sequence as ONE column:
-    * fold [[householderRotate]] left-to-right (step order), each
-    * re-rounding onto the 1e-6 grid — replayable step by step.
-    *
-    * PERFORMANCE CAUTION — prefer [[householderRotateAll]] for k > 1:
-    * the higher-order functions inside householderRotate are
-    * CodegenFallback, and interpreted eval re-evaluates the INPUT
-    * expression once per output element — chaining k rotations lazily
-    * multiplies work by ~dimᵏ⁻¹ per row (measured: a 3-chain on dim 64
-    * ran 4000× the materialized form). Since every step re-rounds to
-    * the grid, materializing between steps changes NOTHING but the
-    * wall clock. */
-  def householderRotateK(emb: Column, refl: Seq[(Seq[Long], Long)]): Column = {
-    require(refl.nonEmpty, "need at least one reflection")
-    refl.foldLeft(emb) { case (e, (uq, uu)) => householderRotate(e, uq, uu) }
-  }
-
   /** [[packReflections]]/[[graft.expressions.HouseholderChainRotate]]
     * packed-literal format: steps `;`-separated, each `uu|u1,u2,...`. */
   private[graft] def packReflections(refl: Seq[(Seq[Long], Long)]): String = {
@@ -1673,15 +1623,19 @@ object Similarity {
 
   /** All k reflections of a [[pcaHouseholderK]] chain as ONE column —
     * the [[graft.expressions.HouseholderChainRotate]] expression
-    * (VERDICT r11 #7): the k steps run in-loop over one primitive
-    * array per row, each re-quantizing to the 1e-6 grid exactly as the
-    * step-by-step chain does, so the output is bit-identical to
-    * [[householderRotateK]] at ~k× fewer passes (BENCH_NOTES, Round
-    * 12, "Fused Householder chain": k=8, dim=256, 2000 rows in 2.34 s
-    * against 379 s stepwise; SimilaritySpec pins fused == chain ==
-    * materialized).
+    * (VERDICT r11 #7). Each step applies Rx = x − (2·u·x / uᵀu)·u on
+    * the quantized grid — the dot and uᵀu exact integers, the ratio and
+    * the per-component update one fixed-IEEE shape each, the output
+    * re-rounded to the 1e-6 grid (uᵀu == 0 is the identity) — so
+    * [[quantize]] of the result is bit-identical across engines and
+    * composes with every ANN operator. The k steps run in-loop over one
+    * primitive array per row, bit-identical to the step-by-step Column
+    * chain at ~k× fewer passes (BENCH_NOTES, Round 12, "Fused
+    * Householder chain": k=8, dim=256, 2000 rows in 2.34 s against
+    * 379 s stepwise; SimilaritySpec keeps that chain as its reference
+    * and pins fused == chain == materialized).
     * Callers must have [[GraftFunctions.register]]ed the session. */
-  def householderRotateFused(emb: Column, refl: Seq[(Seq[Long], Long)]): Column = {
+  private[graft] def householderRotateFused(emb: Column, refl: Seq[(Seq[Long], Long)]): Column = {
     require(refl.nonEmpty, "need at least one reflection")
     call_function(GraftFunctions.HhChain, emb, lit(packReflections(refl)))
   }

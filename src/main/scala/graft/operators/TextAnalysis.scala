@@ -230,18 +230,20 @@ object TextAnalysis {
     (s"least(floor(600*${markerHitsSql(Stopwords, wExpr)}*5 / len($wExpr)), 600)"
       + s" + least(len($textExpr), 400)")
 
-  /** Rolling polynomial fingerprint over characters:
-    * h = fold(h * 31 + ascii(c)) mod 1e9+7. Every intermediate stays below
-    * 2^35, so the fold is exact; unlike xxhash64 this is replayable in any
-    * SQL engine (the oracle recomputes it), and it is the standard
-    * rolling-hash building block for content-defined chunking. */
-  def fingerprint(text: Column): Column =
-    // filter: Spark's split keeps a trailing empty string (Java split
-    // semantics) which would add a spurious *31 fold step
-    aggregate(filter(split(text, ""), c => length(c) > 0), lit(0L),
-      (acc, c) => (acc * 31L + ascii(c)) % 1000000007L)
+  /** Rolling polynomial fingerprint over code points:
+    * h = fold(h * 31 + codepoint) mod 1e9+7. Every intermediate stays
+    * below 2^35, so the fold is exact; unlike xxhash64 this is
+    * replayable in any SQL engine (the oracle recomputes it,
+    * [[fingerprintSql]]), and it is the standard rolling-hash building
+    * block for content-defined chunking. A native codegen loop
+    * ([[graft.expressions.RollingFingerprint]]) that reads code points
+    * directly — cheap enough for hot paths that hash every token
+    * (SimHash). Requires [[graft.expressions.GraftFunctions.register]]
+    * on the session. */
+  def fingerprintFast(text: Column): Column =
+    call_function(graft.expressions.GraftFunctions.RollingFp, text)
 
-  /** The same fold as [[fingerprint]], emitted as DuckDB oracle SQL over
+  /** The same fold as [[fingerprintFast]], emitted as DuckDB oracle SQL over
     * an arbitrary string expression — one source for both sides so they
     * cannot drift (the [[Sampling.bucketSql]] convention). */
   def fingerprintSql(expr: String): String =
@@ -257,7 +259,7 @@ object TextAnalysis {
     * fixed at `buckets` regardless of corpus size; no fit pass, no
     * driver state, no OOV handling. Returns `buckets` integer count
     * columns — x_h = how many of the document's token bigrams hash to
-    * bucket h under the [[fingerprint]] rolling fold mod `buckets` —
+    * bucket h under the [[fingerprintFast]] rolling fold mod `buckets` —
     * ready to feed [[FeatureScaling.logisticFit]] as (count, divisor)
     * pairs (integer-raw, so the fit's gradient sums stay exact and the
     * oracle replays the fold + bucket + fit bit for bit; xxhash64
@@ -315,36 +317,29 @@ object TextAnalysis {
   def hashedBigramBucketSql(gramExpr: String, buckets: Int): String =
     s"(${fingerprintSql(gramExpr)}) % $buckets"
 
-  /** Oracle-SQL twin of [[fingerprint2]]. */
+  /** Oracle SQL for the second independent rolling fold — base 131
+    * modulo the prime 998244353 (~2^30, so acc*131 + 255 < 2^37:
+    * exact). Paired with [[fingerprintFast]] it forms a ~2^60 joint key
+    * space over two independent moduli (the fused
+    * `graft_rolling_fp_pair`); [[NgramOverlap.duplicateGramStats]]
+    * shuffles the pair instead of gram strings, with cross-string
+    * collisions negligible at any corpus size (the [[Dedup.contentKey]]
+    * argument) — and unlike xxhash64 both folds replay exactly in
+    * oracle SQL. */
   def fingerprint2Sql(expr: String): String =
     ("list_reduce(list_prepend(0::BIGINT,"
       + s" list_transform(string_split($expr, ''), c -> ascii(c)::BIGINT)),"
       + " (a, b) -> (a * 131 + b) % 998244353)")
 
-  /** Second independent rolling fold — base 131 modulo the prime
-    * 998244353 (~2^30, so acc*131 + 255 < 2^37: exact). Paired with
-    * [[fingerprint]] it forms a ~2^60 joint key space over two
-    * independent moduli; [[NgramOverlap.duplicateGramStats]] shuffles the
-    * pair instead of gram strings, with cross-string collisions
-    * negligible at any corpus size (the [[Dedup.contentKey]] argument) —
-    * and unlike xxhash64 both folds replay exactly in oracle SQL. */
-  def fingerprint2(text: Column): Column =
-    aggregate(filter(split(text, ""), c => length(c) > 0), lit(0L),
-      (acc, c) => (acc * 131L + ascii(c)) % 998244353L)
-
-  /** Third independent rolling fold — base 257 modulo the prime
-    * 1,000,000,009 (acc*257 + 255 < 2^39: exact). The fp pair's ~2^60
-    * joint space is fine for STATISTICS (duplicateGramStats), but an
-    * operator that DELETES text on a match
-    * ([[NgramOverlap.duplicateSpans]]) wants the triple: ~2^90 joint
-    * space puts expected cross-string collisions below 0.1 even at
-    * 10^13 windows — the [[Dedup.contentKey]] argument — while keeping
-    * the shuffle key 24 bytes and every fold SQL-replayable. */
-  def fingerprint3(text: Column): Column =
-    aggregate(filter(split(text, ""), c => length(c) > 0), lit(0L),
-      (acc, c) => (acc * 257L + ascii(c)) % 1000000009L)
-
-  /** Oracle-SQL twin of [[fingerprint3]]. */
+  /** Oracle SQL for the third independent rolling fold — base 257
+    * modulo the prime 1,000,000,009 (acc*257 + 255 < 2^39: exact). The
+    * fp pair's ~2^60 joint space is fine for STATISTICS
+    * (duplicateGramStats), but an operator that DELETES text on a match
+    * ([[NgramOverlap.duplicateSpans]]) wants the triple
+    * (`graft_rolling_fp_triple`): ~2^90 joint space puts expected
+    * cross-string collisions below 0.1 even at 10^13 windows — the
+    * [[Dedup.contentKey]] argument — while keeping the shuffle key 24
+    * bytes and every fold SQL-replayable. */
   def fingerprint3Sql(expr: String): String =
     ("list_reduce(list_prepend(0::BIGINT,"
       + s" list_transform(string_split($expr, ''), c -> ascii(c)::BIGINT)),"
@@ -417,24 +412,6 @@ object TextAnalysis {
     val keep = df.columns.toSeq.filterNot(c => !keepText && c == textCol).map(col)
     df.select(keep :+ posexplode(chunks).as(Seq(idxCol, as)): _*)
   }
-
-  /** Native codegen twin of [[fingerprint]] (identical values on BMP
-    * text, pinned by TextMultiModalSpec): the HOF fold above interprets
-    * one lambda per character; [[graft.expressions.RollingFingerprint]]
-    * is a tight generated loop — use this form on hot paths that hash
-    * every token (SimHash). Requires
-    * [[graft.expressions.GraftFunctions.register]] on the session. */
-  def fingerprintFast(text: Column): Column =
-    call_function(graft.expressions.GraftFunctions.RollingFp, text)
-
-  /** Native codegen twin of [[fingerprint2]] (same BMP caveat and
-    * registration requirement as [[fingerprintFast]]). */
-  def fingerprint2Fast(text: Column): Column =
-    call_function(graft.expressions.GraftFunctions.RollingFp2, text)
-
-  /** Native codegen twin of [[fingerprint3]]. */
-  def fingerprint3Fast(text: Column): Column =
-    call_function(graft.expressions.GraftFunctions.RollingFp3, text)
 
   /** Quantized natural log: round(ln(x), 6) as decimal(18,6) — the
     * [[tfidfTopK]] determinism convention. All downstream sums/products

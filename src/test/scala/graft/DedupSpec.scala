@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{CacheScope, Dedup}
@@ -17,6 +18,38 @@ class DedupSpec extends AnyFunSuite {
   private def docs = Seq(
     (1L, base), (2L, base), (3L, nearDup), (4L, unrelated), (5L, base)
   ).toDF("doc_id", "text")
+
+  /** Reference MinHash signature: k independent min-hashes over a
+    * shingle array, h_s(x) = xxhash64(s, xxhash64(x)), signature[s] =
+    * min over shingles — the per-row semantics `Dedup.minhashBands`
+    * must band bit for bit. */
+  private def minhashSignature(shingleCol: Column, k: Int): Column = {
+    val bases = transform(shingleCol, x => xxhash64(x))
+    array((0 until k).map { s =>
+      array_min(transform(bases, h => xxhash64(lit(s), h)))
+    }: _*)
+  }
+
+  /** Reference 64-bit SimHash over a token array, per row: bit i is set
+    * iff the tokens whose xxhash64 has bit i set outnumber those
+    * without (multiplicity counts) — what `Dedup.simhashCols` computes
+    * columnar. */
+  private def simhash(tokensCol: Column): Column = {
+    val hashes = transform(tokensCol, t => xxhash64(t))
+    // per-bit signed vote via single-bit mask literals (Spark's shift
+    // builtins take constant offsets only); adding the distinct powers of
+    // two reassembles the word (the two's-complement add of the 2^63
+    // literal sets the sign bit).
+    val powers = array((0 until 64).map(i => lit(1L << i)): _*)
+    val votes = transform(
+      powers,
+      m =>
+        aggregate(hashes, lit(0L),
+          (acc, h) => acc + when(h.bitwiseAND(m) =!= 0L, 1L).otherwise(-1L)))
+    aggregate(
+      zip_with(votes, powers, (s, p) => when(s > 0, p).otherwise(0L)),
+      lit(0L), (acc, x) => acc + x)
+  }
 
   test("exactDedup keeps the smallest id per distinct content with duplicate counts") {
     val r = Dedup.exactDedup(docs, "doc_id", "text")
@@ -130,7 +163,7 @@ class DedupSpec extends AnyFunSuite {
         (12L, Seq.empty), // empty and NULL arrays: no signature, no rows
         (13L, null)).toDF("doc_id", "sh"))
     for ((bands, rows) <- Seq((32, 4), (4, 2))) {
-      val sig = Dedup.minhashSignature(col("sh"), bands * rows)
+      val sig = minhashSignature(col("sh"), bands * rows)
       val reference = array((0 until bands).map { b =>
         xxhash64((0 until rows).map(r => element_at(sig, b * rows + r + 1)): _*)
       }: _*)
@@ -155,7 +188,7 @@ class DedupSpec extends AnyFunSuite {
     }
     // the index's (id, band, bucket) rows are the posexplode of the keys
     val idx = Dedup.buildNearDupIndex(docs, "doc_id", "text", n = 3, bands = 4, rows = 2)
-    val sig = Dedup.minhashSignature(Dedup.shingles(col("text"), 3), 8)
+    val sig = minhashSignature(Dedup.shingles(col("text"), 3), 8)
     val ref = docs.select(col("doc_id").as("id"), posexplode(array((0 until 4).map { b =>
       xxhash64(element_at(sig, 2 * b + 1), element_at(sig, 2 * b + 2))
     }: _*)).as(Seq("band", "bucket")))
@@ -166,7 +199,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("columnar simhash equals the expression form and is 0-distance for identical docs") {
-    val exprSim = docs.select(col("doc_id"), Dedup.simhash(Dedup.tokens(col("text"))).as("sim"))
+    val exprSim = docs.select(col("doc_id"), simhash(Dedup.tokens(col("text"))).as("sim"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val colSim = Dedup.simhashCols(
       docs.select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("t"))
@@ -189,8 +222,9 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("replayable simhash family matches the xxhash64 plan shape and finds the same dup structure") {
+    graft.expressions.GraftFunctions.register(spark)
     val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxDist = 3,
-      tokenHash = graft.operators.TextAnalysis.fingerprint, bitOf = Dedup.replayableBit)
+      tokenHash = graft.operators.TextAnalysis.fingerprintFast, bitOf = Dedup.replayableBit)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     val ids = pairs.map(p => (p._1, p._2))
     assert(ids.contains((1L, 2L)) && ids.contains((1L, 5L)) && ids.contains((2L, 5L)))
@@ -201,9 +235,10 @@ class DedupSpec extends AnyFunSuite {
   test("replayable bit family: unrelated docs stay far apart (salts actually mix)") {
     // regression for the small-multiplier degeneracy: parity bits from
     // unreduced products collapse distances corpus-wide
+    graft.expressions.GraftFunctions.register(spark)
     val sims = Dedup.simhashCols(
       docs.select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("t"))
-        .select(col("doc_id"), graft.operators.TextAnalysis.fingerprint(col("t")).as("h")),
+        .select(col("doc_id"), graft.operators.TextAnalysis.fingerprintFast(col("t")).as("h")),
       "doc_id", "h", Dedup.replayableBit)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(java.lang.Long.bitCount(sims(1L) ^ sims(4L)) > 16,

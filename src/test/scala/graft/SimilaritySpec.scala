@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{CacheScope, Similarity}
@@ -10,6 +11,34 @@ class SimilaritySpec extends AnyFunSuite {
 
   private def vecs(rows: (Long, Seq[Float])*) =
     rows.toSeq.toDF("vec_id", "embedding")
+
+  /** Step-by-step reference for one Householder reflection on the
+    * quantized grid: Rx = x − (2·u·x / uᵀu)·u, the dot and uᵀu exact
+    * integers, the ratio and the per-component update one fixed-IEEE
+    * shape each, re-rounded to the 1e-6 grid; uᵀu == 0 is the identity
+    * (the vector passes through as double). The fused
+    * `graft_householder_chain` must match it bit for bit. */
+  private def householderRotate(emb: Column, uq: Seq[Long], uu: Long): Column = {
+    require(uu >= 0L, s"uu must be >= 0 (got $uu)")
+    require(uu == uq.map(x => x * x).sum, "uu must equal Σ uq² (pass pcaHouseholder's pair)")
+    if (uu == 0L) transform(emb, x => x.cast("double"))
+    else {
+      val uLit = typedlit(uq)
+      val q0 = Similarity.quantize(emb)
+      val r2 = (lit(2L) * Similarity.dotQ(q0, uLit)).cast("double") / lit(uu).cast("double")
+      zip_with(q0, uLit, (x, u) =>
+        round(x.cast("double") - r2 * u.cast("double"), 0) / lit(Similarity.Quant))
+    }
+  }
+
+  /** A [[Similarity.pcaHouseholderK]] reflection sequence as one lazy
+    * column: [[householderRotate]] folded left-to-right in step order.
+    * Reference only — the HOFs are CodegenFallback, so a lazy k-chain
+    * re-evaluates its input per output element (~dimᵏ⁻¹ per row). */
+  private def householderRotateK(emb: Column, refl: Seq[(Seq[Long], Long)]): Column = {
+    require(refl.nonEmpty, "need at least one reflection")
+    refl.foldLeft(emb) { case (e, (uq, uu)) => householderRotate(e, uq, uu) }
+  }
 
   test("quantize is 1e-6 fixed point; dotQ is the exact integer dot product") {
     val d = vecs((1L, Seq(1.0f, -2.0f, 0.5f)))
@@ -643,7 +672,7 @@ class SimilaritySpec extends AnyFunSuite {
     val (uq2, uu2) = Similarity.pcaHouseholder(corpus.repartition(13),
       "vec_id", "embedding", dim)
     assert(uq2 == uq && uu2 == uu)
-    val rot = Similarity.householderRotate(col("embedding"), uq, uu)
+    val rot = householderRotate(col("embedding"), uq, uu)
     val r = corpus.withColumn("e2", rot)
     // alignment: rotated dim-1 variance dominates every other dim
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -687,7 +716,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(pca >= raw, s"PCA-rotated recall $pca < contiguous recall $raw")
     // identity case: uu = 0 passes the vector through
     val id = vecs((1L, Seq(1.0f, 2.0f))).select(
-      Similarity.householderRotate(col("embedding"), Seq(0L, 0L), 0L).as("e"))
+      householderRotate(col("embedding"), Seq(0L, 0L), 0L).as("e"))
       .head().getSeq[Double](0)
     assert(id == Seq(1.0, 2.0))
   }
@@ -739,7 +768,7 @@ class SimilaritySpec extends AnyFunSuite {
     val (uq, uu) = Similarity.pcaHouseholder(same, "vec_id", "embedding", dim = 4)
     assert(uu == 0L && uq == Seq(0L, 0L, 0L, 0L))
     val out = same.select(
-        Similarity.householderRotate(col("embedding"), uq, uu).as("e"))
+        householderRotate(col("embedding"), uq, uu).as("e"))
       .head().getSeq[Double](0)
     assert(out == Seq(0.5, -0.25, 1.0, 0.0))
     // one row is equally degenerate (covariance n·s2 − s1² == 0)
@@ -781,7 +810,7 @@ class SimilaritySpec extends AnyFunSuite {
     // determinism: repartition-invariant (exact sums + driver algebra)
     assert(Similarity.pcaHouseholderK(corpus.repartition(13),
       "vec_id", "embedding", dim, k) == refl)
-    val rot = Similarity.householderRotateK(col("embedding"), refl)
+    val rot = householderRotateK(col("embedding"), refl)
     val r = corpus.withColumn("e2", rot)
     // rotated variances: dims 1..3 dominate in order
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -824,7 +853,7 @@ class SimilaritySpec extends AnyFunSuite {
       .select(col("vec_id"), col("e2"))
       .collect().map(x => x.getLong(0) -> x.getSeq[Double](1)).toMap
     val chained = corpus
-      .withColumn("e2", Similarity.householderRotateK(col("embedding"), mixed))
+      .withColumn("e2", householderRotateK(col("embedding"), mixed))
       .select(col("vec_id"), col("e2"))
       .collect().map(x => x.getLong(0) -> x.getSeq[Double](1)).toMap
     assert(fused == chained,
@@ -945,6 +974,26 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.mmrSelectBy(cand, e, "qid", "vec_id", "embedding", "rel",
         k = 2, maxGroups = 2)
     }
+  }
+
+  test("mmrSelectBy: the maxGroups x maxCandidates row bound is a Long (no Int wrap)") {
+    val e = vecs((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)))
+    // 2,000 rows: 1,000 query groups of 2 candidates — valid under any
+    // bound with maxGroups >= 1,000 and maxCandidates >= 2
+    val cand = (0L until 1000L).flatMap(q => Seq((q, 1L, 0.9), (q, 2L, 0.8)))
+      .toDF("qid", "vec_id", "rel")
+    // 2,097,151 × 1,024 = 2,147,482,624 fits an Int: every row passes
+    val got = Similarity.mmrSelectBy(cand, e, "qid", "vec_id", "embedding", "rel",
+      k = 2, maxGroups = 2097151)
+    assert(got.count() == 2000L)
+    // 4,194,305 × 1,024 wraps an Int to 1,024; it must fail on the
+    // bound itself, naming both parameters, not reject the 2,000 rows
+    val err = intercept[IllegalArgumentException] {
+      Similarity.mmrSelectBy(cand, e, "qid", "vec_id", "embedding", "rel",
+        k = 2, maxGroups = 4194305)
+    }
+    assert(err.getMessage.contains("maxGroups=4194305")
+      && err.getMessage.contains("maxCandidates=1024"), err.getMessage)
   }
 
   test("mmrSelect: diversity beats raw relevance order; ties and bounds honored") {
