@@ -55,9 +55,9 @@ class EwmSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
         Option(r.get(3)).map(_.asInstanceOf[Double])).toMap
     for (mc <- Seq(2, 3, 5)) {
-      val got = Ewm.ewmMean(df.repartition(7), Seq("g"), Seq(col("pos")), "x", 0.3,
-          maxChunk = mc)
-        .collect().map(r => (r.getString(0), r.getLong(1)) ->
+      val got = Ewm.maxChunk.withValue(mc) {
+        Ewm.ewmMean(df.repartition(7), Seq("g"), Seq(col("pos")), "x", 0.3)
+      }.collect().map(r => (r.getString(0), r.getLong(1)) ->
           Option(r.get(3)).map(_.asInstanceOf[Double])).toMap
       assert(got.keySet == ref.keySet)
       for ((k, v) <- ref) {
@@ -102,9 +102,9 @@ class EwmSpec extends AnyFunSuite {
 
   test("ewmVarStd == pandas bias=false brute force; <2 obs NULL; std = sqrt(var)") {
     for (alpha <- Seq(0.5, 0.2); mc <- Seq(1024, 3)) {
-      val got = Ewm.ewmVarStd(mkDf(fixture), Seq("g"), Seq(col("pos")), "x", alpha,
-          maxChunk = mc)
-        .collect().map(r => (r.getString(0), r.getLong(1)) ->
+      val got = Ewm.maxChunk.withValue(mc) {
+        Ewm.ewmVarStd(mkDf(fixture), Seq("g"), Seq(col("pos")), "x", alpha)
+      }.collect().map(r => (r.getString(0), r.getLong(1)) ->
           ((Option(r.get(3)).map(_.asInstanceOf[Double]),
             Option(r.get(4)).map(_.asInstanceOf[Double])))).toMap
       for ((g, xs) <- fixture; (want, i) <- bruteVar(xs, alpha).zipWithIndex) {
@@ -164,9 +164,9 @@ class EwmSpec extends AnyFunSuite {
         xs(i).getOrElse(Double.NaN), ys(i).getOrElse(Double.NaN)))
     }.toDF("g", "pos", "x", "y")
     for (alpha <- Seq(0.5, 0.2); mc <- Seq(1024, 3)) {
-      val got = Ewm.ewmCovCorr(df, Seq("g"), Seq(col("pos")), "x", "y", alpha,
-          maxChunk = mc)
-        .collect().map(r => (r.getString(0), r.getLong(1)) ->
+      val got = Ewm.maxChunk.withValue(mc) {
+        Ewm.ewmCovCorr(df, Seq("g"), Seq(col("pos")), "x", "y", alpha)
+      }.collect().map(r => (r.getString(0), r.getLong(1)) ->
           ((Option(r.get(4)).map(_.asInstanceOf[Double]),
             Option(r.get(5)).map(_.asInstanceOf[Double])))).toMap
       for ((g, (xs, ys)) <- pairs;
@@ -426,13 +426,104 @@ class EwmSpec extends AnyFunSuite {
   }
 
   test("long group across many chunks and superchunks stays accurate") {
-    // alpha=0.3, maxChunk=4 -> gamma decays fast; 200 rows span 50 chunks
+    // alpha=0.3, maxChunk=4: d = -log10(0.7) = 0.155 digits per row, so
+    // C = min(4, 250/d + 1) = 4 and K = floor(250/(4d)) + 1 = 404; the
+    // 200 rows are 50 chunks of superchunk 0 (the within-superchunk carry)
     val xs = (0 until 200).map(i => Some(((i * 37) % 11).toDouble))
     val df = mkDf(Map("g" -> xs))
-    val got = Ewm.ewmMean(df, Seq("g"), Seq(col("pos")), "x", 0.3, maxChunk = 4)
-      .orderBy("pos").collect().map(_.getDouble(3))
+    val got = Ewm.maxChunk.withValue(4) {
+      Ewm.ewmMean(df, Seq("g"), Seq(col("pos")), "x", 0.3)
+    }.orderBy("pos").collect().map(_.getDouble(3))
     val want = brute(xs, 0.3).map(_.get)
     for (i <- xs.indices)
       assert(math.abs(got(i) - want(i)) < 1e-9, s"[$i]: ${got(i)} vs ${want(i)}")
+  }
+
+  test("row clock: a long group crosses several superchunks (lag carries) and matches brute force") {
+    // alpha=0.99, maxChunk=4: d = -log10(0.01) = 2 digits per row, so
+    // C = min(4, 250/2 + 1) = 4 and K = floor(250/(4*2)) + 1 = 32 — 128
+    // rows per superchunk; var's beta^2 base (d = 4) gives C = 4 and
+    // K = floor(250/(4*4)) + 1 = 16 — 64 rows. 600 rows cross 4 (mean) and
+    // 9 (var) superchunk boundaries, so the lag-1..3 carries run
+    val xs = (0 until 600).map(i => if (i % 17 == 5) None else Some(((i * 37) % 11).toDouble))
+    val df = mkDf(Map("g" -> xs))
+    val (mean, vars) = Ewm.maxChunk.withValue(4) {
+      (Ewm.ewmMean(df, Seq("g"), Seq(col("pos")), "x", 0.99),
+        Ewm.ewmVarStd(df, Seq("g"), Seq(col("pos")), "x", 0.99))
+    }
+    def values(out: org.apache.spark.sql.DataFrame) =
+      out.orderBy("pos").collect().map(r => Option(r.get(3)).map(_.asInstanceOf[Double]))
+    for ((name, got, want) <- Seq(("mean", values(mean), brute(xs, 0.99)),
+        ("var", values(vars), bruteVar(xs, 0.99))); i <- xs.indices) {
+      assert(got(i).isDefined == want(i).isDefined, s"$name[$i]: ${got(i)} vs ${want(i)}")
+      for (a <- got(i); b <- want(i))
+        assert(math.abs(a - b) < 1e-9, s"$name[$i]: $a vs $b")
+    }
+  }
+
+  test("cross-clock pin: 1-second steps at a 1-second halflife equal the row clock at alpha 0.5") {
+    // 2^-(dt/1s) = 0.5^dp when rows are 1 s apart, so each wall-clock
+    // operator must equal its row-clock twin row for row, NaN rows
+    // included (both clocks advance through them). Valid observations
+    // (and valid pairs) sit at most 10 rows apart, so den/Sw^2 >= ~2^-9
+    // clears the wall clock's RelVarEps gate — the one intended
+    // difference between the two clocks' var and cov
+    val rows = for (g <- Seq(1L, 2L); i <- 0 until 700) yield {
+      val x = if (i < 2 || i % 9 == 4 || (i >= 300 && i < 309)) None
+        else Some(((i * 23 + g) % 11).toDouble - 5)
+      val y = if (i % 7 == 2) None else Some(((i * 31 + g) % 13).toDouble * 0.5)
+      (g, i.toLong, new java.sql.Timestamp(1700000000000L + i * 1000L),
+        x.getOrElse(Double.NaN), y.getOrElse(Double.NaN))
+    }
+    val df = rows.toDF("g", "i", "ts", "x", "y").repartition(3)
+    val byRow = Seq(col("ts"))
+    def keyed(out: org.apache.spark.sql.DataFrame, cols: String*) =
+      out.collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        cols.map(c => Option(r.get(r.fieldIndex(c))).map(_.asInstanceOf[Double]))).toMap
+    val pairs = Seq(
+      ("mean", Seq("ewm"),
+        Ewm.ewmMean(df, Seq("g"), byRow, "x", 0.5),
+        Ewm.ewmTimeMean(df, Seq("g"), "ts", "x", "1 second")),
+      ("var", Seq("ewm_var", "ewm_std"),
+        Ewm.ewmVarStd(df, Seq("g"), byRow, "x", 0.5),
+        Ewm.ewmTimeVarStd(df, Seq("g"), "ts", "x", "1 second")),
+      ("cov", Seq("ewm_cov", "ewm_corr"),
+        Ewm.ewmCovCorr(df, Seq("g"), byRow, "x", "y", 0.5),
+        Ewm.ewmTimeCovCorr(df, Seq("g"), "ts", "x", "y", "1 second")))
+    for ((name, cols, rowOut, wallOut) <- pairs) {
+      val (r, w) = (keyed(rowOut, cols: _*), keyed(wallOut, cols: _*))
+      assert(r.size == 1400 && r.keySet == w.keySet)
+      assert(r.values.count(_.head.isDefined) > 1300, s"$name: fixture mostly defined")
+      for ((k, rv) <- r; (a, b) <- rv.zip(w(k))) {
+        assert(a.isDefined == b.isDefined, s"$name $k: $a vs $b")
+        for (x <- a; y <- b) assert(math.abs(x - y) < 1e-9, s"$name $k: $x vs $y")
+      }
+    }
+  }
+
+  test("input and output columns with the reserved __ prefix are rejected by name") {
+    // a hand-kept list of working names once missed the row clock's sum
+    // columns: an input column named __sw was overwritten by the engine
+    // and dropped by the finalizer, so the result lost it silently
+    val df = Seq(("a", 0L, 1.0, 7.0), ("a", 1L, 2.0, 8.0)).toDF("g", "pos", "x", "__sw")
+    val ts = df.withColumn("ts", col("pos").cast("timestamp"))
+    val calls: Seq[() => Any] = Seq(
+      () => Ewm.ewmMean(df, Seq("g"), Seq(col("pos")), "x", 0.5),
+      () => Ewm.ewmVarStd(df, Seq("g"), Seq(col("pos")), "x", 0.5),
+      () => Ewm.ewmCovCorr(df, Seq("g"), Seq(col("pos")), "x", "x", 0.5),
+      () => Ewm.ewmTimeMean(ts, Seq("g"), "ts", "x", "1 second"),
+      () => Ewm.ewmTimeVarStd(ts, Seq("g"), "ts", "x", "1 second"),
+      () => Ewm.ewmTimeCovCorr(ts, Seq("g"), "ts", "x", "x", "1 second"))
+    for (call <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("__sw"), e.getMessage)
+    }
+    val clean = df.drop("__sw")
+    val e = intercept[IllegalArgumentException] {
+      Ewm.ewmMean(clean, Seq("g"), Seq(col("pos")), "x", 0.5, as = "__m")
+    }
+    assert(e.getMessage.contains("__m"), e.getMessage)
+    assert(Ewm.ewmMean(clean, Seq("g"), Seq(col("pos")), "x", 0.5).columns.toSeq ==
+      Seq("g", "pos", "x", "ewm"))
   }
 }

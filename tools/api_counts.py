@@ -20,8 +20,9 @@ Usage:
 
 --unreached lists the counted defs of src/main/scala/graft/operators and
 src/main/scala/graft/streaming whose name occurs nowhere else in the code
-of src/main: comments and string literals do not count, nor does any line
-that declares a def of that name. A name that also occurs as another
+of src/main: comments and string literals do not count (the code spliced
+into an interpolated string does), nor does any line that declares a def
+of that name. A name that also occurs as another
 identifier (a common word, a Spark method) reads as reached, so the list
 is a lower bound.
 
@@ -36,27 +37,42 @@ import sys
 
 def strip_code(src):
     """Blank out comments, string and char literals (newlines kept), so
-    braces and keywords are only seen in code."""
+    braces and keywords are only seen in code. The code spliced into an
+    `s`/`f`/`raw` interpolated string (`${expr}`, `$name`) stays code."""
+    return _strip(src, 0, False)[0]
+
+
+INTERPOLATOR = re.compile(r"(?<![\w$])(s|f|raw)$")
+
+
+def _strip(src, i, in_splice):
+    """(blanked text, end index) from src[i]. In a `${...}` splice, stop
+    at the `}` that closes it (end index points at that brace)."""
     out = []
-    i, n = 0, len(src)
+    n, depth = len(src), 0
     while i < n:
         c = src[i]
+        if in_splice and c == "}" and depth == 0:
+            break
         if src.startswith("//", i):
             j = src.find("\n", i)
             j = n if j < 0 else j
             out.append(" " * (j - i))
             i = j
         elif src.startswith("/*", i):
-            depth, j = 1, i + 2
-            while j < n and depth:
+            depth_c, j = 1, i + 2
+            while j < n and depth_c:
                 if src.startswith("/*", j):
-                    depth, j = depth + 1, j + 2
+                    depth_c, j = depth_c + 1, j + 2
                 elif src.startswith("*/", j):
-                    depth, j = depth - 1, j + 2
+                    depth_c, j = depth_c - 1, j + 2
                 else:
                     j += 1
             out.append(re.sub(r"[^\n]", " ", src[i:j]))
             i = j
+        elif c == '"' and INTERPOLATOR.search(src, max(0, i - 4), i):
+            text, i = _interpolated(src, i)
+            out.append(text)
         elif src.startswith('"""', i):
             j = src.find('"""', i + 3)
             j = n if j < 0 else j + 3
@@ -75,9 +91,45 @@ def strip_code(src):
             out.append(" " * len(m.group(0)))
             i += len(m.group(0))
         else:
+            depth += {"{": 1, "}": -1}.get(c, 0)
             out.append(c)
             i += 1
-    return "".join(out)
+    return "".join(out), i
+
+
+def _interpolated(src, i):
+    """(blanked text, end index) of the interpolated string opening at
+    src[i]: literal text blanked, `${expr}` and `$name` kept as code."""
+    n = len(src)
+    triple = src.startswith('"""', i)
+    out = ['"' + ("  " if triple else "")]
+    j = i + (3 if triple else 1)
+    while j < n:
+        if triple and src.startswith('"""', j):
+            k = j + 3
+            while k < n and src[k] == '"':
+                k += 1
+            out.append(" " * (k - j - 1) + '"')
+            return "".join(out), k
+        c = src[j]
+        if not triple and c in '"\n':
+            out.append('"' if c == '"' else "\n")
+            return "".join(out), j + 1
+        if c == "$" and src.startswith("{", j + 1):
+            code, k = _strip(src, j + 2, True)
+            out.append("  " + code + " ")
+            j = k + 1
+        elif c == "$" and re.match(r"[A-Za-z_]", src[j + 1:j + 2]):
+            m = re.compile(r"[A-Za-z_][A-Za-z0-9_]*").match(src, j + 1)
+            out.append(" " + m.group(0))
+            j = m.end()
+        elif (c == "$" or (c == "\\" and not triple)) and src[j + 1:j + 2] not in ("", "\n"):
+            out.append("  ")   # $$, $" and single-line backslash escapes
+            j += 2
+        else:
+            out.append("\n" if c == "\n" else " ")
+            j += 1
+    return "".join(out), n
 
 
 SCOPE = re.compile(r"\b(object|class|trait|def)\b")
